@@ -80,11 +80,13 @@ def word_ngrams_sql(col_sql: str, n: int) -> str:
     # literal below; a separator containing quote/backslash metacharacters
     # would silently diverge from the Column path (Spark SQL literal
     # escaping differs from F.split's Python-side argument). Fail loudly
-    # instead if anyone swaps in such a separator.
-    assert "'" not in TOKEN_SEP and "\\" not in TOKEN_SEP, (
-        "TOKEN_SEP contains SQL string-literal metacharacters; escape it in "
-        "word_ngrams_sql before embedding"
-    )
+    # instead if anyone swaps in such a separator (an `if`, not an
+    # `assert`, so `python -O` keeps the check).
+    if "'" in TOKEN_SEP or "\\" in TOKEN_SEP:
+        raise ValueError(
+            "TOKEN_SEP contains SQL string-literal metacharacters; escape it in "
+            "word_ngrams_sql before embedding"
+        )
     return (
         f"transform(array(split({col_sql}, '{TOKEN_SEP}')), "
         f"tk -> CASE WHEN size(tk) >= {n} "

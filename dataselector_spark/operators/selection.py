@@ -9,7 +9,7 @@ operation over whole batches (the reference's per-point loop at
 index.js:252-253 collapses into a single distributed op):
 
     insert        — union ∪ distinct                       (index.js:528-531)
-    toggle        — symmetric difference                   (index.js:516-531)
+    toggle        — symmetric difference, one aggregation  (index.js:516-531)
     retract       — anti-join / filter                     (index.js:843-860)
     apply (A16)   — left-semi join back onto the data      (index.js:460-465)
     invert (A18)  — groupBy + collect_set, either direction (index.js:797-813)
@@ -22,6 +22,14 @@ index.js:524-526 is implicit in Spark — empty groups never materialize).
 Scale: selections are tiny relative to the data (human- or rule-flagged
 outliers), so `apply_selections` broadcasts them; the inverted-index views
 are plain shuffled aggregations that AQE sizes at runtime.
+
+The broadcast build side of apply/anti is not de-duplicated: a left-semi or
+left-anti join returns the same rows whether or not the build side repeats
+a key, so a `distinct` there only adds a shuffle. Worse, over a
+`localCheckpoint`ed selection relation (a statistics-less `Scan
+ExistingRDD`) that aggregate made Catalyst's runtime-filter rule inject a
+`might_contain` bloom-filter subquery, i.e. one more scan of the data per
+render. Toggle is one tagged aggregation, so it costs one shuffle.
 """
 
 from __future__ import annotations
@@ -46,11 +54,21 @@ def select_insert(selections: DataFrame, new: DataFrame) -> DataFrame:
 def select_toggle(selections: DataFrame, hits: DataFrame) -> DataFrame:
     """Remove-on-dupe toggle over a batch (alt-drag, index.js:252-253 →
     updateClicked(removeOnDupe=true), index.js:516-531): present pairs are
-    removed, absent pairs inserted — the symmetric difference."""
-    selections, hits = _canon(selections).distinct(), _canon(hits).distinct()
-    keep = selections.join(hits, _COLS, "left_anti")
-    add = hits.join(selections, _COLS, "left_anti")
-    return keep.union(add)
+    removed, absent pairs inserted — the symmetric difference. Each side is
+    tagged with its own bit; a pair whose OR of tags is 3 is on both sides
+    and drops out. Grouping treats null keys as equal, so a null-keyed pair
+    present on both sides cancels like any other (SQL ``EXCEPT`` semantics)."""
+    side = "_side"
+    tagged = (
+        _canon(selections).withColumn(side, F.lit(1))
+        .union(_canon(hits).withColumn(side, F.lit(2)))
+    )
+    return (
+        tagged.groupBy(*_COLS)
+        .agg(F.bit_or(side).alias(side))
+        .filter(F.col(side) != 3)
+        .select(*_COLS)
+    )
 
 
 def retract_compound(selections: DataFrame, compound: str) -> DataFrame:
@@ -62,14 +80,15 @@ def retract_compound(selections: DataFrame, compound: str) -> DataFrame:
 def apply_selections(data: DataFrame, selections: DataFrame, key_col: str) -> DataFrame:
     """Mark-by-membership on render (index.js:460-465): rows of ``data``
     whose key is selected for the active compound. Broadcast semi-join —
-    selections are small by construction."""
-    sel_keys = _canon(selections).select(F.col(KEY).alias(key_col)).distinct()
+    selections are small by construction. No ``distinct`` on the build side
+    (see the module docstring)."""
+    sel_keys = _canon(selections).select(F.col(KEY).alias(key_col))
     return data.join(F.broadcast(sel_keys), key_col, "left_semi")
 
 
 def anti_selections(data: DataFrame, selections: DataFrame, key_col: str) -> DataFrame:
     """Complement of apply_selections (generalizes index.js:843-860)."""
-    sel_keys = _canon(selections).select(F.col(KEY).alias(key_col)).distinct()
+    sel_keys = _canon(selections).select(F.col(KEY).alias(key_col))
     return data.join(F.broadcast(sel_keys), key_col, "left_anti")
 
 

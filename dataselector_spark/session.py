@@ -66,12 +66,18 @@ def get_spark(
     )
     # r16: env-driven conf overrides for A/B experiments and per-host
     # tuning without code edits — semicolon-separated k=v pairs. Applied
-    # BEFORE the caller's extra_conf so explicit code wins.
-    env_extra = os.environ.get("SPARK_GRAFT_EXTRA_CONF", "")
-    for item in env_extra.split(";"):
-        if "=" in item:
-            k, v = item.split("=", 1)
-            builder = builder.config(k.strip(), v.strip())
+    # BEFORE the caller's extra_conf so explicit code wins. A value cannot
+    # contain ';' (there is no escape). Blank segments are skipped; any
+    # other segment without '=' is a typo and fails loudly.
+    for item in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
+        if not item.strip():
+            continue
+        if "=" not in item:
+            raise ValueError(
+                f"SPARK_GRAFT_EXTRA_CONF segment {item.strip()!r} is not key=value"
+            )
+        k, v = item.split("=", 1)
+        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -214,6 +214,12 @@ REWRITTEN_IN_ROUND = {
     "b20_stream_stream_left_outer": 16,
     "b15_surprisal_tertiles": 16,
     "b15_surprisal_planted": 16,
+    # r17: the selection operators' broadcast build side is no longer
+    # de-duplicated (apply / anti), and toggle is one tagged aggregation
+    # instead of two distincts plus two anti-joins.
+    "a13_selection_toggle": 17,
+    "a16_semi_join_apply": 17,
+    "a17_anti_join_retract": 17,
 }
 
 # The round-9 window (VERDICT r8 "Next round" #1-2, freshness hygiene):
@@ -795,6 +801,69 @@ assert len(_R15_WINDOW) == 50, len(_R15_WINDOW)
 #     are rows-only-by-design and stay excluded from oracle freshness);
 #   * 5 flex slots to the oldest (r10-latest) oracle-bearing re-confirms
 #     not already seated above, in their CORRECTNESS_r10.json order.
+# The round-17 window: CORRECTNESS_r16 was 50/50 green and every
+# REWRITTEN_IN_ROUND entry through r16 has a fresh row, so the slots go to
+#   * the 3 selection entries rewritten in r17 (REWRITTEN_IN_ROUND == 17)
+#     plus their 2 siblings over the same stored/boxed pair;
+#   * 45 oldest-row oracle-bearing re-confirms: every r10-latest row, then
+#     r11-latest rows, registry order within a round.
+_R17_WINDOW = [
+    # --- selection operators, rewritten in r17 (3) + siblings (2) ---
+    "a13_selection_toggle",
+    "a16_semi_join_apply",
+    "a17_anti_join_retract",
+    "a13_selection_insert",
+    "a17_retract_compound",
+    # --- r10-latest re-confirms (30) ---
+    "b12_dedup_exact",
+    "b17_stream_tumbling",
+    "b17_stream_sliding",
+    "b18_stream_session",
+    "b19_stream_watermark",
+    "b20_stream_dedup",
+    "b20_stream_toggle",
+    "b20_stream_stream_join",
+    "b17_stream_static_enrich",
+    "b06_pivot",
+    "b22_mixture_resample",
+    "a18_inverted_index",
+    "b06_exact_distinct",
+    "b14_embedding_neardup_lsh",
+    "b15_chunk_documents",
+    "b22_train_val_split",
+    "b22_global_shuffle",
+    "b15_repetition_score",
+    "b15_rarity_score",
+    "b01_json_permissive",
+    "b22_mixture_upsample",
+    "b22_drift_chisq",
+    "b22_drift_ks",
+    "b22_winsorize",
+    "b16_resize_nn",
+    "b26_transition_bigrams",
+    "b26_bfs_levels",
+    "b26_kcore",
+    "b26_sssp_bounded",
+    "b26_assortativity",
+    # --- oldest r11-latest re-confirms (15) ---
+    "b14_ann_lsh",
+    "b15_lang_id_quality",
+    "b16_multimodal_meta",
+    "b16_multimodal_features",
+    "b16_resize",
+    "b14_ann_ivf",
+    "b01_python_stream_sink",
+    "q2_min_cost_supplier",
+    "q8_market_share",
+    "q9_product_type_profit",
+    "q11_important_parts",
+    "q13_customer_distribution",
+    "q15_top_supplier",
+    "q16_supplier_part_counts",
+    "a22_having",
+]
+assert len(_R17_WINDOW) == 50, len(_R17_WINDOW)
+
 _R16_WINDOW = [
     # --- rewritten in r15, never driver-checked since (27) ---
     "b26_triangle_count",
@@ -1026,10 +1095,10 @@ _check_oracle_tables(QUERIES, set(_SCHEMAS))
 # The round whose window is active below; bench.BENCH_ROUND (the label
 # stamped on new BENCH_RECORDS readings) must match — tripwire in
 # tests/test_bench_records.py keeps the two bumps atomic.
-WINDOW_ROUND = 16
+WINDOW_ROUND = 17
 
-_rest = [n for n in QUERIES if n not in _R16_WINDOW]
-_order = _R16_WINDOW + _rest
+_rest = [n for n in QUERIES if n not in _R17_WINDOW]
+_order = _R17_WINDOW + _rest
 _reordered = {n: QUERIES[n] for n in _order}
 QUERIES.clear()
 QUERIES.update(_reordered)

@@ -705,3 +705,30 @@ def test_proportional_allocation_sums_to_budget(spark):
     for r in rows:
         base = (1000 * r.n_rows) // n
         assert r.allocated in (base, base + 1), r
+
+
+# --- fail-loud inputs (no bare asserts, strict env parsing) -----------------
+
+
+def test_word_ngrams_sql_rejects_quoting_separator(monkeypatch):
+    """A TOKEN_SEP that would break out of the SQL string literal raises
+    ValueError, also under `python -O` (an if/raise, not an assert)."""
+    from dataselector_spark.functions import text
+
+    assert "split(c, ' ')" in text.word_ngrams_sql("c", 2)
+    for sep in ("'", "\\"):
+        monkeypatch.setattr(text, "TOKEN_SEP", sep)
+        with pytest.raises(ValueError, match="TOKEN_SEP"):
+            text.word_ngrams_sql("c", 2)
+
+
+def test_extra_conf_env_rejects_segment_without_equals(monkeypatch):
+    """SPARK_GRAFT_EXTRA_CONF: a non-empty segment without '=' is a typo and
+    raises a ValueError naming the segment, before any session is built."""
+    from dataselector_spark.session import get_spark
+
+    monkeypatch.setenv(
+        "SPARK_GRAFT_EXTRA_CONF", "spark.sql.shuffle.partitions=4; ;spark.sql.ansi.enabled"
+    )
+    with pytest.raises(ValueError, match="'spark.sql.ansi.enabled'"):
+        get_spark()

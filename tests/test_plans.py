@@ -8,6 +8,7 @@ from dataselector_spark.plans import (
     formatted_plan,
     has_broadcast_join,
     has_take_ordered,
+    physical_plan,
     pushed_filters,
     read_schemas,
     shuffle_count,
@@ -70,6 +71,49 @@ def test_selection_semi_join_broadcasts(spark):
     """A16 re-apply must broadcast the (small) selection set."""
     df = QUERIES["a16_semi_join_apply"].fn(spark, SF)
     assert has_broadcast_join(df)
+
+
+def _render_inputs(spark):
+    """A render's two sides as the interactive session builds them: a
+    filtered view of one compound, and the stored selections materialized
+    with `localCheckpoint` (a statistics-less `Scan ExistingRDD`)."""
+    from dataselector_spark.functions.keys import minute_key
+    from dataselector_spark.operators.selection import COMPOUND, KEY, select_insert
+
+    e = load_table(spark, SF, "events")
+    hits = e.filter(F.col("value") > 150).select(
+        minute_key("ts").alias(KEY), F.col("event_type").alias(COMPOUND)
+    )
+    empty = spark.createDataFrame([], f"{KEY} string, {COMPOUND} string")
+    sel = select_insert(empty, hits).localCheckpoint()
+    view = e.filter(
+        (F.col("event_type") == "error") & F.col("value").between(10, 160)
+    ).withColumn(KEY, minute_key("ts"))
+    return view, sel.filter(F.col(COMPOUND) == "error"), sel
+
+
+def test_selection_apply_and_anti_are_shuffle_free(spark):
+    """Apply and anti broadcast the selection keys as they are: no shuffle,
+    and no runtime bloom-filter subquery (a `distinct` on the checkpointed
+    build side made Catalyst inject one, re-scanning the data per render)."""
+    from dataselector_spark.operators.selection import KEY, anti_selections, apply_selections
+
+    view, active, _ = _render_inputs(spark)
+    for op in (apply_selections, anti_selections):
+        df = op(view, active, KEY)
+        plan = physical_plan(df)
+        assert plan.count("BroadcastExchange") == 1, plan
+        assert shuffle_count(df) == 0, plan
+        assert "might_contain" not in plan and "bloom_filter_agg" not in plan, plan
+
+
+def test_selection_toggle_single_shuffle(spark):
+    """Toggle is one tagged aggregation: exactly one shuffle."""
+    from dataselector_spark.operators.selection import select_toggle
+
+    _, active, sel = _render_inputs(spark)
+    df = select_toggle(sel, active)
+    assert shuffle_count(df) == 1, physical_plan(df)
 
 
 def test_q5_dims_broadcast_and_prune(spark):

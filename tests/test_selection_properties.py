@@ -11,6 +11,8 @@ from hypothesis import strategies as st
 
 from dataselector_spark.operators.selection import (
     KEY,
+    anti_selections,
+    apply_selections,
     export_selections,
     retract_compound,
     select_insert,
@@ -99,3 +101,33 @@ def test_export_order_is_total(spark, b):
     keys = [r[KEY] for r in rows]
     assert keys == sorted(keys) and len(keys) == len(set(keys))
     assert all(r.compounds == sorted(r.compounds) for r in rows)
+
+
+data_keys = st.lists(st.one_of(st.none(), st.sampled_from(KEYS)), min_size=0, max_size=8)
+dup_sel = st.lists(pair, min_size=0, max_size=8).map(lambda ps: ps + ps[: len(ps) // 2])
+
+
+@given(sel=dup_sel, keys=data_keys)
+@_SLOW
+def test_apply_and_anti_match_set_model(spark, sel, keys):
+    """Render-time apply/anti over a selection frame with duplicate rows and
+    several compounds, and data rows whose key may be null: apply keeps a
+    row iff its key is selected under any compound, anti keeps the rest,
+    and duplicates on the broadcast side never duplicate a data row."""
+    data = spark.createDataFrame(list(enumerate(keys)), f"id int, {KEY} string")
+    selected = {k for k, _ in sel}
+    want = sorted(i for i, k in enumerate(keys) if k in selected)
+    got = sorted(r.id for r in apply_selections(data, _df(spark, sel), KEY).collect())
+    assert got == want
+    rest = sorted(r.id for r in anti_selections(data, _df(spark, sel), KEY).collect())
+    assert rest == sorted(set(range(len(keys))) - set(want))
+
+
+def test_toggle_null_keyed_pair_on_both_sides_cancels(spark):
+    """A null-keyed pair present in the selections and in the hits is
+    removed once, like any other pair (set semantics, SQL EXCEPT), rather
+    than emitted once from each side."""
+    sel = _df(spark, [(None, "ethane"), (KEYS[0], "ethane")])
+    hits = _df(spark, [(None, "ethane"), (KEYS[1], "propane")])
+    got = sorted(map(tuple, select_toggle(sel, hits).collect()), key=repr)
+    assert got == sorted([(KEYS[0], "ethane"), (KEYS[1], "propane")], key=repr)
