@@ -20,7 +20,7 @@ example/data/README.md:9-10) generalized.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -511,9 +511,11 @@ def connected_components(
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
-        # Convergence is read off the SAME materialized result — no second
-        # labels-vs-labels join (which would add a shuffle per round just
-        # to count changes).
+        # Convergence is counted by an Observation on the aggregated frame,
+        # so the count rides the materializing job: no labels-vs-labels
+        # join and no second job per round. A lazy round (materialize=False)
+        # still needs one action to fire it.
+        changes = Observation()
         new = _materialize(
             adj.join(labels, adj.b == labels.id)
             .groupBy("a")
@@ -522,10 +524,15 @@ def connected_components(
                 F.min(
                     F.when(F.col("a") == F.col("b"), F.col("comp"))
                 ).alias("__prev"),
+            )
+            .observe(
+                changes, F.count_if(F.col("comp") != F.col("__prev")).alias("n")
             ),
             materialize,
         )
-        changed = new.filter(F.col("comp") != F.col("__prev")).count()
+        if materialize is False:
+            new.write.format("noop").mode("overwrite").save()
+        changed = changes.get["n"]
         labels = new.select(F.col("a").alias("id"), "comp")
         if changed == 0:
             break

@@ -19,13 +19,18 @@ of unbounded-forever.
 
 from __future__ import annotations
 
+import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import ensure_session_defaults, events_ts_unit, table_path
 from ..schemas import EVENTS_PHYSICAL, TABLE_SCHEMAS
+
+_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+_start_lock = threading.Lock()
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,44 +228,63 @@ def upsert_sink(target_path: str, keys: list[str], order_by: list[str] | None = 
     return sink
 
 
+def start_query(
+    spark: SparkSession, writer: DataStreamWriter, state_partitions: int | None
+) -> StreamingQuery:
+    """``writer.start()`` with `spark.sql.shuffle.partitions` set to
+    ``state_partitions`` for that call only (``None`` keeps the session's
+    value). A streaming query clones the session conf when it starts, so its
+    stateful operators keep the count for the whole run while the session
+    is restored as soon as ``start()`` returns. The module lock serializes
+    the set/start/restore, so two queries started on two threads cannot
+    restore each other's value or start with the other's count."""
+    with _start_lock:
+        old = spark.conf.get(_SHUFFLE_PARTITIONS)
+        if state_partitions is not None:
+            spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions))
+        try:
+            return writer.start()
+        finally:
+            spark.conf.set(_SHUFFLE_PARTITIONS, old)
+
+
 def run_stream_to_table(
     sdf: DataFrame,
     output_mode: str = "complete",
     name: str | None = None,
-    state_partitions: int | None = 8,
+    state_partitions: int | None = 1,
 ) -> DataFrame:
     """Execute a streaming DataFrame to completion over all available input
     (availableNow trigger → memory sink) and return the materialized result.
     Deterministic: one pass over the file source, then the query stops.
 
-    ``state_partitions`` sizes `spark.sql.shuffle.partitions` for THIS query
-    (stateful operators create one state-store instance per shuffle
-    partition, and the count is pinned into the checkpoint at first start —
-    per-query sizing is the real-world posture, not a local hack). The
-    default 8 suits these bounded replays; a production deployment sizes it
-    to peak throughput because it cannot be changed after the first run.
-    Session conf is restored afterward."""
+    ``state_partitions`` sizes `spark.sql.shuffle.partitions` for THIS query:
+    stateful operators create one state-store instance per shuffle
+    partition, and the count is pinned into the checkpoint at first start.
+    Cost model: every state partition is one task plus one state-store load
+    and one delta-file commit per micro-batch, and a commit costs tens of
+    milliseconds whatever its row count. A bounded replay whose state is a
+    few thousand rows therefore runs fastest on ONE partition (the default);
+    a production deployment sizes the count to peak state volume because it
+    cannot be changed after the first run. The override is scoped to query
+    start (``start_query``): the session's value is restored before the
+    query is awaited."""
     name = name or f"stream_out_{uuid.uuid4().hex[:12]}"
     spark = sdf.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        q = (
-            sdf.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # record the bounded-window audit of the final micro-batch plan
-        # (VERDICT r13 #4) — never raises, the suite test asserts clean
-        from ..plans import audit_streaming_query
+    q = start_query(
+        spark,
+        sdf.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True),
+        state_partitions,
+    )
+    q.awaitTermination()
+    # record the bounded-window audit of the final micro-batch plan
+    # (VERDICT r13 #4) — never raises, the suite test asserts clean
+    from ..plans import audit_streaming_query
 
-        audit_streaming_query(q, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    audit_streaming_query(q, name)
     return spark.table(name)
 
 

@@ -211,7 +211,6 @@ REWRITTEN_IN_ROUND = {
     "b06_kmv_intersect": 16,
     "b06_kmv_difference": 16,
     "b06_kmv_merge": 16,
-    "b20_stream_stream_left_outer": 16,
     "b15_surprisal_tertiles": 16,
     "b15_surprisal_planted": 16,
     # r17: the selection operators' broadcast build side is no longer
@@ -220,6 +219,30 @@ REWRITTEN_IN_ROUND = {
     "a13_selection_toggle": 17,
     "a16_semi_join_apply": 17,
     "a17_anti_join_retract": 17,
+    # r18: every streaming entry's state-partition count changed (8, or 4
+    # for the left-outer join, to the swept best: 1 by default, 2 or 4
+    # where one partition loses), and connected components reads its
+    # convergence count from an Observation on the materializing job
+    # instead of a second count job per round.
+    "b17_stream_tumbling": 18,
+    "b17_stream_sliding": 18,
+    "b18_stream_session": 18,
+    "b19_stream_watermark": 18,
+    "b20_stream_dedup": 18,
+    "b20_stream_toggle": 18,
+    "b20_stream_stream_join": 18,
+    "b17_stream_static_enrich": 18,
+    "b17_stream_quantile_sketch": 18,
+    "b20_stream_stream_left_outer": 18,
+    "b20_state_store_read": 18,
+    "b01_python_stream_source": 18,
+    "b01_python_stream_source_parallel": 18,
+    "b13_dedup_clusters": 18,
+    "b13_dedup_survivors": 18,
+    "b13_dedup_survivors_quality": 18,
+    "b14_embedding_dedup_survivors": 18,
+    "b16_image_dedup_survivors": 18,
+    "b13_leakage_safe_split": 18,
 }
 
 # The round-9 window (VERDICT r8 "Next round" #1-2, freshness hygiene):
@@ -801,21 +824,15 @@ assert len(_R15_WINDOW) == 50, len(_R15_WINDOW)
 #     are rows-only-by-design and stay excluded from oracle freshness);
 #   * 5 flex slots to the oldest (r10-latest) oracle-bearing re-confirms
 #     not already seated above, in their CORRECTNESS_r10.json order.
-# The round-17 window: CORRECTNESS_r16 was 50/50 green and every
-# REWRITTEN_IN_ROUND entry through r16 has a fresh row, so the slots go to
-#   * the 3 selection entries rewritten in r17 (REWRITTEN_IN_ROUND == 17)
-#     plus their 2 siblings over the same stored/boxed pair;
-#   * 45 oldest-row oracle-bearing re-confirms: every r10-latest row, then
+# The round-18 window: no correctness round has run since r16, so the r17
+# selection rewrites still wait for rows. Slots, priority order:
+#   * the 13 streaming entries whose state-partition count changed in r18
+#     and the 6 connected-components consumers (REWRITTEN_IN_ROUND == 18);
+#   * the 3 selection entries rewritten in r17 plus their 2 siblings;
+#   * 26 oldest-row oracle-bearing re-confirms: the r10-latest rows, then
 #     r11-latest rows, registry order within a round.
-_R17_WINDOW = [
-    # --- selection operators, rewritten in r17 (3) + siblings (2) ---
-    "a13_selection_toggle",
-    "a16_semi_join_apply",
-    "a17_anti_join_retract",
-    "a13_selection_insert",
-    "a17_retract_compound",
-    # --- r10-latest re-confirms (30) ---
-    "b12_dedup_exact",
+_R18_WINDOW = [
+    # --- streaming state partitions, rewritten in r18 (13) ---
     "b17_stream_tumbling",
     "b17_stream_sliding",
     "b18_stream_session",
@@ -824,6 +841,26 @@ _R17_WINDOW = [
     "b20_stream_toggle",
     "b20_stream_stream_join",
     "b17_stream_static_enrich",
+    "b17_stream_quantile_sketch",
+    "b20_stream_stream_left_outer",
+    "b20_state_store_read",
+    "b01_python_stream_source",
+    "b01_python_stream_source_parallel",
+    # --- connected-components consumers, rewritten in r18 (6) ---
+    "b13_dedup_clusters",
+    "b13_dedup_survivors",
+    "b13_dedup_survivors_quality",
+    "b14_embedding_dedup_survivors",
+    "b16_image_dedup_survivors",
+    "b13_leakage_safe_split",
+    # --- selection operators, rewritten in r17 (3) + siblings (2) ---
+    "a13_selection_toggle",
+    "a16_semi_join_apply",
+    "a17_anti_join_retract",
+    "a13_selection_insert",
+    "a17_retract_compound",
+    # --- r10-latest re-confirms (22) ---
+    "b12_dedup_exact",
     "b06_pivot",
     "b22_mixture_resample",
     "a18_inverted_index",
@@ -845,24 +882,13 @@ _R17_WINDOW = [
     "b26_kcore",
     "b26_sssp_bounded",
     "b26_assortativity",
-    # --- oldest r11-latest re-confirms (15) ---
+    # --- oldest r11-latest re-confirms (4) ---
     "b14_ann_lsh",
     "b15_lang_id_quality",
     "b16_multimodal_meta",
     "b16_multimodal_features",
-    "b16_resize",
-    "b14_ann_ivf",
-    "b01_python_stream_sink",
-    "q2_min_cost_supplier",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "q11_important_parts",
-    "q13_customer_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "a22_having",
 ]
-assert len(_R17_WINDOW) == 50, len(_R17_WINDOW)
+assert len(_R18_WINDOW) == 50, len(_R18_WINDOW)
 
 _R16_WINDOW = [
     # --- rewritten in r15, never driver-checked since (27) ---
@@ -1095,10 +1121,10 @@ _check_oracle_tables(QUERIES, set(_SCHEMAS))
 # The round whose window is active below; bench.BENCH_ROUND (the label
 # stamped on new BENCH_RECORDS readings) must match — tripwire in
 # tests/test_bench_records.py keeps the two bumps atomic.
-WINDOW_ROUND = 17
+WINDOW_ROUND = 18
 
-_rest = [n for n in QUERIES if n not in _R17_WINDOW]
-_order = _R17_WINDOW + _rest
+_rest = [n for n in QUERIES if n not in _R18_WINDOW]
+_order = _R18_WINDOW + _rest
 _reordered = {n: QUERIES[n] for n in _order}
 QUERIES.clear()
 QUERIES.update(_reordered)

@@ -11758,9 +11758,12 @@ def _rrf_bm25_scores(spark, d, weights, view="__r16_rrf_docs"):
     spark.sql analyzes eagerly, so the returned plan has the view INLINED
     — later createOrReplaceTempView calls on the same name cannot
     retarget it."""
+    from ._sqlgen import sql_string_literal
+
     d.createOrReplaceTempView(view)
     vals = ", ".join(
-        f"('{t}', CAST({int(m)} AS BIGINT))" for t, m in weights.items()
+        f"({sql_string_literal(t)}, CAST({int(m)} AS BIGINT))"
+        for t, m in weights.items()
     )
     return spark.sql(f"""
         WITH tok AS (

@@ -14,6 +14,7 @@ from ..streaming import (
     run_stream_to_table,
     session_windows,
     sliding_counts,
+    start_query,
     stream_dedup,
     stream_events,
     stream_static_enrich,
@@ -57,7 +58,12 @@ def b17_stream_tumbling(spark, sf_dir):
     "oracle replicates Spark's epoch-aligned overlapping-window assignment.",
 )
 def b17_stream_sliding(spark, sf_dir):
-    return run_stream_to_table(sliding_counts(stream_events(spark, sf_dir)))
+    # every event lands in two windows, so the aggregation itself is the
+    # work and one state partition (one core) loses. Sweep at sf0.1 on 4
+    # cores (median of 7): 1 -> 1.03 s, 2 -> 0.83 s, 4 -> 0.90 s, 8 -> 1.13 s.
+    return run_stream_to_table(
+        sliding_counts(stream_events(spark, sf_dir)), state_partitions=2
+    )
 
 
 @query(
@@ -88,7 +94,12 @@ def b17_stream_sliding(spark, sf_dir):
     "gaps-and-islands batch equivalent.",
 )
 def b18_stream_session(spark, sf_dir):
-    return run_stream_to_table(session_windows(stream_events(spark, sf_dir)))
+    # session merging sorts and merges per user: CPU work that one state
+    # partition serializes. Sweep at sf0.1 on 4 cores (median of 7):
+    # 1 -> 1.49 s, 2 -> 1.10 s, 4 -> 0.99 s, 8 -> 1.18 s.
+    return run_stream_to_table(
+        session_windows(stream_events(spark, sf_dir)), state_partitions=4
+    )
 
 
 @query(
@@ -157,7 +168,12 @@ def b20_stream_toggle(spark, sf_dir):
         F.col("event_type").alias("compound"),
         minute_key("ts").alias("date_key"),
     )
-    sink = run_stream_to_table(toggle_stream(clicks), output_mode="update")
+    # the Python state function is the work; one state partition runs it
+    # on one worker. Sweep at sf0.1 on 4 cores (median of 7): 1 -> 1.96 s,
+    # 2 -> 1.72 s, 4 -> 1.65 s, 8 -> 1.98 s.
+    sink = run_stream_to_table(
+        toggle_stream(clicks), output_mode="update", state_partitions=4
+    )
     return sink.groupBy("compound", "date_key").agg(
         F.max_by("selected", "batch_seq").alias("selected"),
         F.sum("n_toggles").alias("n_toggles"),
@@ -273,23 +289,19 @@ def b20_state_store_read(spark, sf_dir):
         f"/tmp/dsspark_statestore_{os.path.basename(sf_dir.rstrip('/'))}"
         f"_{spark.sparkContext.applicationId}"
     )
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        # state-store count per operator is pinned at first start (see
-        # run_stream_to_table); size it explicitly for the bounded replay
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            ev.dropDuplicates(["event_type", "user_bucket"])
-            .writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        audit_streaming_query(q, "b20_state_store_read")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    # one state partition: the state is a few dozen keys (see
+    # run_stream_to_table for the per-partition cost model)
+    q = start_query(
+        spark,
+        ev.dropDuplicates(["event_type", "user_bucket"])
+        .writeStream.outputMode("append")
+        .format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True),
+        1,
+    )
+    q.awaitTermination()
+    audit_streaming_query(q, "b20_state_store_read")
     state = spark.read.format("statestore").load(ckpt)
     return state.select(
         F.col("key.event_type").alias("k"),
@@ -375,34 +387,26 @@ def b01_python_stream_source(spark, sf_dir):
     spark.dataSource.register(LedgerSource)
     sdf = spark.readStream.format("dsspark_synth_stream").load()
     name = f"pyds_stream_{uuid.uuid4().hex[:12]}"
-    # r15: size the stateful agg's shuffle partitions for THIS query (one
-    # state-store instance per partition, committed per micro-batch — the
-    # count is pinned into the checkpoint at first start, so per-query
-    # sizing is the real-world posture; same pattern as
-    # run_stream_to_table and b20_state_store_read). 32 session
-    # partitions meant 32 state commits x 4 micro-batches for a 7-key
-    # aggregate; 8 measured ~1.9 s faster, identical result.
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            sdf.groupBy("tag")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("val").alias("val_sum"),
-            )
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
+    # One state partition for a 7-key aggregate: every partition is one
+    # state-store load + commit per micro-batch (run_stream_to_table).
+    # Sweep at sf0.1 on 4 cores: 1 -> 3.05 s, 8 -> 3.93 s.
+    q = start_query(
+        spark,
+        sdf.groupBy("tag")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("val").alias("val_sum"),
         )
-        try:
-            q.processAllAvailable()
-            audit_streaming_query(q, "b01_python_stream_source")
-        finally:
-            q.stop()
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name),
+        1,
+    )
+    try:
+        q.processAllAvailable()
+        audit_streaming_query(q, "b01_python_stream_source")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        q.stop()
     return spark.table(name)
 
 
@@ -507,17 +511,13 @@ def b20_stream_stream_left_outer(spark, sf_dir):
     joined = s.join(p, cond, "leftOuter").select(
         "signup_id", "purchase_id", s["user_id"]
     )
-    # r16 (guide §5, VERDICT r15 #5): a stream-stream join maintains FOUR
-    # state stores per shuffle partition (left/right × keyToNumValues /
-    # keyWithIndexToValue), each committed per micro-batch ×2 batches
-    # (data + the null-emitting flush) — at equal state volume it wants
-    # fewer, larger partitions than a single-store aggregation. Measured
-    # sweep at sf0.1 (tools/stream_floor_profile.py session, 3 probes
-    # each): 4 partitions 1.75-1.85 s vs 8's 2.1-2.2 s vs 16's 3.3 s,
-    # identical 20207 rows. Same per-query-sizing posture as the r15
-    # stream-source pins; production sizes this to peak throughput since
-    # the count is pinned into the checkpoint at first start.
-    return run_stream_to_table(joined, output_mode="append", state_partitions=4)
+    # A stream-stream join keeps FOUR state stores per shuffle partition
+    # (left/right x keyToNumValues / keyWithIndexToValue), each committed
+    # per micro-batch x2 batches (data + the null-emitting flush), so it
+    # runs on the default single state partition. Sweep at sf0.1 on 4
+    # cores (median of 7): 1 -> 1.83 s, 2 -> 1.82 s, 4 -> 2.16 s,
+    # 8 -> 2.92 s, identical rows.
+    return run_stream_to_table(joined, output_mode="append")
 
 
 @query(
@@ -617,27 +617,22 @@ def b01_python_stream_source_parallel(spark, sf_dir):
     spark.dataSource.register(LedgerParallelSource)
     sdf = spark.readStream.format("dsspark_synth_stream_parallel").load()
     name = f"pyds_pstream_{uuid.uuid4().hex[:12]}"
-    # r15: per-query state-store sizing, exactly as b01_python_stream_source
-    # (8 partitions for a 7x16-key complete-mode agg; 32 session partitions
-    # cost ~1.8 s/run in per-micro-batch state commits).
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    # One state partition, as in b01_python_stream_source (7x16 keys).
+    # Sweep at sf0.1 on 4 cores: 1 -> 3.59 s, 8 -> 5.15 s.
+    q = start_query(
+        spark,
+        sdf.groupBy("tag", "pid")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("val").alias("val_sum"))
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name),
+        1,
+    )
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            sdf.groupBy("tag", "pid")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("val").alias("val_sum"))
-            .writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            audit_streaming_query(q, "b01_python_stream_source_parallel")
-        finally:
-            q.stop()
+        q.processAllAvailable()
+        audit_streaming_query(q, "b01_python_stream_source_parallel")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        q.stop()
     return (
         spark.table(name)
         .groupBy("tag")

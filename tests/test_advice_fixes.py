@@ -142,19 +142,20 @@ def test_connected_components_materialize_modes(spark, tmp_path):
         [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
     )
     expected = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    for mode in ("local", "persist", False):
-        got = {
-            (r["id"], r["comp"])
-            for r in connected_components(pairs, materialize=mode).collect()
-        }
-        assert got == expected, mode
     # reliable mode needs a checkpoint dir
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    got = {
-        (r["id"], r["comp"])
-        for r in connected_components(pairs, materialize="reliable").collect()
-    }
-    assert got == expected
+    for mode in ("local", "persist", "reliable", False):
+        # the per-round convergence count is an Observation that must fire
+        # in every mode: 3 -> 1 changed labels, then the no-change round
+        stats = {}
+        got = {
+            (r["id"], r["comp"])
+            for r in connected_components(
+                pairs, materialize=mode, stats=stats
+            ).collect()
+        }
+        assert got == expected, mode
+        assert stats["rounds"] == 3, (mode, stats)
 
 
 # --- driver-window pinning ----------------------------------------------------
@@ -732,3 +733,22 @@ def test_extra_conf_env_rejects_segment_without_equals(monkeypatch):
     )
     with pytest.raises(ValueError, match="'spark.sql.ansi.enabled'"):
         get_spark()
+
+
+def test_rrf_weight_terms_quoted_into_values_literal(spark):
+    """ADVICE r16: the BM25 weight terms are spliced into a VALUES literal
+    through sql_string_literal — a term with a single quote round-trips and
+    scores its document; a backslash (an escape only in Spark's dialect)
+    raises instead of silently changing the term."""
+    from dataselector_spark.suite.extras import _rrf_bm25_scores
+
+    docs = spark.createDataFrame(
+        [(1, "it's a test"), (2, "plain words here")], "doc_id bigint, text string"
+    )
+    scored = {
+        r["doc_id"]: r["score_milli"]
+        for r in _rrf_bm25_scores(spark, docs, {"it's": 1000}).collect()
+    }
+    assert set(scored) == {1} and scored[1] > 0, scored
+    with pytest.raises(ValueError, match="backslash"):
+        _rrf_bm25_scores(spark, docs, {"a\\b": 1000})

@@ -4,6 +4,7 @@ emission. Micro-batch boundaries are forced by adding source files between
 `processAllAvailable()` calls on a live query."""
 
 import os
+import time
 
 import pandas as pd
 import pyarrow as pa
@@ -612,3 +613,156 @@ def test_python_stream_sink_entry_cleans_up_tmp(spark):
     assert set(g.glob("/tmp/dsspark_pysink_*")) == before
     rows = df.collect()  # collectable AFTER the files are gone
     assert rows and all(r["n"] > 0 for r in rows)
+
+
+# --- state-partition sizing (run_stream_to_table / start_query) ---------------
+
+
+def _state_probe(spark):
+    """A StreamingQueryListener that keeps, per query name, the state
+    operators' numShufflePartitions and the session's shuffle-partition
+    setting seen while each progress event is handled."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class StateProbe(StreamingQueryListener):
+        def __init__(self):
+            self.parts: dict[str, set[int]] = {}
+            self.conf_seen: list[str] = []
+            self.terminated: set[str] = set()
+            self.names: dict[str, str] = {}
+            self._cv = threading.Condition()
+
+        def onQueryStarted(self, event):
+            with self._cv:
+                self.names[str(event.runId)] = event.name
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            seen = spark.conf.get("spark.sql.shuffle.partitions")
+            with self._cv:
+                self.conf_seen.append(seen)
+                self.parts.setdefault(p.name, set()).update(
+                    s.numShufflePartitions for s in p.stateOperators
+                )
+
+        def onQueryTerminated(self, event):
+            with self._cv:
+                self.terminated.add(self.names.get(str(event.runId)))
+                self._cv.notify_all()
+
+        def wait(self, names, timeout=60.0):
+            with self._cv:
+                assert self._cv.wait_for(
+                    lambda: set(names) <= self.terminated, timeout
+                ), f"no termination event for some of {names}"
+
+    probe = StateProbe()
+    spark.streams.addListener(probe)
+    return probe
+
+
+def test_state_partitions_default_one_and_explicit(spark, sf_dir):
+    """Both the dedup and the tumbling state operators run on the requested
+    number of state partitions: 1 by default, 4 when passed, whatever the
+    session's own shuffle-partition count."""
+    from dataselector_spark.streaming import (
+        run_stream_to_table,
+        stream_dedup,
+        stream_events,
+        watermarked_tumbling,
+    )
+
+    probe = _state_probe(spark)
+    try:
+        runs = {}
+        for builder in (stream_dedup, watermarked_tumbling):
+            for n in (None, 4):
+                name = f"probe_{builder.__name__}_{n}"
+                kw = {} if n is None else {"state_partitions": n}
+                run_stream_to_table(
+                    builder(stream_events(spark, sf_dir)), "append", name, **kw
+                )
+                runs[name] = 1 if n is None else 4
+        probe.wait(runs)
+    finally:
+        spark.streams.removeListener(probe)
+    assert {name: probe.parts.get(name) for name in runs} == {
+        name: {n} for name, n in runs.items()
+    }
+
+
+def test_state_partitions_override_scoped_to_start(spark, sf_dir):
+    """The override is held only across start(): by the time a progress
+    event is handled the session is back at the caller's value."""
+    from dataselector_spark.streaming import (
+        run_stream_to_table,
+        stream_dedup,
+        stream_events,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != "3"
+    probe = _state_probe(spark)
+    try:
+        run_stream_to_table(
+            stream_dedup(stream_events(spark, sf_dir)), "append", "probe_scoped", 3
+        )
+        probe.wait(["probe_scoped"])
+    finally:
+        spark.streams.removeListener(probe)
+    assert probe.parts["probe_scoped"] == {3}
+    assert probe.conf_seen and set(probe.conf_seen) == {before}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_concurrent_streams_leave_session_partitions_unchanged(spark, sf_dir):
+    """Two overlapping run_stream_to_table calls with different counts:
+    each query keeps its own count, and neither restores the other's value
+    into the session."""
+    import threading
+
+    from dataselector_spark.streaming import (
+        run_stream_to_table,
+        stream_events,
+        watermarked_tumbling,
+    )
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    counts = {"probe_conc_a": 3, "probe_conc_b": 5}
+    assert before not in {str(n) for n in counts.values()}
+    barrier = threading.Barrier(len(counts))
+    errors = []
+
+    def run(name, n, delay):
+        try:
+            barrier.wait()
+            time.sleep(delay)
+            run_stream_to_table(
+                watermarked_tumbling(stream_events(spark, sf_dir)), "append", name, n
+            )
+        except Exception as ex:  # surfaced by the assert below
+            errors.append(ex)
+
+    probe = _state_probe(spark)
+    try:
+        threads = [
+            threading.Thread(target=run, args=(name, n, 0.3 * i))
+            for i, (name, n) in enumerate(counts.items())
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errors, errors
+        probe.wait(counts)
+    finally:
+        spark.streams.removeListener(probe)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    assert {name: probe.parts[name] for name in counts} == {
+        name: {n} for name, n in counts.items()
+    }

@@ -19,29 +19,29 @@ import uuid
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataselector_spark.session import get_spark  # noqa: E402
-from dataselector_spark.streaming import stream_events, tumbling_counts  # noqa: E402
+from dataselector_spark.streaming import (  # noqa: E402
+    start_query,
+    stream_events,
+    tumbling_counts,
+)
 
 
 def run_b17(spark, sf_dir):
     name = f"floor_{uuid.uuid4().hex[:8]}"
     sdf = tumbling_counts(stream_events(spark, sf_dir))
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     t0 = time.perf_counter()
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            sdf.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
-        t_started = time.perf_counter()
-        q.awaitTermination()
-        t_done = time.perf_counter()
-        prog = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    q = start_query(
+        spark,
+        sdf.writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True),
+        1,
+    )
+    t_started = time.perf_counter()
+    q.awaitTermination()
+    t_done = time.perf_counter()
+    prog = [json.loads(p.json) for p in q.recentProgress]
     n = spark.table(name).count()
     t_read = time.perf_counter()
     print(
