@@ -414,7 +414,7 @@ def _isolated_set_runs(reps: int, n_runs: int) -> dict[str, dict]:
 # Round label stamped on new bench records; bump alongside the driver-window
 # rotation in suite/__init__.py (it only labels provenance — adjudication is
 # by wall value, never by round).
-BENCH_ROUND = "r18"
+BENCH_ROUND = "r19"
 
 # Keep at most this many readings per set in BENCH_RECORDS.json (ring
 # buffer, newest last) — enough for several min-of-N batches of context
@@ -468,6 +468,126 @@ def _record_reading(
         pass
 
 
+def headline_record(
+    timings: dict[str, float],
+    isolated: dict[str, dict],
+    n_runs: int,
+    *,
+    sf: float,
+    cpus: int,
+    reps: int,
+    probe: float,
+    multi_probe: float | None,
+) -> dict:
+    """The final, compact JSON line of a full run: the per-set walls of the
+    session pass (``value`` is v1, ``headline_<set>_wall`` the others), the
+    fresh-JVM isolated walls and the contention stamp."""
+    walls = {
+        key: round(sum(timings[n] for n in names), 3) for key, names in SETS.items()
+    }
+    scale = CPU_PROBE_REF / probe if probe > 0 else 1.0
+    isolated_walls = {
+        k: v.get("wall") for k, v in isolated.items() if "wall" in v
+    }
+    isolated_probes = {
+        k: v.get("cpu_probe_s")
+        for k, v in isolated.items()
+        if "cpu_probe_s" in v
+    }
+    # Mechanical contention stamp (VERDICT r9 #6): the r9 closing-bench
+    # adjudication compared probe SPREADS by hand (clean run 0.81-0.84 =
+    # 1.04x spread; contended run 0.87-0.99 = 1.14x).  Encode that rule:
+    # the per-set children run back-to-back on the same box, so a >10%
+    # spread across their single-core probes (incl. the parent's) means
+    # another tenant moved in mid-run and the walls carry that noise.
+    # VERDICT r11 #3 extends it with the MULTI-core probe batch: a
+    # neighbor saturating other cores is invisible to one-core md5 but
+    # slows the 8-process batch proportionally, so the same >10% spread
+    # rule applies to the multi probes (every child's, plus the parent's).
+    all_probes = [
+        p
+        for v in isolated.values()
+        for p in v.get("probe_runs", [])
+        if p
+    ] + ([probe] if probe else [])
+    probe_spread = (
+        round(max(all_probes) / min(all_probes), 3) if all_probes else None
+    )
+    all_multi = [
+        p
+        for v in isolated.values()
+        for p in v.get("multi_probe_runs", [])
+        if p
+    ] + ([multi_probe] if multi_probe else [])
+    multi_probe_spread = (
+        round(max(all_multi) / min(all_multi), 3) if all_multi else None
+    )
+    contended = (probe_spread is not None and probe_spread > 1.10) or (
+        multi_probe_spread is not None and multi_probe_spread > 1.10
+    )
+
+    record = {
+        "metric": "headline_suite_wall",
+        # HEADLINE numbers FIRST (VERDICT r9 #6): the fresh-JVM per-set
+        # isolated walls are the cross-round comparison of record, and the
+        # contention stamp makes the noise-band call mechanical — the final
+        # line leads with them so a truncated tail still carries the graded
+        # numbers.
+        "isolated_walls": isolated_walls,
+        "isolated_probes": isolated_probes,
+        # VERDICT r11 #3: isolated_walls are now min-of-N fresh-JVM children
+        # per set (robust to the measured cyclic load); per-run walls live
+        # in the detail line / BENCH_DETAIL.json
+        "isolated_method": "min_of_n_fresh_jvm",
+        "isolated_runs": n_runs,
+        "probe_spread": probe_spread,
+        "multi_probe_spread": multi_probe_spread,
+        "contended": contended,
+        "value": walls["v1"],
+        "unit": "sec",
+        "sf": sf,
+        "cpus": cpus,
+        "n_queries": len(timings),
+        # v1 per-query walls only on this line (the full dict is on the
+        # detail line / BENCH_DETAIL.json) — keeps the line under the
+        # driver's ~2 KB tail capture
+        "queries": {n: timings[n] for n in HEADLINE},
+        # `value` spans the v1 headline set only; the later frozen sets are
+        # timed in queries{} and summed per set here
+        "headline_n": len(HEADLINE),
+    }
+    for key in list(SETS)[1:]:
+        record[f"headline_{key}_wall"] = walls[key]
+        record[f"headline_{key}_n"] = len(SETS[key])
+    record.update(
+        {
+            # legacy key (r6 reports): same value as headline_v2_wall
+            "extra_r6_wall": walls["v2"],
+            # methodology stamp (ADVICE r3 #3): r1/r2 were best-of-2, r3+
+            # are median of warm reps — make the JSON self-describing
+            "method": "median_of_warm",
+            "reps": reps,
+            # host-speed calibration (r7): fixed single-core md5 loop,
+            # seconds. Compare across rounds to separate shared-host drift
+            # from engine regressions (see _cpu_probe docstring).
+            "cpu_probe_s": probe,
+            # multi-core host probe (VERDICT r11 #3): wall of an 8-process
+            # md5 batch — sees the multi-core contention the single-core
+            # probe cannot (see _cpu_probe_multi)
+            "cpu_probe_multi_s": multi_probe,
+            # drift-normalized walls (VERDICT r7 #3): raw * (ref/probe),
+            # i.e. "this wall at r7-era host speed" — the cross-round
+            # comparison number, so verdicts stop hand-arguing drift.
+            "cpu_probe_ref": CPU_PROBE_REF,
+            "value_normalized": round(walls["v1"] * scale, 3),
+        }
+    )
+    # normalized walls exist for the sets of the era that introduced them
+    for key in ("v2", "v3", "v4", "v5", "v6"):
+        record[f"headline_{key}_wall_normalized"] = round(walls[key] * scale, 3)
+    return record
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -509,38 +629,10 @@ def main() -> None:
     # footers + codegen compilation), report the median of the warm runs —
     # medians are robust to local[32] GC jitter that min/best-of-2 is not.
     timings = _time_queries(
-        spark,
-        HEADLINE
-        + HEADLINE_V2
-        + HEADLINE_V3
-        + HEADLINE_V4
-        + HEADLINE_V5
-        + HEADLINE_V6
-        + HEADLINE_V7
-        + HEADLINE_V8
-        + HEADLINE_V9
-        + HEADLINE_V10
-        + HEADLINE_V11
-        + HEADLINE_V12,
-        sf_dir,
-        reps,
+        spark, [n for names in SETS.values() for n in names], sf_dir, reps
     )
-
-    total = round(sum(timings[n] for n in HEADLINE), 3)
-    extra = round(sum(timings[n] for n in HEADLINE_V2), 3)
-    extra3 = round(sum(timings[n] for n in HEADLINE_V3), 3)
-    extra4 = round(sum(timings[n] for n in HEADLINE_V4), 3)
-    extra5 = round(sum(timings[n] for n in HEADLINE_V5), 3)
-    extra6 = round(sum(timings[n] for n in HEADLINE_V6), 3)
-    extra7 = round(sum(timings[n] for n in HEADLINE_V7), 3)
-    extra8 = round(sum(timings[n] for n in HEADLINE_V8), 3)
-    extra9 = round(sum(timings[n] for n in HEADLINE_V9), 3)
-    extra10 = round(sum(timings[n] for n in HEADLINE_V10), 3)
-    extra11 = round(sum(timings[n] for n in HEADLINE_V11), 3)
-    extra12 = round(sum(timings[n] for n in HEADLINE_V12), 3)
     probe = _cpu_probe()
     multi_probe = _cpu_probe_multi()
-    scale = CPU_PROBE_REF / probe if probe > 0 else 1.0
 
     # Fresh-JVM per-set isolation pass (VERDICT r8 #4), min-of-N children
     # per set (VERDICT r11 #3). The session JVM is stopped first so
@@ -558,46 +650,6 @@ def main() -> None:
             child_reps = 2
             os.environ["SPARK_GRAFT_BENCH_REPS"] = "2"
         isolated = _isolated_set_runs(child_reps, n_runs)
-    isolated_walls = {
-        k: v.get("wall") for k, v in isolated.items() if "wall" in v
-    }
-    isolated_probes = {
-        k: v.get("cpu_probe_s")
-        for k, v in isolated.items()
-        if "cpu_probe_s" in v
-    }
-    # Mechanical contention stamp (VERDICT r9 #6): the r9 closing-bench
-    # adjudication compared probe SPREADS by hand (clean run 0.81-0.84 =
-    # 1.04x spread; contended run 0.87-0.99 = 1.14x).  Encode that rule:
-    # the per-set children run back-to-back on the same box, so a >10%
-    # spread across their single-core probes (incl. the parent's) means
-    # another tenant moved in mid-run and the walls carry that noise.
-    # VERDICT r11 #3 extends it with the MULTI-core probe batch: a
-    # neighbor saturating other cores is invisible to one-core md5 but
-    # slows the 8-process batch proportionally, so the same >10% spread
-    # rule applies to the multi probes (every child's, plus the parent's).
-    all_probes = [
-        p
-        for v in isolated.values()
-        for p in v.get("probe_runs", [])
-        if p
-    ] + ([probe] if probe else [])
-    probe_spread = (
-        round(max(all_probes) / min(all_probes), 3) if all_probes else None
-    )
-    all_multi = [
-        p
-        for v in isolated.values()
-        for p in v.get("multi_probe_runs", [])
-        if p
-    ] + ([multi_probe] if multi_probe else [])
-    multi_probe_spread = (
-        round(max(all_multi) / min(all_multi), 3) if all_multi else None
-    )
-    contended = (probe_spread is not None and probe_spread > 1.10) or (
-        multi_probe_spread is not None and multi_probe_spread > 1.10
-    )
-
     detail = {
         "metric": "headline_suite_wall_detail",
         "queries": timings,
@@ -620,82 +672,16 @@ def main() -> None:
         pass
     print(
         json.dumps(
-            {
-                "metric": "headline_suite_wall",
-                # HEADLINE numbers FIRST (VERDICT r9 #6): the fresh-JVM
-                # per-set isolated walls are the cross-round comparison of
-                # record, and the contention stamp makes the noise-band
-                # call mechanical — the final line leads with them so a
-                # truncated tail still carries the graded numbers.
-                "isolated_walls": isolated_walls,
-                "isolated_probes": isolated_probes,
-                # VERDICT r11 #3: isolated_walls are now min-of-N fresh-JVM
-                # children per set (robust to the measured cyclic load);
-                # per-run walls live in the detail line / BENCH_DETAIL.json
-                "isolated_method": "min_of_n_fresh_jvm",
-                "isolated_runs": n_runs,
-                "probe_spread": probe_spread,
-                "multi_probe_spread": multi_probe_spread,
-                "contended": contended,
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "cpus": cpus,
-                "n_queries": len(timings),
-                # v1 per-query walls only on this line (the full 68-query
-                # dict is on the detail line / BENCH_DETAIL.json) — keeps
-                # the line under the driver's ~2 KB tail capture
-                "queries": {n: timings[n] for n in HEADLINE},
-                # `value` spans the r3-stable 31-query headline set only;
-                # the 6 r6 additions are timed in queries{} and summed here
-                "headline_n": len(HEADLINE),
-                "headline_v2_wall": extra,
-                "headline_v2_n": len(HEADLINE_V2),
-                "headline_v3_wall": extra3,
-                "headline_v3_n": len(HEADLINE_V3),
-                "headline_v4_wall": extra4,
-                "headline_v4_n": len(HEADLINE_V4),
-                "headline_v5_wall": extra5,
-                "headline_v5_n": len(HEADLINE_V5),
-                "headline_v6_wall": extra6,
-                "headline_v6_n": len(HEADLINE_V6),
-                "headline_v7_wall": extra7,
-                "headline_v7_n": len(HEADLINE_V7),
-                "headline_v8_wall": extra8,
-                "headline_v8_n": len(HEADLINE_V8),
-                "headline_v9_wall": extra9,
-                "headline_v9_n": len(HEADLINE_V9),
-                "headline_v10_wall": extra10,
-                "headline_v10_n": len(HEADLINE_V10),
-                "headline_v11_wall": extra11,
-                "headline_v11_n": len(HEADLINE_V11),
-                "headline_v12_wall": extra12,
-                "headline_v12_n": len(HEADLINE_V12),
-                # legacy key (r6 reports): same value as headline_v2_wall
-                "extra_r6_wall": extra,
-                # methodology stamp (ADVICE r3 #3): r1/r2 were best-of-2,
-                # r3+ are median of warm reps — make the JSON self-describing
-                "method": "median_of_warm",
-                "reps": reps,
-                # host-speed calibration (r7): fixed single-core md5 loop,
-                # seconds. Compare across rounds to separate shared-host
-                # drift from engine regressions (see _cpu_probe docstring).
-                "cpu_probe_s": probe,
-                # multi-core host probe (VERDICT r11 #3): wall of an
-                # 8-process md5 batch — sees the multi-core contention the
-                # single-core probe cannot (see _cpu_probe_multi)
-                "cpu_probe_multi_s": multi_probe,
-                # drift-normalized walls (VERDICT r7 #3): raw * (ref/probe),
-                # i.e. "this wall at r7-era host speed" — the cross-round
-                # comparison number, so verdicts stop hand-arguing drift.
-                "cpu_probe_ref": CPU_PROBE_REF,
-                "value_normalized": round(total * scale, 3),
-                "headline_v2_wall_normalized": round(extra * scale, 3),
-                "headline_v3_wall_normalized": round(extra3 * scale, 3),
-                "headline_v4_wall_normalized": round(extra4 * scale, 3),
-                "headline_v5_wall_normalized": round(extra5 * scale, 3),
-                "headline_v6_wall_normalized": round(extra6 * scale, 3),
-            }
+            headline_record(
+                timings,
+                isolated,
+                n_runs,
+                sf=sf,
+                cpus=cpus,
+                reps=reps,
+                probe=probe,
+                multi_probe=multi_probe,
+            )
         )
     )
 

@@ -3,8 +3,7 @@
 Spark analogue of the reference's literal name->path map
 (/root/reference/example/config.js:8-15, looked up at index.js:393): here the
 catalog is a thin resolver to `spark.read.parquet` with the explicit schema
-from schemas.py, plus temp-view registration so every operator is equally
-expressible through SQL.
+from schemas.py.
 
 Scale note: the reference re-fetches the whole file on every render
 (index.js:397, no cache). We read lazily — Catalyst prunes columns and pushes
@@ -88,6 +87,9 @@ def events_ts_unit(path: str) -> str:
     return distinct[0]
 
 
+_PINNED_ATTR = "_dataselector_defaults_ok"
+
+
 def ensure_session_defaults(spark: SparkSession) -> None:
     """Pin the two session settings the engine's semantics depend on, since
     the session may be caller-owned (the driver builds its own):
@@ -105,9 +107,10 @@ def ensure_session_defaults(spark: SparkSession) -> None:
     them), so remember that on the session object and return in pure
     Python afterwards. Anyone flipping the confs mid-session owns the
     breakage, exactly as before (the old probe only re-pinned on the NEXT
-    load_table anyway).
+    load_table anyway). A caller that pins its own settings (say, an ANSI
+    sweep) calls `mark_session_pinned` first, and this leaves them alone.
     """
-    if getattr(spark, "_dataselector_defaults_ok", False):
+    if getattr(spark, _PINNED_ATTR, False):
         return
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -125,7 +128,15 @@ def ensure_session_defaults(spark: SparkSession) -> None:
         spark.conf.set(
             "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
         )
-    spark._dataselector_defaults_ok = True
+    mark_session_pinned(spark)
+
+
+def mark_session_pinned(spark: SparkSession) -> None:
+    """Declare ``spark``'s session settings pinned: `ensure_session_defaults`
+    (run by every `load_table`) returns without reading or setting any conf
+    from now on. For callers that own the settings — they must then pin the
+    UTC timezone and TIMESTAMP_MICROS output themselves."""
+    setattr(spark, _PINNED_ATTR, True)
 
 
 # Session-scoped TABLE-PLAN cache (r15): resolving a parquet relation costs
@@ -189,20 +200,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
     per_session[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table that exists under ``sf_dir``."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        if os.path.exists(table_path(sf_dir, name)):
-            out[name] = load_table(spark, sf_dir, name)
-    return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load all tables and register them as temp views (SQL entry point)."""
-    tables = load_tables(spark, sf_dir)
-    for name, df in tables.items():
-        df.createOrReplaceTempView(name)
-    return tables

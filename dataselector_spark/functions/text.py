@@ -44,9 +44,10 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col))
 
 
-def word_ngrams(col: Column | str, n: int) -> Column:
-    """Sliding word n-grams as space-joined strings (shingles for Jaccard /
-    MinHash). Empty array when the document has < n tokens.
+def word_ngrams(col: str, n: int) -> Column:
+    """Sliding word n-grams of the string column NAMED ``col``, as
+    space-joined strings (shingles for Jaccard / MinHash). Empty array when
+    the document has < n tokens.
 
     The token array is bound ONCE through a single-element-array transform
     lambda: referencing the split expression directly inside the
@@ -54,23 +55,18 @@ def word_ngrams(col: Column | str, n: int) -> Column:
     n-gram position — O(tokens²) splits per document, measured 2.6× slower
     on the sf0.1 corpus (1.60 s → 0.61 s for the 3-gram pass).
 
-    r15 (the Py4J expression law, docs/SCALE.md): for plain column names
-    the whole expression is parsed from ONE SQL string — the DataFrame-API
-    nested-lambda build cost ~170 bridge commands (~40 ms of driver
-    latency) per call; the parsed tree is the identical expression."""
-    if isinstance(col, str):
-        ident = "`" + col.replace("`", "``") + "`"
-        return F.expr(word_ngrams_sql(ident, n))
-    return F.transform(
-        F.array(tokens(col)),
-        lambda tk: F.when(
-            F.size(tk) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(tk) - n + 1),
-                lambda i: F.concat_ws(" ", F.slice(tk, i, n)),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )[0]
+    r15 (the Py4J expression law, docs/SCALE.md): the whole expression is
+    parsed from ONE SQL string — the DataFrame-API nested-lambda build cost
+    ~170 bridge commands (~40 ms of driver latency) per call. A Column
+    argument raises TypeError: compose SQL fragments through
+    `word_ngrams_sql` instead."""
+    if not isinstance(col, str):
+        raise TypeError(
+            f"word_ngrams takes a column name, not {type(col).__name__}; "
+            "use word_ngrams_sql to compose over an expression"
+        )
+    ident = "`" + col.replace("`", "``") + "`"
+    return F.expr(word_ngrams_sql(ident, n))
 
 
 def word_ngrams_sql(col_sql: str, n: int) -> str:
@@ -78,8 +74,8 @@ def word_ngrams_sql(col_sql: str, n: int) -> str:
     composing into larger single-parse expressions (the Py4J law)."""
     # ADVICE r15 #3: TOKEN_SEP is interpolated into a single-quoted SQL
     # literal below; a separator containing quote/backslash metacharacters
-    # would silently diverge from the Column path (Spark SQL literal
-    # escaping differs from F.split's Python-side argument). Fail loudly
+    # would silently diverge from `tokens` (Spark SQL literal escaping
+    # differs from F.split's Python-side argument). Fail loudly
     # instead if anyone swaps in such a separator (an `if`, not an
     # `assert`, so `python -O` keeps the check).
     if "'" in TOKEN_SEP or "\\" in TOKEN_SEP:
@@ -108,17 +104,6 @@ def word_ngram_hashes_sql(col_sql: str, n: int, distinct: bool = True) -> str:
     at the checked SFs fails loudly rather than passing silently."""
     inner = f"transform({word_ngrams_sql(col_sql, n)}, s -> xxhash64(s))"
     return f"array_distinct({inner})" if distinct else inner
-
-
-def char_ngrams(col: Column | str, k: int) -> Column:
-    """Character k-shingles."""
-    c = _c(col)
-    return F.when(
-        F.length(c) >= k,
-        F.transform(
-            F.sequence(F.lit(1), F.length(c) - k + 1), lambda i: F.substring(c, i, k)
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def stopword_hits(col: Column | str, stopwords: list[str]) -> Column:

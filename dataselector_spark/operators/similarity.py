@@ -85,22 +85,16 @@ def sign_lsh_signature_sql(vec_sql: str, planes: list[list[float]]) -> str:
     )
 
 
-def sign_lsh_signature(vec_col, planes: list[list[float]]):
-    """H-bit sign signature: bit h = [vec · plane_h >= 0]. ``vec_col`` as a
-    plain column NAME takes the single-parse path; Column inputs keep the
-    (bit-identical, slower-to-build) API form."""
-    if isinstance(vec_col, str):
-        return F.expr(sign_lsh_signature_sql(_ident(vec_col), planes))
-    bits = [
-        F.when(dot_product(vec_col, _query_vec_lit(p)) >= 0, F.lit(1 << h)).otherwise(
-            F.lit(0)
+def sign_lsh_signature(vec_col: str, planes: list[list[float]]):
+    """H-bit sign signature of the array column NAMED ``vec_col``: bit h =
+    [vec · plane_h >= 0], one parsed expression. A Column argument raises
+    TypeError: compose SQL fragments through `sign_lsh_signature_sql`."""
+    if not isinstance(vec_col, str):
+        raise TypeError(
+            f"sign_lsh_signature takes a column name, not {type(vec_col).__name__}; "
+            "use sign_lsh_signature_sql to compose over an expression"
         )
-        for h, p in enumerate(planes)
-    ]
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig + b
-    return sig
+    return F.expr(sign_lsh_signature_sql(_ident(vec_col), planes))
 
 
 def _pseudo_planes(dim: int, num_planes: int, seed: int = 42) -> list[list[float]]:

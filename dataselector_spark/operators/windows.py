@@ -81,27 +81,32 @@ def zscore_outliers(
     IEEE expression over the same exact inputs. Contract: ``group`` is a
     QC series key of broadcastable cardinality (per-series stats must fit
     one node in ANY formulation that attaches them back to rows)."""
-    # stats' key columns are RENAMED (__g_i) so the join back to df — a
-    # self-join by lineage — is unambiguous without dataset aliases.
+    # stats' columns get a prefix no input column starts with, so the join
+    # back to df — a self-join by lineage — is unambiguous without dataset
+    # aliases, whatever df's columns are named.
+    p = "__zs"
+    while any(c.startswith(p) for c in df.columns):
+        p += "_"
+    n_c, s1_c, s2_c = f"{p}_n", f"{p}_s1", f"{p}_s2"
     stats = (
         df.groupBy(*group)
         .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum(dec2(value)).cast("double").alias("__s1"),
+            F.count(F.lit(1)).alias(n_c),
+            F.sum(dec2(value)).cast("double").alias(s1_c),
             # value is 2-dp → value² is exactly 4-dp; decimal(22,4) sums
             # stay exact.
             F.sum((dec2(value) * dec2(value)).cast("decimal(22,4)"))
             .cast("double")
-            .alias("__s2"),
+            .alias(s2_c),
         )
         .select(
-            *[F.col(g).alias(f"__g_{i}") for i, g in enumerate(group)],
-            "__n",
-            "__s1",
-            "__s2",
+            *[F.col(g).alias(f"{p}_g_{i}") for i, g in enumerate(group)],
+            n_c,
+            s1_c,
+            s2_c,
         )
     )
-    n, s1, s2 = F.col("__n"), F.col("__s1"), F.col("__s2")
+    n, s1, s2 = F.col(n_c), F.col(s1_c), F.col(s2_c)
     mean = s1 / n
     var = F.when(n > 1, (s2 - s1 * s1 / n) / (n - F.lit(1)))
     std = F.sqrt(var)
@@ -112,7 +117,7 @@ def zscore_outliers(
     # exactly, and EqualNullSafe is still a hash-join key.
     cond = None
     for i, g in enumerate(group):
-        c = F.col(g).eqNullSafe(F.col(f"__g_{i}"))
+        c = F.col(g).eqNullSafe(F.col(f"{p}_g_{i}"))
         cond = c if cond is None else cond & c
     return df.join(F.broadcast(stats), cond).select(
         *df.columns,

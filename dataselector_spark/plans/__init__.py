@@ -45,10 +45,6 @@ def has_take_ordered(df: DataFrame) -> bool:
     return "TakeOrderedAndProject" in physical_plan(df)
 
 
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    return physical_plan(df).count("WholeStageCodegen")
-
-
 def shuffle_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the plan (the scale currency)."""
     return len(re.findall(r"Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)", physical_plan(df)))

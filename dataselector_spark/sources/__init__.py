@@ -1,7 +1,7 @@
 """Sources & sinks (SURVEY.md §2 B1, A1/A2).
 
-`reference` ingests the reference widget's own JSON layout; generic
-parquet/JSON/CSV round-trips live in the writers here. Delta/Iceberg-style
+`reference` ingests the reference widget's own JSON layout; the storage
+layout writers (small-files compaction, sort-clustered parquet) live here. Delta/Iceberg-style
 table formats need jars not present in this container — gate behind
 import-try if ever added.
 """
@@ -9,23 +9,6 @@ import-try if ever added.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    """A21's sink: line-delimited JSON (the distributed analogue of the
-    reference's pretty-printed download, index.js:818-836)."""
-    df.write.mode("overwrite").json(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def compact_files(

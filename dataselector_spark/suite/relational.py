@@ -513,6 +513,130 @@ def b09_topk_per_group(spark, sf_dir):
     )
 
 
+@query(
+    "b09_diversified_topk",
+    oracle="""
+    SELECT o_orderkey, o_custkey,
+           CAST(o_totalprice AS DOUBLE) AS o_totalprice
+    FROM (
+        SELECT o_orderkey, o_custkey,
+               CAST(o_totalprice AS DECIMAL(12,2)) AS o_totalprice,
+               row_number() OVER (
+                   PARTITION BY o_custkey
+                   ORDER BY o_totalprice DESC, o_orderkey
+               ) AS rn
+        FROM orders
+    ) WHERE rn <= 2
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 20
+    """,
+    doc="B09 (r7): diversified top-k — global top-20 orders by price with "
+    "AT MOST 2 per customer, the result-diversification constraint search "
+    "and retrieval layers put on plain top-k (and the relational shape of "
+    "'per-source caps' in corpus sampling). Two ranking stages, one "
+    "shuffle each, both sub-linear in output: the per-customer cap is a "
+    "row_number window partitioned on the diversity key (hash shuffle, "
+    "per-key sort, AQE-safe), and the survivor set — at most 2 rows per "
+    "key — feeds a global TakeOrderedAndProject, which holds only 20 rows "
+    "per partition and never materializes a total sort. Deterministic "
+    "tie-breaks ((price DESC, orderkey) in both stages) keep the result "
+    "engine-portable.",
+)
+def b09_diversified_topk(spark, sf_dir):
+    o = load_table(spark, sf_dir, "orders")
+    w = Window.partitionBy("o_custkey").orderBy(
+        F.col("o_totalprice").desc(), F.col("o_orderkey")
+    )
+    capped = (
+        o.select(
+            "o_orderkey",
+            "o_custkey",
+            dec2("o_totalprice").alias("o_totalprice"),
+            F.row_number().over(w).alias("rn"),
+        )
+        .filter(F.col("rn") <= 2)
+        .drop("rn")
+    )
+    return (
+        capped.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
+        .limit(20)
+        # decimal for the deterministic compare/sort, double at the edge
+        # (suite-wide float policy, tpch_full.py module docstring)
+        .withColumn("o_totalprice", F.col("o_totalprice").cast("double"))
+    )
+
+
+@query(
+    "b09_skyline",
+    oracle="""
+    SELECT t.p_partkey, t.p_retailprice, t.p_size
+    FROM part t
+    WHERE NOT EXISTS (
+        SELECT 1 FROM part u
+        WHERE u.p_retailprice <= t.p_retailprice
+          AND u.p_size <= t.p_size
+          AND (u.p_retailprice < t.p_retailprice OR u.p_size < t.p_size)
+    )
+    """,
+    doc="B9 (r9): 2-D SKYLINE (Pareto frontier) — parts no other part "
+    "dominates on (p_retailprice, p_size), both minimized: the "
+    "multi-criteria 'best tradeoffs' query that top-k by any single "
+    "weighted score cannot express. Implemented with the distributed "
+    "LOCAL-SKYLINE-THEN-MERGE pattern (Borzsony/Kossmann/Stocker's "
+    "block-nested-loop made partition-parallel): pass 1 computes each "
+    "partition's local skyline via a vectorized sort-sweep in "
+    "mapInPandas (sort by (price, size); a row survives iff it has its "
+    "price-group's min size and every strictly-cheaper group's min "
+    "size is larger — O(n log n), NO pairwise dominance tests), which "
+    "is sound because the global skyline is a subset of every "
+    "superset-partition's local skyline, so the union of local "
+    "skylines contains it; pass 2 runs the IDENTICAL sweep on the "
+    "candidate union after an explicit repartition(1) — a deliberate "
+    "single-task stage on a provably small input (expected skyline of "
+    "n random 2-D points is O(log n); coalesce(1) would instead fuse "
+    "and serialize pass 1). The oracle is the quadratic NOT EXISTS "
+    "dominance scan, so the hash match proves the two-pass prune is "
+    "lossless, duplicates included (two parts with identical "
+    "(price, size) on the frontier both survive — strict-dominance "
+    "semantics, which the sweep's size == group-min test preserves). "
+    "No floats are computed, only compared, so cross-engine hashing "
+    "is safe. At 100 TB: pass 1 scans once in parallel and the "
+    "shuffle moves only per-partition skylines — the data-dependent "
+    "analogue of the M4 downsample's bounded reduction.",
+)
+def b09_skyline(spark, sf_dir):
+    p = load_table(spark, sf_dir, "part").select(
+        "p_partkey", "p_retailprice", "p_size"
+    )
+    schema = "p_partkey bigint, p_retailprice double, p_size int"
+
+    def local_sky(it):
+        import numpy as np
+
+        for pdf in it:
+            if len(pdf) == 0:
+                yield pdf
+                continue
+            pdf = pdf.sort_values(
+                ["p_retailprice", "p_size", "p_partkey"], kind="mergesort"
+            ).reset_index(drop=True)
+            price = pdf["p_retailprice"].to_numpy()
+            size = pdf["p_size"].to_numpy(dtype=np.int64)
+            new_grp = np.empty(len(pdf), dtype=bool)
+            new_grp[0] = True
+            new_grp[1:] = price[1:] != price[:-1]
+            grp_id = np.cumsum(new_grp) - 1
+            starts = np.flatnonzero(new_grp)
+            cm = np.minimum.accumulate(size)
+            big = np.iinfo(np.int64).max
+            strict_min = np.where(starts > 0, cm[np.maximum(starts - 1, 0)], big)
+            keep = (size == size[starts][grp_id]) & (size < strict_min[grp_id])
+            yield pdf[keep]
+
+    cands = p.mapInPandas(local_sky, schema)
+    return cands.repartition(1).mapInPandas(local_sky, schema)
+
+
 # --- B10: set operations ----------------------------------------------------
 
 

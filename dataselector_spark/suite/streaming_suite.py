@@ -857,7 +857,7 @@ def b17_stream_quantile_sketch(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ..catalog import load_table
-    from .extras import histogram_quantile_report, value_histogram_bucket
+    from .sketches import histogram_quantile_report, value_histogram_bucket
 
     hist_stream = (
         stream_events(spark, sf_dir)

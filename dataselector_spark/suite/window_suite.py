@@ -207,3 +207,100 @@ def b08_sessionize(spark, sf_dir):
             F.count(F.lit(1)).alias("n_events"),
         )
     )
+
+
+@query(
+    "b08_ratio_to_report",
+    oracle="""
+    WITH hourly AS (
+        SELECT event_type, date_trunc('hour', ts) AS hour_ts,
+               sum(CAST(value AS DECIMAL(12,2))) AS v
+        FROM events WHERE value <> -999.99
+        GROUP BY 1, 2
+    )
+    SELECT event_type, hour_ts,
+           CAST(v AS DOUBLE) AS value_sum,
+           CAST(v AS DOUBLE) / CAST(sum(v) OVER (PARTITION BY hour_ts) AS DOUBLE)
+               AS share_of_hour
+    FROM hourly
+    """,
+    doc="B8: ratio-to-report — each series' share of the hour's total, the "
+    "percent-of-total reporting window. Numerator and denominator are "
+    "exact decimal sums (the window total is identical regardless of "
+    "accumulation order), with ONE double division per row at the end, so "
+    "the shares hash-match across engines. One aggregation + one "
+    "full-partition window on the same hour key.",
+)
+def b08_ratio_to_report(spark, sf_dir):
+    from pyspark.sql import Window as W
+
+    e = load_table(spark, sf_dir, "events").filter(F.col("value") != -999.99)
+    hourly = e.groupBy(
+        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour_ts")
+    ).agg(F.sum(F.col("value").cast("decimal(12,2)")).alias("v"))
+    w = W.partitionBy("hour_ts")
+    return hourly.select(
+        "event_type",
+        "hour_ts",
+        F.col("v").cast("double").alias("value_sum"),
+        (F.col("v").cast("double") / F.sum("v").over(w).cast("double")).alias(
+            "share_of_hour"
+        ),
+    )
+
+
+@query(
+    "b08_outlier_mad",
+    oracle="""
+    WITH med AS (
+        SELECT event_type, median(value) AS med FROM events GROUP BY 1
+    ),
+    j AS (
+        SELECT e.event_id, e.event_type, e.value, m.med
+        FROM events e JOIN med m USING (event_type)
+    ),
+    mad AS (
+        SELECT event_type, median(abs(value - med)) AS mad FROM j GROUP BY 1
+    )
+    SELECT j.event_id, j.event_type, j.value, j.med, mad.mad AS mad,
+           (j.value - j.med) * 0.6745 / mad.mad AS rz,
+           abs((j.value - j.med) * 0.6745 / mad.mad) > 3.5 AS is_outlier
+    FROM j JOIN mad USING (event_type)
+    """,
+    doc="B8 (r7): ROBUST outlier flagging via median absolute deviation — "
+    "the Iglewicz-Hoaglin modified z-score (0.6745*(x-med)/MAD, |z|>3.5), "
+    "the QC pass b08_outlier_zscore's mean/std version breaks on: a "
+    "handful of extreme points inflate the std enough to mask themselves "
+    "(masking effect), while the median/MAD pair has a 50% breakdown "
+    "point. Two exact-median aggregations (groupBy per stage, map-side "
+    "partial sort) with BROADCAST joins back to the facts — the group "
+    "key is low-cardinality (event types), so the per-group stats are "
+    "tiny and the fact table is never shuffled; at 100 TB the same plan "
+    "holds with approx_percentile when exact medians exceed the "
+    "per-group memory budget. Floats: both engines evaluate the "
+    "identical (x - med) * 0.6745 / mad expression tree over "
+    "identically-interpolated medians, so the scores hash-match "
+    "bit-for-bit (the b06_percentiles parity argument).",
+)
+def b08_outlier_mad(spark, sf_dir):
+    e = load_table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+    med = e.groupBy("event_type").agg(F.median("value").alias("med"))
+    j = e.join(F.broadcast(med), "event_type")
+    mad = j.groupBy("event_type").agg(
+        F.median(F.abs(F.col("value") - F.col("med"))).alias("mad")
+    )
+    rz = (F.col("value") - F.col("med")) * F.lit(0.6745) / F.col("mad")
+    return (
+        j.join(F.broadcast(mad), "event_type")
+        .select(
+            "event_id",
+            "event_type",
+            "value",
+            "med",
+            "mad",
+            rz.alias("rz"),
+            (F.abs(rz) > 3.5).alias("is_outlier"),
+        )
+    )

@@ -186,7 +186,7 @@ _TESTDATA_REGEN_ROUND = 4
 
 
 def test_driver_window_targets_unchecked_entries():
-    """The driver checks the FIRST 50 registered entries each round, so a
+    """The driver checks the FIRST 50 entries of queries() each round, so a
     forgotten rotation burns the whole round re-checking green entries
     (this happened between rounds 2 and 3 — VERDICT r2 'What's wrong' #2).
 
@@ -740,7 +740,7 @@ def test_rrf_weight_terms_quoted_into_values_literal(spark):
     through sql_string_literal — a term with a single quote round-trips and
     scores its document; a backslash (an escape only in Spark's dialect)
     raises instead of silently changing the term."""
-    from dataselector_spark.suite.extras import _rrf_bm25_scores
+    from dataselector_spark.suite.vectors import _rrf_bm25_scores
 
     docs = spark.createDataFrame(
         [(1, "it's a test"), (2, "plain words here")], "doc_id bigint, text string"

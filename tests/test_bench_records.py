@@ -11,7 +11,15 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _RECORD_RING, _record_reading, BENCH_ROUND, SETS  # noqa: E402
+from bench import (  # noqa: E402
+    _RECORD_RING,
+    BENCH_ROUND,
+    CPU_PROBE_REF,
+    HEADLINE,
+    SETS,
+    _record_reading,
+    headline_record,
+)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -102,3 +110,51 @@ def test_bench_round_matches_active_window():
         f"bench.BENCH_ROUND={BENCH_ROUND!r} but the active suite window is "
         f"r{WINDOW_ROUND} — bump them in the same commit"
     )
+
+
+# The final JSON line's keys, in order, as bench.py printed them before the
+# per-set walls were computed by one loop over SETS. Readers of older
+# BENCH_r*.json artifacts parse these names.
+HEADLINE_KEYS = [
+    "metric", "isolated_walls", "isolated_probes", "isolated_method",
+    "isolated_runs", "probe_spread", "multi_probe_spread", "contended",
+    "value", "unit", "sf", "cpus", "n_queries", "queries", "headline_n",
+    *[f"headline_v{i}_{k}" for i in range(2, 13) for k in ("wall", "n")],
+    "extra_r6_wall", "method", "reps", "cpu_probe_s", "cpu_probe_multi_s",
+    "cpu_probe_ref", "value_normalized",
+    *[f"headline_v{i}_wall_normalized" for i in range(2, 7)],
+]
+
+
+def test_headline_record_keys_and_values():
+    names = [n for ns in SETS.values() for n in ns]
+    timings = {n: round(0.1 + (i % 7) * 0.013, 3) for i, n in enumerate(names)}
+    isolated = {
+        k: {"wall": 1.0 + i, "cpu_probe_s": 1.0, "probe_runs": [1.0, 1.05],
+            "multi_probe_runs": [2.0, 2.5]}
+        for i, k in enumerate(SETS)
+    }
+    rec = headline_record(
+        timings, isolated, 3, sf=0.1, cpus=4, reps=3, probe=1.0, multi_probe=2.0
+    )
+    assert list(rec) == HEADLINE_KEYS
+    json.dumps(rec)  # one JSON line
+    scale = CPU_PROBE_REF / 1.0
+    v1 = round(sum(timings[n] for n in HEADLINE), 3)
+    assert rec["value"] == v1
+    assert rec["value_normalized"] == round(v1 * scale, 3)
+    for key, ns in SETS.items():
+        if key == "v1":
+            continue
+        wall = round(sum(timings[n] for n in ns), 3)
+        assert rec[f"headline_{key}_wall"] == wall, key
+        assert rec[f"headline_{key}_n"] == len(ns), key
+    assert rec["extra_r6_wall"] == rec["headline_v2_wall"]
+    assert rec["headline_v6_wall_normalized"] == round(
+        rec["headline_v6_wall"] * scale, 3
+    )
+    assert rec["isolated_walls"] == {k: 1.0 + i for i, k in enumerate(SETS)}
+    assert rec["probe_spread"] == 1.05
+    assert rec["multi_probe_spread"] == 1.25
+    assert rec["contended"] is True
+    assert rec["n_queries"] == len(timings)

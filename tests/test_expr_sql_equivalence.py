@@ -2,9 +2,11 @@
 must be BIT-IDENTICAL to the DataFrame-API lambda form it replaced
 (docs/SCALE.md "Py4J literal law", extended to expressions in r15).
 
-The lambda forms are kept alive in the library as the Column-input paths,
-so each test builds both over the same rows and asserts null-safe equality
-per row — including denormals, -0.0, and empty/short arrays."""
+Where the lambda form is kept alive in the library as the Column-input
+path, a test builds both over the same rows and asserts null-safe equality
+per row — including denormals, -0.0, and empty/short arrays. Builders that
+take column names only are pinned against a pure-Python replay of the
+same arithmetic over the same edge rows."""
 
 from __future__ import annotations
 
@@ -52,21 +54,41 @@ def test_dot_l2_cosine_sql_paths_bit_identical(vec_df):
     )
 
 
-def test_word_ngrams_sql_path_identical(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "x y"), (3, ""), (4, "lone"),
-         (5, "one two three four five six")],
-        "id bigint, text string",
-    )
-    _assert_all(df, (word_ngrams("text", 3), word_ngrams(F.col("text"), 3)))
+def test_word_ngrams_matches_reference(spark):
+    rows = [(1, "a b c d e"), (2, "x y"), (3, ""), (4, "lone"),
+            (5, "one two three four five six")]
+    df = spark.createDataFrame(rows, "id bigint, text string")
+    got = {
+        r["id"]: r["g"]
+        for r in df.select("id", word_ngrams("text", 3).alias("g")).collect()
+    }
+    for doc_id, text in rows:
+        tk = text.split(" ")
+        want = [" ".join(tk[i : i + 3]) for i in range(len(tk) - 2)]
+        assert got[doc_id] == want, (doc_id, got[doc_id], want)
+    with pytest.raises(TypeError):
+        word_ngrams(F.col("text"), 3)
 
 
-def test_sign_lsh_signature_sql_path_identical(vec_df):
+def test_sign_lsh_signature_matches_reference(vec_df):
     planes = _pseudo_planes(4, 8, seed=42)
-    _assert_all(
-        vec_df,
-        (sign_lsh_signature("u", planes), sign_lsh_signature(F.col("u"), planes)),
-    )
+    got = {
+        r["id"]: r["sig"]
+        for r in vec_df.select(
+            "id", sign_lsh_signature("u", planes).alias("sig")
+        ).collect()
+    }
+    for r in vec_df.collect():
+        want = 0
+        for h, p in enumerate(planes):
+            dot = 0.0  # the same sequential left fold as dot_product_sql
+            for x, y in zip(r["u"], p):
+                dot += float(x) * float(y)
+            if dot >= 0:
+                want += 1 << h
+        assert got[r["id"]] == want, (r["id"], got[r["id"]], want)
+    with pytest.raises(TypeError):
+        sign_lsh_signature(F.col("u"), planes)
 
 
 def test_zorder_key_sql_path_identical(spark):

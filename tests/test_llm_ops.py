@@ -258,7 +258,7 @@ def test_neardup_lsh_blocking_recall_vs_brute(spark, sf_dir):
     )
 
     sizes = (
-        emb.select(sign_lsh_signature(F.col("embedding"), _pseudo_planes(dim, 8)).alias("s"))
+        emb.select(sign_lsh_signature("embedding", _pseudo_planes(dim, 8)).alias("s"))
         .groupBy("s")
         .count()
         .collect()
@@ -1313,7 +1313,7 @@ def test_cms_property_one_sided_and_sharp(spark):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from dataselector_spark.suite.extras import (
+    from dataselector_spark.suite.sketches import (
         _CMS_A,
         _CMS_B,
         _CMS_DEPTH,

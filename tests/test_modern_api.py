@@ -49,7 +49,7 @@ def test_python_datasource_partition_planning(spark):
     """reader().partitions() drives scan parallelism: the source must scan
     as exactly _PYDS_PARTS input partitions, and the full dataset must
     land (no lost / duplicated splits)."""
-    from dataselector_spark.suite.extras import (
+    from dataselector_spark.suite.formats import (
         _PYDS_PARTS,
         _PYDS_ROWS,
         b01_python_datasource,
@@ -66,7 +66,7 @@ def test_python_datasource_partition_planning(spark):
 
 def test_python_datasource_rows_deterministic(spark):
     """Row values are pure functions of gid — two reads agree exactly."""
-    from dataselector_spark.suite.extras import b01_python_datasource
+    from dataselector_spark.suite.formats import b01_python_datasource
 
     a = b01_python_datasource(spark, SF).collect()
     b = b01_python_datasource(spark, SF).collect()

@@ -1182,17 +1182,16 @@ def test_link_prediction_capped_shape(spark):
 def test_kmv_sketch_window_group_limit(spark):
     """b06_kmv_intersect's per-scope top-k must plan a WindowGroupLimit
     (rank-limit pushdown: per-partition 128-row heaps per scope before
-    the shuffle). Pinned on the uncheckpointed sketch subplan — the
-    entry localCheckpoints it, which truncates the final plan's
-    lineage."""
-    from dataselector_spark.suite.extras import kmv_sketch
+    the shuffle). Pinned on the unmaterialized plan of the sketch SQL the
+    entries run — they localCheckpoint it, which truncates the final
+    plan's lineage."""
+    from dataselector_spark.suite.sketches import _kmv_sketch_sql
 
-    du = (
-        load_table(spark, SF, "orders")
-        .select(F.year("o_orderdate").cast("bigint").alias("yr"), "o_custkey")
-        .distinct()
-    )
-    plan = kmv_sketch(du, 128)._jdf.queryExecution().executedPlan().toString()
+    load_table(spark, SF, "orders").select(
+        F.year("o_orderdate").cast("bigint").alias("yr"), "o_custkey"
+    ).distinct().createOrReplaceTempView("__test_kmv_du")
+    sk = spark.sql(_kmv_sketch_sql("__test_kmv_du"))
+    plan = sk._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, plan[:2000]
 
 

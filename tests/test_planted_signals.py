@@ -604,7 +604,7 @@ def test_kmv_jaccard_high_overlap_discrimination(spark):
     merely track near-zero."""
     from pyspark.sql import functions as F
 
-    from dataselector_spark.suite.extras import _kmv_jaccard_matrix
+    from dataselector_spark.suite.dedup import _kmv_jaccard_matrix
 
     ids = spark.range(0, 3000).select(F.col("id").cast("bigint"))
     # Four sets over disjoint/overlapping integer ranges (elements as

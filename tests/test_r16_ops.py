@@ -44,6 +44,13 @@ def test_zscore_join_back_keeps_null_group_and_window_values(spark):
     assert r["z"] == pytest.approx(2.0 / 8.0**0.5)
     # singleton group: null z (no dispersion), row still present
     assert out[("b", 7.0)]["z"] is None
+    # input columns named like the internal ones must not collide with them
+    clash = df.withColumn("__n", F.lit(-1)).withColumn("__g_0", F.lit("x"))
+    got = {
+        (r["grp"], r["value"]): (r["__n"], r["__g_0"], r["z"])
+        for r in zscore_outliers(clash, ["grp"], "value").collect()
+    }
+    assert got == {k: (-1, "x", v["z"]) for k, v in out.items()}
 
 
 def test_word_ngram_hashes_sql_is_xxhash64_of_string_shingles(spark):
@@ -87,9 +94,14 @@ def test_ensure_session_defaults_memoized_but_still_pins(spark):
     ensure_session_defaults(spark)
     assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert spark.conf.get("spark.sql.ansi.enabled") == "false"
-    assert getattr(spark, "_dataselector_defaults_ok", False) is True
-    # memoized: a second call is a pure-Python no-op (flag short-circuit)
-    ensure_session_defaults(spark)
+    # memoized: a second call is a pure-Python no-op (flag short-circuit),
+    # so it no longer re-pins a conf flipped behind its back
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        ensure_session_defaults(spark)
+        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
     # the plan cache lives ON the session object (ADVICE r15 #1) — no
     # module-level registry keeps a stopped session alive
     from dataselector_spark.catalog import load_table
@@ -97,6 +109,21 @@ def test_ensure_session_defaults_memoized_but_still_pins(spark):
     load_table(spark, "/root/testdata/sf0.001", "orders")
     assert isinstance(getattr(spark, _PLAN_CACHE_ATTR), dict)
     assert len(getattr(spark, _PLAN_CACHE_ATTR)) >= 1
+
+
+def test_mark_session_pinned_keeps_callers_ansi(spark, sf_dir):
+    """A session marked pinned keeps its own settings through load_table
+    (the ANSI differential sweep); an unmarked one is re-pinned."""
+    from dataselector_spark.catalog import load_table, mark_session_pinned
+
+    pinned, fresh = spark.newSession(), spark.newSession()
+    for s in (pinned, fresh):
+        s.conf.set("spark.sql.ansi.enabled", "true")
+    mark_session_pinned(pinned)
+    load_table(pinned, sf_dir, "orders")
+    load_table(fresh, sf_dir, "orders")
+    assert pinned.conf.get("spark.sql.ansi.enabled") == "true"
+    assert fresh.conf.get("spark.sql.ansi.enabled") == "false"
 
 
 def test_load_table_returns_self_joinable_references(spark):

@@ -88,7 +88,7 @@ def storage_pruned(spark) -> None:
     # Repartition on the partition key first: one file per bucket, not
     # (buckets x tasks) shards — the small-files discipline compact_files
     # exists for, applied at write time.
-    e.withColumn("bucket", sign_lsh_signature(F.col("embedding"), planes)) \
+    e.withColumn("bucket", sign_lsh_signature("embedding", planes)) \
         .repartition("bucket") \
         .write.mode("overwrite").partitionBy("bucket") \
         .parquet(os.path.join(HUNDREDX, "lsh_store"))

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from dataselector_spark.catalog import load_table  # noqa: E402
 from dataselector_spark.session import get_spark  # noqa: E402
-from dataselector_spark.suite.extras import (  # noqa: E402
+from dataselector_spark.suite.sketches import (  # noqa: E402
     _CMS_A,
     _CMS_B,
     _CMS_DEPTH,

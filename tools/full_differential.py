@@ -28,6 +28,7 @@ sys.path.insert(
     ),
 )
 
+from dataselector_spark.catalog import mark_session_pinned
 from dataselector_spark.session import get_spark
 from dataselector_spark.suite import QUERIES
 from oracle_harness import compare
@@ -60,7 +61,7 @@ def main():
         spark.conf.set(
             "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
         )
-        spark._dataselector_defaults_ok = True
+        mark_session_pinned(spark)
         print("ANSI MODE: spark.sql.ansi.enabled=true", flush=True)
     n_pass = n_fail = 0
     t0 = time.time()

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from dataselector_spark.catalog import load_table
 from dataselector_spark.functions.vectors import dot_product, l2_norm
 from dataselector_spark.operators.similarity import pq_codes
-from dataselector_spark.suite.extras import _pq_adc_luts
+from dataselector_spark.suite.vectors import _pq_adc_luts
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 

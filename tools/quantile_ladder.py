@@ -27,7 +27,7 @@ import pyspark.sql.functions as F  # noqa: E402
 
 from dataselector_spark.catalog import load_table  # noqa: E402
 from dataselector_spark.session import get_spark  # noqa: E402
-from dataselector_spark.suite.extras import (  # noqa: E402
+from dataselector_spark.suite.sketches import (  # noqa: E402
     histogram_quantile_report,
     value_histogram_bucket,
 )

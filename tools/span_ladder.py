@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from dataselector_spark.catalog import load_table
 from dataselector_spark.functions.text import word_ngrams
 from dataselector_spark.session import get_spark
-from dataselector_spark.suite.extras import _SPAN_N
+from dataselector_spark.suite.dedup import _SPAN_N
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
