@@ -17,10 +17,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
 def _ident(col: str) -> str:
     """Backtick-quote a plain column name for embedding in SQL text."""
     return "`" + col.replace("`", "``") + "`"
@@ -86,22 +82,20 @@ def cosine_similarity_sql(a_sql: str, b_sql: str) -> str:
     )
 
 
-def dot_product(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(dot_product_sql(_ident(a), _ident(b)))
-    prods = F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
+def _names(fn: str, *cols) -> list[str]:
+    """The backtick-quoted column names, or TypeError for anything else."""
+    if not all(isinstance(c, str) for c in cols):
+        raise TypeError(f"{fn} takes column names; use {fn}_sql over an expression")
+    return [_ident(c) for c in cols]
 
 
-def l2_norm(a: Column | str) -> Column:
-    if isinstance(a, str):
-        return F.expr(l2_norm_sql(_ident(a)))
-    a = _c(a)
-    sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))
-    return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, v: acc + v))
+def dot_product(a: str, b: str) -> Column:
+    return F.expr(dot_product_sql(*_names("dot_product", a, b)))
 
 
-def cosine_similarity(a: Column | str, b: Column | str) -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(cosine_similarity_sql(_ident(a), _ident(b)))
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
+def l2_norm(a: str) -> Column:
+    return F.expr(l2_norm_sql(*_names("l2_norm", a)))
+
+
+def cosine_similarity(a: str, b: str) -> Column:
+    return F.expr(cosine_similarity_sql(*_names("cosine_similarity", a, b)))

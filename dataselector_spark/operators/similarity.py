@@ -31,11 +31,8 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import (
     _ident,
-    array_lit_d,
     array_lit_sql,
-    cosine_similarity,
     cosine_similarity_sql,
-    dot_product,
     dot_product_sql,
     l2_norm,
     l2_norm_sql,
@@ -48,12 +45,6 @@ from ..functions.vectors import (
 # The parsed trees are the identical Catalyst expressions (same fold order,
 # same casts, same tie semantics); bit-parity is held by the unchanged
 # DuckDB oracles.
-
-
-def _query_vec_lit(query_vec: list[float]):
-    # one parsed SQL literal, not |dim| Py4J calls (bit-equivalent —
-    # see array_lit_d)
-    return array_lit_d(query_vec)
 
 
 def topk_cosine(
@@ -183,7 +174,9 @@ def neardup_pairs_cosine(
     pairs = a.join(
         b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id"))
     )
-    cos = dot_product(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
+    cos = F.expr(
+        f"{dot_product_sql('`a`.`v`', '`b`.`v`')} / (`a`.`nrm` * `b`.`nrm`)"
+    )
     return pairs.select(
         F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), cos.alias("cosine")
     ).filter(F.col("cosine") >= threshold)

@@ -6,6 +6,10 @@ must broadcast, global top-k must plan as TakeOrderedAndProject, expression
 pipelines must stay inside WholeStageCodegen. These helpers turn those
 expectations into assertions (tests/test_plans.py) so a regression in plan
 shape fails CI, not a 100 TB run.
+
+`plan_fingerprint` counts the cost-deciding nodes of a FINAL executed plan;
+tests/plan_fingerprints.json records it per suite entry and the tests
+assert it exactly (regenerate: `python tools/plan_fingerprints.py`).
 """
 
 from __future__ import annotations
@@ -48,6 +52,72 @@ def has_take_ordered(df: DataFrame) -> bool:
 def shuffle_count(df: DataFrame) -> int:
     """Number of shuffle exchanges in the plan (the scale currency)."""
     return len(re.findall(r"Exchange (?:hashpartitioning|rangepartitioning|SinglePartition)", physical_plan(df)))
+
+
+# --- final-plan fingerprint --------------------------------------------------
+#
+# Only the final AQE plan shows reused exchanges and runtime broadcasts (the
+# initial plan counts a reused exchange again). The walk enters adaptive
+# plans, query stages and subqueries, and stops at a Reused* node: its
+# subtree ran once, where it is counted.
+
+_FINGERPRINT_NODES = {
+    "ShuffleExchangeExec": "exchange",
+    "ReusedExchangeExec": "reused_exchange",
+    "BroadcastExchangeExec": "broadcast_exchange",
+    "BroadcastHashJoinExec": "broadcast_hash_join",
+    "SortMergeJoinExec": "sort_merge_join",
+    "ShuffledHashJoinExec": "shuffled_hash_join",
+    "BroadcastNestedLoopJoinExec": "broadcast_nested_loop_join",
+    "CartesianProductExec": "cartesian_product",
+    "WindowExec": "window",
+    "SortExec": "sort",
+}
+FINGERPRINT_FIELDS = (*_FINGERPRINT_NODES.values(), "scan_parquet", "python_eval")
+# python_eval: Python UDFs and UDTFs, pandas/Arrow maps, groups and windows
+_PYTHON_PACKAGE = "org.apache.spark.sql.execution.python."
+
+
+def plan_fingerprint(df: DataFrame) -> dict[str, int]:
+    """Nonzero counts of FINGERPRINT_FIELDS in df's final executed plan;
+    an exchange counts whatever its partitioning. Call it after df's own
+    QueryExecution ran (an action on df, or
+    ``df._jdf.queryExecution().toRdd()``): a non-final adaptive plan raises
+    ValueError."""
+    counts = dict.fromkeys(FINGERPRINT_FIELDS, 0)
+    stack = [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        p = stack.pop()
+        cls = p.getClass().getName()
+        name = cls.rsplit(".", 1)[-1]
+        if name == "AdaptiveSparkPlanExec":
+            if "isFinalPlan=true" not in p.simpleString(1):
+                raise ValueError("plan_fingerprint: the adaptive plan is not final")
+            stack.append(p.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(p.plan())
+            continue
+        field = _FINGERPRINT_NODES.get(name)
+        if name == "FileSourceScanExec" and p.nodeName().startswith("Scan parquet"):
+            field = "scan_parquet"
+        elif cls.startswith(_PYTHON_PACKAGE):
+            field = "python_eval"
+        if field:
+            counts[field] += 1
+        if not name.startswith("Reused"):
+            for seq in (p.children(), p.subqueries()):
+                stack.extend(seq.apply(i) for i in range(seq.length()))
+    return {k: v for k, v in counts.items() if v}
+
+
+def fingerprint_diff(recorded: dict, actual: dict) -> list[str]:
+    """One ``field: recorded -> actual`` line per field that differs."""
+    return [
+        f"{k}: {recorded.get(k, 0)} -> {actual.get(k, 0)}"
+        for k in FINGERPRINT_FIELDS
+        if recorded.get(k, 0) != actual.get(k, 0)
+    ]
 
 
 # --- bounded-unpartitioned-window audit (VERDICT r12 #2) -------------------

@@ -30,14 +30,17 @@ from . import window_suite  # noqa: F401
 
 # Entries whose implementation changed materially in round N after their
 # last driver row: the rotation tripwire treats a driver row older than the
-# rewrite round as stale (ADVICE r6 #3). Add a line here whenever an
-# already-green entry's code path is rewritten.
+# rewrite round as stale (ADVICE r6 #3). Whenever an already-green entry's
+# code path is rewritten, give it a line under that round, or move its
+# existing line there: one line per entry, holding its latest round
+# (tests/test_advice_fixes.py fails on a repeated key, which would
+# otherwise silently override the earlier line). A round's comment may
+# name entries whose line has since moved to a later round.
 REWRITTEN_IN_ROUND = {
     "b26_rolling_dau": 6,
     "b15_bpe_pair_counts": 6,
     "b02_bucketed_join": 6,
     "b16_pgm_roundtrip": 6,
-    "b15_decontaminate": 6,
     "b04_interval_join_bucketed": 6,
     # r9 (ADVICE r8 + VERDICT r8 #2): execution-forcing / scratch-path /
     # helper-refactor changes after the r8 driver rows
@@ -51,8 +54,6 @@ REWRITTEN_IN_ROUND = {
     # build refactored onto the shared, skew-guarded helper
     # (operators/graph.py cooccurrence_cells/cooccurrence_pairs) — same
     # join semantics, but the code path changed after their r8/r9 rows
-    "b26_triangle_count": 10,
-    "b26_clustering_coeff": 10,
     "b26_pagerank_fixedpoint": 10,
     "b26_bfs_levels": 10,
     "b26_kcore": 10,
@@ -94,7 +95,6 @@ REWRITTEN_IN_ROUND = {
     # b15_vocab_coverage's full-vocabulary rank/cumsum windows rewritten
     # onto a TakeOrdered-100 heap + broadcast scalar total. All three
     # oracle-reverified at sf0.001/0.01/0.1 + hostile-TZ after rewrite.
-    "b14_rrf_hybrid": 13,
     "b15_vocab_coverage": 13,
     # r14 (ADVICE r13): b06_equidepth_histogram's closed-form ntile ELSE
     # divisor guarded with greatest(n_tot DIV 10, 1) — a correctness
@@ -113,12 +113,6 @@ REWRITTEN_IN_ROUND = {
     "b26_clustering_coeff": 15,
     "b26_communities_lpa": 15,
     "b26_modularity": 15,
-    "b13_dedup_clusters": 15,
-    "b13_dedup_survivors": 15,
-    "b13_dedup_survivors_quality": 15,
-    "b13_leakage_safe_split": 15,
-    "b14_embedding_dedup_survivors": 15,
-    "b16_image_dedup_survivors": 15,
     "b14_topk_cosine": 15,
     "b14_pq_codes": 15,
     "b14_pq_adc_topk": 15,
@@ -135,7 +129,6 @@ REWRITTEN_IN_ROUND = {
     "b22_zorder_key": 15,
     "b22_zorder_key_3d": 15,
     "b22_zorder_write_readback": 15,
-    "b01_python_stream_source_parallel": 15,
     # r16 (optimization round 2): the int64 shingle-identity batch
     # (ngram_jaccard_pairs + the span/prefix/containment/decontaminate/
     # source-overlap family), the kmv-source audit-on-hashes rewrite, the
@@ -150,7 +143,6 @@ REWRITTEN_IN_ROUND = {
     "b13_source_overlap": 16,
     "b13_kmv_source_similarity": 16,
     "b13_dedup_pipeline_verified": 16,
-    "b08_outlier_zscore": 16,
     "b14_rrf_hybrid": 16,
     "b14_rrf_fusion_gain": 16,
     "b06_kmv_intersect": 16,

@@ -1662,7 +1662,7 @@ def _kmv_jaccard_matrix(sh, k=128):
     "per source: each source's sketch is its k=128 smallest distinct "
     "60-bit md5 shingle hashes (the portable Spark conv == DuckDB "
     "('0x'||..)::BIGINT idiom; WindowGroupLimit rank-limit pushdown "
-    "per the kmv_sketch plan pin), every pair's union sketch is the k "
+    "per the sketches._kmv_sketch_sql plan pin), every pair's union sketch is the k "
     "smallest of the min-merge, and the Jaccard estimator is the theta "
     "rule c/k over sketch-union members present in BOTH k-sets "
     "(Bar-Yossef et al. 2002; Beyer et al. SIGMOD'07), collapsing to "

@@ -1435,7 +1435,7 @@ def b06_kmv_intersect(spark, sf_dir):
     "'__ALL__' pattern for the KMV family: b06_kmv_intersect's docstring "
     "claims the sketch 'is MERGEABLE by min-merge'; this entry EXECUTES "
     "the claim rather than asserting it. Per-scope k=128 sketches "
-    "(order-year scopes on the shared kmv_sketch helper), then the "
+    "(order-year scopes on the shared sketches._kmv_sketch_sql helper), then the "
     "'__ALL__' sketch is built by MIN-MERGING the seven k-sets — k "
     "smallest of their DISTINCT union, a <=k*|scopes|-row operation that "
     "never re-scans orders (valid because the k smallest of U scopes "
@@ -1584,7 +1584,7 @@ def b06_kmv_merge(spark, sf_dir):
     "the CHURN question ('how many year-N customers did not order in "
     "year N+1', or 'how many docs does this crawl add that the corpus "
     "lacks') — was missing. Same deterministic k=128 sketch "
-    "(kmv_sketch, portable md5 idiom, WindowGroupLimit heaps) and the "
+    "(sketches._kmv_sketch_sql, portable md5 idiom, WindowGroupLimit heaps) and the "
     "same theta rule, counting union-sketch members in A-ONLY and "
     "B-ONLY instead of both: est|A\\\\B| = only_a/k * union_hat, with "
     "the n_u < k short-circuit collapsing to the exact count (the "

@@ -231,6 +231,25 @@ def test_driver_window_targets_unchecked_entries():
     )
 
 
+def test_rewritten_in_round_has_no_repeated_key():
+    """A dict literal keeps the LAST of two equal keys, so a repeated line
+    in REWRITTEN_IN_ROUND silently overrides the earlier one. Read the
+    literal itself, not the dict."""
+    import ast
+    import collections
+
+    import dataselector_spark.suite as suite
+
+    with open(suite.__file__) as f:
+        (literal,) = [
+            n.value for n in ast.parse(f.read()).body
+            if isinstance(n, ast.Assign)
+            and getattr(n.targets[0], "id", None) == "REWRITTEN_IN_ROUND"
+        ]
+    counts = collections.Counter(k.value for k in literal.keys)
+    assert max(counts.values()) == 1, counts.most_common(3)
+
+
 def test_driver_window_no_complex_output_columns(spark):
     """The driver's canonicalizer crashes on array/map/struct output columns
     (CORRECTNESS_r01 b06_approx_percentile: pandas 'unhashable type: list').

@@ -10,6 +10,8 @@ same arithmetic over the same edge rows."""
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -45,13 +47,26 @@ def _assert_all(df, *pairs):
         assert all(r), r
 
 
-def test_dot_l2_cosine_sql_paths_bit_identical(vec_df):
-    _assert_all(
-        vec_df,
-        (dot_product("u", "v"), dot_product(F.col("u"), F.col("v"))),
-        (l2_norm("u"), l2_norm(F.col("u"))),
-        (cosine_similarity("u", "v"), cosine_similarity(F.col("u"), F.col("v"))),
-    )
+def test_dot_l2_cosine_match_reference(vec_df):
+    def fold(terms):  # the *_sql builders' left fold (not sum(): it compensates)
+        acc = 0.0
+        for t in terms:
+            acc += t
+        return acc
+
+    rows = vec_df.select(
+        "u", "v", dot_product("u", "v"), l2_norm("u"), cosine_similarity("u", "v")
+    ).collect()
+    for u, v, *got in rows:
+        dot = fold(x * y for x, y in zip(u, v))
+        nu, nv = (math.sqrt(fold(x * x for x in w)) for w in (u, v))
+        cos = dot / (nu * nv) if nu * nv != 0 else None  # Spark: x / 0 is NULL
+        # repr tells -0.0 from 0.0 and matches nan with nan
+        assert repr(got) == repr([dot, nu, cos]), (u, v, got)
+    for fn, args in [(dot_product, (F.col("u"), "v")), (l2_norm, (F.col("u"),)),
+                     (cosine_similarity, ("u", F.col("v")))]:
+        with pytest.raises(TypeError):
+            fn(*args)
 
 
 def test_word_ngrams_matches_reference(spark):

@@ -1,21 +1,41 @@
 """Differential test: every suite query with an oracle must hash-match DuckDB
 (the driver's correctness gate, run here at sf0.001 for speed; the driver
-runs sf0.01)."""
+runs sf0.01). The DataFrame the comparison executed then has its final
+plan checked against its recorded fingerprint (test_plan_fingerprints.py)."""
 
 import pytest
 
 from dataselector_spark.suite import QUERIES
 
 from .oracle_harness import compare
+from .test_plan_fingerprints import check_fingerprint
 
 ORACLE_QUERIES = [name for name, q in QUERIES.items() if q.oracle is not None]
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_match(spark, sf_dir, name):
-    q = QUERIES[name]
-    ok, detail = compare(spark, sf_dir, q.fn, q.oracle)
+def test_oracle_match(spark, sf_dir, name, mutate=lambda df: df):
+    q, executed = QUERIES[name], []
+
+    def fn(spark, sf_dir):
+        executed.append(mutate(q.fn(spark, sf_dir)))
+        return executed[-1]
+
+    def rerun():  # executed as compare() executes it
+        fn(spark, sf_dir).toPandas()
+        return executed[-1]
+
+    ok, detail = compare(spark, sf_dir, fn, q.oracle)
     assert ok, f"{name}: {detail}"
+    check_fingerprint(name, "sf0.001", executed[0], rerun)
+
+
+def test_fingerprint_catches_added_exchange(spark, sf_dir):
+    """Same rows, one more shuffle: the oracle passes, the plan check fails."""
+    with pytest.raises(AssertionError, match=r"exchange: 0 -> 1"):
+        test_oracle_match(
+            spark, sf_dir, "a04_derived_timestamp", lambda df: df.repartition(3)
+        )
 
 
 def test_entry_smoke(spark):

@@ -72,11 +72,10 @@ def storage_pruned(spark) -> None:
     from dataselector_spark.operators.similarity import (
         _pseudo_centroids,
         _pseudo_planes,
-        cosine_similarity,
         ivf_assignments,
         sign_lsh_signature,
-        _query_vec_lit,
     )
+    from dataselector_spark.functions.vectors import array_lit_sql, cosine_similarity_sql
     from dataselector_spark.suite.llm_pipeline import _query_vector
 
     qv = _query_vector(spark, BASE)
@@ -106,13 +105,15 @@ def storage_pruned(spark) -> None:
     for h, p in enumerate(planes):
         if sum(float(a) * float(b) for a, b in zip(qv, p)) >= 0:
             qsig |= 1 << h
-    q = _query_vec_lit(qv)
+    cosine = F.expr(
+        cosine_similarity_sql("`embedding`", array_lit_sql(qv))
+    ).alias("cosine")
 
     def lsh_query():
         s = spark.read.parquet(os.path.join(HUNDREDX, "lsh_store"))
         return (
             s.filter(F.col("bucket") == qsig)
-            .select("vec_id", cosine_similarity(F.col("embedding"), q).alias("cosine"))
+            .select("vec_id", cosine)
             .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
             .limit(10)
         )
@@ -129,14 +130,14 @@ def storage_pruned(spark) -> None:
         s = spark.read.parquet(os.path.join(HUNDREDX, "ivf_store"))
         return (
             s.filter(F.col("cell").isin(probes))
-            .select("vec_id", cosine_similarity(F.col("embedding"), q).alias("cosine"))
+            .select("vec_id", cosine)
             .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
             .limit(10)
         )
 
     def brute_query():
         return (
-            e.select("vec_id", cosine_similarity(F.col("embedding"), q).alias("cosine"))
+            e.select("vec_id", cosine)
             .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
             .limit(10)
         )

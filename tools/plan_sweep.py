@@ -11,8 +11,8 @@ row-at-a-time UDF anti-pattern.
 Run as a tool, not a test: entries with eager side effects (streams,
 bucketed writes, state stores) execute during fn(), so the sweep costs
 minutes — results are recorded in COVERAGE.md per round instead of
-burning CI time. Pass --skip-effects to exclude those entries (plan
-compile only, faster).
+burning CI time. Pass --skip-effects to exclude those entries
+(plans.EFFECTFUL_ENTRIES; plan compile only, faster).
 
 Known-benign BNLJ sites (a BOUNDED broadcast side joined keylessly:
 single-row scalar aggregates, or the recall eval's fixed query sample):
@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataselector_spark.plans import (
     BOUNDED_WINDOW_AGG_OK,
+    EFFECTFUL_ENTRIES,
     unpartitioned_window_audit,
 )
 from dataselector_spark.session import get_spark
@@ -93,25 +94,6 @@ BOUNDED_BNLJ_OK = {
     "b15_vocab_coverage": "single-row token-total scalar",
 }
 
-# fn() runs a real stream / writes tables / reads checkpoints: execution
-# cost dominates, and their plans are pinned by dedicated tests instead
-EFFECTFUL = {
-    "b17_stream_tumbling", "b17_stream_sliding", "b18_stream_session",
-    "b19_stream_watermark", "b20_stream_dedup", "b20_stream_toggle",
-    "b20_stream_stream_join", "b17_stream_static_enrich",
-    "b23_streaming_upsert_sink", "b20_state_store_read",
-    "b01_python_stream_source", "b01_python_stream_source_parallel",
-    "b01_python_stream_sink", "b17_stream_quantile_sketch",
-    "b02_bucketed_join",
-    "b04_interval_join_colocated", "b02_bloom_filter_join",
-    "b22_zorder_write_readback", "b22_compaction_readback",
-    "b16_binary_ingest", "b01_parquet_roundtrip", "b01_csv_roundtrip",
-    "b01_json_roundtrip", "b01_orc_roundtrip", "b01_text_roundtrip",
-    "b01_orc_roundtrip_lineitem", "b01_xml_roundtrip",
-    "b01_partitioned_write_pruning", "b01_merge_schema",
-    "b01_ignore_corrupt_files", "b22_observe_metrics",
-}
-
 
 def main():
     skip_effects = "--skip-effects" in sys.argv
@@ -119,7 +101,7 @@ def main():
     n_ok = 0
     violations = []
     for name, q in QUERIES.items():
-        if skip_effects and name in EFFECTFUL:
+        if skip_effects and name in EFFECTFUL_ENTRIES:
             continue
         try:
             df = q.fn(spark, SF)

@@ -29,7 +29,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from dataselector_spark.catalog import load_table
-from dataselector_spark.functions.vectors import dot_product, l2_norm
+from dataselector_spark.functions.vectors import (
+    array_lit_sql,
+    dot_product_sql,
+    l2_norm_sql,
+)
 from dataselector_spark.operators.similarity import pq_codes
 from dataselector_spark.suite.vectors import _pq_adc_luts
 
@@ -100,7 +104,10 @@ def main():
         e = replicated(spark, n)
         brute = e.select(
             "vec_id",
-            (dot_product("embedding", lit) / (l2_norm("embedding"))).alias("c"),
+            F.expr(
+                f"{dot_product_sql('`embedding`', array_lit_sql(qv))} / "
+                f"{l2_norm_sql('`embedding`')}"
+            ).alias("c"),
         )
         t_brute = timed(brute)
         t_encode = timed(pq_codes(e))
