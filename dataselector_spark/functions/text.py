@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .vectors import _ident
+
 TOKEN_SEP = " "
 
 # Tiny per-language stopword profiles for the n-gram/stopword language-ID
@@ -65,8 +67,7 @@ def word_ngrams(col: str, n: int) -> Column:
             f"word_ngrams takes a column name, not {type(col).__name__}; "
             "use word_ngrams_sql to compose over an expression"
         )
-    ident = "`" + col.replace("`", "``") + "`"
-    return F.expr(word_ngrams_sql(ident, n))
+    return F.expr(word_ngrams_sql(_ident(col), n))
 
 
 def word_ngrams_sql(col_sql: str, n: int) -> str:
@@ -89,6 +90,19 @@ def word_ngrams_sql(col_sql: str, n: int) -> str:
         f"THEN transform(sequence(1, size(tk) - {n} + 1), "
         f"i -> concat_ws(' ', slice(tk, i, {n}))) "
         "ELSE CAST(array() AS ARRAY<STRING>) END)[0]"
+    )
+
+
+def fingerprint_sql(col_sql: str) -> str:
+    """SQL text of the polynomial rolling-hash fingerprint of a string
+    fragment (a column, or a lambda variable such as a shingle):
+    fold(h -> h*31 + codepoint, mod 1e9+7) over the character stream.
+    Stays in int64 (h < 1e9, h*31 + c < 2^35); deterministic and
+    SQL-portable (DuckDB list_reduce/ord oracle)."""
+    return (
+        f"aggregate(transform(split({col_sql}, ''), ch -> CAST(ascii(ch) AS BIGINT)), "
+        "CAST(0 AS BIGINT), "
+        f"(h, code) -> (h * {FINGERPRINT_BASE} + code) % {FINGERPRINT_MOD})"
     )
 
 
@@ -153,17 +167,15 @@ def lang_id(col: Column | str) -> Column:
     return F.when(c.rlike("[\\u4e00-\\u9fff]"), F.lit("zh")).otherwise(guess)
 
 
-def fingerprint(col: Column | str) -> Column:
-    """Polynomial rolling-hash document fingerprint:
-    fold(h -> h*31 + codepoint, mod 1e9+7) over the character stream.
-    Stays in int64 (h < 1e9, h*31 + c < 2^35); deterministic and
-    SQL-portable (DuckDB list_reduce/ord oracle)."""
-    codes = F.transform(F.split(_c(col), ""), lambda ch: F.ascii(ch).cast("bigint"))
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("bigint"),
-        lambda h, code: (h * FINGERPRINT_BASE + code) % FINGERPRINT_MOD,
-    )
+def fingerprint(col: str) -> Column:
+    """`fingerprint_sql` over the string column NAMED ``col``; a Column
+    argument raises TypeError, as in `word_ngrams`."""
+    if not isinstance(col, str):
+        raise TypeError(
+            f"fingerprint takes a column name, not {type(col).__name__}; "
+            "use fingerprint_sql to compose over an expression"
+        )
+    return F.expr(fingerprint_sql(_ident(col)))
 
 
 # GPT-2-style pre-tokenizer pattern: contractions, space-prefixed letter

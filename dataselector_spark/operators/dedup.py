@@ -23,6 +23,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..functions.text import fingerprint_sql, word_ngram_hashes_sql, word_ngrams_sql
+from ..functions.vectors import _ident
+
 
 def _materialize(df: DataFrame, mode: str | bool) -> DataFrame:
     """Cut lineage / force one computation of a reused subplan.
@@ -58,11 +61,23 @@ def _fan_out(df: DataFrame, key: str) -> DataFrame:
     core). The repartition is CHEAP relative to the explode it parallelizes,
     and because it hash-partitions on the downstream groupBy key, the
     aggregation reuses the exchange instead of shuffling again. On real
-    multi-hundred-partition inputs this is a no-op."""
+    multi-hundred-partition inputs this is a no-op.
+
+    The partition count is read from ``df.rdd``: over a bare scan that is
+    free, but when ``df`` has an exchange upstream (a window, a join) it
+    EXECUTES those adaptive stages once, at build time."""
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target, key)
     return df
+
+
+def _docs_by_id(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, str]:
+    """The shingle source of every text-dedup builder: ``docs`` projected to
+    (id, ``text_col``) and fanned out on id (`_fan_out`), plus ``text_col``
+    quoted for the parsed shingle expressions."""
+    src = _fan_out(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
+    return src, _ident(text_col)
 
 
 def dedup_exact(
@@ -110,10 +125,8 @@ def ngram_jaccard_pairs(
     # n-word strings (the n-gram text never reaches any output — every
     # consumer emits ids/counts/ratios only). Collision math and the oracle
     # argument live on `word_ngram_hashes_sql`.
-    from ..functions.text import word_ngram_hashes_sql
-
-    ti = "`" + text_col.replace("`", "``") + "`"
-    shingles = _fan_out(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
+    src, ti = _docs_by_id(docs, id_col, text_col)
+    shingles = src.select(
         "id",
         F.expr(f"explode({word_ngram_hashes_sql(ti, n)})").alias("sh"),
     )
@@ -180,10 +193,8 @@ def minhash_signatures(
     # r15: shingle hash explode and the k min-aggregates are parsed SQL
     # strings (the Py4J expression law, docs/SCALE.md) — identical trees,
     # ~10x fewer bridge commands per build.
-    from ..functions.text import word_ngrams_sql
-
-    ti = "`" + text_col.replace("`", "``") + "`"
-    shingles = _fan_out(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
+    src, ti = _docs_by_id(docs, id_col, text_col)
+    shingles = src.select(
         "id",
         F.expr(
             f"explode(transform({word_ngrams_sql(ti, n)}, s -> xxhash64(s)))"
@@ -221,31 +232,34 @@ def minhash_signatures_portable(
     are Spark-specific). Same plan shape as `minhash_signatures`: one
     explode + one groupBy. Emits scalar columns (not an array) so downstream
     tooling that can't canonicalize arrays can hash the result."""
-    from ..functions.text import FINGERPRINT_BASE, FINGERPRINT_MOD, word_ngrams_sql
-
-    # r15: one parsed expression for the shingle->poly-hash explode and one
-    # per min-aggregate (the Py4J expression law, docs/SCALE.md).
-    poly_sql = (
-        "aggregate(transform(split(s, ''), ch -> CAST(ascii(ch) AS BIGINT)), "
-        "CAST(0 AS BIGINT), "
-        f"(h, code) -> (h * {FINGERPRINT_BASE} + code) % {FINGERPRINT_MOD})"
+    return _portable_shingles(docs, id_col, text_col, n).groupBy("id").agg(
+        *_portable_mins(num_hashes)
     )
-    ti = "`" + text_col.replace("`", "``") + "`"
-    shingles = _fan_out(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select(
+
+
+def _portable_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """(id, h): one row per word-``n``-gram shingle occurrence, ``h`` its
+    polynomial hash (`fingerprint_sql`)."""
+    # r15: one parsed expression for the explode (the Py4J expression law,
+    # docs/SCALE.md), as for each min-aggregate in `_portable_mins`.
+    src, ti = _docs_by_id(docs, id_col, text_col)
+    return src.select(
         "id",
         F.expr(
-            f"explode(transform({word_ngrams_sql(ti, n)}, s -> {poly_sql}))"
+            f"explode(transform({word_ngrams_sql(ti, n)}, s -> {fingerprint_sql('s')}))"
         ).alias("h"),
     )
-    mins = [
+
+
+def _portable_mins(num_hashes: int) -> list[Column]:
+    """min((a_i·h + b_i) mod 1e9+7) AS h{i} for the first ``num_hashes``
+    portable permutations."""
+    return [
         F.expr(
             f"min((h * {_PORT_A[i]} + {_PORT_B[i]}) % {MINHASH_MOD})"
         ).alias(f"h{i}")
         for i in range(num_hashes)
     ]
-    return shingles.groupBy("id").agg(*mins)
 
 
 def simhash_portable(
@@ -262,21 +276,13 @@ def simhash_portable(
     this variant trades hash width for exact SQL replayability, so the
     bit-vote algebra itself is value-checkable by an external engine.
     a·h + b stays < 2^60 — no wrap, identical arithmetic everywhere."""
-    from ..functions.text import FINGERPRINT_BASE, FINGERPRINT_MOD
-
     half = MINHASH_MOD // 2
 
     # r15: parsed SQL strings per the Py4J expression law (docs/SCALE.md).
-    poly_sql = (
-        "aggregate(transform(split(tok, ''), ch -> CAST(ascii(ch) AS BIGINT)), "
-        "CAST(0 AS BIGINT), "
-        f"(h, code) -> (h * {FINGERPRINT_BASE} + code) % {FINGERPRINT_MOD})"
-    )
-    toks = _fan_out(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select(
+    src, _ = _docs_by_id(docs, id_col, text_col)
+    toks = src.select(
         "id", F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).withColumn("th", F.expr(poly_sql))
+    ).withColumn("th", F.expr(fingerprint_sql("tok")))
     bit_sums = [
         F.expr(
             f"sum(CASE WHEN (th * {_PORT_A[i]} + {_PORT_B[i]}) % {MINHASH_MOD} "
@@ -375,7 +381,8 @@ def simhash64(
     """(id, simhash BIGINT) — 64-bit SimHash over xxhash64 token hashes:
     bit i of the fingerprint is the sign of Σ_tokens (±1 on bit i of the
     token hash). One explode + one groupBy with 64 conditional sums."""
-    toks = _fan_out(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id").select(
+    src, _ = _docs_by_id(docs, id_col, text_col)
+    toks = src.select(
         "id", F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).withColumn("th", F.xxhash64("tok"))
     # r15: the 64 conditional sums and the 64-term recombination are parsed
@@ -482,22 +489,25 @@ def connected_components(
     the right algorithm at this diameter; large-star/small-star only pays
     off when chains get deep (diameter >> 3), which near-dup clusters of
     crawl text don't produce."""
-    e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    edges = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    nodes = edges.select("a").distinct()
-    # r15 (guide §2.4): append one SELF-LOOP row per node to the edge list,
-    # so each round is ONE equi-join + ONE aggregation: min(comp) over a
-    # node's (neighbors ∪ self) is exactly least(own, min(neighbors)) —
-    # the old shape needed a second labels join per round (3 exchanges,
-    # 2 joins) just to carry the node's own label and read convergence;
-    # the self row carries both (its joined comp IS the previous label,
-    # recovered as min(comp) over a==b rows — exactly one per node).
-    # Pre-partition the augmented edges on the join key ONCE: the
+    # The adjacency holds both directions of every pair plus one SELF-LOOP
+    # row per node, so each round is ONE equi-join + ONE aggregation:
+    # min(comp) over a node's (neighbors ∪ self) is exactly least(own,
+    # min(neighbors)), and the self row's joined comp IS the previous
+    # label (min(comp) over a==b rows), which reads convergence. All four
+    # rows per pair come from ONE projection over the pair plan, so the
+    # (lazy, expensive) pair lineage runs once; `distinct` leaves exactly
+    # one row per edge and per node whatever duplicate, reversed or self
+    # pairs the input holds. Pre-partition on the join key ONCE: the
     # materialized DataFrame keeps its outputPartitioning, so every
-    # round's edges⋈labels join shuffles only the (much smaller) labels
+    # round's adj⋈labels join shuffles only the (much smaller) labels
     # side, not the edge list.
     adj = _materialize(
-        edges.union(nodes.select(F.col("a"), F.col("a").alias("b")))
+        pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
+        .selectExpr(
+            "inline(array(named_struct('a', a, 'b', b), named_struct('a', b, 'b', a), "
+            "named_struct('a', a, 'b', a), named_struct('a', b, 'b', b)))"
+        )
+        .distinct()
         .repartition("b"),
         materialize,
     )
@@ -575,10 +585,12 @@ def fuzzy_dedup_survivors(
     df_cap: int | None = None,
 ) -> DataFrame:
     """The full fuzzy-dedup pass (pairs → components → anti-join) with an
-    EXACT-DUPLICATE PRE-COLLAPSE: identical texts are grouped by content
-    hash first (one cheap groupBy) and only one representative per unique
-    text enters the n-gram/Jaccard/CC machinery. Web corpora run 30-50%
-    exact dups, and every group of k identical docs would otherwise
+    EXACT-DUPLICATE PRE-COLLAPSE: each text's group min id is read first
+    (one ``min(id) OVER (PARTITION BY md5(text))`` window, which shuffles
+    the text once; the rows with ``id = rep_id`` are the representatives
+    and ``(id, rep_id)`` is the canon map) and only one representative per
+    unique text enters the n-gram/Jaccard/CC machinery. Web corpora run
+    30-50% exact dups, and every group of k identical docs would otherwise
     contribute a k-clique — k²/2 pairs — to the component graph; the
     collapse removes that quadratic term while the result is provably
     unchanged (exact dups have Jaccard 1.0, so they were all in the
@@ -601,12 +613,13 @@ def fuzzy_dedup_survivors(
     eligible = docs.filter(
         F.size(F.split(F.col(text_col), " ")) >= n
     ).select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    canon = eligible.select("id", F.md5("__text").alias("__h"))
-    rep = canon.groupBy("__h").agg(F.min("id").alias("rep_id"))
-    canon_map = canon.join(rep, "__h").select("id", "rep_id")
-    rep_docs = eligible.join(
-        rep.select(F.col("rep_id").alias("id")), "id", "left_semi"
-    ).select(F.col("id").alias(id_col), F.col("__text").alias(text_col))
+    canon = eligible.withColumn(
+        "rep_id", F.min("id").over(Window.partitionBy(F.md5("__text")))
+    )
+    canon_map = canon.select("id", "rep_id")
+    rep_docs = canon.filter(F.col("id") == F.col("rep_id")).select(
+        F.col("id").alias(id_col), F.col("__text").alias(text_col)
+    )
     pairs = ngram_jaccard_pairs(
         rep_docs, id_col=id_col, text_col=text_col, n=n,
         threshold=threshold, df_cap=df_cap,
@@ -641,34 +654,10 @@ def minhash_signatures_portable_sharded(
     than assumed.  Same portable hash family (polynomial shingle hash +
     affine permutations mod 1e9+7), so the whole two-phase dataflow is
     value-checkable by an external SQL engine."""
-    from ..functions.text import FINGERPRINT_BASE, FINGERPRINT_MOD, word_ngrams_sql
-
-    # r15: parsed SQL strings per the Py4J expression law (docs/SCALE.md) —
-    # same composition as minhash_signatures_portable.
-    poly_sql = (
-        "aggregate(transform(split(s, ''), ch -> CAST(ascii(ch) AS BIGINT)), "
-        "CAST(0 AS BIGINT), "
-        f"(h, code) -> (h * {FINGERPRINT_BASE} + code) % {FINGERPRINT_MOD})"
-    )
-    ti = "`" + text_col.replace("`", "``") + "`"
-    shingles = _fan_out(
-        docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id"
-    ).select(
-        "id",
-        F.expr(
-            f"explode(transform({word_ngrams_sql(ti, n)}, s -> {poly_sql}))"
-        ).alias("h"),
-    )
-    batched = shingles.withColumn(
+    batched = _portable_shingles(docs, id_col, text_col, n).withColumn(
         "shard", F.pmod(F.col("h"), F.lit(shards)).cast("bigint")
     )
-    mins = [
-        F.expr(
-            f"min((h * {_PORT_A[i]} + {_PORT_B[i]}) % {MINHASH_MOD})"
-        ).alias(f"h{i}")
-        for i in range(num_hashes)
-    ]
-    per_shard = batched.groupBy("id", "shard").agg(*mins)
+    per_shard = batched.groupBy("id", "shard").agg(*_portable_mins(num_hashes))
     merged = per_shard.groupBy("id").agg(
         *[F.min(f"h{i}").alias(f"h{i}") for i in range(num_hashes)]
     )

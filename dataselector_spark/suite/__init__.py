@@ -174,15 +174,17 @@ REWRITTEN_IN_ROUND = {
     "b20_state_store_read": 18,
     "b01_python_stream_source": 18,
     "b01_python_stream_source_parallel": 18,
-    "b13_dedup_clusters": 18,
-    "b13_dedup_survivors": 18,
-    "b13_dedup_survivors_quality": 18,
-    "b14_embedding_dedup_survivors": 18,
-    "b16_image_dedup_survivors": 18,
-    "b13_leakage_safe_split": 18,
     # r19: zscore_outliers names its internal columns so that they cannot
     # collide with the input's columns.
     "b08_outlier_zscore": 19,
+    # r20: CC adjacency in one projection, fuzzy pre-collapse in one window;
+    # the b14 survivors oracle materializes its pair CTE (same rows).
+    "b13_dedup_clusters": 20,
+    "b13_dedup_survivors": 20,
+    "b13_dedup_survivors_quality": 20,
+    "b14_embedding_dedup_survivors": 20,
+    "b16_image_dedup_survivors": 20,
+    "b13_leakage_safe_split": 20,
 }
 
 # The driver's correctness harness checks the FIRST 50 entries of
@@ -206,7 +208,7 @@ DRIVER_WINDOW = [
     "b20_state_store_read",
     "b01_python_stream_source",
     "b01_python_stream_source_parallel",
-    # --- connected-components consumers, rewritten in r18 (6) ---
+    # --- connected-components consumers, rewritten in r20 (6) ---
     "b13_dedup_clusters",
     "b13_dedup_survivors",
     "b13_dedup_survivors_quality",
@@ -262,7 +264,7 @@ _check_oracle_tables(QUERIES, set(_SCHEMAS))
 # The round of the active window; bench.BENCH_ROUND (the label stamped on
 # new BENCH_RECORDS readings) must match — tripwire in
 # tests/test_bench_records.py keeps the two bumps atomic.
-WINDOW_ROUND = 19
+WINDOW_ROUND = 20
 
 if len(DRIVER_WINDOW) != 50 or len(set(DRIVER_WINDOW)) != 50:
     raise ValueError("DRIVER_WINDOW must name 50 distinct entries")

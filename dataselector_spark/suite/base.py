@@ -38,9 +38,9 @@ def oracle_table_refs(sql: str) -> tuple[set[str], set[str]]:
 
     Conservative lexical scan: string literals are stripped first (so
     read_parquet path contents never match), CTE names are anything bound by
-    ``<name> AS (``, and a table reference is an identifier directly after
-    FROM/JOIN that is not immediately called like a function
-    (``read_parquet(...)``, ``range(...)``, ``unnest(...)``). Comma-separated
+    ``<name> AS [[NOT] MATERIALIZED] (``, and a table reference is an
+    identifier directly after FROM/JOIN that is not immediately called like
+    a function (``read_parquet(...)``, ``range(...)``, ``unnest(...)``). Comma-separated
     FROM lists (``FROM a, b x, c`` — the implicit cross join used by the
     b26_rolling_dau / b17_stream_sliding oracles) are walked across commas,
     honoring bare and ``AS`` aliases, so every listed table is checked, not
@@ -50,7 +50,8 @@ def oracle_table_refs(sql: str) -> tuple[set[str], set[str]]:
     import re
 
     s = re.sub(r"'[^']*'", "''", sql)
-    ctes = {m.group(1).lower() for m in re.finditer(r"(?i)\b(\w+)\s+as\s*\(", s)}
+    cte_def = r"(?i)\b(\w+)\s+as\s*(?:(?:not\s+)?materialized\s*)?\("
+    ctes = {m.group(1).lower() for m in re.finditer(cte_def, s)}
     refs = set()
     ident = re.compile(r"\s*([a-zA-Z_][\w]*)\s*(\()?")
     comma = re.compile(r"\s*,")

@@ -192,7 +192,7 @@ def _minhash_verified_oracle(num_hashes: int = 8, bands: int = 4,
 def b13_dedup_pipeline_verified(spark, sf_dir):
     from ..functions.text import word_ngrams
     from ..operators.dedup import (
-        _fan_out,
+        _docs_by_id,
         _materialize,
         minhash_signatures_portable,
     )
@@ -230,10 +230,10 @@ def b13_dedup_pipeline_verified(spark, sf_dir):
     # (8 bytes) instead of the 3-gram string — smaller checkpoint blocks and
     # a narrower (id_b, s) join key; no output emits the shingle. See
     # word_ngram_hashes_sql for the collision/oracle argument.
+    src, ti = _docs_by_id(d, "doc_id", "text")
     shd = _materialize(
-        _fan_out(d.select(F.col("doc_id").alias("id"), "text"), "id").select(
-            "id",
-            F.expr(f"explode({word_ngram_hashes_sql('`text`', 3)})").alias("s"),
+        src.select(
+            "id", F.expr(f"explode({word_ngram_hashes_sql(ti, 3)})").alias("s")
         ),
         "local",
     )

@@ -752,15 +752,11 @@ def _image_survivors_oracle() -> str:
     "handles the clique blowup, same as the text path).",
 )
 def b16_image_dedup_survivors(spark, sf_dir):
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import dedup_survivors
 
     d = load_table(spark, sf_dir, "documents")
     pairs = _phash_band_pairs(spark, sf_dir).select("id_a", "id_b")
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("id") != F.col("comp")).select(
-        F.col("id").alias("doc_id")
-    )
-    return d.select("doc_id", "lang").join(losers, "doc_id", "left_anti")
+    return dedup_survivors(d.select("doc_id", "lang"), pairs)
 
 
 @query(

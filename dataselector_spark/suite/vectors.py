@@ -97,7 +97,7 @@ def _emb_pairs_cte() -> str:
                    (a, b) -> a + b)) AS nrm
         FROM embeddings
     ),
-    epairs AS (
+    epairs AS MATERIALIZED (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM base a JOIN base b ON a.sig = b.sig AND a.vec_id < b.vec_id
         WHERE {cos} >= 0.2
@@ -130,17 +130,13 @@ def _emb_pairs_cte() -> str:
     "Oracle replays plane arithmetic + recursive-CTE transitive closure.",
 )
 def b14_embedding_dedup_survivors(spark, sf_dir):
-    from ..operators.dedup import connected_components
+    from ..operators.dedup import dedup_survivors
 
     e = load_table(spark, sf_dir, "embeddings")
     pairs = neardup_pairs_cosine(
         e, None, threshold=0.2, num_planes=8, dim=_DIM, seed=42
     )
-    comp = connected_components(pairs)
-    losers = comp.filter(F.col("id") != F.col("comp")).select(
-        F.col("id").alias("vec_id")
-    )
-    return e.select("vec_id", "label").join(losers, "vec_id", "left_anti")
+    return dedup_survivors(e.select("vec_id", "label"), pairs, id_col="vec_id")
 
 
 def _ann_recall_oracle() -> str:

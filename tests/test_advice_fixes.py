@@ -158,6 +158,36 @@ def test_connected_components_materialize_modes(spark, tmp_path):
         assert stats["rounds"] == 3, (mode, stats)
 
 
+def test_connected_components_duplicate_reversed_self_pairs(spark, tmp_path):
+    """Repeated, reversed (id_a > id_b) and self pairs must still give
+    exactly one label per node and the min-id component, in every mode."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (3, 2), (3, 3), (7, 7), (9, 8), (8, 9)],
+        "id_a bigint, id_b bigint",
+    )
+    expected = {1: 1, 2: 1, 3: 1, 7: 7, 8: 8, 9: 8}
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    for mode in ("local", "persist", "reliable", False):
+        rows = connected_components(pairs, materialize=mode).collect()
+        assert len(rows) == len(expected), (mode, rows)
+        assert {r["id"]: r["comp"] for r in rows} == expected, mode
+
+
+def test_connected_components_reads_pairs_in_one_branch(spark, tmp_path):
+    """The adjacency is one projection over the pair plan, not a union of
+    branches that each re-read it: with materialize=False the executed
+    plan of the labels (adjacency inlined) holds no Union."""
+    path = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
+    ).write.parquet(path)
+    comp = connected_components(spark.read.parquet(path), materialize=False)
+    got = {(r["id"], r["comp"]) for r in comp.collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    plan = comp._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan, plan[:3000]
+
+
 # --- driver-window pinning ----------------------------------------------------
 
 
@@ -482,6 +512,11 @@ def test_oracle_table_guard_walks_comma_lists():
     assert refs == {"events", "orders", "lineitem"}
     refs, _ = oracle_table_refs("SELECT * FROM events e, range(7) r")
     assert refs == {"events"}
+    refs, ctes = oracle_table_refs(
+        "WITH p AS MATERIALIZED (SELECT 1 FROM events), "
+        "q AS NOT MATERIALIZED (SELECT 1 FROM p) SELECT * FROM q"
+    )
+    assert refs == {"events", "p", "q"} and ctes == {"p", "q"}
     bad = {
         "typo2": Query(
             "typo2", lambda s, d: None, "SELECT * FROM events e, ordres o"

@@ -123,8 +123,9 @@ def test_zorder_key_sql_path_identical(spark):
 
 
 def test_minhash_and_simhash_sql_builds_match_reference(spark):
-    """The minhash/simhash builders no longer keep a lambda twin, so pin
-    them against a pure-Python replay of the portable arithmetic."""
+    """The minhash/simhash builders and `fingerprint` no longer keep a
+    lambda twin, so pin them against a pure-Python replay of the portable
+    arithmetic."""
     from dataselector_spark.operators.dedup import (
         MINHASH_MOD,
         _PORT_A,
@@ -134,6 +135,7 @@ def test_minhash_and_simhash_sql_builds_match_reference(spark):
     from dataselector_spark.functions.text import (
         FINGERPRINT_BASE,
         FINGERPRINT_MOD,
+        fingerprint,
     )
 
     docs = [(1, "aa bb cc dd"), (2, "zz yy xx"), (3, "a b")]
@@ -161,3 +163,8 @@ def test_minhash_and_simhash_sql_builds_match_reference(spark):
             for i in range(4)
         ]
         assert got[doc_id] == exp, (doc_id, got[doc_id], exp)
+
+    fps = df.select("doc_id", fingerprint("text").alias("fp")).collect()
+    assert {r["doc_id"]: r["fp"] for r in fps} == {d: poly(t) for d, t in docs}
+    with pytest.raises(TypeError):
+        fingerprint(F.col("text"))
