@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .vectors import _ident
+from .sql import quote_ident
 
 TOKEN_SEP = " "
 
@@ -67,7 +67,7 @@ def word_ngrams(col: str, n: int) -> Column:
             f"word_ngrams takes a column name, not {type(col).__name__}; "
             "use word_ngrams_sql to compose over an expression"
         )
-    return F.expr(word_ngrams_sql(_ident(col), n))
+    return F.expr(word_ngrams_sql(quote_ident(col), n))
 
 
 def word_ngrams_sql(col_sql: str, n: int) -> str:
@@ -175,7 +175,7 @@ def fingerprint(col: str) -> Column:
             f"fingerprint takes a column name, not {type(col).__name__}; "
             "use fingerprint_sql to compose over an expression"
         )
-    return F.expr(fingerprint_sql(_ident(col)))
+    return F.expr(fingerprint_sql(quote_ident(col)))
 
 
 # GPT-2-style pre-tokenizer pattern: contractions, space-prefixed letter

@@ -16,10 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-
-def _ident(col: str) -> str:
-    """Backtick-quote a plain column name for embedding in SQL text."""
-    return "`" + col.replace("`", "``") + "`"
+from .sql import quote_ident
 
 
 def array_lit_sql(values) -> str:
@@ -86,7 +83,7 @@ def _names(fn: str, *cols) -> list[str]:
     """The backtick-quoted column names, or TypeError for anything else."""
     if not all(isinstance(c, str) for c in cols):
         raise TypeError(f"{fn} takes column names; use {fn}_sql over an expression")
-    return [_ident(c) for c in cols]
+    return [quote_ident(c) for c in cols]
 
 
 def dot_product(a: str, b: str) -> Column:

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..functions.sql import quote_ident
 from ..functions.text import fingerprint_sql, word_ngram_hashes_sql, word_ngrams_sql
-from ..functions.vectors import _ident
 
 
 def _materialize(df: DataFrame, mode: str | bool) -> DataFrame:
@@ -72,12 +72,10 @@ def _fan_out(df: DataFrame, key: str) -> DataFrame:
     return df
 
 
-def _docs_by_id(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame, str]:
+def _docs_by_id(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The shingle source of every text-dedup builder: ``docs`` projected to
-    (id, ``text_col``) and fanned out on id (`_fan_out`), plus ``text_col``
-    quoted for the parsed shingle expressions."""
-    src = _fan_out(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
-    return src, _ident(text_col)
+    (id, ``text_col``) and fanned out on id (`_fan_out`)."""
+    return _fan_out(docs.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
 
 
 def dedup_exact(
@@ -125,10 +123,11 @@ def ngram_jaccard_pairs(
     # n-word strings (the n-gram text never reaches any output — every
     # consumer emits ids/counts/ratios only). Collision math and the oracle
     # argument live on `word_ngram_hashes_sql`.
-    src, ti = _docs_by_id(docs, id_col, text_col)
-    shingles = src.select(
+    shingles = _docs_by_id(docs, id_col, text_col).select(
         "id",
-        F.expr(f"explode({word_ngram_hashes_sql(ti, n)})").alias("sh"),
+        F.expr(
+            f"explode({word_ngram_hashes_sql(quote_ident(text_col), n)})"
+        ).alias("sh"),
     )
     if df_cap is not None:
         # Pre-aggregate document frequency per shingle (map-side combine makes
@@ -193,8 +192,8 @@ def minhash_signatures(
     # r15: shingle hash explode and the k min-aggregates are parsed SQL
     # strings (the Py4J expression law, docs/SCALE.md) — identical trees,
     # ~10x fewer bridge commands per build.
-    src, ti = _docs_by_id(docs, id_col, text_col)
-    shingles = src.select(
+    ti = quote_ident(text_col)
+    shingles = _docs_by_id(docs, id_col, text_col).select(
         "id",
         F.expr(
             f"explode(transform({word_ngrams_sql(ti, n)}, s -> xxhash64(s)))"
@@ -242,8 +241,8 @@ def _portable_shingles(docs: DataFrame, id_col: str, text_col: str, n: int) -> D
     polynomial hash (`fingerprint_sql`)."""
     # r15: one parsed expression for the explode (the Py4J expression law,
     # docs/SCALE.md), as for each min-aggregate in `_portable_mins`.
-    src, ti = _docs_by_id(docs, id_col, text_col)
-    return src.select(
+    ti = quote_ident(text_col)
+    return _docs_by_id(docs, id_col, text_col).select(
         "id",
         F.expr(
             f"explode(transform({word_ngrams_sql(ti, n)}, s -> {fingerprint_sql('s')}))"
@@ -279,8 +278,7 @@ def simhash_portable(
     half = MINHASH_MOD // 2
 
     # r15: parsed SQL strings per the Py4J expression law (docs/SCALE.md).
-    src, _ = _docs_by_id(docs, id_col, text_col)
-    toks = src.select(
+    toks = _docs_by_id(docs, id_col, text_col).select(
         "id", F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).withColumn("th", F.expr(fingerprint_sql("tok")))
     bit_sums = [
@@ -381,8 +379,7 @@ def simhash64(
     """(id, simhash BIGINT) — 64-bit SimHash over xxhash64 token hashes:
     bit i of the fingerprint is the sign of Σ_tokens (±1 on bit i of the
     token hash). One explode + one groupBy with 64 conditional sums."""
-    src, _ = _docs_by_id(docs, id_col, text_col)
-    toks = src.select(
+    toks = _docs_by_id(docs, id_col, text_col).select(
         "id", F.explode(F.split(F.col(text_col), " ")).alias("tok")
     ).withColumn("th", F.xxhash64("tok"))
     # r15: the 64 conditional sums and the 64-term recombination are parsed
@@ -497,18 +494,19 @@ def connected_components(
     # rows per pair come from ONE projection over the pair plan, so the
     # (lazy, expensive) pair lineage runs once; `distinct` leaves exactly
     # one row per edge and per node whatever duplicate, reversed or self
-    # pairs the input holds. Pre-partition on the join key ONCE: the
-    # materialized DataFrame keeps its outputPartitioning, so every
-    # round's adj⋈labels join shuffles only the (much smaller) labels
-    # side, not the edge list.
+    # pairs the input holds. Pre-partition on the join key ONCE, before
+    # `distinct`: hash(b) already clusters every (a, b) key, so the
+    # dedup needs no second exchange, and the materialized DataFrame keeps
+    # that outputPartitioning, so every round's adj⋈labels join shuffles
+    # only the (much smaller) labels side, not the edge list.
     adj = _materialize(
         pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .selectExpr(
             "inline(array(named_struct('a', a, 'b', b), named_struct('a', b, 'b', a), "
             "named_struct('a', a, 'b', a), named_struct('a', b, 'b', b)))"
         )
-        .distinct()
-        .repartition("b"),
+        .repartition("b")
+        .distinct(),
         materialize,
     )
     # Init labels = the self rows read back OUT of the materialized adj
@@ -586,10 +584,12 @@ def fuzzy_dedup_survivors(
 ) -> DataFrame:
     """The full fuzzy-dedup pass (pairs → components → anti-join) with an
     EXACT-DUPLICATE PRE-COLLAPSE: each text's group min id is read first
-    (one ``min(id) OVER (PARTITION BY md5(text))`` window, which shuffles
-    the text once; the rows with ``id = rep_id`` are the representatives
-    and ``(id, rep_id)`` is the canon map) and only one representative per
-    unique text enters the n-gram/Jaccard/CC machinery. Web corpora run
+    (one ``min(id) OVER (PARTITION BY md5(text))`` window over the narrow
+    (id, md5) rows gives the canon map ``(id, rep_id)``; the rows with
+    ``id = rep_id`` pick the representatives' text by a semi-join on id,
+    so the text itself never crosses the window's exchange) and only one
+    representative per unique text enters the n-gram/Jaccard/CC
+    machinery. Web corpora run
     30-50% exact dups, and every group of k identical docs would otherwise
     contribute a k-clique — k²/2 pairs — to the component graph; the
     collapse removes that quadratic term while the result is provably
@@ -613,13 +613,12 @@ def fuzzy_dedup_survivors(
     eligible = docs.filter(
         F.size(F.split(F.col(text_col), " ")) >= n
     ).select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-    canon = eligible.withColumn(
-        "rep_id", F.min("id").over(Window.partitionBy(F.md5("__text")))
+    canon_map = eligible.select(
+        "id", F.min("id").over(Window.partitionBy(F.md5("__text"))).alias("rep_id")
     )
-    canon_map = canon.select("id", "rep_id")
-    rep_docs = canon.filter(F.col("id") == F.col("rep_id")).select(
-        F.col("id").alias(id_col), F.col("__text").alias(text_col)
-    )
+    rep_docs = eligible.join(
+        canon_map.filter(F.col("id") == F.col("rep_id")).select("id"), "id", "left_semi"
+    ).select(F.col("id").alias(id_col), F.col("__text").alias(text_col))
     pairs = ngram_jaccard_pairs(
         rep_docs, id_col=id_col, text_col=text_col, n=n,
         threshold=threshold, df_cap=df_cap,

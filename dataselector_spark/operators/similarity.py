@@ -29,8 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.sql import quote_ident
 from ..functions.vectors import (
-    _ident,
     array_lit_sql,
     cosine_similarity_sql,
     dot_product_sql,
@@ -59,7 +59,7 @@ def topk_cosine(
     scored = embeddings.select(
         F.col(id_col),
         F.expr(
-            cosine_similarity_sql(_ident(vec_col), array_lit_sql(query_vec))
+            cosine_similarity_sql(quote_ident(vec_col), array_lit_sql(query_vec))
         ).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
@@ -85,7 +85,7 @@ def sign_lsh_signature(vec_col: str, planes: list[list[float]]):
             f"sign_lsh_signature takes a column name, not {type(vec_col).__name__}; "
             "use sign_lsh_signature_sql to compose over an expression"
         )
-    return F.expr(sign_lsh_signature_sql(_ident(vec_col), planes))
+    return F.expr(sign_lsh_signature_sql(quote_ident(vec_col), planes))
 
 
 def _pseudo_planes(dim: int, num_planes: int, seed: int = 42) -> list[list[float]]:
@@ -127,7 +127,7 @@ def topk_cosine_lsh(
     scored = cand.select(
         F.col(id_col),
         F.expr(
-            cosine_similarity_sql(_ident(vec_col), array_lit_sql(query_vec))
+            cosine_similarity_sql(quote_ident(vec_col), array_lit_sql(query_vec))
         ).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
@@ -264,7 +264,7 @@ def ivf_assignments(
     # cell, which the oracle mirrors (rn ... ORDER BY cos DESC, cell DESC).
     # r15: the whole assignment is ONE parsed SQL expression (Py4J law).
     cents_sql = "array(" + ",".join(array_lit_sql(c) for c in centroids) + ")"
-    vi = _ident(vec_col)
+    vi = quote_ident(vec_col)
     vnorm_sql = (
         f"sqrt(aggregate(transform({vi}, "
         "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
@@ -328,7 +328,7 @@ def topk_cosine_ivf(
     scored = cand.select(
         F.col(id_col),
         F.expr(
-            cosine_similarity_sql(_ident(vec_col), array_lit_sql(query_vec))
+            cosine_similarity_sql(quote_ident(vec_col), array_lit_sql(query_vec))
         ).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
@@ -384,7 +384,7 @@ def mips_topk(
     q_sql = array_lit_sql(query_vec)
     q_aug_sql = array_lit_sql([float(x) / q_nrm for x in query_vec] + [0.0])
     mx = embeddings.agg(F.max(l2_norm(vec_col)).alias("m_nrm"))
-    vi = _ident(vec_col)
+    vi = quote_ident(vec_col)
     # Floor the divisor at the smallest positive double: identity for any
     # real corpus (greatest(M, 5e-324) == M whenever M > 0, so oracle
     # bit-parity is untouched) and turns the all-zero-corpus 0/0 NaN into
@@ -445,7 +445,7 @@ def mips_topk_lsh(
             acc += float(query_vec[i]) * p[i]
         if acc >= 0:
             q_sig += 1 << h
-    vi = _ident(vec_col)
+    vi = quote_ident(vec_col)
     sumsq_sql = (
         f"aggregate(transform({vi}, "
         "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
@@ -505,7 +505,7 @@ def pq_codes(
     zero shuffles at any scale."""
     books = codebooks if codebooks is not None else pq_codebooks(dim, m, k, seed)
     sub = dim // m
-    vi = _ident(vec_col)
+    vi = quote_ident(vec_col)
 
     # Distances via higher-order functions over centroid ARRAY LITERALS, not
     # k*sub expanded scalar expressions: the expanded form compiled a ~4k-node

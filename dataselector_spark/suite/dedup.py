@@ -230,10 +230,10 @@ def b13_dedup_pipeline_verified(spark, sf_dir):
     # (8 bytes) instead of the 3-gram string — smaller checkpoint blocks and
     # a narrower (id_b, s) join key; no output emits the shingle. See
     # word_ngram_hashes_sql for the collision/oracle argument.
-    src, ti = _docs_by_id(d, "doc_id", "text")
     shd = _materialize(
-        src.select(
-            "id", F.expr(f"explode({word_ngram_hashes_sql(ti, 3)})").alias("s")
+        _docs_by_id(d, "doc_id", "text").select(
+            "id",
+            F.expr(f"explode({word_ngram_hashes_sql('`text`', 3)})").alias("s"),
         ),
         "local",
     )
