@@ -22,44 +22,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def zorder_key(cols: list[Column | str], bits: int = 8) -> Column:
+def zorder_key(cols: list[str], bits: int = 8) -> Column:
     """Interleave the low ``bits`` bits of each (already-normalized,
     non-negative integer) column into one Morton key: bit ``b`` of column
     ``i`` lands at position ``b * len(cols) + i``. Caller normalizes each
-    dimension into ``[0, 2**bits)`` (modulo a hash, a range bucket, …);
-    the interleave itself is exact and engine-portable.
-
-    r15 (the Py4J expression law, docs/SCALE.md): dims given as SQL TEXT
-    build the whole interleave as one parsed expression (the Column path
-    cost ~6 bridge commands per bit per dim); identical tree, pinned
-    bit-equal in tests/test_expr_sql_equivalence.py."""
-    # ADVICE r15 #4: an empty cols list would satisfy all(isinstance(..)) and
-    # emit malformed SQL ('CAST(0 AS BIGINT) | '), and a MIXED str/Column
-    # list would silently fall into the Column path and die with a confusing
-    # AttributeError on str.cast — reject both loudly instead.
+    dimension into ``[0, 2**bits)`` (modulo a hash, a range bucket, …) and
+    passes it as SQL text, so the whole interleave is one parsed expression
+    (a Column chain cost ~6 bridge commands per bit per dim); the
+    interleave itself is exact and engine-portable."""
+    # an empty list would emit malformed SQL ('CAST(0 AS BIGINT) | ')
     if not cols:
         raise ValueError("zorder_key needs at least one column")
-    n_str = sum(isinstance(c, str) for c in cols)
-    if 0 < n_str < len(cols):
+    if not all(isinstance(c, str) for c in cols):
         raise TypeError(
-            "zorder_key cols must be all-str (SQL text) or all-Column, "
-            f"got a mix: {[type(c).__name__ for c in cols]}"
+            "zorder_key cols must be SQL text, "
+            f"got {[type(c).__name__ for c in cols]}"
         )
-    if n_str == len(cols):
-        n = len(cols)
-        terms = [
-            f"shiftleft(shiftright(CAST({c} AS BIGINT), {b}) & 1, {b * n + i})"
-            for b in range(bits)
-            for i, c in enumerate(cols)
-        ]
-        return F.expr("CAST(0 AS BIGINT) | " + " | ".join(terms))
-    key = F.lit(0).cast("long")
     n = len(cols)
-    for b in range(bits):
-        for i, c in enumerate(cols):
-            bit = F.shiftright(c.cast("long"), b).bitwiseAND(F.lit(1))
-            key = key.bitwiseOR(F.shiftleft(bit, b * n + i))
-    return key
+    terms = [
+        f"shiftleft(shiftright(CAST({c} AS BIGINT), {b}) & 1, {b * n + i})"
+        for b in range(bits)
+        for i, c in enumerate(cols)
+    ]
+    return F.expr("CAST(0 AS BIGINT) | " + " | ".join(terms))
 
 
 def zorder_key_sql(col_exprs: list[str], bits: int = 8) -> str:

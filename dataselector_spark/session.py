@@ -12,8 +12,13 @@ initial number).
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+_conf_lock = threading.RLock()
 
 
 def get_spark(
@@ -83,3 +88,27 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the with-block only, then put each key back: its old
+    value if it was set, ``unset`` if not, so ``spark.conf.getAll`` comes out
+    as it went in. One re-entrant module lock serializes every scoped swap,
+    so two threads on one session cannot restore each other's values. The
+    lock is held for the whole block, and every caller (``start_query``
+    too) waits on it: keep in the block only the work that reads the
+    swapped confs, i.e. planning and any execution whose plan is checked."""
+    with _conf_lock:
+        # contains = set on this session (one bridge call; getAll is ~30 ms)
+        was = {k: spark.conf.get(k) for k in confs if spark.conf._jconf.contains(k)}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        try:
+            yield
+        finally:
+            for k in confs:
+                if k in was:
+                    spark.conf.set(k, was[k])
+                else:
+                    spark.conf.unset(k)

@@ -19,7 +19,6 @@ of unbounded-forever.
 
 from __future__ import annotations
 
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -28,9 +27,7 @@ from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..catalog import ensure_session_defaults, events_ts_unit, table_path
 from ..schemas import EVENTS_PHYSICAL, TABLE_SCHEMAS
-
-_SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
-_start_lock = threading.Lock()
+from ..session import scoped_conf
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -235,17 +232,14 @@ def start_query(
     ``state_partitions`` for that call only (``None`` keeps the session's
     value). A streaming query clones the session conf when it starts, so its
     stateful operators keep the count for the whole run while the session
-    is restored as soon as ``start()`` returns. The module lock serializes
-    the set/start/restore, so two queries started on two threads cannot
-    restore each other's value or start with the other's count."""
-    with _start_lock:
-        old = spark.conf.get(_SHUFFLE_PARTITIONS)
-        if state_partitions is not None:
-            spark.conf.set(_SHUFFLE_PARTITIONS, str(state_partitions))
-        try:
-            return writer.start()
-        finally:
-            spark.conf.set(_SHUFFLE_PARTITIONS, old)
+    is restored as soon as ``start()`` returns. ``session.scoped_conf``
+    serializes the set/start/restore, so two queries started on two threads
+    cannot restore each other's value or start with the other's count."""
+    confs = {} if state_partitions is None else {
+        "spark.sql.shuffle.partitions": str(state_partitions)
+    }
+    with scoped_conf(spark, confs):
+        return writer.start()
 
 
 def run_stream_to_table(

@@ -44,8 +44,6 @@ REWRITTEN_IN_ROUND = {
     "b04_interval_join_bucketed": 6,
     # r9 (ADVICE r8 + VERDICT r8 #2): execution-forcing / scratch-path /
     # helper-refactor changes after the r8 driver rows
-    "b02_aqe_skew_join": 9,
-    "b02_bloom_filter_join": 9,
     "b15_pmi_collocations": 9,
     # r9 session 2: oracle hardened to the (ts, event_id) total order
     # (the latent tie ambiguity b26_top_paths documented)
@@ -54,7 +52,6 @@ REWRITTEN_IN_ROUND = {
     # build refactored onto the shared, skew-guarded helper
     # (operators/graph.py cooccurrence_cells/cooccurrence_pairs) — same
     # join semantics, but the code path changed after their r8/r9 rows
-    "b26_pagerank_fixedpoint": 10,
     "b26_bfs_levels": 10,
     "b26_kcore": 10,
     "b26_sssp_bounded": 10,
@@ -112,7 +109,6 @@ REWRITTEN_IN_ROUND = {
     "b26_triangle_count": 15,
     "b26_clustering_coeff": 15,
     "b26_communities_lpa": 15,
-    "b26_modularity": 15,
     "b14_topk_cosine": 15,
     "b14_pq_codes": 15,
     "b14_pq_adc_topk": 15,
@@ -145,8 +141,6 @@ REWRITTEN_IN_ROUND = {
     "b13_dedup_pipeline_verified": 16,
     "b14_rrf_hybrid": 16,
     "b14_rrf_fusion_gain": 16,
-    "b06_kmv_intersect": 16,
-    "b06_kmv_difference": 16,
     "b06_kmv_merge": 16,
     "b15_surprisal_tertiles": 16,
     "b15_surprisal_planted": 16,
@@ -184,7 +178,16 @@ REWRITTEN_IN_ROUND = {
     "b13_dedup_survivors_quality": 20,
     "b14_embedding_dedup_survivors": 20,
     "b16_image_dedup_survivors": 20,
-    "b13_leakage_safe_split": 20,
+    # r21: the joins whose final plan raced under AQE are pinned by hint,
+    # and the conf-swapping entries go through session.scoped_conf.
+    "b06_kmv_intersect": 21,
+    "b06_kmv_difference": 21,
+    "b13_leakage_safe_split": 21,
+    "b26_pagerank_fixedpoint": 21,
+    "b26_modularity": 21,
+    "b02_bloom_filter_join": 21,
+    "b02_aqe_skew_join": 21,
+    "b06_footer_stats_agg": 21,
 }
 
 # The driver's correctness harness checks the FIRST 50 entries of
@@ -208,20 +211,28 @@ DRIVER_WINDOW = [
     "b20_state_store_read",
     "b01_python_stream_source",
     "b01_python_stream_source_parallel",
-    # --- connected-components consumers, rewritten in r20 (6) ---
+    # --- connected-components consumers, rewritten in r20 (5) ---
     "b13_dedup_clusters",
     "b13_dedup_survivors",
     "b13_dedup_survivors_quality",
     "b14_embedding_dedup_survivors",
     "b16_image_dedup_survivors",
+    # --- pinned racing joins + scoped conf swaps, rewritten in r21 (8) ---
+    "b06_kmv_intersect",
+    "b06_kmv_difference",
     "b13_leakage_safe_split",
+    "b26_pagerank_fixedpoint",
+    "b26_modularity",
+    "b02_bloom_filter_join",
+    "b02_aqe_skew_join",
+    "b06_footer_stats_agg",
     # --- selection operators, rewritten in r17 (3) + siblings (2) ---
     "a13_selection_toggle",
     "a16_semi_join_apply",
     "a17_anti_join_retract",
     "a13_selection_insert",
     "a17_retract_compound",
-    # --- r10-latest re-confirms (22) ---
+    # --- r10-latest re-confirms (15) ---
     "b12_dedup_exact",
     "b06_pivot",
     "b22_mixture_resample",
@@ -237,13 +248,6 @@ DRIVER_WINDOW = [
     "b22_mixture_upsample",
     "b22_drift_chisq",
     "b22_drift_ks",
-    "b22_winsorize",
-    "b16_resize_nn",
-    "b26_transition_bigrams",
-    "b26_bfs_levels",
-    "b26_kcore",
-    "b26_sssp_bounded",
-    "b26_assortativity",
     # --- oldest r11-latest re-confirms (3) ---
     "b14_ann_lsh",
     "b15_lang_id_quality",
@@ -264,7 +268,7 @@ _check_oracle_tables(QUERIES, set(_SCHEMAS))
 # The round of the active window; bench.BENCH_ROUND (the label stamped on
 # new BENCH_RECORDS readings) must match — tripwire in
 # tests/test_bench_records.py keeps the two bumps atomic.
-WINDOW_ROUND = 20
+WINDOW_ROUND = 21
 
 if len(DRIVER_WINDOW) != 50 or len(set(DRIVER_WINDOW)) != 50:
     raise ValueError("DRIVER_WINDOW must name 50 distinct entries")

@@ -1289,7 +1289,7 @@ def b13_record_linkage_planted(spark, sf_dir):
     "ONE aggregate over one pairs-labels join (the oracle's three "
     "CTEs, fused). SCALE: pair evidence is the shared banded/inverted-"
     "index build (never all-pairs), CC is the measured min-label "
-    "propagation, labels join pairs on doc_id (equi, AQE-sizable), "
+    "propagation, labels join pairs on doc_id (equi, a shuffle-hash join by hint), "
     "and the split itself is map-only hash arithmetic — the audit "
     "scalars ride a 1-row broadcast. Cites the same decontamination "
     "rationale as b15_decontaminate (train-vs-eval overlap), but "
@@ -1335,9 +1335,11 @@ def b13_leakage_safe_split(spark, sf_dir):
         F.col("split").alias("sb"),
         F.col("naive_split").alias("nb"),
     )
+    # both sides grow with the corpus: SHUFFLE_HASH pins the joins AQE raced
+    # (build: the per-doc labels, one row per id)
     scal = (
-        pairs.join(la, "id_a")
-        .join(lb, "id_b")
+        pairs.join(la.hint("shuffle_hash"), "id_a")
+        .join(lb.hint("shuffle_hash"), "id_b")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
             F.sum(F.when(F.col("na") != F.col("nb"), 1).otherwise(0))

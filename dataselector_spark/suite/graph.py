@@ -513,10 +513,15 @@ def b26_pagerank_fixedpoint(spark, sf_dir):
     ranks = deg.select(
         F.col("ua").alias("u"), F.lit(_PR_SCALE).cast("bigint").alias("rank")
     )
+    # every side grows with the graph: SHUFFLE_HASH pins the joins AQE raced
+    # (build: the per-node ranks and degrees, one row per node)
     for _ in range(_PR_ITERS):
         contrib = (
-            edges.join(ranks, edges.ua == ranks.u)
-            .join(deg.withColumnRenamed("ua", "du"), F.col("du") == F.col("u"))
+            edges.join(ranks.hint("shuffle_hash"), edges.ua == ranks.u)
+            .join(
+                deg.withColumnRenamed("ua", "du").hint("shuffle_hash"),
+                F.col("du") == F.col("u"),
+            )
             .select(
                 F.col("ub").alias("u2"),
                 F.expr("(rank * 85) DIV (100 * deg)").alias("c"),
@@ -532,7 +537,7 @@ def b26_pagerank_fixedpoint(spark, sf_dir):
                 (F.lit(150_000).cast("bigint") + F.col("s")).alias("rank"),
             )
         )
-    return ranks.join(deg, ranks.u == deg.ua).select(
+    return ranks.join(deg.hint("shuffle_hash"), ranks.u == deg.ua).select(
         F.col("u").alias("user_id"), F.col("deg").alias("degree"), "rank"
     )
 
@@ -1496,11 +1501,11 @@ def b26_communities_lpa(spark, sf_dir):
     "(pinned in tests/test_planted_signals.py: |Q| < 0.2 here, Q > "
     "0.4 on a planted two-clique fixture where LPA recovers the "
     "plant). Plan: three keyed aggregates over the checkpointed edge "
-    "list + the label relation, a <=n_communities broadcast join, one "
-    "1-row m2 broadcast; nothing scans raw events again. Bigint note: "
-    "D_c^2 wraps past ~3e9 total degree per community under ANSI-off "
-    "— at that scale move the two products to DECIMAL(38,0), the "
-    "shape is unchanged.",
+    "list + the label relation, shuffle-hash joins (every side grows "
+    "with the graph), one 1-row m2 broadcast; nothing scans raw events "
+    "again. Bigint note: D_c^2 wraps past ~3e9 total degree per "
+    "community under ANSI-off — at that scale move the two products to "
+    "DECIMAL(38,0), the shape is unchanged.",
 )
 def b26_modularity(spark, sf_dir):
     labels, ed = _lpa_core(spark, sf_dir)
@@ -1510,15 +1515,17 @@ def b26_modularity(spark, sf_dir):
     m = ed.agg(F.count(F.lit(1)).cast("bigint").alias("m2"))
     la = labels.select(F.col("node").alias("src"), F.col("label").alias("cla"))
     lb = labels.select(F.col("node").alias("dst"), F.col("label").alias("clb"))
+    # every side grows with the graph: SHUFFLE_HASH pins the joins AQE raced
+    # (build: the per-node labels and degrees, the per-community counts)
     within = (
-        ed.join(la, "src")
-        .join(lb, "dst")
+        ed.join(la.hint("shuffle_hash"), "src")
+        .join(lb.hint("shuffle_hash"), "dst")
         .filter(F.col("cla") == F.col("clb"))
         .groupBy(F.col("cla").alias("community"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("e_in"))
     )
     comm = (
-        labels.join(deg, "node", "left")
+        labels.join(deg.hint("shuffle_hash"), "node", "left")
         .groupBy(F.col("label").alias("community"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_nodes"),
@@ -1532,7 +1539,7 @@ def b26_modularity(spark, sf_dir):
         - F.col("deg_sum") * F.col("deg_sum")
     ).cast("bigint")
     return (
-        comm.join(F.broadcast(within), "community", "left")
+        comm.join(within.hint("shuffle_hash"), "community", "left")
         .crossJoin(F.broadcast(m))
         .filter((F.col("m2") > 0) & (F.col("deg_sum") > 0))
         .select(

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import scoped_conf
 from .base import dec2, query
 
 
@@ -263,41 +264,29 @@ def b02_bloom_filter_join(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    saved: dict[str, str | None] = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_linenumber", "l_extendedprice"
-        )
-        orders = load_table(spark, sf_dir, "orders").filter(
-            F.col("o_orderpriority") == "1-URGENT"
-        )
-        j = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-            "l_orderkey", "l_linenumber", "l_extendedprice", "o_orderpriority"
-        )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_extendedprice"
+    )
+    orders = load_table(spark, sf_dir, "orders").filter(
+        F.col("o_orderpriority") == "1-URGENT"
+    )
+    j = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        "l_orderkey", "l_linenumber", "l_extendedprice", "o_orderpriority"
+    )
+    # Per-session unique path (ADVICE r8): a fixed /tmp name let two
+    # concurrent sessions (pytest + driver differential) clobber each
+    # other's output mid-readback.
+    out = (
+        f"/tmp/dsspark_bloomjoin_{os.path.basename(sf_dir.rstrip('/'))}"
+        f"_{spark.sparkContext.applicationId}"
+    )
+    # only the planning and the write read the swapped confs
+    with scoped_conf(spark, confs):
         plan = j._jdf.queryExecution().executedPlan().toString()
         assert "might_contain" in plan.lower(), (
             "runtime bloom filter was not injected:\n" + plan[:2000]
         )
-        # Per-session unique path (ADVICE r8): a fixed /tmp name let two
-        # concurrent sessions (pytest + driver differential) clobber each
-        # other's output mid-readback.
-        out = (
-            f"/tmp/dsspark_bloomjoin_{os.path.basename(sf_dir.rstrip('/'))}"
-            f"_{spark.sparkContext.applicationId}"
-        )
         j.write.mode("overwrite").parquet(out)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.read.parquet(out)
 
 
@@ -341,27 +330,21 @@ def b02_aqe_skew_join(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    saved: dict[str, str | None] = {}
-    for k, v in confs.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
-        li = load_table(spark, sf_dir, "lineitem").repartition(16)
-        key = (
-            F.when(F.col("l_orderkey") % 4 != 0, F.lit(0))
-            .otherwise(F.col("l_orderkey") % 50)
-            .alias("k")
-        )
-        fact = li.select(key, "l_orderkey", "l_linenumber", "l_quantity")
-        dim = spark.range(0, 50).select(
-            F.col("id").alias("k"), (F.col("id") * 10).alias("w")
-        )
-        j = fact.join(dim, "k").select(
-            "k", "l_orderkey", "l_linenumber", "l_quantity", "w"
-        )
+    li = load_table(spark, sf_dir, "lineitem").repartition(16)
+    key = (
+        F.when(F.col("l_orderkey") % 4 != 0, F.lit(0))
+        .otherwise(F.col("l_orderkey") % 50)
+        .alias("k")
+    )
+    fact = li.select(key, "l_orderkey", "l_linenumber", "l_quantity")
+    dim = spark.range(0, 50).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("w")
+    )
+    j = fact.join(dim, "k").select(
+        "k", "l_orderkey", "l_linenumber", "l_quantity", "w"
+    )
+    # only the planning and this execution read the swapped confs
+    with scoped_conf(spark, confs):
         # The AQE rewrite exists only in an EXECUTED plan, and each action
         # (.write, .count) gets its own QueryExecution — so the assert must
         # ride an action bound to j's own (found the hard way: asserting
@@ -376,12 +359,6 @@ def b02_aqe_skew_join(spark, sf_dir):
         assert "skew=true" in plan, (
             "AQE skew-join split did not fire:\n" + plan[:2000]
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     # Returned lazily: the driver re-executes under its own confs, which
     # changes only the physical split, never the rows.
     return j

@@ -9,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..session import scoped_conf
 from .base import dec2, query
 
 
@@ -146,11 +147,11 @@ def b06_equidepth_histogram(spark, sf_dir):
 def b06_footer_stats_agg(spark, sf_dir):
     from ..catalog import table_path
 
-    old_agg = spark.conf.get("spark.sql.parquet.aggregatePushDown", "false")
-    old_v1 = spark.conf.get("spark.sql.sources.useV1SourceList", None)
-    try:
-        spark.conf.set("spark.sql.parquet.aggregatePushDown", "true")
-        spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    confs = {
+        "spark.sql.parquet.aggregatePushDown": "true",
+        "spark.sql.sources.useV1SourceList": "",
+    }
+    with scoped_conf(spark, confs):
         df = (
             spark.read.parquet(table_path(sf_dir, "lineitem"))
             .agg(
@@ -162,12 +163,6 @@ def b06_footer_stats_agg(spark, sf_dir):
             )
         )
         df.schema  # force analysis: pin the V2 relation + pushed aggregate
-    finally:
-        spark.conf.set("spark.sql.parquet.aggregatePushDown", old_agg)
-        if old_v1 is None:
-            spark.conf.unset("spark.sql.sources.useV1SourceList")
-        else:
-            spark.conf.set("spark.sql.sources.useV1SourceList", old_v1)
     return df
 
 
@@ -1303,6 +1298,8 @@ def b06_kmv_intersect(spark, sf_dir):
     # r16: single-parse SQL over the shared checkpointed du/sk views (see
     # _kmv_du_sk) — a verbatim transcription of the former Column chain
     # (~2300 bridge commands, ~0.5 s of build chatter per rep).
+    # Join hints pin the plan AQE raced (docs/SCALE.md "Joins"): BROADCAST
+    # for per-year sides (<= |scopes| rows), SHUFFLE_HASH for the du self-join.
     du_v, sk_v = _kmv_du_sk(spark, sf_dir, "kmvi")
     return spark.sql(f"""
         WITH skagg AS (
@@ -1311,7 +1308,7 @@ def b06_kmv_intersect(spark, sf_dir):
             FROM {sk_v} GROUP BY yr
         ),
         pairs AS (
-            SELECT a.year_a, b.year_b
+            SELECT /*+ BROADCAST(a) */ a.year_a, b.year_b
             FROM (SELECT yr AS year_a FROM skagg) a
             JOIN (SELECT yr - 1 AS year_a, yr AS year_b FROM skagg) b
               ON a.year_a = b.year_a
@@ -1347,14 +1344,15 @@ def b06_kmv_intersect(spark, sf_dir):
             FROM {du_v} GROUP BY yr
         ),
         exi AS (
-            SELECT a.year_a,
+            SELECT /*+ SHUFFLE_HASH(a, b) */ a.year_a,
                    CAST(count(1) AS BIGINT) AS exact_intersect
             FROM (SELECT yr AS year_a, o_custkey FROM {du_v}) a
             JOIN (SELECT yr - 1 AS year_a, o_custkey FROM {du_v}) b
               ON a.year_a = b.year_a AND a.o_custkey = b.o_custkey
             GROUP BY a.year_a
         )
-        SELECT u.year_a, u.year_b, sa.n_sk AS n_sk_a, sb.n_sk AS n_sk_b,
+        SELECT /*+ BROADCAST(sa, sb, xa, xb, xi) */
+               u.year_a, u.year_b, sa.n_sk AS n_sk_a, sb.n_sk AS n_sk_b,
                u.n_u, u.theta, u.common_c,
                CASE WHEN sa.n_sk < 128 THEN CAST(sa.n_sk AS DOUBLE)
                     ELSE 127.0D * 1152921504606846976.0D / sa.hk
@@ -1605,11 +1603,12 @@ def b06_kmv_difference(spark, sf_dir):
     # r16: single-parse SQL over the shared checkpointed du/sk views (see
     # _kmv_du_sk) — a verbatim transcription of the former Column chain
     # (~2000 bridge commands per rep).
+    # BROADCAST(a) pins the per-year pairs join AQE raced (docs/SCALE.md).
     du_v, sk_v = _kmv_du_sk(spark, sf_dir, "kmvd")
     return spark.sql(f"""
         WITH years AS (SELECT DISTINCT yr FROM {sk_v}),
         pairs AS (
-            SELECT a.year_a, b.year_b
+            SELECT /*+ BROADCAST(a) */ a.year_a, b.year_b
             FROM (SELECT yr AS year_a FROM years) a
             JOIN (SELECT yr - 1 AS year_a, yr AS year_b FROM years) b
               ON a.year_a = b.year_a

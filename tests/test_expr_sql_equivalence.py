@@ -2,11 +2,9 @@
 must be BIT-IDENTICAL to the DataFrame-API lambda form it replaced
 (docs/SCALE.md "Py4J literal law", extended to expressions in r15).
 
-Where the lambda form is kept alive in the library as the Column-input
-path, a test builds both over the same rows and asserts null-safe equality
-per row — including denormals, -0.0, and empty/short arrays. Builders that
-take column names only are pinned against a pure-Python replay of the
-same arithmetic over the same edge rows."""
+No lambda form is kept alive in the library, so each builder is pinned
+against a pure-Python replay of the same arithmetic over edge rows —
+including denormals, -0.0, and empty/short arrays."""
 
 from __future__ import annotations
 
@@ -38,13 +36,6 @@ def vec_df(spark):
         ],
         "id bigint, u array<double>, v array<double>",
     )
-
-
-def _assert_all(df, *pairs):
-    conds = [new.eqNullSafe(old).alias(f"eq{i}") for i, (new, old) in enumerate(pairs)]
-    rows = df.select(*conds).collect()
-    for r in rows:
-        assert all(r), r
 
 
 def test_dot_l2_cosine_match_reference(vec_df):
@@ -104,22 +95,6 @@ def test_sign_lsh_signature_matches_reference(vec_df):
         assert got[r["id"]] == want, (r["id"], got[r["id"]], want)
     with pytest.raises(TypeError):
         sign_lsh_signature(F.col("u"), planes)
-
-
-def test_zorder_key_sql_path_identical(spark):
-    from dataselector_spark.operators.layout import zorder_key
-
-    df = spark.createDataFrame(
-        [(0, 0), (255, 1), (63, 255), (170, 85), (256, 300)],
-        "a bigint, b bigint",
-    )
-    _assert_all(
-        df,
-        (
-            zorder_key(["a % 256", "b % 256"], bits=8),
-            zorder_key([F.col("a") % 256, F.col("b") % 256], bits=8),
-        ),
-    )
 
 
 def test_minhash_and_simhash_sql_builds_match_reference(spark):

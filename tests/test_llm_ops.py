@@ -14,6 +14,7 @@ from dataselector_spark.operators.dedup import (
 )
 from dataselector_spark.operators.similarity import topk_cosine, topk_cosine_lsh
 from dataselector_spark.multimodal import extract_features, synthesize_media
+from dataselector_spark.session import scoped_conf
 from dataselector_spark.suite import QUERIES
 
 
@@ -767,7 +768,7 @@ def test_zorder_key_interleave_and_clustering(spark):
         [(x, y) for x in range(16) for y in range(16)], "x long, y long"
     )
     rows = df.select(
-        "x", "y", zorder_key([F.col("x"), F.col("y")], bits=4).alias("z")
+        "x", "y", zorder_key(["x", "y"], bits=4).alias("z")
     ).collect()
 
     def morton(x, y, bits=4):
@@ -791,12 +792,12 @@ def test_zorder_key_interleave_and_clustering(spark):
         assert z == morton(x, y), (x, y)
 
     clustered = cluster_by_zorder(
-        df, zorder_key([F.col("x"), F.col("y")], bits=4), partitions=4
+        df, zorder_key(["x", "y"], bits=4), partitions=4
     )
     # each partition must hold a contiguous, non-overlapping key range
     parts = clustered.select(
         F.spark_partition_id().alias("pid"),
-        zorder_key([F.col("x"), F.col("y")], bits=4).alias("z"),
+        zorder_key(["x", "y"], bits=4).alias("z"),
     ).groupBy("pid").agg(F.min("z").alias("lo"), F.max("z").alias("hi"))
     spans = sorted((r["lo"], r["hi"]) for r in parts.collect())
     for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
@@ -891,7 +892,7 @@ def test_zorder_key_three_columns(spark):
     )
     rows = df.select(
         "x", "y", "z",
-        zorder_key([F.col("x"), F.col("y"), F.col("z")], bits=3).alias("zk"),
+        zorder_key(["x", "y", "z"], bits=3).alias("zk"),
     ).collect()
 
     def morton3(x, y, z, bits=3):
@@ -1849,14 +1850,10 @@ def test_pagerank_fixedpoint_invariant_under_parallelism(spark, tmp_path):
 
     fn = QUERIES["b26_pagerank_fixedpoint"].fn
     sf = "/root/testdata/sf0.001"
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "1"}):
         a = {tuple(r) for r in fn(spark, sf).collect()}
-        spark.conf.set("spark.sql.shuffle.partitions", "17")
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "17"}):
         b = {tuple(r) for r in fn(spark, sf).collect()}
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert a == b and len(a) > 0
 
 

@@ -16,46 +16,40 @@ from dataselector_spark.suite import QUERIES
 with open(os.path.join(os.path.dirname(__file__), "plan_fingerprints.json")) as _f:
     RECORDED = json.load(_f)
 REGENERATE = "python tools/plan_fingerprints.py"
-RERUNS = 8
 
 
-def check_fingerprint(name: str, sf: str, df, rerun) -> None:
-    """Fail with a per-field diff unless the final plan of df, or of one of
-    up to RERUNS DataFrames that ``rerun()`` builds and executes, matches
-    the record (or a member of a recorded list) exactly. The re-runs are
-    for plans that race (see tools/plan_fingerprints.py); a changed plan
-    fails every one of them."""
+def check_fingerprint(name: str, sf: str, df) -> None:
+    """Fail with a per-field diff unless the final plan of the executed df
+    matches its one record exactly. Each entry has one final plan: a plan
+    that races (AQE broadcasting whichever join side's stage finished
+    first) is a defect, so pin the join rather than re-run."""
     recorded = RECORDED[sf].get(name)
     assert recorded is not None, f"{name} has no {sf} fingerprint; run `{REGENERATE}`"
-    alternatives = recorded if isinstance(recorded, list) else [recorded]
     actual = plan_fingerprint(df)
-    for _ in range(RERUNS):
-        if actual in alternatives:
-            break
-        actual = plan_fingerprint(rerun())
-    diffs = " or ".join("; ".join(fingerprint_diff(r, actual)) for r in alternatives)
-    assert actual in alternatives, (
-        f"{name} final plan at {sf} changed ({diffs}); if that is "
+    assert actual == recorded, (
+        f"{name} final plan at {sf} changed "
+        f"({'; '.join(fingerprint_diff(recorded, actual))}); if that is "
         f"intended, run `{REGENERATE}` and commit the file"
     )
 
 
 @pytest.mark.parametrize("name", sorted(RECORDED["sf0.01"]))
 def test_final_plan_fingerprint_sf0_01(spark, sf_oracle_dir, name):
-    def run():
-        df = QUERIES[name].fn(spark, sf_oracle_dir)
-        df._jdf.queryExecution().toRdd()
-        return df
-
-    check_fingerprint(name, "sf0.01", run(), run)
+    df = QUERIES[name].fn(spark, sf_oracle_dir)
+    df._jdf.queryExecution().toRdd()
+    check_fingerprint(name, "sf0.01", df)
 
 
 def test_recorded_names_match_the_suite():
     """Every oracle entry has an sf0.001 record (so a new entry cannot go
-    unrecorded), and every recorded name is a suite entry."""
+    unrecorded), every recorded name is a suite entry, and every record is
+    one fingerprint dict."""
     oracle = {n for n, q in QUERIES.items() if q.oracle is not None}
     assert oracle == set(RECORDED["sf0.001"]), sorted(oracle ^ set(RECORDED["sf0.001"]))
     assert set(RECORDED["sf0.01"]) <= set(QUERIES), set(RECORDED["sf0.01"]) - set(QUERIES)
+    for sf in ("sf0.001", "sf0.01"):
+        lists = sorted(n for n, fp in RECORDED[sf].items() if not isinstance(fp, dict))
+        assert not lists, f"{sf} records more than one plan for {lists}"
 
 
 def test_unexecuted_adaptive_plan_raises(spark):

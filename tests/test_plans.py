@@ -13,6 +13,7 @@ from dataselector_spark.plans import (
     read_schemas,
     shuffle_count,
 )
+from dataselector_spark.session import scoped_conf
 from dataselector_spark.suite import QUERIES
 
 SF = "/root/testdata/sf0.01"
@@ -159,21 +160,19 @@ def test_bucketed_join_is_shuffle_free(spark, tmp_path):
     o.write.mode("overwrite").option("path", str(tmp_path / "ob")).bucketBy(
         8, "o_orderkey"
     ).sortBy("o_orderkey").saveAsTable("orders_bucketed")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        lb, ob = spark.table("lineitem_bucketed"), spark.table("orders_bucketed")
-        joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey).groupBy(
-            "o_orderpriority"
-        ).count()
-        # one exchange for the groupBy is allowed; the JOIN itself adds none
-        n_join_side_shuffles = shuffle_count(
-            lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-        )
-        assert n_join_side_shuffles == 0, n_join_side_shuffles
-        assert joined.count() > 0
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            lb, ob = spark.table("lineitem_bucketed"), spark.table("orders_bucketed")
+            joined = lb.join(ob, lb.l_orderkey == ob.o_orderkey).groupBy(
+                "o_orderpriority"
+            ).count()
+            # one exchange for the groupBy is allowed; the JOIN itself adds none
+            n_join_side_shuffles = shuffle_count(
+                lb.join(ob, lb.l_orderkey == ob.o_orderkey)
+            )
+            assert n_join_side_shuffles == 0, n_join_side_shuffles
+            assert joined.count() > 0
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS lineitem_bucketed")
         spark.sql("DROP TABLE IF EXISTS orders_bucketed")
 
@@ -364,13 +363,9 @@ def test_bucketed_join_no_shuffle(spark):
     final groupBy's. At sf0.01 the small side fits the broadcast threshold
     (also shuffle-free), so the big-data regime is pinned by disabling
     broadcast and requiring SortMergeJoin straight over bucketed scans."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         df = QUERIES["b02_bucketed_join"].fn(spark, SF)
         plan = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     join_pos = plan.find("SortMergeJoin")
     assert join_pos >= 0, plan[:2000]
     assert "Exchange" not in plan[join_pos:], plan[join_pos:][:2000]
@@ -614,31 +609,6 @@ def test_ivf_recall_clustered_single_pass(spark):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastNestedLoopJoin") == 1, plan[:2000]
     assert shuffle_count(df) <= 2, shuffle_count(df)
-
-
-def test_bloom_filter_join_scoped_confs_restored(spark):
-    """b02_bloom_filter_join tunes five session confs (bloom thresholds +
-    broadcast disable) for its one execution; leaking them would silently
-    degrade every LATER query in the session (broadcast joins globally
-    off). Run the entry, then verify the session confs are back."""
-    keys = [
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    ]
-    before = {}
-    for k in keys:
-        try:
-            before[k] = spark.conf.get(k)
-        except Exception:
-            before[k] = None
-    QUERIES["b02_bloom_filter_join"].fn(spark, SF).count()
-    for k in keys:
-        try:
-            after = spark.conf.get(k)
-        except Exception:
-            after = None
-        assert after == before[k], (k, before[k], after)
 
 
 def test_incremental_agg_merge_shape(spark):

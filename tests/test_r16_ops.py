@@ -148,3 +148,5 @@ def test_zorder_key_input_guards():
         zorder_key([])
     with pytest.raises(TypeError):
         zorder_key(["a", F.col("b")])
+    with pytest.raises(TypeError):
+        zorder_key([F.col("a"), F.col("b")])

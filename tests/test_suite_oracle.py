@@ -21,13 +21,9 @@ def test_oracle_match(spark, sf_dir, name, mutate=lambda df: df):
         executed.append(mutate(q.fn(spark, sf_dir)))
         return executed[-1]
 
-    def rerun():  # executed as compare() executes it
-        fn(spark, sf_dir).toPandas()
-        return executed[-1]
-
     ok, detail = compare(spark, sf_dir, fn, q.oracle)
     assert ok, f"{name}: {detail}"
-    check_fingerprint(name, "sf0.001", executed[0], rerun)
+    check_fingerprint(name, "sf0.001", executed[0])
 
 
 def test_fingerprint_catches_added_exchange(spark, sf_dir):

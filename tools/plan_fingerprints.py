@@ -4,13 +4,12 @@ entry at sf0.001, taken after `toPandas()` as the oracle test takes it,
 and of the entries already under "sf0.01" (add `"<name>": {}` there to
 add one) after `queryExecution().toRdd()`.
 
-AQE re-plans as each query stage finishes, so a join of two small stages
-broadcasts whichever finished first and the final plan can vary between
-runs (the entries recorded as lists do). So an entry with two
-or more exchanges runs RUNS times, and one seen with several fingerprints
-records the list; the tests accept any member, re-running the entry a few
-times before they fail it. Fingerprints seen alongside a recorded one join
-it; if no run matches, they replace it.
+Each entry has one final plan. AQE re-plans as each query stage finishes,
+so a join of two stages that both fit the broadcast threshold broadcasts
+whichever finished first, and the final plan varies between runs: a racing
+plan is a defect; pin the join with a hint. So an entry with two or more
+exchanges runs RUNS times, and one seen with two fingerprints fails the run
+(exit status 1, the entry named) without writing the file.
 
 Run from the repo root: python tools/plan_fingerprints.py
 """
@@ -46,13 +45,6 @@ def observe(spark, sf_dir: str, name: str, run) -> list[dict]:
     return seen
 
 
-def record(old, seen: list[dict]):
-    recorded = old if isinstance(old, list) else [old]
-    if any(fp in recorded for fp in seen):
-        seen = recorded + [fp for fp in seen if fp not in recorded]
-    return seen if len(seen) > 1 else seen[0]
-
-
 def dump(data: dict) -> str:
     """One entry per line, so a regeneration diff names the entries."""
     blocks = []
@@ -68,7 +60,7 @@ def main() -> None:
     oracle = [n for n, q in QUERIES.items() if q.oracle is not None]
     # the same session shape as the tests' `spark` fixture (tests/conftest.py)
     spark = get_spark("plan-fingerprints", cpus=8, shuffle_partitions=8)
-    new = {}
+    new, racing = {}, []
     for sf, sf_dir, names, run in [
         ("sf0.001", SF_SMOKE, oracle, lambda df: df.toPandas()),
         ("sf0.01", SF_ORACLE, old["sf0.01"], lambda df: df._jdf.queryExecution().toRdd()),
@@ -76,13 +68,18 @@ def main() -> None:
         was = old.get(sf, {})
         new[sf] = {}
         for name in sorted(names):
-            new[sf][name] = rec = record(was.get(name), observe(spark, sf_dir, name, run))
-            if rec != was.get(name):
-                both = isinstance(rec, dict) and isinstance(was.get(name), dict)
-                print(sf, name, fingerprint_diff(was[name], rec) if both else rec)
+            seen = observe(spark, sf_dir, name, run)
+            if len(seen) > 1:
+                racing.append(f"{sf} {name}")
+                print(sf, name, seen)
+            new[sf][name] = fp = seen[0]
+            if fp != was.get(name):
+                print(sf, name, fingerprint_diff(was[name], fp) if name in was else fp)
         for name in sorted(set(was) - set(new[sf])):
             print(f"{sf} {name}: removed")
     spark.stop()
+    if racing:
+        sys.exit(f"not written; racing plan: pin the join: {', '.join(racing)}")
     with open(PATH, "w") as f:
         f.write(dump(new))
     print(f"wrote {PATH}")

@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from dataselector_spark.catalog import load_table
 from dataselector_spark.operators.skew import salted_join
-from dataselector_spark.session import get_spark
+from dataselector_spark.session import get_spark, scoped_conf
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -46,9 +46,7 @@ def main():
         fact.select("user_id").distinct().withColumn("grp", F.pmod("user_id", F.lit(7)))
     ).localCheckpoint()
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         def run(df):
             t = time.time()
             df.groupBy("grp").agg(F.count(F.lit(1)).alias("n")).count()
@@ -61,8 +59,6 @@ def main():
         b = salted_join(fact, dim, "user_id", buckets=16).count()
         assert a == b, (a, b)
         print(f"rows={a} plain_s={plain} salted_s={salted} speedup={plain/salted:.2f}")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 if __name__ == "__main__":

@@ -96,6 +96,7 @@ def main():
     stats = reps.agg(
         F.max("user_id").alias("mu"),
         F.min("ts").alias("t0"),
+        F.min(F.to_date("ts")).alias("d0"),
         F.max("ts").alias("t1"),
     ).first()
     mu, t0, t1 = stats["mu"], stats["t0"], stats["t1"]
@@ -114,10 +115,8 @@ def main():
 
     # monotone per-dimension bucketization preserves raw-column min/max
     # locality, so parquet stats prune the ORIGINAL predicate columns
-    ub = F.least(F.col("user_id") * 256 / (mu + 1), F.lit(255)).cast("long")
-    db = F.least(
-        F.datediff(F.col("ts"), F.lit(t0)) * 256 / n_days, F.lit(255)
-    ).cast("long")
+    ub = f"least(user_id * 256 / {mu + 1}, 255)"
+    db = f"least(datediff(ts, DATE'{stats['d0']}') * 256 / {n_days}, 255)"
     w0 = time.perf_counter()
     (
         cluster_by_zorder(reps, zorder_key([ub, db]), partitions=64)
