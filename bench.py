@@ -78,7 +78,7 @@ HEADLINE = [
 # of both sides (ensure_bucketed_table's fingerprint marker skips it on
 # later reps — and on later bench runs entirely, if /tmp persists); the
 # reported median-of-warm number is the amortized zero-shuffle probe
-# (ADVICE r6 #4; write-vs-probe split measured in tools/interval_ladder.py).
+# (ADVICE r6 #4; write-vs-probe split measured in docs/SCALE.md "Joins").
 HEADLINE_V2 = [
     "b26_rolling_dau",  # B26 single-scan DAU/WAU contribution explode
     "b15_repetition_filter",  # B15 Gopher repetition quality signals
@@ -92,7 +92,7 @@ HEADLINE_V2 = [
 # `headline_v3_wall`, excluded from `value`). Four r7 entries are left out
 # on purpose: b22_zorder_write_readback, b23_streaming_upsert_sink and
 # b22_compaction_readback time their own file WRITES (measured separately
-# in tools/ ladders, not a steady-state probe), and b22_observe_metrics
+# in docs/SCALE.md ladders, not a steady-state probe), and b22_observe_metrics
 # triggers its own internal action, which a per-query wall would
 # double-count.
 HEADLINE_V3 = [
@@ -414,7 +414,7 @@ def _isolated_set_runs(reps: int, n_runs: int) -> dict[str, dict]:
 # Round label stamped on new bench records; bump alongside the driver-window
 # rotation in suite/__init__.py (it only labels provenance — adjudication is
 # by wall value, never by round).
-BENCH_ROUND = "r21"
+BENCH_ROUND = "r22"
 
 # Keep at most this many readings per set in BENCH_RECORDS.json (ring
 # buffer, newest last) — enough for several min-of-N batches of context

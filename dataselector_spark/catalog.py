@@ -118,7 +118,7 @@ def ensure_session_defaults(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.ansi.enabled", "false")
     # Spark still defaults parquet timestamps to legacy INT96, which carries
     # NO row-group statistics — every time-range predicate on data WE wrote
-    # would scan 100% of row groups (measured in tools/zorder_ladder.py).
+    # would scan 100% of row groups (docs/SCALE.md, z-order clustering).
     # INT64 micros is the modern type, readable by DuckDB/Arrow, and makes
     # min/max pruning work on every timestamp column.
     if (

@@ -968,7 +968,7 @@ def phash256(media: DataFrame) -> DataFrame:
     WIDER fingerprint exists for scale, not accuracy: exact-recall LSH
     banding on a 64-bit hash is stuck with <=9-bit bands (pigeonhole), whose
     256-value buckets only cut all-pairs work by a constant ~32x
-    (tools/ahash_ladder.py measured brute codegen winning through 80k
+    (docs/SCALE.md "aHash image dedup": brute codegen won through 80k
     images). 256 bits give 16 bands of 16 bits — 65536-value buckets, so
     banded candidates scale as n^2/65536 and the equi-join actually prunes
     once corpora outgrow the brute scan. Returned as 8 longs of 32 bits

@@ -108,7 +108,7 @@ def ensure_bucketed_table(
     ``fingerprint`` and the table is still registered, reuse it instead of
     rewriting. This is the write-once half of the bucketed-layout contract —
     the layout only pays for itself because subsequent joins DON'T redo the
-    partition pass (measured in tools/interval_ladder.py: the amortized
+    partition pass (docs/SCALE.md "Joins", interval ladder: the amortized
     probe is ~3x the write+probe). A changed source (different part mtimes/
     sizes) or a fresh metastore falls back to a full rewrite, so reuse can
     never serve stale data."""

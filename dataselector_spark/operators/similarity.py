@@ -548,8 +548,8 @@ def train_pq_codebooks(
     sampling, skinny-row mean shuffle, driver-side k*dim metadata) is
     inherited per subspace. Drop-in replacement for the seeded
     `pq_codebooks` in `pq_codes(codebooks=...)`; reconstruction error is
-    guaranteed non-increasing per Lloyd step, measured in tools/pq_ladder.py
-    against the untrained books."""
+    guaranteed non-increasing per Lloyd step, measured against the untrained
+    books (docs/SCALE.md "PQ + ADC")."""
     sub = dim // m
     books = []
     for s in range(m):

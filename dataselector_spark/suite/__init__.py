@@ -55,7 +55,6 @@ REWRITTEN_IN_ROUND = {
     "b26_bfs_levels": 10,
     "b26_kcore": 10,
     "b26_sssp_bounded": 10,
-    "b26_assortativity": 10,
     # r11 (ADVICE r10): material post-r10-row changes.  b01_python_stream_sink
     # now materializes the readback aggregate and removes its /tmp output +
     # checkpoint dirs before returning; b13_record_linkage_planted gained the
@@ -76,11 +75,11 @@ REWRITTEN_IN_ROUND = {
     # levels derived from the checkpointed grid.
     "b26_link_prediction": 12,
     "b06_quantile_refined": 12,
-    # r12 session 3 (the window-frame law, tools/funnel_ladder.py +
-    # docs/SCALE.md): asof_join_nearest's forward candidate moved from
-    # first() over (CURRENT ROW, UNBOUNDED FOLLOWING) — O(n^2) per join
-    # key, measured 0.94 -> 13.99 s as rows/partition grew 400 -> 6451 —
-    # to the semantics-identical reverse-order running last() (flat
+    # r12 session 3 (the window-frame law, docs/SCALE.md
+    # "Negation-constrained funnel"): asof_join_nearest's forward candidate
+    # moved from first() over (CURRENT ROW, UNBOUNDED FOLLOWING) — O(n^2)
+    # per join key, measured 0.94 -> 13.99 s as rows/partition grew 400 ->
+    # 6451 — to the semantics-identical reverse-order running last() (flat
     # 0.22 s). Oracle re-verified at all three SFs after the rewrite.
     "b05_asof_nearest": 12,
     # r13 (ADVICE r12 + the bounded-window plan audit, VERDICT r12 #2):
@@ -107,7 +106,6 @@ REWRITTEN_IN_ROUND = {
     # builders, the b16 phash-banding single-parse, the zorder Morton
     # single-parse, and the stream-source state-partition pins.
     "b26_triangle_count": 15,
-    "b26_clustering_coeff": 15,
     "b26_communities_lpa": 15,
     "b14_topk_cosine": 15,
     "b14_pq_codes": 15,
@@ -188,6 +186,9 @@ REWRITTEN_IN_ROUND = {
     "b02_bloom_filter_join": 21,
     "b02_aqe_skew_join": 21,
     "b06_footer_stats_agg": 21,
+    # r22: the last two racing graph joins are pinned by hint.
+    "b26_assortativity": 22,
+    "b26_clustering_coeff": 22,
 }
 
 # The driver's correctness harness checks the FIRST 50 entries of
@@ -226,13 +227,16 @@ DRIVER_WINDOW = [
     "b02_bloom_filter_join",
     "b02_aqe_skew_join",
     "b06_footer_stats_agg",
+    # --- pinned racing graph joins, rewritten in r22 (2) ---
+    "b26_assortativity",
+    "b26_clustering_coeff",
     # --- selection operators, rewritten in r17 (3) + siblings (2) ---
     "a13_selection_toggle",
     "a16_semi_join_apply",
     "a17_anti_join_retract",
     "a13_selection_insert",
     "a17_retract_compound",
-    # --- r10-latest re-confirms (15) ---
+    # --- r10-latest re-confirms (13) ---
     "b12_dedup_exact",
     "b06_pivot",
     "b22_mixture_resample",
@@ -246,8 +250,6 @@ DRIVER_WINDOW = [
     "b15_rarity_score",
     "b01_json_permissive",
     "b22_mixture_upsample",
-    "b22_drift_chisq",
-    "b22_drift_ks",
     # --- oldest r11-latest re-confirms (3) ---
     "b14_ann_lsh",
     "b15_lang_id_quality",
@@ -268,7 +270,7 @@ _check_oracle_tables(QUERIES, set(_SCHEMAS))
 # The round of the active window; bench.BENCH_ROUND (the label stamped on
 # new BENCH_RECORDS readings) must match — tripwire in
 # tests/test_bench_records.py keeps the two bumps atomic.
-WINDOW_ROUND = 21
+WINDOW_ROUND = 22
 
 if len(DRIVER_WINDOW) != 50 or len(set(DRIVER_WINDOW)) != 50:
     raise ValueError("DRIVER_WINDOW must name 50 distinct entries")

@@ -507,7 +507,8 @@ def _zorder_oracle():
     "via the SAME generated interleave expression (operators/layout.py "
     "zorder_key_sql). Write-side: cluster_by_zorder = repartitionByRange + "
     "sortWithinPartitions, one write-time shuffle amortized over every "
-    "subsequent pruned scan; MEASURED in tools/zorder_ladder.py.",
+    "subsequent pruned scan; MEASURED in docs/SCALE.md \"Storage layout: "
+    "z-order clustering\".",
 )
 def b22_zorder_key(spark, sf_dir):
     from ..operators.layout import zorder_key
@@ -625,7 +626,7 @@ def b22_zorder_key_3d(spark, sf_dir):
     "driver row (b22_zorder_key) while the write was pytest-only. "
     "Clustering effectiveness (contiguous per-file key spans, 25%-of-scan "
     "row-group pruning) is asserted in tests/test_llm_ops.py and measured "
-    "in tools/zorder_ladder.py.",
+    "in docs/SCALE.md \"Storage layout: z-order clustering\".",
 )
 def b22_zorder_write_readback(spark, sf_dir):
     import os
@@ -660,7 +661,7 @@ def b22_zorder_write_readback(spark, sf_dir):
     "classification under a sample predicate (n_chars > 1200): 'pruned' "
     "zones are skipped without reading, 'full' zones skip the filter, "
     "only 'partial' zones evaluate per row. This is the manifest the "
-    "z-order work makes effective (tools/zorder_ladder.py measures 25% "
+    "z-order work makes effective (docs/SCALE.md z-order ladder: 25% "
     "vs 100% row-group scans once data is clustered) — computing it is "
     "one partial-aggregatable pass, map-side combined, one shuffle on "
     "zone id; at 100 TB it runs per-file from parquet footers instead "

@@ -480,7 +480,8 @@ _PR_ITERS = 3
     "order. The Spark side iterates a join+groupBy per step over a "
     "localCheckpoint()ed edge list, but deliberately does NOT "
     "checkpoint ranks between iterations — measured both ways "
-    "(tools/pagerank_ladder.py): with ONE terminal action the lazy "
+    "(docs/SCALE.md \"PageRank iteration lineage\"): with ONE terminal "
+    "action the lazy "
     "chain executes each iteration exactly once anyway (shuffle "
     "boundaries materialize map outputs), and per-iteration "
     "checkpoints only add cost (2.2 vs 1.3 s at 12 iters); the "
@@ -674,7 +675,8 @@ def b26_bfs_levels(spark, sf_dir):
     "copies in round r+1 (two UNION ALL endpoint scans + two semi-join "
     "probes), so the lazy tree grows 4^rounds replicas of the expensive "
     "co-occurrence self-join — the triangle-count materialization rule, "
-    "measured in tools/kcore_ladder.py. Peeling is MEASURED CONVERGENT "
+    "measured in docs/SCALE.md \"k-core ladder\". Peeling is MEASURED "
+    "CONVERGENT "
     "at sf0.01 before the last round (edge sizes 207 -> 176 -> 172 -> "
     "172; a pytest pins that a 4th peel is the identity), so the fixed "
     "3-round output IS the true 2-core at the tested scales, not an "
@@ -775,7 +777,8 @@ def b26_kcore(spark, sf_dir):
     "min-groupBy; the edge list is localCheckpoint()ed once (consumed "
     "all 4 rounds) and each d_r is localCheckpoint()ed per the k-core "
     "fan-out rule (d_r feeds BOTH the union and the join in round "
-    "r+1 — the 2-consumer case; tools/kcore_ladder.py measured the "
+    "r+1 — the 2-consumer case; the k-core ladder (docs/SCALE.md) "
+    "measured the "
     "lazy alternative's Catalyst tree DNF). Relaxation never "
     "all-pairs: the join moves only (frontier x avg-degree) rows per "
     "round; at 100 TB the same plan is r scans of a bucketed edge "
@@ -1104,9 +1107,11 @@ def b26_clustering_coeff(spark, sf_dir):
         F.when(a_first, F.col("ub")).otherwise(F.col("ua")).alias("dst"),
     ).localCheckpoint()
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
-    wedge_pairs = o1.join(o2, F.col("o1.src") == F.col("o2.src")).filter(
-        F.col("o1.dst") < F.col("o2.dst")
-    )
+    # every side grows with the graph: SHUFFLE_HASH pins the joins AQE raced
+    # (build: the oriented edges keyed by src, and the closing edge set)
+    wedge_pairs = o1.join(
+        o2.hint("shuffle_hash"), F.col("o1.src") == F.col("o2.src")
+    ).filter(F.col("o1.dst") < F.col("o2.dst"))
     # a wedge closes iff (dst1, dst2) is an edge in EITHER orientation.
     # r15 (guide §2.4 "remove shuffles outright"): the old form re-derived
     # the undirected edge set from `oriented` (union of both orientations
@@ -1120,7 +1125,7 @@ def b26_clustering_coeff(spark, sf_dir):
     closer = e.select(F.col("ua").alias("x"), F.col("ub").alias("y"))
     tri = (
         wedge_pairs.join(
-            closer,
+            closer.hint("shuffle_hash"),
             (F.col("o1.dst") == F.col("x")) & (F.col("o2.dst") == F.col("y")),
         )
         .agg(F.count(F.lit(1)).alias("t"))
@@ -1208,7 +1213,9 @@ def b26_assortativity(spark, sf_dir):
     )
     da = deg.select(F.col("u").alias("ua"), F.col("d").alias("dx"))
     db = deg.select(F.col("u").alias("ub"), F.col("d").alias("dy"))
-    ek = e.join(da, "ua").join(db, "ub")
+    # the degree sides grow with the graph: SHUFFLE_HASH pins the joins AQE
+    # raced (build: the per-node degrees, one row per node)
+    ek = e.join(da.hint("shuffle_hash"), "ua").join(db.hint("shuffle_hash"), "ub")
     pairs = ek.select(
         F.col("dx").alias("x"), F.col("dy").alias("y")
     ).unionAll(ek.select(F.col("dy").alias("x"), F.col("dx").alias("y")))
@@ -1430,8 +1437,8 @@ def _lpa_core(spark, sf_dir, rounds=4):
     "and a left-join coalesce to carry unvoted nodes. The label "
     "relation has TWO consumers per round (next round's vote join + "
     "its coalesce), so it is localCheckpoint()ed each round per the "
-    "measured consumer-count materialization policy (tools/"
-    "kcore_ladder.py: fan-out consumers -> checkpoint; single "
+    "measured consumer-count materialization policy (docs/SCALE.md "
+    "\"k-core ladder\": fan-out consumers -> checkpoint; single "
     "consumer -> lazy), and the edge list is checkpointed once for "
     "its 4 consumers, the triangle-count lineage pattern. The oracle "
     "unrolls the same 4 rounds as chained CTEs. At 100 TB: state per "
@@ -1773,7 +1780,8 @@ def b26_link_prediction(spark, sf_dir):
     """,
     doc="B26 (r12): DEGREE-CAPPED LINK PREDICTION (VERDICT r11 #2) — the "
     "production variant the uncapped b26_link_prediction's docstring and "
-    "tools/linkpred_ladder.py prescribe: the two-hop candidate stage "
+    "the link-prediction ladder (docs/SCALE.md) prescribe: the two-hop "
+    "candidate stage "
     "materializes sum_v deg(v)^2 rows into the (a, b) aggregation "
     "shuffle, so a single hub owns a QUADRATIC share of the stage "
     "(ladder: +62% edges via one hub -> 1562x candidate groups -> 126x "
@@ -1934,7 +1942,8 @@ def b26_link_prediction_capped(spark, sf_dir):
     "over ts DESC — Spark evaluates running frames in one accumulating "
     "pass per partition, where the equivalent-looking 1 FOLLOWING.."
     "UNBOUNDED frame re-scans to the partition end from EVERY row, "
-    "O(n^2) per user: tools/funnel_ladder.py measures 0.42 s -> 13.1 s "
+    "O(n^2) per user: docs/SCALE.md \"Negation-constrained funnel\" "
+    "measures 0.42 s -> 13.1 s "
     "on the naive frame at 64x per-user activity while this frame "
     "stays flat) — then each click classifies locally (expired: no purchase within 86,400 s by "
     "exact epoch_us bigint arithmetic; blocked: first error strictly "
@@ -1956,10 +1965,11 @@ def b26_funnel_exclusion(spark, sf_dir):
     # strictly before me in descending time". Spark evaluates an
     # (UNBOUNDED PRECEDING, -1) frame as one accumulating pass per
     # partition, but re-scans an UNBOUNDED FOLLOWING frame from every row
-    # to the partition end — O(n^2) per user. tools/funnel_ladder.py
-    # measures the cliff: at 64x per-user activity (400k fixed events)
-    # the naive frame goes 0.42 s -> 13.1 s while this frame stays flat
-    # at ~0.2-0.35 s and the join formulation grows to 1.5 s.
+    # to the partition end — O(n^2) per user. docs/SCALE.md
+    # "Negation-constrained funnel" measures the cliff: at 64x per-user
+    # activity (400k fixed events) the naive frame goes 0.42 s -> 13.1 s
+    # while this frame stays flat at ~0.2-0.35 s and the join formulation
+    # grows to 1.5 s.
     w = (
         W.partitionBy("user_id")
         .orderBy(F.col("ts").desc(), F.col("event_id").desc())

@@ -693,9 +693,10 @@ def _phash_band_pairs(spark, sf_dir):
     "b16_phash256_neardup",
     oracle=_phash256_oracle(),
     doc="B16+B13 (r8): the WIDE-fingerprint image dedup that closes "
-    "tools/ahash_ladder.py's honest caveat the way the clustered-recall "
+    "the aHash ladder's honest caveat (docs/SCALE.md \"aHash image "
+    "dedup\") the way the clustered-recall "
     "entry closed the r7 recall caveat — with a working demonstration "
-    "instead of an explanation. ahash_ladder measured that exact-recall "
+    "instead of an explanation. That ladder measured that exact-recall "
     "banding on a 64-bit hash cannot prune (<=9-bit bands by pigeonhole, "
     "constant ~32x candidate cut, brute codegen wins through 80k "
     "images); the fix is a LONGER hash, not a different plan: phash256 "
@@ -703,8 +704,8 @@ def _phash_band_pairs(spark, sf_dir):
     "bits — 65536-value buckets, banded candidates n^2/65536 — while "
     "pigeonhole still GUARANTEES recall (hamming <= 15 shares an exact "
     "band; threshold here is 12), so the banded plan remains provably "
-    "equal to the oracle's all-pairs scan. tools/phash rungs in "
-    "ahash_ladder measure the wide banded join beating brute where the "
+    "equal to the oracle's all-pairs scan. Its phash rungs "
+    "measured the wide banded join beating brute where the "
     "64-bit one lost. Same paired corpus, every pixel/bit/distance "
     "closed-form replayed; hash build is Arrow-batched map-only and the "
     "join moves 20-byte band rows, never rasters.",

@@ -192,7 +192,7 @@ def _ann_recall_oracle() -> str:
     "deterministic (cosine DESC, id) tie-breaks, and a single aggregation "
     "folds n_exact / n_ann / overlap. This is the eval loop a 100 TB "
     "embedding pipeline runs on a SAMPLED query set to tune planes/nprobe "
-    "before committing an index sweep (tools/ann_ladder.py measures the "
+    "before committing an index sweep (docs/SCALE.md \"ANN ladder\" has the "
     "cost side; this entry makes the QUALITY side a driver-checked "
     "query). Hyperplanes are seeded plan-time literals, so the oracle "
     "replays signature + cosine arithmetic bit-exactly (the b14_ann_lsh "

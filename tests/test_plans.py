@@ -776,7 +776,8 @@ def test_pagerank_lineage_truncated_equi_joins(spark):
     edge list from the one deliberate localCheckpoint (the co-occurrence
     self-join materialized once, consumed by deg + every iteration) while
     the rank chain itself stays LAZY — the measured call for a
-    single-terminal-action plan (tools/pagerank_ladder.py: per-iteration
+    single-terminal-action plan (docs/SCALE.md "PageRank iteration
+    lineage": per-iteration
     checkpoints only pay off when each iteration runs its own action)."""
     df = QUERIES["b26_pagerank_fixedpoint"].fn(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -860,7 +861,7 @@ def test_kcore_equi_joins_checkpointed_rounds(spark):
     survivor joins — no cartesian/nested-loop products — and the final
     round's plan consumes a localCheckpoint()ed edge set (Scan
     ExistingRDD), not the re-derived co-occurrence self-join (whose lazy
-    tree would replicate 4^rounds times; tools/kcore_ladder.py)."""
+    tree would replicate 4^rounds times; docs/SCALE.md "k-core ladder")."""
     df = QUERIES["b26_kcore"].fn(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, plan[:1500]

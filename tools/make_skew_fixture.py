@@ -1,9 +1,9 @@
 """Generate the r13 REAL skewed fixture (VERDICT r12 #5) under /tmp.
 
-The synthetic ladders (skew_ladder, linkpred_ladder, dedup_ladder) grow
-hubs/hot-terms programmatically inside one query; this writes actual
-parquet at 4x the bench scale (sf0.1) with three planted pathologies, so
-the guard entries can be timed against real files end to end:
+The synthetic ladders of docs/SCALE.md grew hubs/hot-terms
+programmatically inside one query; this writes actual parquet at 4x the
+bench scale (sf0.1) with three planted pathologies, so the guard entries
+can be timed against real files end to end:
 
   events.parquet   400k rows = 4 copies of sf0.1, disjoint user spaces,
                    EXCEPT event_id%20==0 (5% of all rows) reassigned to
@@ -16,7 +16,8 @@ the guard entries can be timed against real files end to end:
 
 Everything is a deterministic transform of the driver testdata — no RNG,
 rebuildable bit-identically. Measured rungs live in docs/SCALE.md
-("Real-skew fixture rungs (r13)").
+("Real-skew fixture rungs (r13)"), taken with
+`python -m tools.ladder <entry> --base /tmp/skewfix_r13`.
 
 Usage: python tools/make_skew_fixture.py [out_dir]   (default /tmp/skewfix_r13)
 """
