@@ -4,9 +4,9 @@ Pattern: media payloads are opaque ``binary`` columns travelling next to a
 typed metadata struct; decode / feature-extraction runs as Arrow-batched
 ``mapInPandas`` so each Python worker touches whole record batches, never
 rows. The Spark-side plumbing (schema, batch iteration, partition sizing) is
-real and tested; the actual codec step is stubbed deterministically because
-image/audio libraries are not in this container — swap `_decode_stub` for a
-PIL/ffmpeg call and nothing else changes.
+real and tested. `extract_features` reads the payload bytes as they are
+(image/audio libraries are not in this container); `decode_pgm` parses a
+real image format with no optional dependency.
 
 Scale notes: binary payloads dominate row size, so partition sizing must key
 off `spark.sql.files.maxPartitionBytes`, not row counts; feature extraction
@@ -23,14 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-HAVE_PIL = False
-try:  # pragma: no cover - not present in this container
-    from PIL import Image  # noqa: F401
-
-    HAVE_PIL = True
-except Exception:
-    pass
 
 MEDIA_META = T.StructType(
     [
@@ -79,28 +71,20 @@ def extract_features(media: DataFrame) -> DataFrame:
     values + pandas): Spark's Python workers cannot import this package when
     the driver runs from outside the repo, so no module-level names may leak
     into the pickled closure."""
-    have_pil = HAVE_PIL
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def decode(payload: bytes) -> bytes:
-            # Stand-in for a real codec (PIL/ffmpeg) — deterministic identity.
-            if have_pil:
-                raise NotImplementedError(
-                    "real decode path intentionally unimplemented in this container"
-                )
-            return payload
-
         for pdf in it:
-            decoded = pdf["payload"].map(decode)
+            # the payload bytes stand in for decoded pixels (no codec here)
+            payload = pdf["payload"]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "n_bytes": decoded.map(len).astype("int64"),
-                    "byte_mean": decoded.map(
+                    "n_bytes": payload.map(len).astype("int64"),
+                    "byte_mean": payload.map(
                         lambda b: float(sum(b)) / len(b) if len(b) else 0.0
                     ),
-                    "byte_min": decoded.map(lambda b: min(b) if len(b) else 0),
-                    "byte_max": decoded.map(lambda b: max(b) if len(b) else 0),
+                    "byte_min": payload.map(lambda b: min(b) if len(b) else 0),
+                    "byte_max": payload.map(lambda b: max(b) if len(b) else 0),
                 }
             )
 

@@ -112,8 +112,14 @@ def ngram_jaccard_pairs(
     join bucket to ≤ df_cap·(df_cap−1)/2 pairs (a stop-phrase shingle shared
     by k docs otherwise produces a quadratic k² hot bucket). With a cap, the
     Jaccard is computed over the capped shingle universe on BOTH sides of the
-    ratio (sizes and intersections), so it stays an exact set similarity —
-    just over the discriminative shingles, which is what you want for dedup.
+    ratio (sizes and intersections): a set similarity over the
+    discriminative shingles, NOT the exact Jaccard join once any shingle's
+    df exceeds the cap — pairs change similarity (and may cross the
+    threshold either way), and pairs that share only dropped shingles
+    vanish. On 4 exact copies of sf0.1, ``df_cap=50`` returns result hash
+    ``eed316cf`` where the exact answer is ``935a63e4``. With
+    ``df_cap=None`` the join is exact; the exact suite form is
+    ``b13_prefix_filter_pairs``.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b, jaccard >= threshold.
     """
@@ -624,8 +630,9 @@ def fuzzy_dedup_survivors(
         threshold=threshold, df_cap=df_cap,
     )
     comp = connected_components(pairs)
+    # both sides grow with the corpus: SHUFFLE_HASH pins the join AQE raced
     doc_comp = canon_map.join(
-        comp.withColumnRenamed("id", "rep_id"), "rep_id", "left"
+        comp.withColumnRenamed("id", "rep_id").hint("SHUFFLE_HASH"), "rep_id", "left"
     ).select("id", F.coalesce(F.col("comp"), F.col("rep_id")).alias("__comp"))
     losers = doc_comp.filter(F.col("id") != F.col("__comp")).select(
         F.col("id").alias(id_col)

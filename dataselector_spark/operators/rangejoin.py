@@ -1,18 +1,17 @@
 """Interval / range joins — SURVEY.md §2 B4.
 
-Two shapes:
+A range condition WITH an equi-key (the common telemetry shape: "events of
+the same user within Δt") needs no operator here: Spark executes it as an
+equi-join on the key with the range as a post-filter — a single hash
+shuffle; fine at scale (the keyed B4 suite entry writes it inline).
 
-* `interval_join_keyed` — range condition WITH an equi-key (the common
-  telemetry shape: "events of the same user within Δt"). Spark already
-  executes this as an equi-join on the key with the range as a post-filter —
-  a single hash shuffle; fine at scale. We keep it declarative.
-
-* `interval_join_bucketed` — PURE range condition (no equi-key). Naively this
-  is a broadcast-nested-loop (cartesian × filter) — quadratic, dead at 100 TB.
-  The scale path buckets the time axis: explode each interval into the fixed-
-  width buckets it overlaps, equi-join on bucket, then apply the exact range
-  predicate and de-dup. Turns O(n·m) into O(pairs that could match), with the
-  bucket width trading shuffle fan-out vs candidate-pair count.
+`interval_join_bucketed` covers the PURE range condition (no equi-key).
+Naively this is a broadcast-nested-loop (cartesian × filter) — quadratic,
+dead at 100 TB. The scale path buckets the time axis: explode each interval
+into the fixed-width buckets it overlaps, equi-join on bucket, then apply
+the exact range predicate and de-dup. Turns O(n·m) into O(pairs that could
+match), with the bucket width trading shuffle fan-out vs candidate-pair
+count.
 """
 
 from __future__ import annotations
@@ -21,18 +20,6 @@ import warnings
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def interval_join_keyed(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    cond: Column,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join on ``key`` + arbitrary range predicate ``cond``. Catalyst
-    plans the shuffle on the key; ``cond`` stays a post-join filter."""
-    return left.join(right, (left[key] == right[key]) & cond, how)
 
 
 def with_time_buckets(

@@ -41,10 +41,6 @@ def matches(col: str, pattern: str, name: str | None = None) -> Check:
     return Check(name or f"matches:{col}", c.isNotNull() & ~c.rlike(pattern))
 
 
-def sentinel_free(col: str, sentinel: float = -999.99) -> Check:
-    return Check(f"sentinel_free:{col}", F.col(col) == F.lit(sentinel))
-
-
 def run_checks(df: DataFrame, checks: list[Check]) -> DataFrame:
     """All row-level checks in one aggregation pass over one scan."""
     total = F.count(F.lit(1))

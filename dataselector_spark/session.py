@@ -54,12 +54,8 @@ def get_spark(
         # 25-40% faster on every Arrow entry (b16_image_dedup 4.65->2.76 s,
         # b16_phash256 2.90->1.86, b21_pandas_udaf 0.90->0.56) with no
         # regression on narrow-row entries (still thousands of rows per
-        # batch). Data-shape-dependent, not cluster-size-dependent; env
-        # knob for hosts where a different shape dominates.
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_MAX_BYTES", str(1024 * 1024)),
-        )
+        # batch). Data-shape-dependent, not cluster-size-dependent.
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         # ANSI off: the engine follows permissive SQL semantics (sentinel data
@@ -69,20 +65,6 @@ def get_spark(
         # Streaming tests use small deterministic micro-batches.
         .config("spark.sql.streaming.schemaInference", "false")
     )
-    # r16: env-driven conf overrides for A/B experiments and per-host
-    # tuning without code edits — semicolon-separated k=v pairs. Applied
-    # BEFORE the caller's extra_conf so explicit code wins. A value cannot
-    # contain ';' (there is no escape). Blank segments are skipped; any
-    # other segment without '=' is a typo and fails loudly.
-    for item in os.environ.get("SPARK_GRAFT_EXTRA_CONF", "").split(";"):
-        if not item.strip():
-            continue
-        if "=" not in item:
-            raise ValueError(
-                f"SPARK_GRAFT_EXTRA_CONF segment {item.strip()!r} is not key=value"
-            )
-        k, v = item.split("=", 1)
-        builder = builder.config(k.strip(), v.strip())
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

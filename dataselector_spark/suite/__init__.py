@@ -172,7 +172,6 @@ REWRITTEN_IN_ROUND = {
     # r20: CC adjacency in one projection, fuzzy pre-collapse in one window;
     # the b14 survivors oracle materializes its pair CTE (same rows).
     "b13_dedup_clusters": 20,
-    "b13_dedup_survivors": 20,
     "b13_dedup_survivors_quality": 20,
     "b14_embedding_dedup_survivors": 20,
     "b16_image_dedup_survivors": 20,
@@ -189,6 +188,9 @@ REWRITTEN_IN_ROUND = {
     # r22: the last two racing graph joins are pinned by hint.
     "b26_assortativity": 22,
     "b26_clustering_coeff": 22,
+    # r23: the fuzzy-dedup canon-map join, which raced under AQE, is pinned
+    # by hint.
+    "b13_dedup_survivors": 23,
 }
 
 # The driver's correctness harness checks the FIRST 50 entries of
@@ -212,9 +214,10 @@ DRIVER_WINDOW = [
     "b20_state_store_read",
     "b01_python_stream_source",
     "b01_python_stream_source_parallel",
-    # --- connected-components consumers, rewritten in r20 (5) ---
-    "b13_dedup_clusters",
+    # --- pinned racing dedup join, rewritten in r23 (1) ---
     "b13_dedup_survivors",
+    # --- connected-components consumers, rewritten in r20 (4) ---
+    "b13_dedup_clusters",
     "b13_dedup_survivors_quality",
     "b14_embedding_dedup_survivors",
     "b16_image_dedup_survivors",
@@ -270,7 +273,7 @@ _check_oracle_tables(QUERIES, set(_SCHEMAS))
 # The round of the active window; bench.BENCH_ROUND (the label stamped on
 # new BENCH_RECORDS readings) must match — tripwire in
 # tests/test_bench_records.py keeps the two bumps atomic.
-WINDOW_ROUND = 22
+WINDOW_ROUND = 23
 
 if len(DRIVER_WINDOW) != 50 or len(set(DRIVER_WINDOW)) != 50:
     raise ValueError("DRIVER_WINDOW must name 50 distinct entries")

@@ -6,8 +6,8 @@ functions/vectors.py (sequential left fold of per-index double products,
 zero seed) and of the driver-side Python replicas in
 operators/similarity.py, so hash checks are bit-exact. Plane/centroid
 literals are embedded because they are plan-time constants on the Spark
-side (derived from a seed, not from data). ``sql_string_literal`` is the
-one quoting helper for strings spliced into SQL text of either dialect.
+side (derived from a seed, not from data). Strings spliced into SQL text
+of either dialect are quoted by ``functions.sql.sql_string_literal``.
 """
 
 from __future__ import annotations
@@ -24,16 +24,6 @@ def sql_double_literal(x: float) -> str:
     embedded literals."""
     r = repr(float(x))
     return r if ("e" in r or "inf" in r or "nan" in r) else r + "e0"
-
-
-def sql_string_literal(s: str) -> str:
-    """``s`` as a single-quoted SQL string literal that reads back the same
-    in Spark SQL and DuckDB: ``'`` is doubled. A backslash is an escape
-    character in Spark's literal syntax but plain text in DuckDB's, so it is
-    rejected rather than escaped for one dialect."""
-    if "\\" in s:
-        raise ValueError(f"backslash in SQL string literal: {s!r}")
-    return "'" + s.replace("'", "''") + "'"
 
 
 def sql_vec_literal(vec: list[float]) -> str:

@@ -135,11 +135,14 @@ def b12_dedup_composite_key(spark, sf_dir):
     JOIN sizes sb ON sb.doc_id = id_b
     WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5
     """,
-    doc="B13: exact word-3-gram Jaccard near-dup pairs via inverted shingle "
-    "index (cost ∝ shingle co-occurrence, not |docs|²), with a document-"
-    "frequency cap of 50 on shingles — the skew guard that bounds any one "
-    "join bucket to df_cap² pairs even when a stop-phrase shingle appears "
-    "in millions of documents.",
+    doc="B13: word-3-gram Jaccard near-dup pairs via inverted shingle index "
+    "(cost ∝ shingle co-occurrence, not |docs|²), with a document-frequency "
+    "cap of 50 on shingles — the skew guard that bounds any one join bucket "
+    "to df_cap² pairs even when a stop-phrase shingle appears in millions "
+    "of documents. The cap drops every shingle whose df exceeds 50 and "
+    "takes the Jaccard over the rest, so once shingles pass the cap this "
+    "is NOT the exact Jaccard join (4 exact copies of sf0.1: result hash "
+    "eed316cf, exact 935a63e4); b13_prefix_filter_pairs is the exact form.",
 )
 def b13_ngram_jaccard(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")

@@ -966,7 +966,7 @@ def _rrf_bm25_scores(spark, d, weights, view="__r16_rrf_docs"):
     spark.sql analyzes eagerly, so the returned plan has the view INLINED
     — later createOrReplaceTempView calls on the same name cannot
     retarget it."""
-    from ._sqlgen import sql_string_literal
+    from ..functions.sql import sql_string_literal
 
     d.createOrReplaceTempView(view)
     vals = ", ".join(

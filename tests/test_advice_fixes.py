@@ -305,40 +305,17 @@ def test_driver_window_no_complex_output_columns(spark):
 # --- storage-layout utilities -------------------------------------------------
 
 
-def test_compact_files_reduces_file_count(spark, tmp_path):
-    from dataselector_spark.catalog import load_table
-    from dataselector_spark.sources import compact_files
-
-    src = str(tmp_path / "shattered")
-    out = str(tmp_path / "compacted")
-    e = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "user_id", "value"
-    )
-    e.repartition(64).write.parquet(src)  # 64 tiny files
-    import os
-
-    n_in = sum(f.endswith(".parquet") for f in os.listdir(src))
-    assert n_in == 64
-    compact_files(spark, src, out, target_bytes=1 << 30)
-    n_out = sum(f.endswith(".parquet") for f in os.listdir(out))
-    assert n_out == 1
-    # content preserved
-    a = spark.read.parquet(src).orderBy("event_id").collect()
-    b = spark.read.parquet(out).orderBy("event_id").collect()
-    assert a == b
-
-
-def test_write_clustered_prunes_files(spark, tmp_path):
+def test_range_clustered_write_prunes_files(spark, tmp_path):
     """Clustered layout: a selective filter on the cluster key must read a
     strict subset of files (parquet footer min/max pruning)."""
     from dataselector_spark.catalog import load_table
-    from dataselector_spark.sources import write_clustered
+    from dataselector_spark.operators.layout import cluster_by_zorder
 
     path = str(tmp_path / "clustered")
     e = load_table(spark, "/root/testdata/sf0.001", "events").select(
         "event_id", "user_id", "value"
     )
-    write_clustered(e, path, ["user_id"], num_files=8)
+    cluster_by_zorder(e, F.col("user_id"), 8).write.parquet(path)
     lo = e.agg({"user_id": "min"}).first()[0]
     df = spark.read.parquet(path).filter(F.col("user_id") == lo)
     files_read = df.select(F.input_file_name()).distinct().count()
@@ -775,18 +752,6 @@ def test_word_ngrams_sql_rejects_quoting_separator(monkeypatch):
         monkeypatch.setattr(text, "TOKEN_SEP", sep)
         with pytest.raises(ValueError, match="TOKEN_SEP"):
             text.word_ngrams_sql("c", 2)
-
-
-def test_extra_conf_env_rejects_segment_without_equals(monkeypatch):
-    """SPARK_GRAFT_EXTRA_CONF: a non-empty segment without '=' is a typo and
-    raises a ValueError naming the segment, before any session is built."""
-    from dataselector_spark.session import get_spark
-
-    monkeypatch.setenv(
-        "SPARK_GRAFT_EXTRA_CONF", "spark.sql.shuffle.partitions=4; ;spark.sql.ansi.enabled"
-    )
-    with pytest.raises(ValueError, match="'spark.sql.ansi.enabled'"):
-        get_spark()
 
 
 def test_rrf_weight_terms_quoted_into_values_literal(spark):

@@ -78,6 +78,19 @@ def test_multimodal_features_match_python(spark, sf_dir):
         assert f.byte_min == min(b) and f.byte_max == max(b)
 
 
+def test_multimodal_features_ignore_installed_pil(spark, sf_dir, monkeypatch):
+    """An installed PIL must not change `extract_features`: the features are
+    byte statistics of the payload on every host, so a PIL-present flag on
+    the module is read by nothing."""
+    from dataselector_spark import multimodal
+
+    monkeypatch.setattr(multimodal, "HAVE_PIL", True, raising=False)
+    docs = load_table(spark, sf_dir, "documents").limit(5)
+    feats = extract_features(synthesize_media(docs)).collect()
+    assert len(feats) == 5
+    assert all(f.n_bytes > 0 for f in feats)
+
+
 def test_ann_ivf_recall_and_probe_fraction(spark, sf_dir):
     from dataselector_spark.operators.similarity import (
         _pseudo_centroids,

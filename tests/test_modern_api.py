@@ -238,9 +238,8 @@ def _spark_avro_available():
 
 
 def test_avro_pinned_environment_limitation(spark, tmp_path):
-    """Avro is the fourth pinned environment limitation (after
-    transformWithState/protobuf, SDP/grpcio, plotting/plotly): the
-    avro-core jars ship in this container but the spark-avro CONNECTOR
+    """Avro is a pinned environment limitation (like plotting/plotly):
+    the avro-core jars ship in this container but the spark-avro CONNECTOR
     module does not, so format('avro') fails at data-source lookup —
     Spark's own error says 'built-in but external data source module'.
     Pin that the failure is the MISSING MODULE (not our data or call
