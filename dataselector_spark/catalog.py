@@ -7,8 +7,9 @@ from schemas.py.
 
 Scale note: the reference re-fetches the whole file on every render
 (index.js:397, no cache). We read lazily — Catalyst prunes columns and pushes
-predicates into the parquet scan — and callers opt into `.cache()` only for
-interactive sessions (see operators/selection.py). At 100 TB the per-"series"
+predicates into the parquet scan — and keep only the resolved plan per
+session (see load_table), never the rows: every execution scans the files
+again. At 100 TB the per-"series"
 file-per-compound layout collapses into one partitioned table (partition
 column = series name), so catalog lookup becomes partition pruning, not a
 file-path dict.
@@ -186,17 +187,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # and gives every caller its own dataset id; the SubqueryAlias is
         # erased by the optimizer, so physical plans are unchanged.
         return cached.alias(name)
-    if name == "events" and events_ts_unit(path) == "ns":
-        # ts is parquet TIMESTAMP(NANOS) — illegal for Spark's reader; take
-        # the raw int64 and truncate ns -> µs exactly as DuckDB does.
-        raw = spark.read.schema(EVENTS_PHYSICAL).parquet(path)
-        df = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))).select(
-            *[f.name for f in TABLE_SCHEMAS[name].fields]
-        )
+    if name == "events":
+        df = read_events(spark.read, sf_dir, path)
     else:
-        # timestamp[us] (possibly NTZ) reads natively with the declared
-        # TimestampType schema: under the UTC session pin this is the same
-        # wall-clock DuckDB sees, microsecond-exact.
         df = spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
     per_session[key] = df
     return df
+
+
+def read_events(reader, sf_dir: str, source: str) -> DataFrame:
+    """``events`` loaded from ``source`` through ``reader`` (``spark.read``,
+    or a configured ``spark.readStream``), with ``ts`` as declared whichever
+    unit ``sf_dir``'s events file stores (see events_ts_unit).
+
+    TIMESTAMP(NANOS) is illegal for Spark's reader: take the raw int64 and
+    truncate ns -> µs exactly as DuckDB does. timestamp[us] (possibly NTZ)
+    reads natively with the declared TimestampType schema: under the UTC
+    session pin this is the same wall-clock DuckDB sees, microsecond-exact.
+    """
+    declared = TABLE_SCHEMAS["events"]
+    if events_ts_unit(table_path(sf_dir, "events")) != "ns":
+        return reader.schema(declared).parquet(source)
+    raw = reader.schema(EVENTS_PHYSICAL).parquet(source)
+    return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000"))).select(
+        *[f.name for f in declared.fields]
+    )

@@ -7,6 +7,8 @@
 * clamp — `.clamp(true)` on the d3 scale (index.js:310).
 * trunc2 — the tooltip's `Math.floor(v*100)/100` 2-dp truncation
   (config.js:67); floor-based, NOT banker's/half-up rounding.
+* dec2 — the exact DECIMAL view of a 2-dp double that float aggregates
+  accumulate through, so sums hash-match DuckDB's.
 """
 
 from __future__ import annotations
@@ -41,3 +43,9 @@ def clamp(col: Column | str, lo: float, hi: float) -> Column:
 def trunc2(col: Column | str) -> Column:
     """2-decimal floor-truncation, `floor(v*100)/100` (config.js:67)."""
     return (F.floor(_c(col) * F.lit(100)) / F.lit(100)).cast("double")
+
+
+def dec2(col: Column | str, precision: int = 12) -> Column:
+    """Exact 2-dp decimal view of a 2-dp double column."""
+    col = F.col(col) if isinstance(col, str) else col
+    return col.cast(f"decimal({precision},2)")

@@ -20,10 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
-
-def dec2(col: Column | str, precision: int = 12) -> Column:
-    col = F.col(col) if isinstance(col, str) else col
-    return col.cast(f"decimal({precision},2)")
+from ..functions.cleaning import dec2
 
 
 def ordered_window(partition: list[str], order: list[Column | str]) -> WindowSpec:

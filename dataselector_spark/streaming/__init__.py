@@ -25,31 +25,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from ..catalog import ensure_session_defaults, events_ts_unit, table_path
-from ..schemas import EVENTS_PHYSICAL, TABLE_SCHEMAS
+from ..catalog import ensure_session_defaults, read_events
 from ..session import scoped_conf
 
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The events table as a file-source stream (same unit-aware timestamp
-    handling as the batch catalog — see catalog.events_ts_unit)."""
+    handling as the batch catalog — see catalog.read_events)."""
     ensure_session_defaults(spark)
     # The file-stream source requires a directory basePath; restrict the
     # listing to the events file via glob (new matching files would be picked
     # up incrementally — the production layout is a directory of arriving
     # part files).
-    if events_ts_unit(table_path(sf_dir, "events")) == "ns":
-        raw = (
-            spark.readStream.schema(EVENTS_PHYSICAL)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return (
-        spark.readStream.schema(TABLE_SCHEMAS["events"])
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    reader = spark.readStream.option("pathGlobFilter", "events.parquet")
+    return read_events(reader, sf_dir, sf_dir)
 
 
 def tumbling_counts(events: DataFrame, width: str = "10 minutes") -> DataFrame:

@@ -12,11 +12,9 @@ from .base import QUERIES, Query, query  # noqa: F401
 from . import cdc  # noqa: F401
 from . import curation  # noqa: F401
 from . import dedup  # noqa: F401
-from . import extensions  # noqa: F401
 from . import formats  # noqa: F401
 from . import graph  # noqa: F401
 from . import joins  # noqa: F401
-from . import llm_pipeline  # noqa: F401
 from . import media  # noqa: F401
 from . import reference_parity  # noqa: F401
 from . import relational  # noqa: F401
@@ -33,7 +31,7 @@ from . import window_suite  # noqa: F401
 # rewrite round as stale (ADVICE r6 #3). Whenever an already-green entry's
 # code path is rewritten, give it a line under that round, or move its
 # existing line there: one line per entry, holding its latest round
-# (tests/test_advice_fixes.py fails on a repeated key, which would
+# (tests/test_suite_oracle.py fails on a repeated key, which would
 # otherwise silently override the earlier line). A round's comment may
 # name entries whose line has since moved to a later round.
 REWRITTEN_IN_ROUND = {
@@ -198,7 +196,7 @@ REWRITTEN_IN_ROUND = {
 # rewritten since their last driver row (REWRITTEN_IN_ROUND), then entries
 # never checked, then the oldest-row oracle-bearing re-confirms. Rotate by
 # editing the list in place and bumping WINDOW_ROUND (with
-# bench.BENCH_ROUND); tests/test_advice_fixes.py checks every seat.
+# bench.BENCH_ROUND); tests/test_suite_oracle.py checks every seat.
 DRIVER_WINDOW = [
     # --- streaming state partitions, rewritten in r18 (13) ---
     "b17_stream_tumbling",

@@ -5,21 +5,9 @@ from __future__ import annotations
 from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-
-
-def dec2(col: Column | str, precision: int = 12) -> Column:
-    """Exact 2-dp decimal view of a 2-dp double column.
-
-    Lives here (not in `relational`) so that suite modules sharing it do not
-    trigger each other's query registration — registration ORDER is part of
-    the driver contract (see suite/__init__.py).
-    """
-    col = F.col(col) if isinstance(col, str) else col
-    return col.cast(f"decimal({precision},2)")
 
 
 @dataclass(frozen=True)

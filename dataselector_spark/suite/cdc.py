@@ -1,5 +1,6 @@
-"""B23 change data capture: snapshot diffs, streaming upserts, SCD2
-dimensions (full and incremental) and incremental aggregates.
+"""B23 change data capture: merge upserts, changelog apply, snapshot diffs,
+streaming upserts, SCD2 dimensions (full and incremental) and incremental
+aggregates.
 """
 
 from __future__ import annotations
@@ -8,6 +9,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.cleaning import dec2
 from .base import query
 
 
@@ -388,4 +390,85 @@ def b23_incremental_agg(spark, sf_dir):
         "val_min",
         "val_max",
         (F.col("sum_dec").cast("double") / F.col("n")).alias("avg_val"),
+    )
+
+
+@query(
+    "b23_merge_upsert",
+    oracle="""
+    WITH src AS (
+      SELECT o_orderkey, o_custkey, o_orderstatus,
+             CAST(CAST(o_totalprice AS DECIMAL(12,2)) * CAST(2 AS DECIMAL(3,0)) AS DOUBLE) AS o_totalprice,
+             o_orderdate, o_orderpriority
+      FROM orders WHERE o_orderpriority = '1-URGENT'
+      UNION ALL
+      SELECT o_orderkey + 10000000, o_custkey, o_orderstatus,
+             CAST(CAST(o_totalprice AS DECIMAL(12,2)) * CAST(2 AS DECIMAL(3,0)) AS DOUBLE) AS o_totalprice,
+             o_orderdate, o_orderpriority
+      FROM orders WHERE o_orderpriority = '1-URGENT'
+    )
+    SELECT * FROM orders WHERE o_orderkey NOT IN (SELECT o_orderkey FROM src)
+    UNION ALL
+    SELECT * FROM src
+    """,
+    doc="B23: keyed SCD-1 MERGE (operators/merge.py merge_upsert) — the "
+    "batch generalization of the reference's insert-or-replace session "
+    "store (index.js:510-534). Source = urgent orders repriced ×2 plus the "
+    "same rows re-keyed as inserts; target rows lose on key collision. One "
+    "anti-join shuffle; bucket both sides by key to make it co-located.",
+)
+def b23_merge_upsert(spark, sf_dir):
+    from ..operators.merge import merge_upsert
+
+    o = load_table(spark, sf_dir, "orders")
+    cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+            "o_orderdate", "o_orderpriority"]
+    repriced = dec2("o_totalprice") * F.lit(2).cast("decimal(3,0)")
+    urgent = o.filter(F.col("o_orderpriority") == "1-URGENT")
+    updates = urgent.withColumn("o_totalprice", repriced.cast("double"))
+    inserts = updates.withColumn("o_orderkey", F.col("o_orderkey") + F.lit(10000000))
+    src = updates.select(*cols).unionByName(inserts.select(*cols))
+    return merge_upsert(o.select(*cols), src, ["o_orderkey"])
+
+
+@query(
+    "b23_apply_changelog",
+    oracle="""
+    WITH c AS (
+      SELECT l_orderkey AS k, l_linenumber AS v,
+             CASE WHEN l_returnflag = 'R' THEN 'D' ELSE 'U' END AS op,
+             l_quantity, l_extendedprice
+      FROM lineitem
+    ),
+    r AS (
+      SELECT *, row_number() OVER (
+        PARTITION BY k
+        ORDER BY v DESC, CASE WHEN op = 'D' THEN 0 ELSE 1 END,
+                 l_quantity, l_extendedprice
+      ) AS rn FROM c
+    )
+    SELECT k, v, op, l_quantity, l_extendedprice FROM r
+    WHERE rn = 1 AND op <> 'D'
+    """,
+    doc="B23: CDC changelog compaction (operators/merge.py apply_changelog) "
+    "— latest version per key wins, winning deletes drop the key. The "
+    "changelog is synthesized from lineitem (key=orderkey, "
+    "version=linenumber, returnflag R ⇒ delete); compaction is one "
+    "row_number window per key; ties prefer the delete, then fall to "
+    "payload columns ((k,v) is NOT unique in this data — without a total "
+    "order the survivor is engine-dependent).",
+)
+def b23_apply_changelog(spark, sf_dir):
+    from ..operators.merge import apply_changelog
+
+    l = load_table(spark, sf_dir, "lineitem")
+    changelog = l.select(
+        F.col("l_orderkey").alias("k"),
+        F.col("l_linenumber").alias("v"),
+        F.when(F.col("l_returnflag") == "R", "D").otherwise("U").alias("op"),
+        "l_quantity",
+        "l_extendedprice",
+    )
+    return apply_changelog(
+        changelog, ["k"], "v", tiebreakers=["l_quantity", "l_extendedprice"]
     )

@@ -1,5 +1,5 @@
-"""B22/B24 training-data curation: splits, shuffles, mixtures, drift and
-profiling, Z-order layout, sampling, budgets, and the end-to-end document
+"""B22/B24 training-data curation: data-quality checks, splits, shuffles,
+mixtures, drift and profiling, Z-order layout, sampling, budgets, and the end-to-end document
 curation pipeline.
 """
 
@@ -9,7 +9,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from .base import dec2, query
+from ..functions.cleaning import dec2
+from .base import query
 from .text import _EMAIL_RE, _PHONE_RE
 
 
@@ -1548,3 +1549,116 @@ def b22_target_mixture(spark, sf_dir):
         )
         .orderBy("lang")
     )
+
+
+@query(
+    "b22_quality_checks",
+    oracle=r"""
+    SELECT 'not_null:event_type' AS check_name,
+           count(*) FILTER (WHERE event_type IS NULL) AS violations,
+           count(*) AS total,
+           count(*) FILTER (WHERE event_type IS NULL) = 0 AS ok
+    FROM events
+    UNION ALL
+    SELECT 'in_range:value',
+           count(*) FILTER (WHERE value IS NOT NULL AND value NOT BETWEEN 0 AND 200),
+           count(*),
+           count(*) FILTER (WHERE value IS NOT NULL AND value NOT BETWEEN 0 AND 200) = 0
+    FROM events
+    UNION ALL
+    SELECT 'matches:props',
+           count(*) FILTER (WHERE props IS NOT NULL AND NOT regexp_matches(props, '^\{')),
+           count(*),
+           count(*) FILTER (WHERE props IS NOT NULL AND NOT regexp_matches(props, '^\{')) = 0
+    FROM events
+    UNION ALL
+    SELECT 'unique:event_id',
+           (SELECT CAST(coalesce(sum(n - 1), 0) AS BIGINT)
+            FROM (SELECT count(*) AS n FROM events GROUP BY event_id)),
+           (SELECT count(*) FROM events),
+           (SELECT coalesce(sum(n - 1), 0) FROM (SELECT count(*) AS n FROM events GROUP BY event_id)) = 0
+    UNION ALL
+    SELECT 'ref:l_orderkey->o_orderkey',
+           (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
+                (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)),
+           (SELECT count(*) FROM lineitem),
+           (SELECT count(*) FROM lineitem l WHERE NOT EXISTS
+                (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)) = 0
+    """,
+    doc="B22: declarative data-quality battery (the reference's QC purpose, "
+    "machine-checked): null/range/format checks fold into ONE conditional-"
+    "sum pass over one scan; uniqueness and referential integrity are "
+    "aggregate / anti-join counts. The in_range check intentionally "
+    "flags rows (value > 200 exists) to prove detection.",
+)
+def b22_quality_checks(spark, sf_dir):
+    from ..operators.validate import (
+        in_range,
+        matches,
+        not_null,
+        referential_violations,
+        run_checks,
+        uniqueness_violations,
+    )
+
+    e = load_table(spark, sf_dir, "events")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    row_checks = run_checks(
+        e,
+        [
+            not_null("event_type"),
+            in_range("value", 0, 200),
+            matches("props", r"^\{"),
+        ],
+    )
+    return (
+        row_checks.unionByName(uniqueness_violations(e, ["event_id"]))
+        .unionByName(referential_violations(l, "l_orderkey", o, "o_orderkey"))
+    )
+
+
+@query(
+    "b22_stratified_sample",
+    oracle=None,  # sampling is engine-specific RNG; fractions pinned in tests
+    doc="B22: per-stratum Bernoulli sampling (sampleBy on lang, seeded) — "
+    "the standard corpus down-sampling/rebalancing step in LLM data "
+    "pipelines. Deterministic for a fixed seed and partitioning; fraction "
+    "accuracy asserted in tests, not hash-compared.",
+)
+def b22_stratified_sample(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    fractions = {"en": 0.5, "es": 0.25, "fr": 0.25, "de": 0.25, "zh": 0.1}
+    return d.sampleBy("lang", fractions, seed=42).select("doc_id", "lang")
+
+
+@query(
+    "b22_mixture_resample",
+    oracle="""
+    SELECT doc_id, source, lang
+    FROM documents
+    WHERE (doc_id * 2654435761) % 1000 <
+          CASE source
+            WHEN 'src0' THEN 300
+            WHEN 'src1' THEN 900
+            WHEN 'src2' THEN 700
+            ELSE 500
+          END
+    """,
+    doc="B22: deterministic mixture resampling — per-source keep rates "
+    "applied through a Knuth-hash gate on the stable doc key instead of "
+    "an RNG, so the sample is reproducible across runs, engines, and "
+    "partitionings (resumable/auditable corpus builds; rand()-based "
+    "sample() is none of those). Pure filter: pushes to the scan, no "
+    "shuffle. Rates here: src0 30%, src1 90%, src2 70%, default 50%.",
+)
+def b22_mixture_resample(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    rate = (
+        F.when(F.col("source") == "src0", 300)
+        .when(F.col("source") == "src1", 900)
+        .when(F.col("source") == "src2", 700)
+        .otherwise(500)
+    )
+    gate = (F.col("doc_id") * F.lit(2654435761)) % 1000
+    return d.filter(gate < rate).select("doc_id", "source", "lang")

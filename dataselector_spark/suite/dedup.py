@@ -1,6 +1,7 @@
-"""B12/B13 deduplication: normalized exact dedup, portable MinHash and
-SimHash, shingle containment, edit-distance and prefix-filtered pair joins,
-repeated spans, record linkage and the incremental and sharded dedup
+"""B12/B13 deduplication: exact and normalized dedup, n-gram Jaccard,
+MinHash and SimHash (native and portable), fuzzy-dedup clusters and
+survivors, shingle containment, edit-distance and prefix-filtered pair
+joins, repeated spans, record linkage and the incremental and sharded dedup
 pipelines.
 """
 
@@ -10,9 +11,46 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.keys import composite_key
 from ..functions.text import word_ngram_hashes_sql
+from ..operators.dedup import (
+    dedup_exact,
+    minhash_lsh_pairs,
+    minhash_signatures,
+    ngram_jaccard_pairs,
+    simhash64,
+    simhash_near_pairs,
+)
 from .base import query
-from .llm_pipeline import _JACCARD_PAIRS_CTE
+
+
+_JACCARD_PAIRS_CTE = """
+    toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    sh AS (
+        SELECT doc_id, unnest(list_distinct(
+            list_transform(range(1, greatest(len(t) - 1, 1)),
+                           i -> array_to_string(t[i:i+2], ' ')))) AS sh
+        FROM toks
+    ),
+    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ),
+    pairs AS (
+        SELECT id_a, id_b
+        FROM inter JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
+        WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5
+    ),
+    edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+              UNION ALL SELECT id_b, id_a FROM pairs),
+    reach AS (
+        SELECT a AS id, a AS r FROM edges
+        UNION
+        SELECT reach.id, e.b FROM reach JOIN edges e ON reach.r = e.a
+    )
+"""
 
 
 def _minhash_portable_oracle(num_hashes: int = 8) -> str:
@@ -1807,3 +1845,155 @@ def b13_incremental_ingest_dedup(spark, sf_dir):
     return incremental_minhash_candidates(
         d, lambda c: (c % 10) == 0, n=3, num_hashes=8, bands=4
     )
+
+
+@query(
+    "b12_dedup_exact",
+    oracle="""
+    SELECT event_id, user_id, event_type, ts FROM (
+        SELECT event_id, user_id, event_type, ts,
+               row_number() OVER (PARTITION BY user_id, event_type
+                                  ORDER BY ts ASC, event_id ASC) AS rn
+        FROM events
+    ) WHERE rn = 1
+    """,
+    doc="B12: exact dedup with a deterministic survivor (earliest row per "
+    "key) — dropDuplicates keeps an arbitrary row and is unstable; this is "
+    "the reproducible form. Generalizes the reference's 2-flasks-per-minute "
+    "composite-key dedup (index.js:23-24).",
+)
+def b12_dedup_exact(spark, sf_dir):
+    e = load_table(spark, sf_dir, "events")
+    kept = dedup_exact(
+        e, keys=["user_id", "event_type"], order_by=[F.col("ts").asc(), F.col("event_id").asc()]
+    )
+    return kept.select("event_id", "user_id", "event_type", "ts")
+
+
+@query(
+    "b12_dedup_composite_key",
+    oracle="""
+    SELECT date_key, n FROM (
+        SELECT strftime(date_trunc('minute', ts), '%Y-%m-%d %H:%M') || ' ' || CAST(user_id AS VARCHAR) AS date_key,
+               count(*) AS n
+        FROM events GROUP BY 1
+    ) WHERE n > 1
+    """,
+    doc="B12/A15: composite-key collision census — which minute+salt keys "
+    "still collide (the reference's flask-pair problem).",
+)
+def b12_dedup_composite_key(spark, sf_dir):
+    e = load_table(spark, sf_dir, "events")
+    return (
+        e.groupBy(composite_key("ts", "user_id").alias("date_key"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > 1)
+    )
+
+
+@query(
+    "b13_ngram_jaccard",
+    oracle="""
+    WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+    sh_all AS (
+        SELECT doc_id, unnest(list_distinct(
+            list_transform(range(1, greatest(len(t) - 1, 1)),
+                           i -> array_to_string(t[i:i+2], ' ')))) AS sh
+        FROM toks
+    ),
+    sh AS (
+        SELECT doc_id, sh FROM (
+            SELECT doc_id, sh, count(*) OVER (PARTITION BY sh) AS df FROM sh_all
+        ) WHERE df <= 50
+    ),
+    sizes AS (SELECT doc_id, count(*) AS sz FROM sh GROUP BY doc_id),
+    inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS inter
+        FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )
+    SELECT id_a, id_b,
+           CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) AS jaccard
+    FROM inter
+    JOIN sizes sa ON sa.doc_id = id_a
+    JOIN sizes sb ON sb.doc_id = id_b
+    WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5
+    """,
+    doc="B13: word-3-gram Jaccard near-dup pairs via inverted shingle index "
+    "(cost ∝ shingle co-occurrence, not |docs|²), with a document-frequency "
+    "cap of 50 on shingles — the skew guard that bounds any one join bucket "
+    "to df_cap² pairs even when a stop-phrase shingle appears in millions "
+    "of documents. The cap drops every shingle whose df exceeds 50 and "
+    "takes the Jaccard over the rest, so once shingles pass the cap this "
+    "is NOT the exact Jaccard join (4 exact copies of sf0.1: result hash "
+    "eed316cf, exact 935a63e4); b13_prefix_filter_pairs is the exact form.",
+)
+def b13_ngram_jaccard(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    return ngram_jaccard_pairs(d, n=3, threshold=0.5, df_cap=50)
+
+
+@query(
+    "b13_minhash_lsh",
+    oracle=None,  # murmur3-seeded signatures are engine-specific; recall vs
+    # exact jaccard asserted in tests/test_llm_ops.py
+    doc="B13: MinHash(16) + LSH(4 bands) candidate pairs with estimated "
+    "Jaccard — the sub-quadratic fuzzy-dedup path for 100 TB corpora.",
+)
+def b13_minhash_lsh(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    sigs = minhash_signatures(d, num_hashes=16, n=3)
+    return minhash_lsh_pairs(sigs, bands=4, est_threshold=0.5)
+
+
+@query(
+    "b13_simhash",
+    oracle=None,  # xxhash64 fingerprints are engine-specific
+    doc="B13: 64-bit SimHash fingerprints + hamming-banded near-pairs "
+    "(pigeonhole over 4×16-bit chunks).",
+)
+def b13_simhash(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    fps = simhash64(d)
+    return simhash_near_pairs(fps, max_hamming=3, bands=4)
+
+
+@query(
+    "b13_dedup_clusters",
+    oracle=f"""
+    WITH RECURSIVE {_JACCARD_PAIRS_CTE}
+    SELECT id, min(r) AS comp FROM reach GROUP BY id
+    """,
+    doc="B13: pairwise near-dup evidence -> dedup CLUSTERS via connected "
+    "components (iterative min-label propagation in plain DataFrame ops — "
+    "A~B~C collapse even when A/C were never compared). Oracle is a "
+    "recursive-CTE transitive closure over the same exact-Jaccard pairs.",
+)
+def b13_dedup_clusters(spark, sf_dir):
+    from ..operators.dedup import connected_components
+
+    d = load_table(spark, sf_dir, "documents")
+    pairs = ngram_jaccard_pairs(d, n=3, threshold=0.5)
+    return connected_components(pairs)
+
+
+@query(
+    "b13_dedup_survivors",
+    oracle=f"""
+    WITH RECURSIVE {_JACCARD_PAIRS_CTE},
+    comp AS (SELECT id, min(r) AS comp FROM reach GROUP BY id)
+    SELECT doc_id, lang FROM documents
+    WHERE doc_id NOT IN (SELECT id FROM comp WHERE id != comp)
+    """,
+    doc="B13: the fuzzy-dedup END PRODUCT — one survivor (min id) per "
+    "near-dup cluster plus all unpaired documents, removed with a broadcast "
+    "anti-join.",
+)
+def b13_dedup_survivors(spark, sf_dir):
+    from ..operators.dedup import fuzzy_dedup_survivors
+
+    d = load_table(spark, sf_dir, "documents")
+    # r3: exact-dup pre-collapse before the pair/CC machinery — provably
+    # identical output (the oracle is unchanged), quadratically less CC
+    # work on duplication-heavy corpora. See fuzzy_dedup_survivors.
+    return fuzzy_dedup_survivors(d, n=3, threshold=0.5).select("doc_id", "lang")

@@ -1,16 +1,37 @@
 """B01/B11/B21 formats and Python APIs: JSON, ORC, XML and parquet
 readers and writers, the Python data source, SQL semantics batteries
-(NULLs, VARIANT, collations, parameters), pandas UDAFs, mapInArrow and
-UDTFs.
+(NULLs, VARIANT, collations, parameters), pandas UDFs and UDAFs,
+mapInArrow and UDTFs.
+
+B1 round-trips write to /tmp and read back through an EXPLICIT schema — the
+oracle runs against the original parquet, so a pass proves the sink+source
+pair is lossless (Java's shortest-round-trip double formatting guarantees
+text formats preserve doubles exactly).
+
+B21 policy: pandas UDFs compute in integer-scaled exact arithmetic (prices
+and quantities are 2-dp fixed-point), so grouped results hash-match a
+DECIMAL-cast DuckDB oracle despite Python-side summation. This is the same
+float policy as relational.py, ported across the Arrow boundary.
 """
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load_table
-from .base import dec2, query
+from ..functions.cleaning import dec2
+from .base import query
+
+
+_RT_ROOT = "/tmp/dataselector_roundtrip"
+
+
+def _rt_path(sf_dir: str, name: str) -> str:
+    return os.path.join(_RT_ROOT, os.path.basename(os.path.normpath(sf_dir)), name)
 
 
 @query(
@@ -32,7 +53,6 @@ from .base import dec2, query
 def b01_json_permissive(spark, sf_dir):
     from pyspark.sql import types as T
 
-    from .extensions import _rt_path
 
     path = _rt_path(sf_dir, "orders_json_corrupt")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
@@ -69,7 +89,7 @@ def b01_json_permissive(spark, sf_dir):
     FROM lineitem WHERE l_returnflag = 'R'
     """,
     doc="B1: ORC sink + source over lineitem (decimal + flag columns; the "
-    "orders-based twin lives in extensions.py as b01_orc_roundtrip). The "
+    "orders-based twin is b01_orc_roundtrip, in this module). The "
     "oracle reads the ORIGINAL parquet table, so a green row proves the "
     "ORC write+read preserved every value and type exactly. Same "
     "no-inference discipline as the CSV/JSON roundtrips: projection + "
@@ -77,7 +97,6 @@ def b01_json_permissive(spark, sf_dir):
     "needed columns.",
 )
 def b01_orc_roundtrip_lineitem(spark, sf_dir):
-    from .extensions import _rt_path
 
     path = _rt_path(sf_dir, "lineitem_orc")
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -836,3 +855,218 @@ def b11_parameterized_sql(spark, sf_dir):
             "statuses": ["O", "F"],
         },
     )
+
+
+@query(
+    "b01_parquet_roundtrip",
+    oracle="""
+    SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_returnflag
+    FROM lineitem WHERE l_returnflag = 'R'
+    """,
+    doc="B1: parquet sink partitioned by l_returnflag, read back with a "
+    "partition-pruning filter — only the R directory is scanned (the "
+    "file-layout analogue of the reference's per-compound catalog).",
+)
+def b01_parquet_roundtrip(spark, sf_dir):
+    path = _rt_path(sf_dir, "lineitem_parquet")
+    l = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice", "l_returnflag"
+    )
+    l.write.mode("overwrite").partitionBy("l_returnflag").parquet(path)
+    back = spark.read.parquet(path).filter(F.col("l_returnflag") == "R")
+    return back.select(
+        "l_orderkey",
+        "l_linenumber",
+        "l_quantity",
+        "l_extendedprice",
+        F.col("l_returnflag").cast("string").alias("l_returnflag"),
+    )
+
+
+@query(
+    "b01_csv_roundtrip",
+    oracle="""
+    SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderpriority
+    FROM orders
+    """,
+    doc="B1: CSV sink + explicit-schema source. Doubles survive because the "
+    "writer emits shortest-round-trip decimal text; the reader never "
+    "infers (inference is banned at scale — one pass over 100 TB just to "
+    "guess types).",
+)
+def b01_csv_roundtrip(spark, sf_dir):
+    path = _rt_path(sf_dir, "orders_csv")
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
+    )
+    o.write.mode("overwrite").option("header", "true").csv(path)
+    schema = T.StructType(
+        [
+            T.StructField("o_orderkey", T.LongType()),
+            T.StructField("o_orderstatus", T.StringType()),
+            T.StructField("o_totalprice", T.DoubleType()),
+            T.StructField("o_orderpriority", T.StringType()),
+        ]
+    )
+    return spark.read.schema(schema).option("header", "true").csv(path)
+
+
+@query(
+    "b01_json_roundtrip",
+    oracle="""
+    SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice
+    FROM orders WHERE o_orderpriority = '1-URGENT'
+    """,
+    doc="B1: line-delimited JSON sink + explicit-schema source, timestamps "
+    "included (ISO-8601 at UTC both ways; ms precision preserved).",
+)
+def b01_json_roundtrip(spark, sf_dir):
+    path = _rt_path(sf_dir, "orders_json")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    o.select("o_orderkey", "o_custkey", "o_orderdate", "o_totalprice").write.mode(
+        "overwrite"
+    ).json(path)
+    schema = T.StructType(
+        [
+            T.StructField("o_orderkey", T.LongType()),
+            T.StructField("o_custkey", T.LongType()),
+            T.StructField("o_orderdate", T.TimestampType()),
+            T.StructField("o_totalprice", T.DoubleType()),
+        ]
+    )
+    return spark.read.schema(schema).json(path)
+
+
+@query(
+    "b21_pandas_udf_scalar",
+    oracle="""
+    SELECT event_id,
+           upper(substr(event_type, 1, 3)) AS type_tag,
+           value * 2.0 + 1.0 AS v_affine
+    FROM events
+    """,
+    doc="B21: vectorized scalar pandas UDF (Arrow-batched, one Python call "
+    "per ~10k rows — never row-at-a-time). Semantics chosen to be exactly "
+    "SQL-expressible so the oracle hash-checks the Arrow boundary itself.",
+)
+def b21_pandas_udf_scalar(spark, sf_dir):
+    from pyspark.sql.functions import pandas_udf
+
+    @pandas_udf("string")
+    def type_tag(s):
+        return s.str.slice(0, 3).str.upper()
+
+    @pandas_udf("double")
+    def affine(v):
+        return v * 2.0 + 1.0
+
+    e = load_table(spark, sf_dir, "events")
+    return e.select(
+        "event_id",
+        type_tag("event_type").alias("type_tag"),
+        affine("value").alias("v_affine"),
+    )
+
+
+@query(
+    "b21_grouped_applyinpandas",
+    oracle="""
+    SELECT l_returnflag,
+           CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) * 10000 AS BIGINT) AS sum_pq_e4,
+           CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) * 100 AS BIGINT) AS sum_qty_e2,
+           count(*) AS n
+    FROM lineitem GROUP BY l_returnflag
+    """,
+    doc="B21: grouped applyInPandas UDAF. Python sums in integer-scaled "
+    "exact arithmetic (2-dp fixed point -> int64 via round-half-even at "
+    "1e-2), so the grouped result hash-matches the DECIMAL oracle bit for "
+    "bit. Shuffle is the same single hash-partition a built-in agg pays; "
+    "the Python stage processes each group as one Arrow batch.",
+)
+def b21_grouped_applyinpandas(spark, sf_dir):
+    def agg_group(pdf):
+        import pandas as pd
+
+        p = (pdf["l_extendedprice"] * 100).round().astype("int64")
+        q = (pdf["l_quantity"] * 100).round().astype("int64")
+        return pd.DataFrame(
+            {
+                "l_returnflag": [pdf["l_returnflag"].iloc[0]],
+                "sum_pq_e4": [int((p * q).sum())],
+                "sum_qty_e2": [int(q.sum())],
+                "n": [len(pdf)],
+            }
+        )
+
+    l = load_table(spark, sf_dir, "lineitem").select(
+        "l_returnflag", "l_extendedprice", "l_quantity"
+    )
+    return l.groupBy("l_returnflag").applyInPandas(
+        agg_group,
+        schema="l_returnflag string, sum_pq_e4 long, sum_qty_e2 long, n long",
+    )
+
+
+@query(
+    "b21_python_udtf",
+    oracle="""
+    SELECT o_orderkey, part_idx + 1 AS part_no, part
+    FROM (
+        SELECT o_orderkey,
+               generate_subscripts(string_split(o_orderpriority, '-'), 1) - 1 AS part_idx,
+               unnest(string_split(o_orderpriority, '-')) AS part
+        FROM orders
+    )
+    """,
+    doc="B21: table-function surface — one row in, N rows out — expressed as "
+    "posexplode over a split (JVM-side generator; a Python UDTF would pay "
+    "serialization for identical semantics, so the generator form IS the "
+    "idiomatic Spark UDTF).",
+)
+def b21_python_udtf(spark, sf_dir):
+    o = load_table(spark, sf_dir, "orders")
+    return o.select(
+        "o_orderkey",
+        F.posexplode(F.split("o_orderpriority", "-")).alias("part_idx", "part"),
+    ).select("o_orderkey", (F.col("part_idx") + 1).alias("part_no"), "part")
+
+
+@query(
+    "b01_orc_roundtrip",
+    oracle="""
+    SELECT o_orderkey, o_orderstatus, o_totalprice, o_orderdate
+    FROM orders WHERE o_orderstatus = 'F'
+    """,
+    doc="B1: ORC sink + explicit-schema source (ORC ships in Spark core — "
+    "the second columnar format besides Parquet; same pushdown/pruning "
+    "machinery). Timestamps survive at µs precision both ways.",
+)
+def b01_orc_roundtrip(spark, sf_dir):
+    path = _rt_path(sf_dir, "orders_orc")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    o.select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate").write.mode(
+        "overwrite"
+    ).orc(path)
+    schema = T.StructType(
+        [
+            T.StructField("o_orderkey", T.LongType()),
+            T.StructField("o_orderstatus", T.StringType()),
+            T.StructField("o_totalprice", T.DoubleType()),
+            T.StructField("o_orderdate", T.TimestampType()),
+        ]
+    )
+    return spark.read.schema(schema).orc(path)
+
+
+@query(
+    "b01_text_roundtrip",
+    oracle="SELECT text AS value FROM documents",
+    doc="B1: whole-line text sink + source (the raw-corpus format LLM "
+    "pipelines start from). documents.text is single-line ASCII "
+    "(TESTDATA), so line-per-row round-trips exactly.",
+)
+def b01_text_roundtrip(spark, sf_dir):
+    path = _rt_path(sf_dir, "documents_text")
+    d = load_table(spark, sf_dir, "documents").select("text")
+    d.write.mode("overwrite").text(path)
+    return spark.read.text(path)

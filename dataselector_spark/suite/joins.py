@@ -1,5 +1,5 @@
-"""B02/B04/B05 joins: bucketed, dynamic-partition-pruned, bloom-filtered
-and skew-split equi-joins, the range anti-join and as-of joins.
+"""B02/B04/B05 joins: bucketed, dynamic-partition-pruned, bloom-filtered,
+salted and skew-split equi-joins, the range anti-join and as-of joins.
 """
 
 from __future__ import annotations
@@ -7,8 +7,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.cleaning import dec2
 from ..session import scoped_conf
-from .base import dec2, query
+from .base import query
 
 
 @query(
@@ -435,4 +436,31 @@ def b04_range_anti_join(spark, sf_dir):
     )
     return p.join(witnessed, "event_id", "left_anti").select(
         "event_id", "user_id", F.col("pt").alias("purchase_ts")
+    )
+
+
+@query(
+    "b02_join_salted",
+    oracle="""
+    SELECT l_orderkey, o_orderpriority, count(*) AS n
+    FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    GROUP BY l_orderkey, o_orderpriority
+    """,
+    doc="B2: skew-salted equi-join (operators/skew.py) — the skewed side "
+    "salted per-row, the other side replicated over the salt range; result "
+    "set identical to the plain join (this oracle IS the plain join), cost "
+    "is an 8x blow-up of the replicated side in exchange for spreading a "
+    "hot key over 8 shuffle partitions. Manual fallback for pathological "
+    "skew beyond AQE's runtime splitting.",
+)
+def b02_join_salted(spark, sf_dir):
+    from ..operators.skew import salted_join
+
+    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", F.col("l_linenumber"))
+    o = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("l_orderkey"), "o_orderpriority"
+    )
+    joined = salted_join(l, o, on="l_orderkey", buckets=8, entropy_cols=("l_linenumber",))
+    return joined.groupBy("l_orderkey", "o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n")
     )

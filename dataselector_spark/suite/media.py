@@ -1,5 +1,6 @@
-"""B16 multimodal: image, audio and video codec round trips, perceptual
-hashes, image dedup survivors, scene cuts and silence runs.
+"""B16 multimodal: media metadata and features, resizing, frame sampling,
+image, audio and video codec round trips, perceptual hashes, image dedup
+survivors, scene cuts and silence runs.
 """
 
 from __future__ import annotations
@@ -8,6 +9,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..multimodal import extract_features, synthesize_media
 from .base import query
 
 
@@ -901,3 +903,105 @@ def b16_silence_runs(spark, sf_dir):
     return detect_silence_runs(
         synthesize_gapped_pcm(docs), threshold=512, min_run=8
     )
+
+
+@query(
+    "b16_multimodal_meta",
+    oracle="""
+    SELECT doc_id,
+           octet_length(encode(text)) AS n_bytes,
+           CAST(doc_id % 64 + 16 AS INTEGER) AS width,
+           CAST(doc_id % 48 + 12 AS INTEGER) AS height
+    FROM documents
+    """,
+    doc="B16: binary media column + typed metadata struct (payload bytes, "
+    "dimensions) — the columnar envelope for image/audio at 100 TB.",
+)
+def b16_multimodal_meta(spark, sf_dir):
+    media = synthesize_media(load_table(spark, sf_dir, "documents"))
+    return media.select(
+        "doc_id",
+        F.col("meta.n_bytes").alias("n_bytes"),
+        F.col("meta.width").alias("width"),
+        F.col("meta.height").alias("height"),
+    )
+
+
+@query(
+    "b16_multimodal_features",
+    oracle="""
+    SELECT doc_id,
+           strlen(text) AS n_bytes,
+           CASE WHEN strlen(text) = 0 THEN 0.0
+                ELSE CAST(list_reduce(list_prepend(CAST(0 AS BIGINT),
+                         list_transform(string_split(text, ''),
+                                        c -> CAST(ord(c) AS BIGINT))),
+                         (a, b) -> a + b) AS DOUBLE) / strlen(text)
+           END AS byte_mean,
+           CAST(CASE WHEN strlen(text) = 0 THEN 0
+                ELSE list_aggregate(list_transform(string_split(text, ''),
+                                                   c -> ord(c)), 'min')
+           END AS INTEGER) AS byte_min,
+           CAST(CASE WHEN strlen(text) = 0 THEN 0
+                ELSE list_aggregate(list_transform(string_split(text, ''),
+                                                   c -> ord(c)), 'max')
+           END AS INTEGER) AS byte_max
+    FROM documents
+    """,
+    doc="B16: Arrow-batched mapInPandas feature extraction over binary "
+    "payloads (decode stubbed; batch shape, schema and partitioning real). "
+    "The synthetic payload is the UTF-8 encoding of `text` and the corpus "
+    "is ASCII, so the oracle recomputes the byte statistics closed-form "
+    "from the characters (ord == byte, the b15_fingerprint parity) — a "
+    "value-checked row for the Arrow batch path (VERDICT r2 item 6).",
+)
+def b16_multimodal_features(spark, sf_dir):
+    media = synthesize_media(load_table(spark, sf_dir, "documents"))
+    return extract_features(media)
+
+
+@query(
+    "b16_resize",
+    oracle="""
+    SELECT doc_id, 32 AS width, 24 AS height, CAST(768 AS BIGINT) AS n_bytes,
+           substr(text, 1, 8) AS prefix8
+    FROM documents
+    """,
+    doc="B16: binary-in/binary-out resize stage (mapInPandas, codec stubbed "
+    "as deterministic byte-cycling). Oracle-exact because the corpus is "
+    "ASCII: the resized payload's first 8 bytes equal the text's first 8 "
+    "chars, and the new meta reflects the target geometry.",
+)
+def b16_resize(spark, sf_dir):
+    from ..multimodal import resize_media, synthesize_media
+
+    d = load_table(spark, sf_dir, "documents")
+    resized = resize_media(synthesize_media(d), width=32, height=24)
+    return resized.select(
+        "doc_id",
+        F.col("meta.width").alias("width"),
+        F.col("meta.height").alias("height"),
+        F.col("meta.n_bytes").alias("n_bytes"),
+        F.decode(F.expr("substring(payload, 1, 8)"), "UTF-8").alias("prefix8"),
+    )
+
+
+@query(
+    "b16_frame_sample",
+    oracle="""
+    SELECT doc_id, CAST(unnest(range(0, strlen(text) // 64, 2)) AS INT) AS frame_idx,
+           CAST(64 AS BIGINT) AS n_bytes
+    FROM documents
+    WHERE strlen(text) >= 64
+    """,
+    doc="B16: video-style frame sampling — payload chunked into 64-byte "
+    "frames, every 2nd frame emitted as its own row (row-expanding "
+    "mapInPandas; imperative 1->N generation explode can't express). "
+    "Oracle derives the same (doc, frame) grid arithmetically.",
+)
+def b16_frame_sample(spark, sf_dir):
+    from ..multimodal import sample_frames, synthesize_media
+
+    d = load_table(spark, sf_dir, "documents")
+    frames = sample_frames(synthesize_media(d), frame_bytes=64, every_n=2)
+    return frames.select("doc_id", "frame_idx", "n_bytes")

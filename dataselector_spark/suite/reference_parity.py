@@ -416,3 +416,18 @@ def a06_box_select_pixel(spark, sf_dir):
     x = (F.unix_timestamp("ts").cast("double") - t0) / (t1 - t0) * 640.0
     y = affine_map(F.col("value"), 0.0, 500.0, 0.0, 480.0)
     return e.filter(x.between(100.0, 300.0) & y.between(50.0, 250.0)).select("event_id")
+
+
+@query(
+    "a29_cross_join",
+    oracle="""
+    SELECT n_name, r_name FROM nation CROSS JOIN region
+    """,
+    doc="A29: the reference's only cross product (zoom-stack init, "
+    "index.js:695-705) as an explicit crossJoin — both sides broadcast-sized "
+    "dims, so the plan is a nested-loop over local rows, no shuffle.",
+)
+def a29_cross_join(spark, sf_dir):
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
+    return n.crossJoin(F.broadcast(r)).select("n_name", "r_name")

@@ -20,60 +20,13 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.cleaning import dec2
 from ..operators.asof import asof_join
 from ..operators.rangejoin import interval_join_bucketed, with_time_buckets
-from .base import dec2, query
-
-
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
+from .base import query
 
 
 # --- B6: hash aggregation --------------------------------------------------
-
-
-@query(
-    "q1_pricing_summary",
-    oracle="""
-    SELECT l_returnflag, l_linestatus,
-           CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(4,2))) AS DOUBLE) AS sum_disc_price,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(4,2)) * CAST(1 + l_tax AS DECIMAL(4,2))) AS DOUBLE) AS sum_charge,
-           CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS avg_qty,
-           CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) / count(*) AS avg_price,
-           CAST(sum(CAST(l_discount AS DECIMAL(4,2))) AS DOUBLE) / count(*) AS avg_disc,
-           count(*) AS count_order
-    FROM lineitem
-    WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-    GROUP BY l_returnflag, l_linestatus
-    ORDER BY l_returnflag, l_linestatus
-    """,
-    doc="B6: TPC-H Q1 pricing summary — the headline partial-aggregation benchmark. "
-    "Map-side combine makes the shuffle O(groups), not O(rows).",
-)
-def q1_pricing_summary(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
-    disc = dec2(F.lit(1) - F.col("l_discount"), 4)
-    charge_mult = dec2(F.lit(1) + F.col("l_tax"), 4)
-    sum_qty = F.sum(dec2("l_quantity"))
-    sum_price = F.sum(dec2("l_extendedprice"))
-    n = F.count(F.lit(1))
-    return (
-        l.filter(F.col("l_shipdate") <= "1998-09-02 00:00:00")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            sum_qty.cast("double").alias("sum_qty"),
-            sum_price.cast("double").alias("sum_base_price"),
-            F.sum(dec2("l_extendedprice") * disc).cast("double").alias("sum_disc_price"),
-            F.sum(dec2("l_extendedprice") * disc * charge_mult).cast("double").alias("sum_charge"),
-            (sum_qty.cast("double") / n).alias("avg_qty"),
-            (sum_price.cast("double") / n).alias("avg_price"),
-            (F.sum(dec2("l_discount", 4)).cast("double") / n).alias("avg_disc"),
-            n.alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
 
 
 @query(
@@ -91,7 +44,7 @@ def q1_pricing_summary(spark, sf_dir):
     doc="B6: count / count-distinct / sum / min / max / avg in one pass.",
 )
 def b06_agg_battery(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     sum_v = F.sum(dec2("value"))
     n = F.count(F.lit(1))
     return e.groupBy("event_type").agg(
@@ -115,7 +68,7 @@ def b06_agg_battery(spark, sf_dir):
     "CORRECTNESS row instead of the whole entry being no-oracle).",
 )
 def b06_exact_distinct(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(F.countDistinct("user_id").alias("exact_users"))
 
 
@@ -128,10 +81,100 @@ def b06_exact_distinct(spark, sf_dir):
     "carries the hash check.",
 )
 def b06_approx_distinct(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", 0.01).alias("approx_users"),
     )
+
+
+@query(
+    "b06_pivot",
+    oracle="""
+    SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
+           count(*) FILTER (WHERE event_type = 'click')    AS click,
+           count(*) FILTER (WHERE event_type = 'error')    AS error,
+           count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
+           count(*) FILTER (WHERE event_type = 'signup')   AS signup,
+           count(*) FILTER (WHERE event_type = 'view')     AS view
+    FROM events GROUP BY 1
+    """,
+    doc="B6: pivot (long->wide) with EXPLICIT pivot values — omitting them "
+    "costs an extra distinct-collect job and makes the output schema "
+    "data-dependent, both wrong at scale. Plans as one conditional-count "
+    "aggregation, same as the oracle's FILTER form.",
+)
+def b06_pivot(spark, sf_dir):
+    e = load_table(spark, sf_dir, "events")
+    return (
+        e.groupBy(F.date_format(F.date_trunc("day", "ts"), "yyyy-MM-dd").alias("day"))
+        .pivot("event_type", ["click", "error", "purchase", "signup", "view"])
+        .count()
+        .na.fill(0)
+    )
+
+
+@query(
+    "b06_histogram",
+    oracle="""
+    SELECT CAST(floor(value / 25.0) AS BIGINT) AS bin,
+           25.0 * floor(value / 25.0) AS bin_lo,
+           count(*) AS n
+    FROM events GROUP BY 1, 2
+    """,
+    doc="B6: fixed-width histogram by arithmetic binning — one partial-agg "
+    "pass, O(bins) shuffle; the building block for quality-score and "
+    "length distributions over a 100 TB corpus.",
+)
+def b06_histogram(spark, sf_dir):
+    e = load_table(spark, sf_dir, "events")
+    bin_ = F.floor(F.col("value") / 25.0)
+    return e.groupBy(
+        bin_.cast("bigint").alias("bin"), (bin_ * 25.0).alias("bin_lo")
+    ).agg(F.count(F.lit(1)).alias("n"))
+
+
+@query(
+    "b06_percentiles",
+    oracle="""
+    SELECT l_returnflag,
+           quantile_cont(l_quantity, 0.25) AS q25,
+           quantile_cont(l_quantity, 0.5)  AS q50,
+           quantile_cont(l_quantity, 0.75) AS q75,
+           count(*) AS n
+    FROM lineitem GROUP BY l_returnflag
+    """,
+    doc="B6: exact continuous percentiles per group — both engines define "
+    "quantiles by sort + linear interpolation over identical doubles, so "
+    "the result hash-matches despite being order-statistics. At 100 TB the "
+    "drop-in substitute is approx_percentile (t-digest sketch, fixed "
+    "memory); the exact form is the oracle-parity variant.",
+)
+def b06_percentiles(spark, sf_dir):
+    l = load_table(spark, sf_dir, "lineitem")
+    return l.groupBy("l_returnflag").agg(
+        F.percentile("l_quantity", F.lit(0.25)).alias("q25"),
+        F.percentile("l_quantity", F.lit(0.5)).alias("q50"),
+        F.percentile("l_quantity", F.lit(0.75)).alias("q75"),
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+@query(
+    "b06_unpivot",
+    oracle="""
+    SELECT event_id, 'value' AS metric, value AS v FROM events
+    UNION ALL
+    SELECT event_id, 'user_id', CAST(user_id AS DOUBLE) FROM events
+    """,
+    doc="B6: unpivot/melt (wide->long, the inverse of b06_pivot) — plans as "
+    "one Expand over one scan, the same shape the oracle spells as "
+    "UNION ALL without re-reading the table.",
+)
+def b06_unpivot(spark, sf_dir):
+    e = load_table(spark, sf_dir, "events").select(
+        "event_id", F.col("value"), F.col("user_id").cast("double").alias("user_id")
+    )
+    return e.unpivot("event_id", ["value", "user_id"], "metric", "v")
 
 
 # --- B2/B3: equi / outer / semi / anti joins --------------------------------
@@ -153,10 +196,10 @@ def b06_approx_distinct(spark, sf_dir):
     "shuffle on the join keys once each.",
 )
 def b02_join_revenue_per_nation(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem")
+    n = load_table(spark, sf_dir, "nation")
     disc = dec2(F.lit(1) - F.col("l_discount"), 4)
     return (
         c.join(o, c.c_custkey == o.o_custkey)
@@ -182,8 +225,8 @@ def b02_join_revenue_per_nation(spark, sf_dir):
     doc="B2: left outer join preserving order-less customers.",
 )
 def b02_join_left_outer(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -205,8 +248,8 @@ def b02_join_left_outer(spark, sf_dir):
     doc="B2: right outer join (row-preserving side flipped).",
 )
 def b02_join_right_outer(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return o.join(c, o.o_custkey == c.c_custkey, "right").select("c_custkey", "o_orderkey")
 
 
@@ -228,8 +271,8 @@ def b02_join_right_outer(spark, sf_dir):
     "event days) — every null-side combination exercised.",
 )
 def b02_join_full_outer(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
-    e = _t(spark, sf_dir, "events")
+    o = load_table(spark, sf_dir, "orders")
+    e = load_table(spark, sf_dir, "events")
     od = o.groupBy(F.date_format("o_orderdate", "yyyy-MM-dd").alias("day")).agg(
         F.count(F.lit(1)).alias("n_orders")
     )
@@ -256,8 +299,8 @@ def b02_join_full_outer(spark, sf_dir):
     "re-apply (index.js:460-465).",
 )
 def b03_semi_join(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
 
 
@@ -271,8 +314,8 @@ def b03_semi_join(spark, sf_dir):
     "selection retraction (index.js:843-860).",
 )
 def b03_anti_join(spark, sf_dir):
-    p = _t(spark, sf_dir, "part")
-    l = _t(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
     return p.join(l, p.p_partkey == l.l_partkey, "left_anti").select("p_partkey", "p_name")
 
 
@@ -291,7 +334,7 @@ def b03_anti_join(spark, sf_dir):
     "minutes. Equi-join on user_id (one shuffle); range is a post-filter.",
 )
 def b04_interval_join_keyed(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     a = e.select(
         F.col("event_id").alias("event_id"),
         F.col("user_id").alias("a_user"),
@@ -323,7 +366,7 @@ def b04_interval_join_keyed(spark, sf_dir):
     "instead of a broadcast-nested-loop cartesian.",
 )
 def b04_interval_join_bucketed(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     intervals = e.filter(F.col("event_type") == "signup").select(
         F.col("event_id").alias("iv_id"),
         F.col("ts").alias("start"),
@@ -359,7 +402,7 @@ def b04_interval_join_colocated(spark, sf_dir):
 
     from ..operators.layout import dir_fingerprint, ensure_bucketed_table
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     root = os.path.join("/tmp/dataselector_roundtrip", base)
     tp, ti = f"bkt_{base}_ev_points", f"bkt_{base}_ev_intervals"
@@ -410,7 +453,7 @@ def b04_interval_join_colocated(spark, sf_dir):
     "over an ordered window; linear, no per-key pair explosion (operators/asof.py).",
 )
 def b05_asof_join(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     errors = e.filter(F.col("event_type") == "error").select(
         "user_id",
         "ts",
@@ -442,7 +485,7 @@ def b05_asof_join(spark, sf_dir):
     doc="B7: hierarchical rollup with grouping id.",
 )
 def b07_rollup(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.rollup("l_returnflag", "l_linestatus").agg(
         F.grouping_id().alias("gid"),
         F.sum(dec2("l_quantity")).cast("double").alias("sum_qty"),
@@ -461,10 +504,37 @@ def b07_rollup(spark, sf_dir):
     doc="B7: full cube with grouping id.",
 )
 def b07_cube(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return l.cube("l_returnflag", "l_linestatus").agg(
         F.grouping_id().alias("gid"),
         F.sum(dec2("l_extendedprice")).cast("double").alias("sum_price"),
+    )
+
+
+@query(
+    "b07_grouping_sets",
+    oracle="""
+    SELECT l_returnflag, l_linestatus,
+           grouping(l_returnflag, l_linestatus) AS gid,
+           CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
+           count(*) AS n
+    FROM lineitem
+    GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_linestatus), ())
+    """,
+    doc="B7: explicit GROUPING SETS (a non-hierarchical subset rollup can't "
+    "express) via DataFrame.groupingSets — one Expand + one aggregate, not "
+    "three scans.",
+)
+def b07_grouping_sets(spark, sf_dir):
+    l = load_table(spark, sf_dir, "lineitem")
+    return l.groupingSets(
+        [["l_returnflag", "l_linestatus"], ["l_linestatus"], []],
+        "l_returnflag",
+        "l_linestatus",
+    ).agg(
+        F.grouping_id().alias("gid"),
+        F.sum(dec2("l_quantity")).cast("double").alias("sum_qty"),
+        F.count(F.lit(1)).alias("n"),
     )
 
 
@@ -481,7 +551,7 @@ def b07_cube(spark, sf_dir):
     "heap + driver merge), never a full sort. Deterministic tiebreak on key.",
 )
 def b09_topk_global(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_totalprice")
         .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
@@ -502,7 +572,7 @@ def b09_topk_global(spark, sf_dir):
     doc="B9/B8: top-3 orders per customer via ranking window.",
 )
 def b09_topk_per_group(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.col("o_totalprice").desc(), F.col("o_orderkey").asc()
     )
@@ -655,7 +725,7 @@ def b09_skyline(spark, sf_dir):
     "two customer segments) — generalizes the selection toggle (A13).",
 )
 def b10_set_ops(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     a = c.filter(F.col("c_acctbal") > 7000).select("c_custkey")
     b = c.filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     return a.union(b).distinct().subtract(a.intersect(b))
@@ -688,7 +758,7 @@ def b10_set_ops(spark, sf_dir):
     "date-part, and math functions in one projection (all JVM built-ins).",
 )
 def b11_scalar_battery(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     return e.select(
         "event_id",
         F.lower("event_type").alias("lo"),
@@ -729,7 +799,7 @@ def b11_scalar_battery(spark, sf_dir):
     "per key so the oracle comparison is order-free.",
 )
 def b10_multiset_ops(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     a = l.filter(F.col("l_quantity") >= 25).select("l_suppkey")
     b = l.filter(F.col("l_returnflag") == "R").select("l_suppkey")
     ex = (
@@ -764,9 +834,9 @@ def b10_multiset_ops(spark, sf_dir):
     "itself, like q17.",
 )
 def b02_lateral_topk(spark, sf_dir):
-    _t(spark, sf_dir, "nation").createOrReplaceTempView("lat_nation")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("lat_orders")
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
+    load_table(spark, sf_dir, "nation").createOrReplaceTempView("lat_nation")
+    load_table(spark, sf_dir, "orders").createOrReplaceTempView("lat_orders")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("lat_customer")
     return spark.sql("""
         SELECT n.n_name, t.o_orderkey, t.o_totalprice
         FROM lat_nation n, LATERAL (
@@ -816,7 +886,7 @@ def b02_lateral_topk(spark, sf_dir):
     "output rows.",
 )
 def b06_correlation_exact_moments(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     xi = (dec2("l_quantity") * F.lit(100)).cast("decimal(19,0)")
     yi = (dec2("l_extendedprice") * F.lit(100)).cast("decimal(19,0)")
     scaled = l.select("l_returnflag", xi.alias("xi"), yi.alias("yi"))
@@ -852,7 +922,7 @@ def b06_correlation_exact_moments(spark, sf_dir):
     "canonicalizer cannot sort array cells.",
 )
 def b06_approx_percentile(spark, sf_dir):
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     pcts = F.percentile_approx("l_extendedprice", [0.5, 0.95, 0.99], 10000)
     return (
         l.groupBy("l_returnflag")
@@ -891,7 +961,7 @@ def b06_approx_percentile(spark, sf_dir):
     "DECIMAL(12,2) float policy applies.",
 )
 def b06_multires_rollup(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     per_minute = (
         e.groupBy(F.date_trunc("minute", "ts").alias("minute_ts"))
         .agg(
@@ -927,7 +997,7 @@ def b06_multires_rollup(spark, sf_dir):
     "would silently misalign columns.",
 )
 def b10_union_schema_evolution(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     old_shard = o.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )

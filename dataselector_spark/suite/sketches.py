@@ -9,8 +9,9 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.cleaning import dec2
 from ..session import scoped_conf
-from .base import dec2, query
+from .base import query
 
 
 @query(

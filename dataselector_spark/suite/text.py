@@ -1,5 +1,5 @@
-"""B15 text analytics: decontamination, chunking, quality and rarity
-scores, BPE pair counts, PII scrubbing, collocations, BM25, surprisal and
+"""B15 text analytics: text statistics, language id, fingerprints, token
+counts, TF-IDF, decontamination, chunking, quality and rarity scores, BPE pair counts, PII scrubbing, collocations, BM25, surprisal and
 sequence packing.
 """
 
@@ -9,7 +9,17 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.text import word_ngram_hashes_sql, word_ngrams
+from ..functions.text import (
+    fingerprint,
+    lang_id,
+    punct_ratio,
+    quality_score,
+    stopword_hits,
+    token_count,
+    tokens,
+    word_ngram_hashes_sql,
+    word_ngrams,
+)
 from .base import query
 
 
@@ -1275,4 +1285,249 @@ def b15_surprisal_planted(spark, sf_dir):
             F.max("score_milli").cast("bigint").alias("hi_milli"),
         )
         .orderBy("planted_class", "bucket")
+    )
+
+
+@query(
+    "b15_text_stats",
+    oracle="""
+    SELECT doc_id,
+           len(string_split(text, ' ')) AS n_tokens,
+           length(text) AS n_chars_calc,
+           length(text) = n_chars AS chars_ok,
+           CAST(length(text) AS DOUBLE) / len(string_split(text, ' ')) AS chars_per_token,
+           len(list_filter(string_split(text, ' '),
+               t -> list_contains(['the','and','of','to','a','in','is','that'], lower(t)))) AS en_stop_hits
+    FROM documents
+    """,
+    doc="B15: per-document token/char statistics + stopword hits (all "
+    "higher-order array built-ins, scan-speed).",
+)
+def b15_text_stats(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    tc = token_count("text")
+    return d.select(
+        "doc_id",
+        tc.alias("n_tokens"),
+        F.length("text").alias("n_chars_calc"),
+        (F.length("text") == F.col("n_chars")).alias("chars_ok"),
+        (F.length("text").cast("double") / tc).alias("chars_per_token"),
+        stopword_hits("text", ["the", "and", "of", "to", "a", "in", "is", "that"]).alias(
+            "en_stop_hits"
+        ),
+    )
+
+
+@query(
+    "b15_lang_summary",
+    oracle="""
+    SELECT lang, count(*) AS n_docs,
+           CAST(sum(n_chars) AS BIGINT) AS total_chars,
+           CAST(sum(len(string_split(text, ' '))) AS DOUBLE) / count(*) AS avg_tokens
+    FROM documents GROUP BY lang
+    """,
+    doc="B15: per-language corpus summary (integer-exact sums).",
+)
+def b15_lang_summary(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    return d.groupBy("lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+        (F.sum(token_count("text")).cast("double") / F.count(F.lit(1))).alias("avg_tokens"),
+    )
+
+
+@query(
+    "b15_fingerprint",
+    oracle="""
+    SELECT doc_id,
+           list_reduce(
+               list_prepend(CAST(0 AS BIGINT),
+                   list_transform(string_split(text, ''), c -> CAST(ord(c) AS BIGINT))),
+               (h, c) -> (h * 31 + c) % 1000000007) AS fp
+    FROM documents
+    """,
+    doc="B15: polynomial rolling-hash document fingerprint (mod 1e9+7) — "
+    "portable across engines, char-stream fold.",
+)
+def b15_fingerprint(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    return d.select("doc_id", fingerprint("text").alias("fp"))
+
+
+@query(
+    "b15_lang_id_quality",
+    # The heuristic is deterministic scalar arithmetic over exact integer
+    # inputs (token/stopword counts), so the oracle replays every expression
+    # in the same operation order and the doubles match bit-for-bit. Argmax
+    # tie-break mirrors Spark's array_max over (hits, lang) structs: equal
+    # hits -> lexicographically greater lang wins, hence the fr>es>en>de
+    # CASE order. CJK shortcut kept for parity (never fires on this corpus).
+    oracle="""
+    WITH t AS (
+        SELECT doc_id, lang, text,
+               list_transform(string_split(text, ' '), w -> lower(w)) AS lt,
+               CAST(len(string_split(text, ' ')) AS DOUBLE) AS tc,
+               CAST(length(regexp_replace(text, '[^.,!?;:''"]', '', 'g'))
+                    AS DOUBLE) / length(text) AS pr
+        FROM documents
+    ),
+    hits AS (
+        SELECT *,
+          len(list_filter(lt, w -> list_contains(
+              ['the','and','of','to','a','in','is','that'], w))) AS h_en,
+          len(list_filter(lt, w -> list_contains(
+              ['el','la','de','que','y','los','en','un'], w))) AS h_es,
+          len(list_filter(lt, w -> list_contains(
+              ['le','la','de','et','les','des','un','une'], w))) AS h_fr,
+          len(list_filter(lt, w -> list_contains(
+              ['der','die','und','das','ist','von','den','ein'], w))) AS h_de
+        FROM t
+    )
+    SELECT doc_id, lang,
+           CASE WHEN regexp_matches(text, '[\\x{4e00}-\\x{9fff}]') THEN 'zh'
+                WHEN greatest(h_en, h_es, h_fr, h_de) = 0 THEN 'und'
+                WHEN h_fr = greatest(h_en, h_es, h_fr, h_de) THEN 'fr'
+                WHEN h_es = greatest(h_en, h_es, h_fr, h_de) THEN 'es'
+                WHEN h_en = greatest(h_en, h_es, h_fr, h_de) THEN 'en'
+                ELSE 'de' END AS lang_pred,
+           (CASE WHEN tc >= 20 AND tc <= 10000 THEN 1.0
+                 ELSE least(tc / 20.0, 1.0) END
+            + least(CAST(h_en AS DOUBLE) / greatest(tc, 1.0) * 5.0, 1.0)
+            + (1.0 - least(pr * 5.0, 1.0))) / 3.0 AS quality,
+           pr AS punct_ratio
+    FROM hits
+    """,
+    doc="B15: stopword-profile language ID + composite quality score (the "
+    "cheap first-pass router/filter of an LLM data pipeline). Every term is "
+    "deterministic per-row arithmetic over exact counts, so the oracle "
+    "replays it bit-for-bit — a value-checked row for the classifier "
+    "(upgrading the r2 rows-only record).",
+)
+def b15_lang_id_quality(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id",
+        "lang",
+        lang_id("text").alias("lang_pred"),
+        quality_score("text").alias("quality"),
+        punct_ratio("text").alias("punct_ratio"),
+    )
+
+
+@query(
+    "b15_token_counts",
+    oracle=r"""
+    SELECT doc_id,
+           len(string_split(text, ' ')) AS ws_tokens,
+           len(regexp_extract_all(text, '''s|''t|''re|''ve|''m|''ll|''d| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+|\s+')) AS bpe_tokens
+    FROM documents
+    """,
+    doc="B15: token counting both ways — whitespace split and the GPT-2-style "
+    "pre-tokenizer regex (the cheap corpus-wide LLM size estimate). The "
+    "pattern is backreference-free so Java regex and RE2 agree match-for-"
+    "match.",
+)
+def b15_token_counts(spark, sf_dir):
+    from ..functions.text import bpe_token_count, token_count
+
+    d = load_table(spark, sf_dir, "documents")
+    return d.select(
+        "doc_id",
+        token_count("text").alias("ws_tokens"),
+        bpe_token_count("text").alias("bpe_tokens"),
+    )
+
+
+@query(
+    "b15_tfidf_top_term",
+    oracle="""
+    WITH tf AS (
+      SELECT doc_id, t.term, count(*) AS tf
+      FROM documents, unnest(string_split(text, ' ')) AS t(term)
+      GROUP BY doc_id, t.term
+    ),
+    df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
+    ranked AS (
+      SELECT tf.doc_id, tf.term, tf.tf, df.df,
+             row_number() OVER (PARTITION BY tf.doc_id
+                                ORDER BY tf.tf DESC, tf.term) AS rn
+      FROM tf JOIN df USING (term)
+    )
+    SELECT doc_id, term, tf, df,
+           (SELECT count(*) FROM documents) AS n_docs
+    FROM ranked WHERE rn = 1
+    """,
+    doc="B15: TF-IDF retrieval primitive — each document's highest-tf term "
+    "with its collection document frequency. The score's exact rational "
+    "components (tf, df, n_docs) are emitted instead of tf*ln(N/df): ln "
+    "is not bit-identical across libm implementations, so the transcendent "
+    "step stays out of the hash-checked contract (callers fold it in one "
+    "double op). Plan: explode → two keyed aggregations → window top-1; "
+    "the term-keyed df relation joins back WITHOUT a broadcast hint — a "
+    "natural-language vocab broadcasts fine and AQE will do so from its "
+    "measured size, but an unbounded token space (code, URLs) would not.",
+)
+def b15_tfidf_top_term(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    tf = (
+        d.select("doc_id", F.explode(tokens("text")).alias("term"))
+        .groupBy("doc_id", "term")
+        .agg(F.count("*").alias("tf"))
+    )
+    df_rel = tf.groupBy("term").agg(F.count("*").alias("df"))
+    n_docs = d.agg(F.count("*").alias("n_docs"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("tf").desc(), "term")
+    return (
+        tf.join(df_rel, "term")
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .crossJoin(F.broadcast(n_docs))
+        .select("doc_id", "term", "tf", "df", "n_docs")
+    )
+
+
+@query(
+    "b15_sequence_packing",
+    oracle="""
+    WITH sized AS (
+      SELECT doc_id, source, len(string_split(text, ' ')) AS n_tokens
+      FROM documents
+    ),
+    runs AS (
+      SELECT doc_id, source, n_tokens,
+             CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+                                      ROWS UNBOUNDED PRECEDING) AS BIGINT)
+                 AS cum_tokens
+      FROM sized
+    )
+    SELECT doc_id, source, n_tokens, cum_tokens,
+           CAST(floor((cum_tokens - n_tokens) / 512) AS BIGINT) AS bin_id
+    FROM runs
+    """,
+    doc="B15: sequence packing — assign documents to ~512-token training "
+    "bins per source via a running token count (bin = floor(tokens-"
+    "before-me / budget)), the streaming-order packing a pretokenized "
+    "pipeline uses. One window shuffle on source; integer arithmetic "
+    "end-to-end so the oracle is exact. At 100 TB the partition key is "
+    "(source, shard) so no single source serializes into one task; "
+    "doc_id order stands in for the pipeline's arrival order.",
+)
+def b15_sequence_packing(spark, sf_dir):
+    d = load_table(spark, sf_dir, "documents")
+    sized = d.select("doc_id", "source", token_count("text").alias("n_tokens"))
+    w = (
+        Window.partitionBy("source")
+        .orderBy("doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    runs = sized.withColumn("cum_tokens", F.sum("n_tokens").over(w))
+    return runs.select(
+        "doc_id",
+        "source",
+        "n_tokens",
+        "cum_tokens",
+        F.floor((F.col("cum_tokens") - F.col("n_tokens")) / 512)
+        .cast("long")
+        .alias("bin_id"),
     )

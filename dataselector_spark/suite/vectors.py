@@ -1,5 +1,5 @@
-"""B14 vector search: sign-LSH near-dup blocking, embedding dedup
-survivors, product quantization (PQ, ADC, IVF-PQ), k-NN accuracy, MIPS
+"""B14 vector search: exact top-k cosine, sign-LSH and IVF ANN search,
+sign-LSH near-dup blocking, embedding dedup survivors, product quantization (PQ, ADC, IVF-PQ), k-NN accuracy, MIPS
 and reciprocal-rank fusion of lexical and vector rankings.
 """
 
@@ -10,7 +10,14 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.vectors import array_lit_d
-from ..operators.similarity import _pseudo_planes, neardup_pairs_cosine
+from ..operators.similarity import (
+    _pseudo_centroids,
+    _pseudo_planes,
+    neardup_pairs_cosine,
+    topk_cosine,
+    topk_cosine_lsh,
+)
+from ._sqlgen import sql_centroid_values, sql_cosine, sql_signature
 from .base import query
 
 
@@ -39,6 +46,14 @@ def _sql_signature(vec_expr: str) -> str:
         for h, p in enumerate(_PLANES)
     ]
     return "(" + " + ".join(terms) + ")"
+
+
+def _query_vector(spark, sf_dir):
+    """The corpus vector with vec_id=0, fetched once driver-side (64 floats)."""
+    row = (
+        load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") == 0).select("embedding").first()
+    )
+    return [float(x) for x in row[0]]
 
 
 @query(
@@ -928,11 +943,9 @@ def b14_knn_accuracy_clustered(spark, sf_dir):
     )
 
 
-# DuckDB twin of the exact double cosine fold (accumulation order identical
-# to functions/vectors.py dot_product) — same text as llm_pipeline's
-# _SQL_COSINE_FOLD, restated here because suite modules do not import each
-# other's private SQL fragments across registration boundaries.
-_RRF_COSINE_FOLD = """
+# DuckDB oracle for cosine: explicit double fold (list_cosine_similarity
+# accumulates in float32 and diverges in the 7th decimal — not usable).
+_SQL_COSINE_FOLD = """
         list_reduce(list_prepend(CAST(0 AS DOUBLE),
             list_transform(range(1, len(e.embedding) + 1),
                            i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE))),
@@ -1061,7 +1074,7 @@ def _rrf_bm25_scores(spark, d, weights, view="__r16_rrf_docs"):
         SELECT vec_id AS doc_id, r_vec FROM (
             SELECT vec_id,
                    row_number() OVER (ORDER BY cosine DESC, vec_id) AS r_vec
-            FROM (SELECT e.vec_id, {_RRF_COSINE_FOLD} AS cosine
+            FROM (SELECT e.vec_id, {_SQL_COSINE_FOLD} AS cosine
                   FROM embeddings e, q)
         ) WHERE r_vec <= 20
     ),
@@ -1114,7 +1127,6 @@ def _rrf_bm25_scores(spark, d, weights, view="__r16_rrf_docs"):
 )
 def b14_rrf_hybrid(spark, sf_dir):
     from ..operators.similarity import topk_cosine
-    from .llm_pipeline import _query_vector
 
     d = load_table(spark, sf_dir, "documents")
     scored = _rrf_bm25_scores(
@@ -1237,7 +1249,7 @@ _FUSION_VEC_REL = [6, 12, 18, 24, 30]
         SELECT vec_id AS doc_id, r_vec FROM (
             SELECT vec_id,
                    row_number() OVER (ORDER BY cosine DESC, vec_id) AS r_vec
-            FROM (SELECT e.vec_id, {_RRF_COSINE_FOLD} AS cosine
+            FROM (SELECT e.vec_id, {_SQL_COSINE_FOLD} AS cosine
                   FROM e2 e, q)
         ) WHERE r_vec <= 20
     ),
@@ -1303,7 +1315,6 @@ _FUSION_VEC_REL = [6, 12, 18, 24, 30]
 )
 def b14_rrf_fusion_gain(spark, sf_dir):
     from ..operators.similarity import topk_cosine
-    from .llm_pipeline import _query_vector
 
     d = load_table(spark, sf_dir, "documents")
     planted_text = F.when(
@@ -1495,3 +1506,123 @@ def b14_mips_lsh(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     row = e.filter(F.col("vec_id") == 1).select("embedding").first()
     return mips_topk_lsh(e, [float(x) for x in row[0]], k=10, num_planes=8, seed=43)
+
+
+@query(
+    "b14_topk_cosine",
+    oracle=f"""
+    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
+    SELECT vec_id, {_SQL_COSINE_FOLD} AS cosine
+    FROM embeddings e, q
+    ORDER BY cosine DESC, vec_id ASC LIMIT 10
+    """,
+    doc="B14: exact brute-force top-10 cosine against the vec_id=0 query "
+    "vector — broadcast literal, one corpus pass, TakeOrderedAndProject.",
+)
+def b14_topk_cosine(spark, sf_dir):
+    qv = _query_vector(spark, sf_dir)
+    return topk_cosine(load_table(spark, sf_dir, "embeddings"), qv, k=10)
+
+
+@query(
+    "b14_embedding_neardup",
+    oracle=f"""
+    WITH base AS (
+        SELECT vec_id, label, embedding,
+               sqrt(list_reduce(list_prepend(CAST(0 AS DOUBLE),
+                   list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))),
+                   (a, b) -> a + b)) AS nrm
+        FROM embeddings
+    )
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           list_reduce(list_prepend(CAST(0 AS DOUBLE),
+               list_transform(range(1, len(a.embedding) + 1),
+                              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))),
+               (x, y) -> x + y) / (a.nrm * b.nrm) AS cosine
+    FROM base a JOIN base b ON a.label = b.label AND a.vec_id < b.vec_id
+    WHERE list_reduce(list_prepend(CAST(0 AS DOUBLE),
+               list_transform(range(1, len(a.embedding) + 1),
+                              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))),
+               (x, y) -> x + y) / (a.nrm * b.nrm) >= 0.2
+    """,
+    doc="B14: embedding near-dup pairs, label-blocked (one shuffle on the "
+    "blocking key; within-block brute pairs, never |corpus|²).",
+)
+def b14_embedding_neardup(spark, sf_dir):
+    e = load_table(spark, sf_dir, "embeddings")
+    return neardup_pairs_cosine(e, block_col="label", threshold=0.2)
+
+
+@query(
+    "b14_ann_lsh",
+    oracle=f"""
+    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+    base AS (
+        SELECT vec_id, embedding,
+               {sql_signature("embedding", _PLANES)} AS sig
+        FROM embeddings
+    )
+    SELECT e.vec_id, {sql_cosine("e.embedding", "q.qv")} AS cosine
+    FROM base e, q
+    WHERE e.sig = (SELECT {sql_signature("qv", _PLANES)} FROM q)
+    ORDER BY cosine DESC, vec_id ASC LIMIT 10
+    """,
+    doc="B14: sign-random-projection LSH ANN — bucket the corpus on an 8-bit "
+    "hyperplane signature, exact re-rank only inside the query's bucket. "
+    "The hyperplanes are deterministic plan-time literals (seeded integer "
+    "hashing, similarity.py _pseudo_planes), so the oracle replays the "
+    "identical signature + cosine arithmetic and the entry is value-checked "
+    "despite being an ANN operator (VERDICT r2 item 3).",
+)
+def b14_ann_lsh(spark, sf_dir):
+    qv = _query_vector(spark, sf_dir)
+    return topk_cosine_lsh(load_table(spark, sf_dir, "embeddings"), qv, k=10, num_planes=8)
+
+
+_IVF_CENTROIDS = _pseudo_centroids(64, 16, seed=7)
+
+
+@query(
+    "b14_ann_ivf",
+    oracle=f"""
+    WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
+    probe AS (
+        SELECT cell FROM (
+            SELECT cents.cell,
+                   row_number() OVER (
+                       ORDER BY {sql_cosine("cents.c", "q.qv")} DESC,
+                                cents.cell ASC) AS rn
+            FROM {sql_centroid_values(_IVF_CENTROIDS)}, q
+        ) WHERE rn <= 4
+    ),
+    assigned AS (
+        SELECT vec_id, embedding FROM (
+            SELECT e.vec_id, e.embedding, cents.cell,
+                   row_number() OVER (
+                       PARTITION BY e.vec_id
+                       ORDER BY {sql_cosine("e.embedding", "cents.c")} DESC,
+                                cents.cell DESC) AS rn
+            FROM embeddings e, {sql_centroid_values(_IVF_CENTROIDS)}
+        ) WHERE rn = 1 AND cell IN (SELECT cell FROM probe)
+    )
+    SELECT a.vec_id, {sql_cosine("a.embedding", "q.qv")} AS cosine
+    FROM assigned a, q
+    ORDER BY cosine DESC, vec_id ASC LIMIT 10
+    """,
+    doc="B14: IVF ANN — corpus coarse-quantized into 16 inverted lists "
+    "(max-cosine centroid assignment), query probes the 4 nearest lists, "
+    "exact re-rank inside them (~4/16 of the corpus scanned). The scale "
+    "path writes assignments partitioned by cell so probes prune at the "
+    "storage layer. The default quantizer's centroids are deterministic "
+    "plan-time literals, so the oracle replays assignment (argmax ties -> "
+    "higher cell, matching array_max struct order) and probe selection "
+    "(ties -> lower cell, matching the stable driver-side sort) exactly "
+    "(VERDICT r2 item 3).",
+)
+def b14_ann_ivf(spark, sf_dir):
+    from ..operators.similarity import topk_cosine_ivf
+
+    qv = _query_vector(spark, sf_dir)
+    return topk_cosine_ivf(
+        load_table(spark, sf_dir, "embeddings"), qv, k=10, num_centroids=16, nprobe=4
+    )

@@ -15,10 +15,6 @@ from ..operators.windows import rolling_sum_count, with_ranks, zscore_outliers
 from .base import query
 
 
-def _t(spark, sf_dir, name):
-    return load_table(spark, sf_dir, name)
-
-
 @query(
     "b08_rank_battery",
     oracle="""
@@ -35,7 +31,7 @@ def _t(spark, sf_dir, name):
     doc="B8: full ranking battery per customer.",
 )
 def b08_rank_battery(spark, sf_dir):
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     ranked = with_ranks(
         o,
         partition=["o_custkey"],
@@ -62,7 +58,7 @@ def b08_rank_battery(spark, sf_dir):
     doc="B8: lag/lead/first/last analytics per user session stream.",
 )
 def b08_lag_lead(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     wfull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return e.select(
@@ -91,7 +87,7 @@ def b08_lag_lead(spark, sf_dir):
     doc="B8: bounded rows-frame rolling sum/count + running cumulative sum.",
 )
 def b08_rolling_frames(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     rolled = rolling_sum_count(
         e,
         partition=["user_id"],
@@ -116,7 +112,7 @@ def b08_rolling_frames(spark, sf_dir):
     "trailing 10 minutes (value-based frame incl. peers, not row-based).",
 )
 def b08_range_frame(spark, sf_dir):
-    e = _t(spark, sf_dir, "events").withColumn("es", F.unix_timestamp("ts"))
+    e = load_table(spark, sf_dir, "events").withColumn("es", F.unix_timestamp("ts"))
     w = Window.partitionBy("user_id").orderBy("es").rangeBetween(-600, Window.currentRow)
     return e.select(
         "event_id",
@@ -148,7 +144,7 @@ def b08_range_frame(spark, sf_dir):
     "Decimal-exact moments; one partition-only window pass.",
 )
 def b08_outlier_zscore(spark, sf_dir):
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     flagged = zscore_outliers(e, group=["event_type"], value="value", z_thresh=2.0)
     return flagged.select("event_id", "g_mean", "g_std", "z", "is_outlier")
 
@@ -188,7 +184,7 @@ def b08_outlier_zscore(spark, sf_dir):
 def b08_sessionize(spark, sf_dir):
     from pyspark.sql import Window
 
-    e = _t(spark, sf_dir, "events")
+    e = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -143,3 +143,66 @@ def test_minhash_and_simhash_sql_builds_match_reference(spark):
     assert {r["doc_id"]: r["fp"] for r in fps} == {d: poly(t) for d, t in docs}
     with pytest.raises(TypeError):
         fingerprint(F.col("text"))
+
+
+def test_word_ngrams_sql_rejects_quoting_separator(monkeypatch):
+    """A TOKEN_SEP that would break out of the SQL string literal raises
+    ValueError, also under `python -O` (an if/raise, not an assert)."""
+    from dataselector_spark.functions import text
+
+    assert "split(c, ' ')" in text.word_ngrams_sql("c", 2)
+    for sep in ("'", "\\"):
+        monkeypatch.setattr(text, "TOKEN_SEP", sep)
+        with pytest.raises(ValueError, match="TOKEN_SEP"):
+            text.word_ngrams_sql("c", 2)
+
+
+def test_rrf_weight_terms_quoted_into_values_literal(spark):
+    """ADVICE r16: the BM25 weight terms are spliced into a VALUES literal
+    through sql_string_literal — a term with a single quote round-trips and
+    scores its document; a backslash (an escape only in Spark's dialect)
+    raises instead of silently changing the term."""
+    from dataselector_spark.suite.vectors import _rrf_bm25_scores
+
+    docs = spark.createDataFrame(
+        [(1, "it's a test"), (2, "plain words here")], "doc_id bigint, text string"
+    )
+    scored = {
+        r["doc_id"]: r["score_milli"]
+        for r in _rrf_bm25_scores(spark, docs, {"it's": 1000}).collect()
+    }
+    assert set(scored) == {1} and scored[1] > 0, scored
+    with pytest.raises(ValueError, match="backslash"):
+        _rrf_bm25_scores(spark, docs, {"a\\b": 1000})
+
+
+def test_word_ngram_hashes_sql_is_xxhash64_of_string_shingles(spark):
+    from dataselector_spark.functions.text import (
+        word_ngram_hashes_sql,
+        word_ngrams,
+    )
+
+    df = spark.createDataFrame(
+        [("x y z x y z w",), ("one two",), ("",)], "text string"
+    )
+    got = df.select(
+        F.expr(word_ngram_hashes_sql("`text`", 3)).alias("h")
+    ).collect()
+    want = df.select(
+        F.array_distinct(
+            F.transform(word_ngrams("text", 3), lambda s: F.xxhash64(s))
+        ).alias("h")
+    ).collect()
+    assert [sorted(r["h"]) for r in got] == [sorted(r["h"]) for r in want]
+    # distinct-after-hash must agree with hash-of-distinct-strings
+    strings = df.select(
+        F.array_distinct(word_ngrams("text", 3)).alias("s")
+    ).collect()
+    str_hashes = df.select(
+        F.transform(
+            F.array_distinct(word_ngrams("text", 3)), lambda s: F.xxhash64(s)
+        ).alias("h")
+    ).collect()
+    for g, s, sh in zip(got, strings, str_hashes):
+        assert sorted(g["h"]) == sorted(set(sh["h"]))
+        assert len(g["h"]) == len(set(s["s"]))

@@ -1,18 +1,24 @@
 """Semantic checks for the hash-based (non-oracle-able) LLM-pipeline ops:
 MinHash-LSH recall vs exact Jaccard, ANN recall vs brute force, language-ID
 accuracy, SimHash sanity, multimodal feature correctness vs driver-side
-recomputation."""
+recomputation; and the laws of the shared operators they build on
+(connected components, shingle df caps, validation checks, prefix sums,
+z-scores, layout)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from dataselector_spark.catalog import load_table
 from dataselector_spark.operators.dedup import (
+    connected_components,
     minhash_lsh_pairs,
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash64,
 )
 from dataselector_spark.operators.similarity import topk_cosine, topk_cosine_lsh
+from dataselector_spark.operators.validate import in_range, not_null, run_checks
+from dataselector_spark.operators.windows import zscore_outliers
 from dataselector_spark.multimodal import extract_features, synthesize_media
 from dataselector_spark.session import scoped_conf
 from dataselector_spark.suite import QUERIES
@@ -2139,3 +2145,227 @@ def test_array_lit_d_bitwise_matches_f_lit(spark):
     assert len(a) == len(b) == len(vals)
     for x, y in zip(a, b):
         assert struct.pack("d", x) == struct.pack("d", y), (x, y)
+
+
+def test_run_checks_empty_input_reports_ok(spark):
+    empty = spark.createDataFrame([], "x double")
+    out = run_checks(empty, [not_null("x"), in_range("x", 0, 1)]).collect()
+    assert len(out) == 2
+    for row in out:
+        assert row["violations"] == 0
+        assert row["total"] == 0
+        assert row["ok"] is True
+
+
+def test_ngram_df_cap_bounds_stop_phrase_blowup(spark):
+    # 40 documents all sharing one stop-phrase shingle, otherwise unique.
+    stop = "the quick brown"
+    rows = [(i, f"{stop} unique{i} token{i} tail{i}") for i in range(40)]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    uncapped = ngram_jaccard_pairs(docs, n=3, threshold=0.0)
+    capped = ngram_jaccard_pairs(docs, n=3, threshold=0.0, df_cap=10)
+    # Without the cap the shared shingle alone creates 40*39/2 = 780 pairs;
+    # with df_cap=10 the hot shingle is dropped from the index and the unique
+    # tails share nothing → no candidate pairs at all.
+    assert uncapped.count() == 780
+    assert capped.count() == 0
+
+
+def test_ngram_df_cap_keeps_true_near_dups(spark):
+    # Two real near-duplicates + a hot stop-phrase across the corpus: the cap
+    # must kill the stop-phrase bucket but keep the true pair.
+    stop = "lorem ipsum dolor"
+    rows = [(i, f"{stop} filler{i} words{i} here{i}") for i in range(30)]
+    rows += [(100, "alpha beta gamma delta epsilon"), (101, "alpha beta gamma delta zeta")]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    out = ngram_jaccard_pairs(docs, n=3, threshold=0.3, df_cap=10).collect()
+    assert {(r["id_a"], r["id_b"]) for r in out} == {(100, 101)}
+
+
+def test_connected_components_materialize_modes(spark, tmp_path):
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
+    )
+    expected = {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    # reliable mode needs a checkpoint dir
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    for mode in ("local", "persist", "reliable", False):
+        # the per-round convergence count is an Observation that must fire
+        # in every mode: 3 -> 1 changed labels, then the no-change round
+        stats = {}
+        got = {
+            (r["id"], r["comp"])
+            for r in connected_components(
+                pairs, materialize=mode, stats=stats
+            ).collect()
+        }
+        assert got == expected, mode
+        assert stats["rounds"] == 3, (mode, stats)
+
+
+def test_connected_components_duplicate_reversed_self_pairs(spark, tmp_path):
+    """Repeated, reversed (id_a > id_b) and self pairs must still give
+    exactly one label per node and the min-id component, in every mode."""
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 1), (1, 2), (3, 2), (3, 3), (7, 7), (9, 8), (8, 9)],
+        "id_a bigint, id_b bigint",
+    )
+    expected = {1: 1, 2: 1, 3: 1, 7: 7, 8: 8, 9: 8}
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    for mode in ("local", "persist", "reliable", False):
+        rows = connected_components(pairs, materialize=mode).collect()
+        assert len(rows) == len(expected), (mode, rows)
+        assert {r["id"]: r["comp"] for r in rows} == expected, mode
+
+
+def test_connected_components_reads_pairs_in_one_branch(spark, tmp_path):
+    """The adjacency is one projection over the pair plan, not a union of
+    branches that each re-read it: with materialize=False the executed
+    plan of the labels (adjacency inlined) holds no Union."""
+    path = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame(
+        [(1, 2), (2, 3), (10, 11)], "id_a bigint, id_b bigint"
+    ).write.parquet(path)
+    comp = connected_components(spark.read.parquet(path), materialize=False)
+    got = {(r["id"], r["comp"]) for r in comp.collect()}
+    assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+    plan = comp._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan, plan[:3000]
+
+
+def test_range_clustered_write_prunes_files(spark, sf_dir, tmp_path):
+    """Clustered layout: a selective filter on the cluster key must read a
+    strict subset of files (parquet footer min/max pruning)."""
+    from dataselector_spark.catalog import load_table
+    from dataselector_spark.operators.layout import cluster_by_zorder
+
+    path = str(tmp_path / "clustered")
+    e = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "value"
+    )
+    cluster_by_zorder(e, F.col("user_id"), 8).write.parquet(path)
+    lo = e.agg({"user_id": "min"}).first()[0]
+    df = spark.read.parquet(path).filter(F.col("user_id") == lo)
+    files_read = df.select(F.input_file_name()).distinct().count()
+    import os
+
+    n_files = sum(f.endswith(".parquet") for f in os.listdir(path))
+    assert n_files == 8
+    assert files_read <= 2, files_read  # one boundary overlap allowed
+    assert df.count() == e.filter(F.col("user_id") == lo).count()
+
+
+def test_running_sums_match_global_window(spark):
+    """The two-level range-partitioned prefix sum must equal the naive
+    single-partition global window for any partition count."""
+    from pyspark.sql import Window as W
+
+    from dataselector_spark.operators.prefixsum import running_sums
+
+    rows = [((i * 2654435761) % 997, 1 + i % 3, i % 2) for i in range(500)]
+    df = spark.createDataFrame(rows, "k long, a long, b long").dropDuplicates(["k"])
+    w = W.orderBy("k").rowsBetween(W.unboundedPreceding, W.currentRow)
+    expect = {
+        r["k"]: (r["ca"], r["cb"])
+        for r in df.select(
+            "k", F.sum("a").over(w).alias("ca"), F.sum("b").over(w).alias("cb")
+        ).collect()
+    }
+    for nparts in (1, 4, 13):
+        got = {
+            r["k"]: (r["cum_a"], r["cum_b"])
+            for r in running_sums(
+                df, order_by=["k"], sum_cols=["a", "b"], num_partitions=nparts
+            ).collect()
+        }
+        assert got == expect, nparts
+
+
+def test_connected_components_reports_rounds(spark):
+    """stats= must report the propagation round count: a 2-chain converges
+    in 2 rounds (propagate + confirm), a path of 5 takes diameter-bound
+    rounds, and both still label correctly."""
+    from dataselector_spark.operators.dedup import connected_components
+
+    stats = {}
+    pairs = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    got = {
+        (r["id"], r["comp"])
+        for r in connected_components(pairs, stats=stats).collect()
+    }
+    assert got == {(1, 1), (2, 1)}
+    assert stats["rounds"] == 2
+
+    chain = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
+    )
+    stats = {}
+    got = {
+        (r["id"], r["comp"])
+        for r in connected_components(chain, stats=stats).collect()
+    }
+    assert got == {(i, 1) for i in range(1, 6)}
+    assert 2 <= stats["rounds"] <= 5
+
+
+def test_proportional_allocation_sums_to_budget(spark, sf_oracle_dir):
+    """Hamilton apportionment invariant: the allocation sums to EXACTLY
+    the budget (1000) — the property naive round(n*share) violates —
+    and every stratum gets either floor or floor+1 of its quota."""
+    from dataselector_spark.suite import QUERIES
+
+    rows = QUERIES["b22_proportional_allocation"].fn(
+        spark, sf_oracle_dir
+    ).collect()
+    assert sum(r.allocated for r in rows) == 1000
+    n = sum(r.n_rows for r in rows)
+    for r in rows:
+        base = (1000 * r.n_rows) // n
+        assert r.allocated in (base, base + 1), r
+
+
+def test_zscore_join_back_keeps_null_group_and_window_values(spark):
+    rows = [
+        ("a", 1.0), ("a", 3.0), ("a", 5.0),
+        (None, 10.0), (None, 14.0),
+        ("b", 7.0),
+    ]
+    df = spark.createDataFrame(rows, "grp string, value double")
+    out = {
+        (r["grp"], r["value"]): r
+        for r in zscore_outliers(df, ["grp"], "value").collect()
+    }
+    # no row lost: the NULL group key survives the join back
+    assert len(out) == len(rows)
+    # group a: mean 3, sample std 2 -> z(5.0) = 1.0
+    r = out[("a", 5.0)]
+    assert r["g_mean"] == pytest.approx(3.0)
+    assert r["g_std"] == pytest.approx(2.0)
+    assert r["z"] == pytest.approx(1.0)
+    assert not r["is_outlier"]
+    # NULL group: mean 12, sample std = sqrt(8)
+    r = out[(None, 14.0)]
+    assert r["g_mean"] == pytest.approx(12.0)
+    assert r["z"] == pytest.approx(2.0 / 8.0**0.5)
+    # singleton group: null z (no dispersion), row still present
+    assert out[("b", 7.0)]["z"] is None
+    # input columns named like the internal ones must not collide with them
+    clash = df.withColumn("__n", F.lit(-1)).withColumn("__g_0", F.lit("x"))
+    got = {
+        (r["grp"], r["value"]): (r["__n"], r["__g_0"], r["z"])
+        for r in zscore_outliers(clash, ["grp"], "value").collect()
+    }
+    assert got == {k: (-1, "x", v["z"]) for k, v in out.items()}
+
+
+def test_zorder_key_input_guards():
+    from pyspark.sql import functions as F
+
+    from dataselector_spark.operators.layout import zorder_key
+
+    with pytest.raises(ValueError):
+        zorder_key([])
+    with pytest.raises(TypeError):
+        zorder_key(["a", F.col("b")])
+    with pytest.raises(TypeError):
+        zorder_key([F.col("a"), F.col("b")])

@@ -4,6 +4,7 @@ dataset; these pin the laws that make the operators safe to re-run.
 """
 
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from dataselector_spark.operators.merge import apply_changelog, merge_upsert
 
@@ -81,3 +82,14 @@ def test_changelog_then_merge_equals_direct_state(spark):
     compacted = apply_changelog(log, ["k"], "v").select("k", "p")
     got = _rows(merge_upsert(target, compacted, ["k"]))
     assert got == {(1, "a"), (2, "b3"), (3, "c")}
+
+
+def test_merge_upsert_null_key_replaces_not_duplicates(spark):
+    target = spark.createDataFrame([(None, "t"), ("a", "t")], "k string, v string")
+    source = spark.createDataFrame([(None, "s")], "k string, v string")
+    once = merge_upsert(target, source, ["k"])
+    twice = merge_upsert(once, source, ["k"])
+    assert once.count() == 2  # NULL-key target replaced, 'a' survives
+    assert twice.count() == 2  # idempotent — no accumulation
+    vals = {r["v"] for r in twice.filter(F.col("k").isNull()).collect()}
+    assert vals == {"s"}

@@ -4,6 +4,7 @@ A correct-but-unoptimized plan is a failure here even though results match."""
 from pyspark.sql import functions as F
 
 from dataselector_spark.catalog import load_table
+from dataselector_spark.operators.dedup import dedup_survivors
 from dataselector_spark.plans import (
     formatted_plan,
     has_broadcast_join,
@@ -1364,3 +1365,23 @@ def test_equidepth_distributed_index_reuses_range_exchange(spark):
         if "Exchange rangepartitioning" in ln and "ReusedExchange" not in ln
     ]
     assert len(range_nodes) == 1, plan[:2000]
+
+
+def test_dedup_survivors_plan_has_no_forced_broadcast(spark):
+    docs = spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(100)], "doc_id bigint, text string"
+    )
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 50, 2)], "id_a bigint, id_b bigint"
+    )
+    out = dedup_survivors(docs, pairs)
+    # The loser relation must carry no user broadcast hint: with a plain plan
+    # AQE is free to pick SMJ for a huge loser set. (AQE may still broadcast
+    # small sides at runtime — that is the desired behavior; what we assert
+    # is the absence of the compile-time ResolvedHint.)
+    logical = out._jdf.queryExecution().logical().toString()
+    assert "UnresolvedHint" not in logical and "ResolvedHint" not in logical
+    # semantics unchanged: losers (odd ids in the paired range) removed
+    survivors = {r["doc_id"] for r in out.collect()}
+    assert len(survivors) == 100 - 25
+    assert all(i in survivors for i in range(50, 100))

@@ -766,3 +766,18 @@ def test_concurrent_streams_leave_session_partitions_unchanged(spark, sf_dir):
     assert {name: probe.parts[name] for name in counts} == {
         name: {n} for name, n in counts.items()
     }
+
+
+def test_streaming_upsert_entry_runs_multiple_batches(spark, sf_dir):
+    """b23_streaming_upsert_sink must actually fold MULTIPLE micro-batches
+    through the foreachBatch merge (not one batch that trivially equals the
+    oracle): the checkpoint's offsets log records one entry per batch."""
+    import os
+
+    from dataselector_spark.suite import QUERIES
+
+    sf = sf_dir
+    QUERIES["b23_streaming_upsert_sink"].fn(spark, sf).collect()
+    ckpt = f"/tmp/dsspark_upsert_{os.path.basename(sf)}/ckpt/offsets"
+    batches = [f for f in os.listdir(ckpt) if not f.startswith(".")]
+    assert len(batches) >= 3, batches

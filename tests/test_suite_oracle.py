@@ -1,7 +1,10 @@
 """Differential test: every suite query with an oracle must hash-match DuckDB
 (the driver's correctness gate, run here at sf0.001 for speed; the driver
 runs sf0.01). The DataFrame the comparison executed then has its final
-plan checked against its recorded fingerprint (test_plan_fingerprints.py)."""
+plan checked against its recorded fingerprint (test_plan_fingerprints.py).
+The rest of the driver contract is checked here too: oracles that are empty
+at sf0.001, the oracle table guard, the driver window's seats and the
+suite totals the docs state."""
 
 import pytest
 
@@ -24,6 +27,61 @@ def test_oracle_match(spark, sf_dir, name, mutate=lambda df: df):
     ok, detail = compare(spark, sf_dir, fn, q.oracle)
     assert ok, f"{name}: {detail}"
     check_fingerprint(name, "sf0.001", executed[0])
+
+
+# Oracle entries that return no rows at sf0.001, where test_oracle_match
+# runs, so that check is vacuous for them there. Each names the scale factor
+# whose oracle does return rows (checked below), or None when no testdata
+# scale does and a constructed-data test carries the check.
+EMPTY_AT_SF0_001 = {
+    "a22_having": "sf0.01",
+    "b26_kcore": "sf0.01",
+    "b26_link_prediction": "sf0.01",
+    "b26_link_prediction_capped": "sf0.01",
+    "b26_modularity": "sf0.01",
+    "b03_anti_join": None,  # every part is ordered: test_anti_join_on_unordered_parts
+}
+
+
+def test_empty_oracles_are_named(sf_dir):
+    """An oracle that returns no rows at sf0.001 fails here unless
+    EMPTY_AT_SF0_001 names it; a named one fails if it returns rows at
+    sf0.001 or none at its recorded scale."""
+    import os
+
+    from .oracle_harness import duckdb_con
+
+    con = duckdb_con(sf_dir)
+    empty = [n for n in ORACLE_QUERIES if not con.execute(QUERIES[n].oracle).fetchmany(1)]
+    assert sorted(empty) == sorted(EMPTY_AT_SF0_001)
+    for name, sf in EMPTY_AT_SF0_001.items():
+        if sf is not None:
+            con = duckdb_con(os.path.join(os.path.dirname(sf_dir), sf))
+            assert con.execute(QUERIES[name].oracle).fetchmany(1), (name, sf)
+
+
+def test_anti_join_on_unordered_parts(spark, sf_dir, tmp_path):
+    """b03_anti_join returns no rows on any testdata scale: drop the
+    lineitems of three parts, and the entry must match its oracle on
+    exactly those parts."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    part = pq.read_table(f"{sf_dir}/part.parquet")
+    lineitem = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    gone = sorted(part.column("p_partkey").to_pylist())[:3]
+    dropped = pc.is_in(
+        lineitem.column("l_partkey"),
+        value_set=pa.array(gone, lineitem.schema.field("l_partkey").type),
+    )
+    pq.write_table(part, str(tmp_path / "part.parquet"))
+    pq.write_table(lineitem.filter(pc.invert(dropped)), str(tmp_path / "lineitem.parquet"))
+
+    q = QUERIES["b03_anti_join"]
+    ok, detail = compare(spark, str(tmp_path), q.fn, q.oracle)
+    assert ok, detail
+    assert sorted(r.p_partkey for r in q.fn(spark, str(tmp_path)).collect()) == gone
 
 
 def test_fingerprint_catches_added_exchange(spark, sf_dir):
@@ -123,3 +181,207 @@ def test_harness_catches_float_perturbation(spark, sf_dir):
     )
     assert not ok, "harness failed to catch a 1e-9 float perturbation"
     assert "values:" in detail, detail
+
+
+# --- driver contract: window rotation, oracle table guard, doc totals ------
+
+
+def _driver_results():
+    """Latest per-entry driver verdict (+ the round it came from) across
+    every CORRECTNESS_r*.json."""
+    import glob
+    import json
+    import os
+    import re
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    results = {}
+    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            for name, row in json.load(f).items():
+                results[name] = dict(row, __round=rnd)  # later rounds win
+    return results
+
+
+# The driver regenerated the testdata between rounds 3 and 4 (VERDICT r4);
+# a green driver row from before that proves nothing about the CURRENT
+# parquet, so pre-regen entries count as needing a fresh row.
+_TESTDATA_REGEN_ROUND = 4
+
+
+def test_driver_window_targets_unchecked_entries():
+    """The driver checks the FIRST 50 entries of queries() each round, so a
+    forgotten rotation burns the whole round re-checking green entries
+    (this happened between rounds 2 and 3 — VERDICT r2 'What's wrong' #2).
+
+    Generalized invariant, derived from the CORRECTNESS_r*.json artifacts
+    rather than a hand-pinned list: every window slot must go to an entry
+    that NEEDS a driver row — never checked, red (hash_match False),
+    crashed (err other than no_oracle), pre-regen, or rewritten since its
+    last driver row (suite REWRITTEN_IN_ROUND, ADVICE r6 #3) — as long as
+    such entries exist outside the window.  If this fails after a new
+    CORRECTNESS file lands, rotate the window list in
+    dataselector_spark/suite/__init__.py."""
+    from dataselector_spark.suite import REWRITTEN_IN_ROUND, QUERIES
+
+    results = _driver_results()
+
+    def needs_row(name):
+        row = results.get(name)
+        if row is None:
+            return True  # never driver-checked
+        if row.get("hash_match") is False:
+            return True  # red — needs a re-check
+        err = row.get("err")
+        if err is not None and err != "no_oracle":
+            return True  # crashed
+        if err == "no_oracle" and QUERIES[name].oracle is not None:
+            return True  # oracle added/upgraded since the last driver row
+        if row["__round"] < _TESTDATA_REGEN_ROUND:
+            return True  # last checked against the pre-regen testdata
+        if row["__round"] < REWRITTEN_IN_ROUND.get(name, 0):
+            return True  # implementation rewritten since the last row
+        return False
+
+    window = list(QUERIES)[:50]
+    assert len(set(window)) == 50
+    candidates = [n for n in QUERIES if needs_row(n)]
+    waiting_outside = [n for n in candidates if n not in window]
+    wasted_slots = [n for n in window if not needs_row(n)]
+    assert not (waiting_outside and wasted_slots), (
+        f"driver window wastes slots on already-green entries {wasted_slots[:5]} "
+        f"while {len(waiting_outside)} unchecked/red entries wait outside "
+        f"(e.g. {waiting_outside[:5]}); rotate suite/__init__.py's window list"
+    )
+
+
+def test_rewritten_in_round_has_no_repeated_key():
+    """A dict literal keeps the LAST of two equal keys, so a repeated line
+    in REWRITTEN_IN_ROUND silently overrides the earlier one. Read the
+    literal itself, not the dict."""
+    import ast
+    import collections
+
+    import dataselector_spark.suite as suite
+
+    with open(suite.__file__) as f:
+        (literal,) = [
+            n.value for n in ast.parse(f.read()).body
+            if isinstance(n, ast.Assign)
+            and getattr(n.targets[0], "id", None) == "REWRITTEN_IN_ROUND"
+        ]
+    counts = collections.Counter(k.value for k in literal.keys)
+    assert max(counts.values()) == 1, counts.most_common(3)
+
+
+def test_driver_window_no_complex_output_columns(spark, sf_dir):
+    """The driver's canonicalizer crashes on array/map/struct output columns
+    (CORRECTNESS_r01 b06_approx_percentile: pandas 'unhashable type: list').
+    Every windowed entry must emit scalar columns only."""
+    from pyspark.sql.types import ArrayType, MapType, StructType
+
+    from dataselector_spark.suite import QUERIES
+
+    sf = sf_dir
+    bad = {}
+    for name in list(QUERIES)[:50]:
+        schema = QUERIES[name].fn(spark, sf).schema
+        complex_cols = [
+            f.name
+            for f in schema.fields
+            if isinstance(f.dataType, (ArrayType, MapType, StructType))
+        ]
+        if complex_cols:
+            bad[name] = complex_cols
+    assert not bad, f"complex output columns would crash the driver: {bad}"
+
+
+def test_oracle_table_guard_catches_unknown_table():
+    """check_oracle_tables must flag an oracle referencing a view the driver
+    never registers, and accept CTEs / read_parquet / function sources."""
+    import pytest as pt
+
+    from dataselector_spark.suite.base import Query, check_oracle_tables
+
+    ok = {
+        "good_cte": Query(
+            "good_cte",
+            lambda s, d: None,
+            "WITH t AS (SELECT 1) SELECT * FROM t JOIN events USING (x)",
+        ),
+        "good_fn": Query(
+            "good_fn",
+            lambda s, d: None,
+            "SELECT * FROM read_parquet('/tmp/x (from orders).parquet')",
+        ),
+    }
+    check_oracle_tables(ok, {"events"})
+
+    bad = dict(ok)
+    bad["typo"] = Query("typo", lambda s, d: None, "SELECT * FROM evnets")
+    with pt.raises(ValueError, match="evnets"):
+        check_oracle_tables(bad, {"events"})
+
+
+def test_oracle_table_guard_walks_comma_lists():
+    """ADVICE r5 #3: 'FROM a, b' implicit cross joins (b26_rolling_dau,
+    b17_stream_sliding oracles) must have EVERY listed table checked, with
+    bare and AS aliases honored and function sources still skipped."""
+    import pytest as pt
+
+    from dataselector_spark.suite.base import (
+        Query,
+        check_oracle_tables,
+        oracle_table_refs,
+    )
+
+    refs, _ = oracle_table_refs(
+        "SELECT * FROM events e, orders AS o, lineitem WHERE 1=1"
+    )
+    assert refs == {"events", "orders", "lineitem"}
+    refs, _ = oracle_table_refs("SELECT * FROM events e, range(7) r")
+    assert refs == {"events"}
+    refs, ctes = oracle_table_refs(
+        "WITH p AS MATERIALIZED (SELECT 1 FROM events), "
+        "q AS NOT MATERIALIZED (SELECT 1 FROM p) SELECT * FROM q"
+    )
+    assert refs == {"events", "p", "q"} and ctes == {"p", "q"}
+    bad = {
+        "typo2": Query(
+            "typo2", lambda s, d: None, "SELECT * FROM events e, ordres o"
+        )
+    }
+    with pt.raises(ValueError, match="ordres"):
+        check_oracle_tables(bad, {"events", "orders"})
+
+
+def test_docs_suite_counts_match_registry():
+    """README.md and COVERAGE.md state the suite totals; commit messages
+    drifted from the registry twice (r6 '203/197' vs actual 204/198). The
+    docs' numbers are now pinned to len(queries())/len(oracle_sql()) so any
+    new entry that forgets the doc update fails HERE, not in the judge's
+    cross-check."""
+    import os
+    import re
+
+    from dataselector_spark.suite import oracle_sql, queries
+
+    n_q, n_o = len(queries()), len(oracle_sql())
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    readme = open(os.path.join(repo, "README.md")).read()
+    coverage = open(os.path.join(repo, "COVERAGE.md")).read()
+    m = re.search(r"(\d+) named queries, (\d+) with exact DuckDB oracles", readme)
+    assert m, "README.md lost its suite-totals line"
+    assert (int(m.group(1)), int(m.group(2))) == (n_q, n_o), (
+        f"README.md says {m.group(0)!r} but the registry has "
+        f"{n_q} queries / {n_o} oracles"
+    )
+    m = re.search(
+        r"Totals: (\d+) suite entries, (\d+) with exact DuckDB oracles", coverage
+    )
+    assert m, "COVERAGE.md lost its totals line"
+    assert (int(m.group(1)), int(m.group(2))) == (n_q, n_o), (
+        f"COVERAGE.md says {m.group(0)!r} but the registry has "
+        f"{n_q} queries / {n_o} oracles"
+    )
