@@ -414,7 +414,7 @@ def _isolated_set_runs(reps: int, n_runs: int) -> dict[str, dict]:
 # Round label stamped on new bench records; bump alongside the driver-window
 # rotation in suite/__init__.py (it only labels provenance — adjudication is
 # by wall value, never by round).
-BENCH_ROUND = "r23"
+BENCH_ROUND = "r24"
 
 # Keep at most this many readings per set in BENCH_RECORDS.json (ring
 # buffer, newest last) — enough for several min-of-N batches of context

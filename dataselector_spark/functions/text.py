@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .cleaning import _c
 from .sql import quote_ident
 
 TOKEN_SEP = " "
@@ -32,10 +33,6 @@ LANG_PROFILES: dict[str, list[str]] = {
 
 FINGERPRINT_MOD = 1_000_000_007
 FINGERPRINT_BASE = 31
-
-
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
 
 
 def tokens(col: Column | str) -> Column:

@@ -5,8 +5,22 @@ typed metadata struct; decode / feature-extraction runs as Arrow-batched
 ``mapInPandas`` so each Python worker touches whole record batches, never
 rows. The Spark-side plumbing (schema, batch iteration, partition sizing) is
 real and tested. `extract_features` reads the payload bytes as they are
-(image/audio libraries are not in this container); `decode_pgm` parses a
-real image format with no optional dependency.
+(image/audio libraries are not in this container); the netpbm, RIFF/WAVE
+and YUV4MPEG2 codecs parse real formats with no optional dependency.
+
+Every stage that emits ``(doc_id, payload, meta)`` is one `_payload_map`
+over a per-row function; rasters are read through `_raster`, which checks
+the payload length against the metadata and names the doc_id when they
+disagree.
+
+Worker imports: Spark's Python workers cannot import this package when the
+driver runs from outside the repo (and sandboxed executors never can). A
+batch closure pickles by value, but a module-level function it calls
+pickles by reference, as an import of its module. This module is therefore
+registered with cloudpickle by value: its helpers travel inside the
+pickled closure. A closure defined anywhere else in the package must not
+call a package-level name; ``tests/test_llm_ops.py`` runs the codec
+entries from a directory where the package is not importable.
 
 Scale notes: binary payloads dominate row size, so partition sizing must key
 off `spark.sql.files.maxPartitionBytes`, not row counts; feature extraction
@@ -16,13 +30,19 @@ written columnar so downstream training reads never touch the blobs again.
 
 from __future__ import annotations
 
+import math
+import struct
+import sys
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 MEDIA_META = T.StructType(
     [
@@ -42,6 +62,49 @@ FEATURE_SCHEMA = T.StructType(
         T.StructField("byte_max", T.IntegerType()),
     ]
 )
+
+
+def _payload_map(df: DataFrame, schema: T.StructType, row, cols=("payload", "meta")):
+    """The one ``(doc_id, payload, meta)`` stage: ``row`` maps the values of
+    ``cols`` in one input row to that row's ``(payload, meta)``, and doc_id
+    passes through. Output is built column by column per Arrow batch."""
+
+    def batches(it):
+        for pdf in it:
+            payloads, metas = [], []
+            for values in zip(*(pdf[c] for c in cols)):
+                payload, meta = row(*values)
+                payloads.append(payload)
+                metas.append(meta)
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
+            )
+
+    return df.mapInPandas(batches, schema)
+
+
+def _raster(stage: str, doc_id, payload: bytes, shape, dtype="uint8"):
+    """``payload`` as a numpy array of ``shape``. A payload whose length
+    disagrees with its metadata raises naming the doc_id (the ADVICE r8
+    rule), not with numpy's bare reshape error."""
+    n = math.prod(shape) * np.dtype(dtype).itemsize
+    if len(payload) != n:
+        raise ValueError(
+            f"{stage}: doc_id={int(doc_id)} payload is {len(payload)} bytes, "
+            f"meta says {'x'.join(map(str, shape))} {dtype} = {n} bytes"
+        )
+    return np.frombuffer(payload, dtype=dtype).reshape(shape)
+
+
+def _nn_sample(img, out_h: int, out_w: int):
+    """Nearest-neighbor index mapping: row r' = r*h//out_h, col
+    c' = c*w//out_w."""
+    h, w = img.shape
+    return img[(np.arange(out_h) * h) // out_h][:, (np.arange(out_w) * w) // out_w]
+
+
+def _image_meta(media_type: str, w: int, h: int, n_bytes: int) -> dict:
+    return {"media_type": media_type, "width": w, "height": h, "n_bytes": n_bytes}
 
 
 def synthesize_media(docs: DataFrame) -> DataFrame:
@@ -65,12 +128,7 @@ def synthesize_media(docs: DataFrame) -> DataFrame:
 def extract_features(media: DataFrame) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads via mapInPandas:
     per-record byte statistics (the stand-in for pixel/frame statistics).
-    Map-only — no shuffle; output is small numeric columns.
-
-    The batch closure is deliberately self-contained (captures only plain
-    values + pandas): Spark's Python workers cannot import this package when
-    the driver runs from outside the repo, so no module-level names may leak
-    into the pickled closure."""
+    Map-only — no shuffle; output is small numeric columns."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
@@ -91,13 +149,16 @@ def extract_features(media: DataFrame) -> DataFrame:
     return media.mapInPandas(batches, FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
+BITMAP_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
         T.StructField("payload", T.BinaryType()),
         T.StructField("meta", MEDIA_META),
     ]
 )
+
+# the schema of resize_media's output, which is any bitmap stage's
+RESIZED_SCHEMA = BITMAP_SCHEMA
 
 FRAME_SCHEMA = T.StructType(
     [
@@ -117,39 +178,18 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     rebuilt to reflect the new dimensions, map-only (no shuffle).
     Swap the stub for PIL's `Image.resize` and nothing else changes."""
     w, h = int(width), int(height)
+    target = w * h
 
-    def batches(it):
-        import pandas as pd
+    def row(payload, m):
+        # Deterministic stand-in for a real resample: cycle the source
+        # bytes to the target length (empty source -> zero bytes).
+        if not payload:
+            out = bytes(target)
+        else:
+            out = (payload * (target // len(payload) + 1))[:target]
+        return out, _image_meta(m["media_type"], w, h, len(out))
 
-        target = w * h
-
-        def fake_resize(payload: bytes) -> bytes:
-            # Deterministic stand-in for a real resample: cycle the source
-            # bytes to the target length (empty source -> zero bytes).
-            if not payload:
-                return bytes(target)
-            reps = target // len(payload) + 1
-            return (payload * reps)[:target]
-
-        for pdf in it:
-            resized = pdf["payload"].map(fake_resize)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": resized,
-                    "meta": [
-                        {
-                            "media_type": m["media_type"],
-                            "width": w,
-                            "height": h,
-                            "n_bytes": len(p),
-                        }
-                        for m, p in zip(pdf["meta"], resized)
-                    ],
-                }
-            )
-
-    return media.mapInPandas(batches, RESIZED_SCHEMA)
+    return _payload_map(media, RESIZED_SCHEMA, row)
 
 
 def sample_frames(media: DataFrame, frame_bytes: int, every_n: int = 2) -> DataFrame:
@@ -161,8 +201,6 @@ def sample_frames(media: DataFrame, frame_bytes: int, every_n: int = 2) -> DataF
     fb, k = int(frame_bytes), int(every_n)
 
     def batches(it):
-        import pandas as pd
-
         for pdf in it:
             out = {"doc_id": [], "frame_idx": [], "frame": [], "n_bytes": []}
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
@@ -178,15 +216,6 @@ def sample_frames(media: DataFrame, frame_bytes: int, every_n: int = 2) -> DataF
     return media.mapInPandas(batches, FRAME_SCHEMA)
 
 
-BITMAP_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta", MEDIA_META),
-    ]
-)
-
-
 def synthesize_bitmaps(docs: DataFrame) -> DataFrame:
     """Deterministic RAW grayscale bitmaps (no codec needed): each doc gets a
     (height x width) uint8 raster with pixel(r, c) = (doc_id*31 + r*7 + c*13)
@@ -195,32 +224,79 @@ def synthesize_bitmaps(docs: DataFrame) -> DataFrame:
     (resize, stats) can do REAL pixel arithmetic with numpy — no PIL/ffmpeg
     required, and every byte is reproducible for tests and rows-only checks."""
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def row(doc_id):
+        w = int(doc_id) % 64 + 16
+        h = int(doc_id) % 48 + 12
+        r = np.arange(h, dtype=np.int64)[:, None]
+        c = np.arange(w, dtype=np.int64)[None, :]
+        img = ((int(doc_id) * 31 + r * 7 + c * 13) % 256).astype(np.uint8)
+        return img.tobytes(), _image_meta("image/raw8", w, h, w * h)
 
-        for pdf in it:
-            payloads, metas = [], []
-            for doc_id in pdf["doc_id"]:
-                w = int(doc_id) % 64 + 16
-                h = int(doc_id) % 48 + 12
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                img = ((int(doc_id) * 31 + r * 7 + c * 13) % 256).astype(np.uint8)
-                payloads.append(img.tobytes())
-                metas.append(
-                    {
-                        "media_type": "image/raw8",
-                        "width": w,
-                        "height": h,
-                        "n_bytes": w * h,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
+    return _payload_map(docs.select("doc_id"), BITMAP_SCHEMA, row, ("doc_id",))
 
-    return docs.select("doc_id").mapInPandas(batches, BITMAP_SCHEMA)
+
+# netpbm magic -> (format name, channels, encoded media_type, raw media_type)
+_NETPBM = {
+    b"P5": ("PGM", 1, "image/x-portable-graymap", "image/raw8"),
+    b"P6": ("PPM", 3, "image/x-portable-pixmap", "image/raw24"),
+}
+
+
+def _netpbm_encode(media: DataFrame, magic: bytes) -> DataFrame:
+    media_type = _NETPBM[magic][2]
+
+    def row(p, m):
+        header = f"{magic.decode()}\n{m['width']} {m['height']}\n255\n".encode(
+            "ascii"
+        )
+        meta = _image_meta(media_type, m["width"], m["height"], len(header) + len(p))
+        return header + bytes(p), meta
+
+    return _payload_map(media, BITMAP_SCHEMA, row)
+
+
+def _netpbm_parse(buf: bytes, magic: bytes):
+    """Parse one binary netpbm payload: the magic, then 3 ints (w, h,
+    maxval) separated by whitespace, '#' comments running to end-of-line
+    allowed; a single whitespace byte then separates header from raster.
+    Strict: a truncated raster AND trailing bytes both raise (a
+    concatenated/corrupted payload must not decode silently, ADVICE r5
+    #4). Returns (w, h, raster)."""
+    name, channels = _NETPBM[magic][:2]
+    if buf[:2] != magic:
+        raise ValueError(f"not a {magic.decode()}/{name} payload: {buf[:2]!r}")
+    pos, tokens = 2, []
+    while len(tokens) < 3:
+        while pos < len(buf) and buf[pos : pos + 1].isspace():
+            pos += 1
+        if buf[pos : pos + 1] == b"#":
+            while pos < len(buf) and buf[pos : pos + 1] != b"\n":
+                pos += 1
+            continue
+        start = pos
+        while pos < len(buf) and not buf[pos : pos + 1].isspace():
+            pos += 1
+        tokens.append(int(buf[start:pos]))
+    pos += 1  # the single whitespace after maxval
+    w, h, maxval = tokens
+    if maxval != 255:
+        raise ValueError(f"only 8-bit {name} supported, maxval={maxval}")
+    n = w * h * channels
+    if len(buf) - pos < n:
+        raise ValueError(f"truncated raster: {len(buf) - pos} != {n}")
+    if len(buf) - pos != n:
+        raise ValueError(f"trailing bytes after raster: {len(buf) - pos - n}")
+    return w, h, buf[pos : pos + n]
+
+
+def _netpbm_decode(media: DataFrame, magic: bytes) -> DataFrame:
+    channels, media_type = _NETPBM[magic][1], _NETPBM[magic][3]
+
+    def row(buf):
+        w, h, raster = _netpbm_parse(bytes(buf), magic)
+        return raster, _image_meta(media_type, w, h, w * h * channels)
+
+    return _payload_map(media, BITMAP_SCHEMA, row, ("payload",))
 
 
 def encode_pgm(media: DataFrame) -> DataFrame:
@@ -228,95 +304,19 @@ def encode_pgm(media: DataFrame) -> DataFrame:
     written byte-exact with no codec library: header ``P5\\n<w> <h>\\n255\\n``
     followed by the row-major raster. Arrow-batched mapInPandas, map-only.
     Output payloads open in any image viewer / PIL / ImageMagick."""
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            payloads, metas = [], []
-            for p, m in zip(pdf["payload"], pdf["meta"]):
-                header = f"P5\n{m['width']} {m['height']}\n255\n".encode("ascii")
-                payloads.append(header + bytes(p))
-                metas.append(
-                    {
-                        "media_type": "image/x-portable-graymap",
-                        "width": m["width"],
-                        "height": m["height"],
-                        "n_bytes": len(header) + len(p),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, BITMAP_SCHEMA)
+    return _netpbm_encode(media, b"P5")
 
 
 def decode_pgm(media: DataFrame) -> DataFrame:
     """REAL image decode with no optional dependency: parse the binary PGM
     (P5) header — magic, whitespace/comment handling, dimensions, maxval —
-    and return the raw uint8 raster + rebuilt metadata. This is the honest
-    version of the former `_decode_stub`: actual bytes of an actual image
-    format are parsed per the netpbm spec (comments starting '#' allowed
-    between header tokens), so the decode stage of the pipeline exercises
-    real codec logic end-to-end. Swap in PIL for compressed formats (JPEG/
-    PNG) — schema, batching, and partitioning stay identical."""
-
-    def batches(it):
-        import pandas as pd
-
-        def parse(buf: bytes):
-            # netpbm header: 'P5', then 3 ints (w, h, maxval) separated by
-            # whitespace, '#' comments running to end-of-line allowed; a
-            # single whitespace byte then separates header from raster.
-            if buf[:2] != b"P5":
-                raise ValueError(f"not a P5/PGM payload: {buf[:2]!r}")
-            pos, tokens = 2, []
-            while len(tokens) < 3:
-                while pos < len(buf) and buf[pos : pos + 1].isspace():
-                    pos += 1
-                if buf[pos : pos + 1] == b"#":
-                    while pos < len(buf) and buf[pos : pos + 1] != b"\n":
-                        pos += 1
-                    continue
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(int(buf[start:pos]))
-            pos += 1  # the single whitespace after maxval
-            w, h, maxval = tokens
-            if maxval != 255:
-                raise ValueError(f"only 8-bit PGM supported, maxval={maxval}")
-            raster = buf[pos : pos + w * h]
-            if len(raster) != w * h:
-                raise ValueError(f"truncated raster: {len(raster)} != {w * h}")
-            if len(buf) - pos != w * h:
-                # strict: trailing bytes mean a corrupted or concatenated
-                # payload — decoding it silently would hide the corruption
-                # (ADVICE r5 #4)
-                raise ValueError(
-                    f"trailing bytes after raster: {len(buf) - pos - w * h}"
-                )
-            return w, h, raster
-
-        for pdf in it:
-            payloads, metas = [], []
-            for buf in pdf["payload"]:
-                w, h, raster = parse(bytes(buf))
-                payloads.append(raster)
-                metas.append(
-                    {
-                        "media_type": "image/raw8",
-                        "width": w,
-                        "height": h,
-                        "n_bytes": w * h,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, BITMAP_SCHEMA)
+    and return the raw uint8 raster + rebuilt metadata. Actual bytes of an
+    actual image format are parsed per the netpbm spec (comments starting
+    '#' allowed between header tokens), so the decode stage of the pipeline
+    exercises real codec logic end-to-end. Swap in PIL for compressed
+    formats (JPEG/PNG) — schema, batching, and partitioning stay
+    identical."""
+    return _netpbm_decode(media, b"P5")
 
 
 def synthesize_rgb_bitmaps(docs: DataFrame) -> DataFrame:
@@ -328,35 +328,16 @@ def synthesize_rgb_bitmaps(docs: DataFrame) -> DataFrame:
     Dimensions are kept smaller than the grayscale twin (3× the bytes per
     pixel) so the DuckDB oracle's per-pixel replay stays cheap."""
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def row(doc_id):
+        w = int(doc_id) % 32 + 8
+        h = int(doc_id) % 24 + 6
+        r = np.arange(h, dtype=np.int64)[:, None, None]
+        c = np.arange(w, dtype=np.int64)[None, :, None]
+        k = np.arange(3, dtype=np.int64)[None, None, :]
+        img = ((int(doc_id) * 31 + r * 7 + c * 13 + k * 101) % 256).astype(np.uint8)
+        return img.tobytes(), _image_meta("image/raw24", w, h, w * h * 3)
 
-        for pdf in it:
-            payloads, metas = [], []
-            for doc_id in pdf["doc_id"]:
-                w = int(doc_id) % 32 + 8
-                h = int(doc_id) % 24 + 6
-                r = np.arange(h, dtype=np.int64)[:, None, None]
-                c = np.arange(w, dtype=np.int64)[None, :, None]
-                k = np.arange(3, dtype=np.int64)[None, None, :]
-                img = ((int(doc_id) * 31 + r * 7 + c * 13 + k * 101) % 256).astype(
-                    np.uint8
-                )
-                payloads.append(img.tobytes())
-                metas.append(
-                    {
-                        "media_type": "image/raw24",
-                        "width": w,
-                        "height": h,
-                        "n_bytes": w * h * 3,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, BITMAP_SCHEMA)
+    return _payload_map(docs.select("doc_id"), BITMAP_SCHEMA, row, ("doc_id",))
 
 
 def encode_ppm(media: DataFrame) -> DataFrame:
@@ -364,28 +345,7 @@ def encode_ppm(media: DataFrame) -> DataFrame:
     sibling of `encode_pgm`, same netpbm family: header ``P6\\n<w> <h>\\n255\\n``
     followed by row-major RGB triplets. Byte-exact, no codec library;
     Arrow-batched mapInPandas, map-only."""
-
-    def batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            payloads, metas = [], []
-            for p, m in zip(pdf["payload"], pdf["meta"]):
-                header = f"P6\n{m['width']} {m['height']}\n255\n".encode("ascii")
-                payloads.append(header + bytes(p))
-                metas.append(
-                    {
-                        "media_type": "image/x-portable-pixmap",
-                        "width": m["width"],
-                        "height": m["height"],
-                        "n_bytes": len(header) + len(p),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, BITMAP_SCHEMA)
+    return _netpbm_encode(media, b"P6")
 
 
 def decode_ppm(media: DataFrame) -> DataFrame:
@@ -394,54 +354,7 @@ def decode_ppm(media: DataFrame) -> DataFrame:
     handling, dimensions, maxval — and return the raw interleaved-RGB raster
     + rebuilt metadata. Strict: truncated rasters AND trailing bytes both
     raise (a concatenated/corrupted payload must not decode silently)."""
-
-    def batches(it):
-        import pandas as pd
-
-        def parse(buf: bytes):
-            if buf[:2] != b"P6":
-                raise ValueError(f"not a P6/PPM payload: {buf[:2]!r}")
-            pos, tokens = 2, []
-            while len(tokens) < 3:
-                while pos < len(buf) and buf[pos : pos + 1].isspace():
-                    pos += 1
-                if buf[pos : pos + 1] == b"#":
-                    while pos < len(buf) and buf[pos : pos + 1] != b"\n":
-                        pos += 1
-                    continue
-                start = pos
-                while pos < len(buf) and not buf[pos : pos + 1].isspace():
-                    pos += 1
-                tokens.append(int(buf[start:pos]))
-            pos += 1  # the single whitespace after maxval
-            w, h, maxval = tokens
-            if maxval != 255:
-                raise ValueError(f"only 8-bit PPM supported, maxval={maxval}")
-            n = w * h * 3
-            if len(buf) - pos < n:
-                raise ValueError(f"truncated raster: {len(buf) - pos} != {n}")
-            if len(buf) - pos != n:
-                raise ValueError(f"trailing bytes after raster: {len(buf) - pos - n}")
-            return w, h, buf[pos : pos + n]
-
-        for pdf in it:
-            payloads, metas = [], []
-            for buf in pdf["payload"]:
-                w, h, raster = parse(bytes(buf))
-                payloads.append(raster)
-                metas.append(
-                    {
-                        "media_type": "image/raw24",
-                        "width": w,
-                        "height": h,
-                        "n_bytes": w * h * 3,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, BITMAP_SCHEMA)
+    return _netpbm_decode(media, b"P6")
 
 
 def resize_bitmap_nn(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
@@ -450,48 +363,17 @@ def resize_bitmap_nn(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     col c' = c*w//out_w), not a byte-cycling stand-in. Arrow-batched
     mapInPandas, map-only, binary-in/binary-out; swap in PIL only if you
     need fancier filters (bilinear/Lanczos) — the Spark plumbing is
-    identical."""
+    identical. A payload whose length disagrees with its meta raises
+    naming the doc_id."""
     ow, oh = int(out_w), int(out_h)
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def row(doc_id, p, m):
+        shape = (int(m["height"]), int(m["width"]))
+        img = _raster("resize_bitmap_nn", doc_id, p, shape)
+        meta = _image_meta(m["media_type"], ow, oh, ow * oh)
+        return _nn_sample(img, oh, ow).tobytes(), meta
 
-        rows_idx_cache = {}
-
-        def resize(payload: bytes, w: int, h: int) -> bytes:
-            img = np.frombuffer(payload, dtype=np.uint8).reshape(h, w)
-            key = (w, h)
-            if key not in rows_idx_cache:
-                rows_idx_cache[key] = (
-                    (np.arange(oh) * h) // oh,
-                    (np.arange(ow) * w) // ow,
-                )
-            ri, ci = rows_idx_cache[key]
-            return img[ri][:, ci].tobytes()
-
-        for pdf in it:
-            payloads = [
-                resize(p, m["width"], m["height"])
-                for p, m in zip(pdf["payload"], pdf["meta"])
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": payloads,
-                    "meta": [
-                        {
-                            "media_type": m["media_type"],
-                            "width": ow,
-                            "height": oh,
-                            "n_bytes": ow * oh,
-                        }
-                        for m in pdf["meta"]
-                    ],
-                }
-            )
-
-    return media.mapInPandas(batches, BITMAP_SCHEMA)
+    return _payload_map(media, BITMAP_SCHEMA, row, ("doc_id", "payload", "meta"))
 
 
 AUDIO_META = T.StructType(
@@ -512,6 +394,15 @@ AUDIO_SCHEMA = T.StructType(
 )
 
 
+def _pcm_meta(n: int, sample_rate: int = 8000) -> dict:
+    return {
+        "media_type": "audio/raw-s16le",
+        "sample_rate": sample_rate,
+        "n_samples": n,
+        "n_bytes": 2 * n,
+    }
+
+
 def synthesize_pcm(docs: DataFrame) -> DataFrame:
     """Deterministic mono int16 PCM clips (the audio sibling of
     `synthesize_bitmaps`): doc_id gets n = doc_id%512 + 256 samples at
@@ -520,33 +411,14 @@ def synthesize_pcm(docs: DataFrame) -> DataFrame:
     with no float trig. Little-endian int16 payload bytes, reproducible on
     any executor layout."""
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def row(doc_id):
+        d = int(doc_id)
+        n = d % 512 + 256
+        i = np.arange(n, dtype=np.int64)
+        samples = ((d * 7919 + i * 2654435761) % 65536 - 32768).astype("<i2")
+        return samples.tobytes(), _pcm_meta(n)
 
-        for pdf in it:
-            payloads, metas = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 512 + 256
-                i = np.arange(n, dtype=np.int64)
-                samples = ((d * 7919 + i * 2654435761) % 65536 - 32768).astype(
-                    "<i2"
-                )
-                payloads.append(samples.tobytes())
-                metas.append(
-                    {
-                        "media_type": "audio/raw-s16le",
-                        "sample_rate": 8000,
-                        "n_samples": n,
-                        "n_bytes": 2 * n,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, AUDIO_SCHEMA)
+    return _payload_map(docs.select("doc_id"), AUDIO_SCHEMA, row, ("doc_id",))
 
 
 def encode_wav(media: DataFrame) -> DataFrame:
@@ -556,39 +428,22 @@ def encode_wav(media: DataFrame) -> DataFrame:
     chunk. Output payloads play in any audio player / load with the stdlib
     ``wave`` module. Arrow-batched mapInPandas, map-only."""
 
-    def batches(it):
-        import struct
+    def row(p, m):
+        pcm = bytes(p)
+        sr, ch, bits = int(m["sample_rate"]), 1, 16
+        block = ch * bits // 8
+        fmt = struct.pack("<4sIHHIIHH", b"fmt ", 16, 1, ch, sr, sr * block, block, bits)
+        data = struct.pack("<4sI", b"data", len(pcm)) + pcm
+        riff = struct.pack("<4sI4s", b"RIFF", 4 + len(fmt) + len(data), b"WAVE")
+        buf = riff + fmt + data
+        return buf, {
+            "media_type": "audio/wav",
+            "sample_rate": sr,
+            "n_samples": len(pcm) // block,
+            "n_bytes": len(buf),
+        }
 
-        import pandas as pd
-
-        for pdf in it:
-            payloads, metas = [], []
-            for p, m in zip(pdf["payload"], pdf["meta"]):
-                pcm = bytes(p)
-                sr, ch, bits = int(m["sample_rate"]), 1, 16
-                block = ch * bits // 8
-                fmt = struct.pack(
-                    "<4sIHHIIHH", b"fmt ", 16, 1, ch, sr, sr * block, block, bits
-                )
-                data = struct.pack("<4sI", b"data", len(pcm)) + pcm
-                riff = struct.pack(
-                    "<4sI4s", b"RIFF", 4 + len(fmt) + len(data), b"WAVE"
-                )
-                buf = riff + fmt + data
-                payloads.append(buf)
-                metas.append(
-                    {
-                        "media_type": "audio/wav",
-                        "sample_rate": sr,
-                        "n_samples": len(pcm) // block,
-                        "n_bytes": len(buf),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, AUDIO_SCHEMA)
+    return _payload_map(media, AUDIO_SCHEMA, row)
 
 
 def decode_wav(media: DataFrame) -> DataFrame:
@@ -602,69 +457,43 @@ def decode_wav(media: DataFrame) -> DataFrame:
     s16le payload + rebuilt metadata. Swap in soundfile/ffmpeg for
     compressed codecs — schema, batching, and partitioning stay identical."""
 
-    def batches(it):
-        import struct
-
-        import pandas as pd
-
-        def parse(buf: bytes):
-            if len(buf) < 12 or buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
-                raise ValueError(f"not a RIFF/WAVE payload: {buf[:12]!r}")
-            (riff_size,) = struct.unpack_from("<I", buf, 4)
-            if 8 + riff_size != len(buf):
-                raise ValueError(
-                    f"RIFF size {riff_size} != payload {len(buf) - 8}"
-                )
-            pos, fmt, data = 12, None, None
-            while pos + 8 <= len(buf):
-                cid, csize = struct.unpack_from("<4sI", buf, pos)
-                body = buf[pos + 8 : pos + 8 + csize]
-                if len(body) != csize:
-                    raise ValueError(f"truncated {cid!r} chunk")
-                if cid == b"fmt ":
-                    if csize < 16:
-                        raise ValueError(f"fmt chunk too short: {csize}")
-                    code, ch, sr, _br, _ba, bits = struct.unpack_from(
-                        "<HHIIHH", body, 0
+    def row(payload):
+        buf = bytes(payload)
+        if len(buf) < 12 or buf[:4] != b"RIFF" or buf[8:12] != b"WAVE":
+            raise ValueError(f"not a RIFF/WAVE payload: {buf[:12]!r}")
+        (riff_size,) = struct.unpack_from("<I", buf, 4)
+        if 8 + riff_size != len(buf):
+            raise ValueError(f"RIFF size {riff_size} != payload {len(buf) - 8}")
+        pos, sr, pcm = 12, None, None
+        while pos + 8 <= len(buf):
+            cid, csize = struct.unpack_from("<4sI", buf, pos)
+            body = buf[pos + 8 : pos + 8 + csize]
+            if len(body) != csize:
+                raise ValueError(f"truncated {cid!r} chunk")
+            if cid == b"fmt ":
+                if csize < 16:
+                    raise ValueError(f"fmt chunk too short: {csize}")
+                code, ch, sr, _br, _ba, bits = struct.unpack_from("<HHIIHH", body, 0)
+                if code != 1 or ch != 1 or bits != 16:
+                    raise ValueError(
+                        f"only PCM mono 16-bit supported: "
+                        f"code={code} ch={ch} bits={bits}"
                     )
-                    if code != 1 or ch != 1 or bits != 16:
-                        raise ValueError(
-                            f"only PCM mono 16-bit supported: "
-                            f"code={code} ch={ch} bits={bits}"
-                        )
-                    fmt = sr
-                elif cid == b"data":
-                    if fmt is None:
-                        raise ValueError("data chunk before fmt chunk")
-                    data = body
-                # other chunks (LIST, fact, ...) skipped per spec
-                pos += 8 + csize + (csize & 1)  # chunks are word-aligned
-            if pos != len(buf):
-                raise ValueError(f"trailing bytes after last chunk: {len(buf) - pos}")
-            if data is None:
-                raise ValueError("no data chunk")
-            if len(data) % 2:
-                raise ValueError("odd data length for 16-bit samples")
-            return fmt, data
+            elif cid == b"data":
+                if sr is None:
+                    raise ValueError("data chunk before fmt chunk")
+                pcm = body
+            # other chunks (LIST, fact, ...) skipped per spec
+            pos += 8 + csize + (csize & 1)  # chunks are word-aligned
+        if pos != len(buf):
+            raise ValueError(f"trailing bytes after last chunk: {len(buf) - pos}")
+        if pcm is None:
+            raise ValueError("no data chunk")
+        if len(pcm) % 2:
+            raise ValueError("odd data length for 16-bit samples")
+        return pcm, _pcm_meta(len(pcm) // 2, sr)
 
-        for pdf in it:
-            payloads, metas = [], []
-            for buf in pdf["payload"]:
-                sr, pcm = parse(bytes(buf))
-                payloads.append(pcm)
-                metas.append(
-                    {
-                        "media_type": "audio/raw-s16le",
-                        "sample_rate": sr,
-                        "n_samples": len(pcm) // 2,
-                        "n_bytes": len(pcm),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, AUDIO_SCHEMA)
+    return _payload_map(media, AUDIO_SCHEMA, row, ("payload",))
 
 
 VIDEO_META = T.StructType(
@@ -686,6 +515,16 @@ VIDEO_SCHEMA = T.StructType(
 )
 
 
+def _clip_meta(w: int, h: int, nf: int) -> dict:
+    return {
+        "media_type": "video/raw8",
+        "width": w,
+        "height": h,
+        "n_frames": nf,
+        "n_bytes": w * h * nf,
+    }
+
+
 def synthesize_clips(docs: DataFrame) -> DataFrame:
     """Deterministic multi-frame grayscale clips (the video sibling of
     `synthesize_bitmaps`): doc_id gets n = doc_id%6 + 2 frames of
@@ -694,36 +533,16 @@ def synthesize_clips(docs: DataFrame) -> DataFrame:
     so every decoded pixel of every frame is replayable in SQL. Payload =
     frames concatenated row-major."""
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def row(doc_id):
+        d = int(doc_id)
+        w, h, nf = d % 16 + 8, d % 12 + 6, d % 6 + 2
+        t = np.arange(nf, dtype=np.int64)[:, None, None]
+        r = np.arange(h, dtype=np.int64)[None, :, None]
+        c = np.arange(w, dtype=np.int64)[None, None, :]
+        clip = ((d * 31 + t * 17 + r * 7 + c * 13) % 256).astype(np.uint8)
+        return clip.tobytes(), _clip_meta(w, h, nf)
 
-        for pdf in it:
-            payloads, metas = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nf = d % 16 + 8, d % 12 + 6, d % 6 + 2
-                t = np.arange(nf, dtype=np.int64)[:, None, None]
-                r = np.arange(h, dtype=np.int64)[None, :, None]
-                c = np.arange(w, dtype=np.int64)[None, None, :]
-                clip = ((d * 31 + t * 17 + r * 7 + c * 13) % 256).astype(
-                    np.uint8
-                )
-                payloads.append(clip.tobytes())
-                metas.append(
-                    {
-                        "media_type": "video/raw8",
-                        "width": w,
-                        "height": h,
-                        "n_frames": nf,
-                        "n_bytes": w * h * nf,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, VIDEO_SCHEMA)
+    return _payload_map(docs.select("doc_id"), VIDEO_SCHEMA, row, ("doc_id",))
 
 
 def encode_y4m(media: DataFrame) -> DataFrame:
@@ -734,35 +553,23 @@ def encode_y4m(media: DataFrame) -> DataFrame:
     size is exactly w*h). Output payloads play in ffplay/mpv and parse
     with ffprobe. Arrow-batched mapInPandas, map-only."""
 
-    def batches(it):
-        import pandas as pd
+    def row(p, m):
+        raw = bytes(p)
+        w, h, nf = int(m["width"]), int(m["height"]), int(m["n_frames"])
+        head = f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 Cmono\n".encode()
+        frames = b"".join(
+            b"FRAME\n" + raw[i * w * h : (i + 1) * w * h] for i in range(nf)
+        )
+        buf = head + frames
+        return buf, {
+            "media_type": "video/x-yuv4mpeg2",
+            "width": w,
+            "height": h,
+            "n_frames": nf,
+            "n_bytes": len(buf),
+        }
 
-        for pdf in it:
-            payloads, metas = [], []
-            for p, m in zip(pdf["payload"], pdf["meta"]):
-                raw = bytes(p)
-                w, h, nf = int(m["width"]), int(m["height"]), int(m["n_frames"])
-                head = f"YUV4MPEG2 W{w} H{h} F25:1 Ip A1:1 Cmono\n".encode()
-                frames = b"".join(
-                    b"FRAME\n" + raw[i * w * h : (i + 1) * w * h]
-                    for i in range(nf)
-                )
-                buf = head + frames
-                payloads.append(buf)
-                metas.append(
-                    {
-                        "media_type": "video/x-yuv4mpeg2",
-                        "width": w,
-                        "height": h,
-                        "n_frames": nf,
-                        "n_bytes": len(buf),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, VIDEO_SCHEMA)
+    return _payload_map(media, VIDEO_SCHEMA, row)
 
 
 def decode_y4m(media: DataFrame) -> DataFrame:
@@ -777,67 +584,46 @@ def decode_y4m(media: DataFrame) -> DataFrame:
     concatenated raw luma + rebuilt metadata; swap in ffmpeg for compressed
     codecs with identical schema/batching/partitioning."""
 
-    def batches(it):
-        import pandas as pd
+    def row(payload):
+        buf = bytes(payload)
+        nl = buf.find(b"\n")
+        if nl < 0 or not buf.startswith(b"YUV4MPEG2"):
+            raise ValueError(f"not a YUV4MPEG2 payload: {buf[:12]!r}")
+        w = h = None
+        cs = "420"  # the spec default when no C field is present
+        for tok in buf[9:nl].split(b" "):
+            if not tok:
+                continue
+            tag, val = tok[:1], tok[1:]
+            if tag == b"W":
+                w = int(val)
+            elif tag == b"H":
+                h = int(val)
+            elif tag == b"C":
+                cs = val.decode("ascii")
+            # F/I/A/X fields are valid but irrelevant to the raster
+        if w is None or h is None:
+            raise ValueError("stream header missing W or H")
+        if cs != "mono":
+            raise ValueError(f"only Cmono supported, got C{cs}")
+        pos, planes = nl + 1, []
+        while pos < len(buf):
+            if buf[pos : pos + 5] != b"FRAME":
+                raise ValueError(f"expected FRAME marker at {pos}")
+            fnl = buf.find(b"\n", pos)
+            if fnl < 0:
+                raise ValueError("unterminated FRAME header")
+            plane = buf[fnl + 1 : fnl + 1 + w * h]
+            if len(plane) != w * h:
+                raise ValueError(f"truncated frame plane: {len(plane)} != {w * h}")
+            planes.append(plane)
+            pos = fnl + 1 + w * h
+        if not planes:
+            raise ValueError("no frames")
+        raw = b"".join(planes)
+        return raw, _clip_meta(w, h, len(raw) // (w * h))
 
-        def parse(buf: bytes):
-            nl = buf.find(b"\n")
-            if nl < 0 or not buf.startswith(b"YUV4MPEG2"):
-                raise ValueError(f"not a YUV4MPEG2 payload: {buf[:12]!r}")
-            w = h = None
-            cs = "420"  # the spec default when no C field is present
-            for tok in buf[9:nl].split(b" "):
-                if not tok:
-                    continue
-                tag, val = tok[:1], tok[1:]
-                if tag == b"W":
-                    w = int(val)
-                elif tag == b"H":
-                    h = int(val)
-                elif tag == b"C":
-                    cs = val.decode("ascii")
-                # F/I/A/X fields are valid but irrelevant to the raster
-            if w is None or h is None:
-                raise ValueError("stream header missing W or H")
-            if cs != "mono":
-                raise ValueError(f"only Cmono supported, got C{cs}")
-            pos, planes = nl + 1, []
-            while pos < len(buf):
-                if buf[pos : pos + 5] != b"FRAME":
-                    raise ValueError(f"expected FRAME marker at {pos}")
-                fnl = buf.find(b"\n", pos)
-                if fnl < 0:
-                    raise ValueError("unterminated FRAME header")
-                plane = buf[fnl + 1 : fnl + 1 + w * h]
-                if len(plane) != w * h:
-                    raise ValueError(
-                        f"truncated frame plane: {len(plane)} != {w * h}"
-                    )
-                planes.append(plane)
-                pos = fnl + 1 + w * h
-            if not planes:
-                raise ValueError("no frames")
-            return w, h, b"".join(planes)
-
-        for pdf in it:
-            payloads, metas = [], []
-            for buf in pdf["payload"]:
-                w, h, raw = parse(bytes(buf))
-                payloads.append(raw)
-                metas.append(
-                    {
-                        "media_type": "video/raw8",
-                        "width": w,
-                        "height": h,
-                        "n_frames": len(raw) // (w * h),
-                        "n_bytes": len(raw),
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return media.mapInPandas(batches, VIDEO_SCHEMA)
+    return _payload_map(media, VIDEO_SCHEMA, row, ("payload",))
 
 
 def synthesize_bitmaps_paired(docs: DataFrame) -> DataFrame:
@@ -855,39 +641,46 @@ def synthesize_bitmaps_paired(docs: DataFrame) -> DataFrame:
     before the cross term). Closed-form, so perceptual-hash
     oracles replay every pixel (the synthesize_bitmaps contract)."""
 
+    def row(doc_id):
+        doc_id = int(doc_id)
+        base = doc_id - (doc_id % 2)
+        w = base % 64 + 16
+        h = base % 48 + 12
+        r = np.arange(h, dtype=np.int64)[:, None]
+        c = np.arange(w, dtype=np.int64)[None, :]
+        rstep = 7 + base % 5
+        cstep = 13 + base % 11
+        xstep = 3 + base % 7
+        img = (base * 31 + r * rstep + c * cstep + r * c * xstep) % 255 + (
+            doc_id % 2
+        ) * ((r + c) % 2)
+        return img.astype(np.uint8).tobytes(), _image_meta("image/raw8", w, h, w * h)
+
+    return _payload_map(docs.select("doc_id"), BITMAP_SCHEMA, row, ("doc_id",))
+
+
+def _mean_hash(media: DataFrame, side: int, schema: T.StructType, stage: str):
+    """Perceptual mean hash of raw uint8 rasters: nearest-neighbor
+    downsample to side x side (resize_bitmap_nn's index mapping), then bit
+    j = 1 iff pixel_j * side^2 >= sum(pixels) — the mean test as an integer
+    cross-multiply, exact integer arithmetic an oracle can replay. The bits
+    (row-major) are packed 32 to a long, one long per column of ``schema``
+    after doc_id."""
+    names = schema.names[1:]
+
     def batches(it):
-        import numpy as np
-        import pandas as pd
-
+        shifts = np.arange(32)
         for pdf in it:
-            payloads, metas = [], []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                base = doc_id - (doc_id % 2)
-                w = base % 64 + 16
-                h = base % 48 + 12
-                r = np.arange(h, dtype=np.int64)[:, None]
-                c = np.arange(w, dtype=np.int64)[None, :]
-                rstep = 7 + base % 5
-                cstep = 13 + base % 11
-                xstep = 3 + base % 7
-                img = (base * 31 + r * rstep + c * cstep + r * c * xstep) % 255 + (
-                    doc_id % 2
-                ) * ((r + c) % 2)
-                payloads.append(img.astype(np.uint8).tobytes())
-                metas.append(
-                    {
-                        "media_type": "image/raw8",
-                        "width": w,
-                        "height": h,
-                        "n_bytes": w * h,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
+            cols = [[] for _ in names]
+            for d, p, m in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
+                img = _raster(stage, d, p, (int(m["height"]), int(m["width"])))
+                small = _nn_sample(img, side, side).astype(np.int64).ravel()
+                bits = (small * side * side >= int(small.sum())).astype(np.int64)
+                for k, col in enumerate(cols):
+                    col.append(int((bits[32 * k : 32 * k + 32] << shifts).sum()))
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], **dict(zip(names, cols))})
 
-    return docs.select("doc_id").mapInPandas(batches, BITMAP_SCHEMA)
+    return media.mapInPandas(batches, schema)
 
 
 AHASH_SCHEMA = T.StructType(
@@ -909,35 +702,7 @@ def ahash64(media: DataFrame) -> DataFrame:
     (bits 0-31 -> ahash_lo, 32-63 -> ahash_hi) so neither engine touches
     the sign bit of a 64-bit value. Arrow-batched mapInPandas, map-only;
     near-duplicate images differ in O(few) bits, unrelated images in ~32."""
-
-    def batches(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            los, his = [], []
-            for d, p, m in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                w, h = int(m["width"]), int(m["height"])
-                if len(p) != w * h:
-                    raise ValueError(
-                        f"ahash64: doc_id={d} raster payload is {len(p)} "
-                        f"bytes, expected width*height={w}*{h}={w * h}"
-                    )
-                img = np.frombuffer(p, dtype=np.uint8).reshape(h, w)
-                ri = (np.arange(8) * h) // 8
-                ci = (np.arange(8) * w) // 8
-                small = img[ri][:, ci].astype(np.int64).ravel()  # row-major
-                s = int(small.sum())
-                bits = (small * 64 >= s).astype(np.int64)
-                lo = int((bits[:32] << np.arange(32)).sum())
-                hi = int((bits[32:] << np.arange(32)).sum())
-                los.append(lo)
-                his.append(hi)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "ahash_lo": los, "ahash_hi": his}
-            )
-
-    return media.mapInPandas(batches, AHASH_SCHEMA)
+    return _mean_hash(media, 8, AHASH_SCHEMA, "ahash64")
 
 
 PHASH_SCHEMA = T.StructType(
@@ -957,32 +722,38 @@ def phash256(media: DataFrame) -> DataFrame:
     banded candidates scale as n^2/65536 and the equi-join actually prunes
     once corpora outgrow the brute scan. Returned as 8 longs of 32 bits
     (h0..h7, row-major bit order), sign-bit free in both engines."""
+    return _mean_hash(media, 16, PHASH_SCHEMA, "phash256")
+
+
+PIXEL_SUM_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("width", T.IntegerType()),
+        T.StructField("height", T.IntegerType()),
+        T.StructField("pixel_sum", T.LongType()),
+    ]
+)
+
+
+def pixel_sum(media: DataFrame) -> DataFrame:
+    """Per-raster checksum for value-checked image entries: (doc_id, width,
+    height, sum of the uint8 payload bytes). Map-only mapInPandas."""
 
     def batches(it):
-        import numpy as np
-        import pandas as pd
-
         for pdf in it:
-            cols: dict[str, list] = {f"h{k}": [] for k in range(8)}
-            for d, p, m in zip(pdf["doc_id"], pdf["payload"], pdf["meta"]):
-                w, h = int(m["width"]), int(m["height"])
-                if len(p) != w * h:
-                    raise ValueError(
-                        f"phash256: doc_id={d} raster payload is {len(p)} "
-                        f"bytes, expected width*height={w}*{h}={w * h}"
-                    )
-                img = np.frombuffer(p, dtype=np.uint8).reshape(h, w)
-                ri = (np.arange(16) * h) // 16
-                ci = (np.arange(16) * w) // 16
-                small = img[ri][:, ci].astype(np.int64).ravel()
-                s = int(small.sum())
-                bits = (small * 256 >= s).astype(np.int64)
-                for k in range(8):
-                    chunk = bits[32 * k : 32 * k + 32]
-                    cols[f"h{k}"].append(int((chunk << np.arange(32)).sum()))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], **cols})
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "width": [m["width"] for m in pdf["meta"]],
+                    "height": [m["height"] for m in pdf["meta"]],
+                    "pixel_sum": [
+                        int(np.frombuffer(p, dtype="uint8").astype("int64").sum())
+                        for p in pdf["payload"]
+                    ],
+                }
+            )
 
-    return media.mapInPandas(batches, PHASH_SCHEMA)
+    return media.mapInPandas(batches, PIXEL_SUM_SCHEMA)
 
 
 def synthesize_scene_clips(docs: DataFrame) -> DataFrame:
@@ -996,38 +767,19 @@ def synthesize_scene_clips(docs: DataFrame) -> DataFrame:
     >20x planted contrast, and still fully closed-form so the oracle
     can replay every pixel of every frame."""
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def row(doc_id):
+        d = int(doc_id)
+        w, h, nf = d % 16 + 8, d % 12 + 6, d % 6 + 2
+        scene_len = d % 3 + 2
+        t = np.arange(nf, dtype=np.int64)[:, None, None]
+        r = np.arange(h, dtype=np.int64)[None, :, None]
+        c = np.arange(w, dtype=np.int64)[None, None, :]
+        clip = (
+            (d * 31 + (t // scene_len) * 101 + t * 3 + r * 7 + c * 13) % 256
+        ).astype(np.uint8)
+        return clip.tobytes(), _clip_meta(w, h, nf)
 
-        for pdf in it:
-            payloads, metas = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h, nf = d % 16 + 8, d % 12 + 6, d % 6 + 2
-                scene_len = d % 3 + 2
-                t = np.arange(nf, dtype=np.int64)[:, None, None]
-                r = np.arange(h, dtype=np.int64)[None, :, None]
-                c = np.arange(w, dtype=np.int64)[None, None, :]
-                clip = (
-                    (d * 31 + (t // scene_len) * 101 + t * 3 + r * 7 + c * 13)
-                    % 256
-                ).astype(np.uint8)
-                payloads.append(clip.tobytes())
-                metas.append(
-                    {
-                        "media_type": "video/raw8",
-                        "width": w,
-                        "height": h,
-                        "n_frames": nf,
-                        "n_bytes": w * h * nf,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, VIDEO_SCHEMA)
+    return _payload_map(docs.select("doc_id"), VIDEO_SCHEMA, row, ("doc_id",))
 
 
 SCENE_CUT_SCHEMA = T.StructType(
@@ -1053,9 +805,6 @@ def detect_scene_cuts(media: DataFrame, threshold: int = 50) -> DataFrame:
     thr = int(threshold)
 
     def batches(it):
-        import numpy as np
-        import pandas as pd
-
         for pdf in it:
             out = {"doc_id": [], "n_frames": [], "n_cuts": [], "first_cut": []}
             for doc_id, payload, meta in zip(
@@ -1066,14 +815,7 @@ def detect_scene_cuts(media: DataFrame, threshold: int = 50) -> DataFrame:
                     int(meta["height"]),
                     int(meta["n_frames"]),
                 )
-                if len(payload) != w * h * nf:
-                    raise ValueError(
-                        f"doc_id={int(doc_id)}: payload {len(payload)}B, "
-                        f"meta says {w}x{h}x{nf}={w * h * nf}B"
-                    )
-                clip = np.frombuffer(payload, dtype=np.uint8).reshape(
-                    nf, h * w
-                )
+                clip = _raster("detect_scene_cuts", doc_id, payload, (nf, h * w))
                 sad = np.abs(
                     clip[1:].astype(np.int64) - clip[:-1].astype(np.int64)
                 ).sum(axis=1)
@@ -1097,35 +839,16 @@ def synthesize_gapped_pcm(docs: DataFrame) -> DataFrame:
     noise (mean |s| ~ 16k), a >30x contrast at any sane threshold, and
     still fully closed-form so the oracle can replay every sample."""
 
-    def batches(it):
-        import numpy as np
-        import pandas as pd
+    def row(doc_id):
+        d = int(doc_id)
+        n = d % 512 + 256
+        g = d % 32 + 16
+        i = np.arange(n, dtype=np.int64)
+        samples = ((d * 7919 + i * 2654435761) % 65536 - 32768).astype(np.int64)
+        samples[(i // g) % 4 == 1] = 0
+        return samples.astype("<i2").tobytes(), _pcm_meta(n)
 
-        for pdf in it:
-            payloads, metas = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = d % 512 + 256
-                g = d % 32 + 16
-                i = np.arange(n, dtype=np.int64)
-                samples = (
-                    (d * 7919 + i * 2654435761) % 65536 - 32768
-                ).astype(np.int64)
-                samples[(i // g) % 4 == 1] = 0
-                payloads.append(samples.astype("<i2").tobytes())
-                metas.append(
-                    {
-                        "media_type": "audio/raw-s16le",
-                        "sample_rate": 8000,
-                        "n_samples": n,
-                        "n_bytes": 2 * n,
-                    }
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads, "meta": metas}
-            )
-
-    return docs.select("doc_id").mapInPandas(batches, AUDIO_SCHEMA)
+    return _payload_map(docs.select("doc_id"), AUDIO_SCHEMA, row, ("doc_id",))
 
 
 SILENCE_SCHEMA = T.StructType(
@@ -1151,9 +874,6 @@ def detect_silence_runs(
     thr, mr = int(threshold), int(min_run)
 
     def batches(it):
-        import numpy as np
-        import pandas as pd
-
         for pdf in it:
             out = {
                 "doc_id": [],
@@ -1165,13 +885,8 @@ def detect_silence_runs(
                 pdf["doc_id"], pdf["payload"], pdf["meta"]
             ):
                 n = int(meta["n_samples"])
-                if len(payload) != 2 * n:
-                    raise ValueError(
-                        f"doc_id={int(doc_id)}: payload {len(payload)}B, "
-                        f"meta says {n} s16 samples = {2 * n}B"
-                    )
-                s = np.frombuffer(payload, dtype="<i2").astype(np.int64)
-                quiet = np.abs(s) <= thr
+                s = _raster("detect_silence_runs", doc_id, payload, (n,), "<i2")
+                quiet = np.abs(s.astype(np.int64)) <= thr
                 padded = np.concatenate(([False], quiet, [False]))
                 starts = np.nonzero(padded[1:-1] & ~padded[:-2])[0]
                 ends = np.nonzero(padded[1:-1] & ~padded[2:])[0]

@@ -286,6 +286,25 @@ def ivf_assignments(
     )
 
 
+def _cos(a: list[float], b: list[float]) -> float:
+    dot = sum(x * y for x, y in zip(a, b))
+    na = sum(x * x for x in a) ** 0.5
+    nb = sum(x * x for x in b) ** 0.5
+    return dot / (na * nb) if na and nb else 0.0
+
+
+def ivf_probe(
+    query_vec: list[float], centroids: list[list[float]], nprobe: int
+) -> list[int]:
+    """The ``nprobe`` cells whose centroids are nearest ``query_vec`` by
+    cosine, nearest first; ties go to the lower cell (a stable sort). Computed
+    driver-side with the same arithmetic the executors use for assignment
+    (both IEEE double dot products over the same order)."""
+    return sorted(
+        range(len(centroids)), key=lambda i: -_cos(query_vec, centroids[i])
+    )[:nprobe]
+
+
 def topk_cosine_ivf(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -309,20 +328,7 @@ def topk_cosine_ivf(
     not list quality."""
     if centroids is None:
         centroids = _pseudo_centroids(len(query_vec), num_centroids, seed)
-    num_centroids = len(centroids)
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot / (na * nb) if na and nb else 0.0
-
-    # Probe list computed driver-side with the same arithmetic the executors
-    # use for assignment (both IEEE double dot products over the same order).
-    probe = sorted(
-        range(num_centroids), key=lambda i: -_cos(query_vec, centroids[i])
-    )[:nprobe]
-
+    probe = ivf_probe(query_vec, centroids, nprobe)
     assigned = ivf_assignments(embeddings, centroids, id_col, vec_col)
     cand = assigned.filter(F.col("cell").isin(probe))
     scored = cand.select(

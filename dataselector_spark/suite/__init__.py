@@ -38,7 +38,6 @@ REWRITTEN_IN_ROUND = {
     "b26_rolling_dau": 6,
     "b15_bpe_pair_counts": 6,
     "b02_bucketed_join": 6,
-    "b16_pgm_roundtrip": 6,
     "b04_interval_join_bucketed": 6,
     # r9 (ADVICE r8 + VERDICT r8 #2): execution-forcing / scratch-path /
     # helper-refactor changes after the r8 driver rows
@@ -108,7 +107,6 @@ REWRITTEN_IN_ROUND = {
     "b14_topk_cosine": 15,
     "b14_pq_codes": 15,
     "b14_pq_adc_topk": 15,
-    "b14_ivfpq_topk": 15,
     "b14_mips_lsh": 15,
     "b14_mips_topk": 15,
     "b14_ann_recall_report": 15,
@@ -116,8 +114,6 @@ REWRITTEN_IN_ROUND = {
     "b14_knn_accuracy_clustered": 15,
     "b13_minhash_shard_merge": 15,
     "b13_incremental_ingest_dedup": 15,
-    "b16_ahash_neardup": 15,
-    "b16_phash256_neardup": 15,
     "b22_zorder_key": 15,
     "b22_zorder_key_3d": 15,
     "b22_zorder_write_readback": 15,
@@ -172,7 +168,6 @@ REWRITTEN_IN_ROUND = {
     "b13_dedup_clusters": 20,
     "b13_dedup_survivors_quality": 20,
     "b14_embedding_dedup_survivors": 20,
-    "b16_image_dedup_survivors": 20,
     # r21: the joins whose final plan raced under AQE are pinned by hint,
     # and the conf-swapping entries go through session.scoped_conf.
     "b06_kmv_intersect": 21,
@@ -189,6 +184,26 @@ REWRITTEN_IN_ROUND = {
     # r23: the fuzzy-dedup canon-map join, which raced under AQE, is pinned
     # by hint.
     "b13_dedup_survivors": 23,
+    # r24: the multimodal stages share one (doc_id, payload, meta) batch
+    # loop, one netpbm codec, one pixel-sum stage and one raster shape
+    # check, and the module pickles by value; the two IVF entries share one
+    # probe-list helper.
+    "b16_image_dedup_survivors": 24,
+    "b16_resize_nn": 24,
+    "b16_pgm_roundtrip": 24,
+    "b16_ppm_roundtrip": 24,
+    "b16_binary_ingest": 24,
+    "b16_wav_roundtrip": 24,
+    "b16_y4m_roundtrip": 24,
+    "b16_ahash_neardup": 24,
+    "b16_phash256_neardup": 24,
+    "b16_scene_cuts": 24,
+    "b16_silence_runs": 24,
+    "b16_multimodal_features": 24,
+    "b16_resize": 24,
+    "b16_frame_sample": 24,
+    "b14_ivfpq_topk": 24,
+    "b14_ann_ivf": 24,
 }
 
 # The driver's correctness harness checks the FIRST 50 entries of
@@ -214,7 +229,7 @@ DRIVER_WINDOW = [
     "b01_python_stream_source_parallel",
     # --- pinned racing dedup join, rewritten in r23 (1) ---
     "b13_dedup_survivors",
-    # --- connected-components consumers, rewritten in r20 (4) ---
+    # --- connected-components consumers, rewritten in r20 (3) + r24 (1) ---
     "b13_dedup_clusters",
     "b13_dedup_survivors_quality",
     "b14_embedding_dedup_survivors",
@@ -237,24 +252,24 @@ DRIVER_WINDOW = [
     "a17_anti_join_retract",
     "a13_selection_insert",
     "a17_retract_compound",
-    # --- r10-latest re-confirms (13) ---
+    # --- multimodal batch loop + IVF probe helper, rewritten in r24 (15) ---
+    "b16_resize_nn",
+    "b16_pgm_roundtrip",
+    "b16_ppm_roundtrip",
+    "b16_binary_ingest",
+    "b16_wav_roundtrip",
+    "b16_y4m_roundtrip",
+    "b16_ahash_neardup",
+    "b16_phash256_neardup",
+    "b16_scene_cuts",
+    "b16_silence_runs",
+    "b16_multimodal_features",
+    "b16_resize",
+    "b16_frame_sample",
+    "b14_ivfpq_topk",
+    "b14_ann_ivf",
+    # --- oldest r10-latest re-confirm (1) ---
     "b12_dedup_exact",
-    "b06_pivot",
-    "b22_mixture_resample",
-    "a18_inverted_index",
-    "b06_exact_distinct",
-    "b14_embedding_neardup_lsh",
-    "b15_chunk_documents",
-    "b22_train_val_split",
-    "b22_global_shuffle",
-    "b15_repetition_score",
-    "b15_rarity_score",
-    "b01_json_permissive",
-    "b22_mixture_upsample",
-    # --- oldest r11-latest re-confirms (3) ---
-    "b14_ann_lsh",
-    "b15_lang_id_quality",
-    "b16_multimodal_meta",
     # --- zscore internal columns made collision-proof, rewritten in r19 (1) ---
     "b08_outlier_zscore",
 ]
@@ -271,7 +286,7 @@ _check_oracle_tables(QUERIES, set(_SCHEMAS))
 # The round of the active window; bench.BENCH_ROUND (the label stamped on
 # new BENCH_RECORDS readings) must match — tripwire in
 # tests/test_bench_records.py keeps the two bumps atomic.
-WINDOW_ROUND = 23
+WINDOW_ROUND = 24
 
 if len(DRIVER_WINDOW) != 50 or len(set(DRIVER_WINDOW)) != 50:
     raise ValueError("DRIVER_WINDOW must name 50 distinct entries")

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..catalog import load_table
 from ..multimodal import extract_features, synthesize_media
@@ -35,39 +36,10 @@ from .base import query
     "end-to-end, not rows-only. Map-only, binary-in/binary-out.",
 )
 def b16_resize_nn(spark, sf_dir):
-    from ..multimodal import resize_bitmap_nn, synthesize_bitmaps
+    from ..multimodal import pixel_sum, resize_bitmap_nn, synthesize_bitmaps
 
     d = load_table(spark, sf_dir, "documents")
-    resized = resize_bitmap_nn(synthesize_bitmaps(d), 8, 6)
-
-    def checksum(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [m["width"] for m in pdf["meta"]],
-                    "height": [m["height"] for m in pdf["meta"]],
-                    "pixel_sum": [
-                        int(np.frombuffer(p, dtype="uint8").astype("int64").sum())
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
-    )
-    return resized.mapInPandas(checksum, schema)
+    return pixel_sum(resize_bitmap_nn(synthesize_bitmaps(d), 8, 6))
 
 
 @query(
@@ -95,39 +67,10 @@ def b16_resize_nn(spark, sf_dir):
     "mapInPandas, map-only, no shuffle.",
 )
 def b16_pgm_roundtrip(spark, sf_dir):
-    from ..multimodal import decode_pgm, encode_pgm, synthesize_bitmaps
+    from ..multimodal import decode_pgm, encode_pgm, pixel_sum, synthesize_bitmaps
 
     d = load_table(spark, sf_dir, "documents")
-    decoded = decode_pgm(encode_pgm(synthesize_bitmaps(d)))
-
-    def checksum(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [m["width"] for m in pdf["meta"]],
-                    "height": [m["height"] for m in pdf["meta"]],
-                    "pixel_sum": [
-                        int(np.frombuffer(p, dtype="uint8").astype("int64").sum())
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
-    )
-    return decoded.mapInPandas(checksum, schema)
+    return pixel_sum(decode_pgm(encode_pgm(synthesize_bitmaps(d))))
 
 
 @query(
@@ -195,8 +138,6 @@ def b16_ppm_roundtrip(spark, sf_dir):
                 }
             )
 
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         [
             T.StructField("doc_id", T.LongType()),
@@ -238,9 +179,7 @@ def b16_binary_ingest(spark, sf_dir):
     import os
     import shutil
 
-    from pyspark.sql import types as T
-
-    from ..multimodal import decode_pgm, encode_pgm, synthesize_bitmaps
+    from ..multimodal import decode_pgm, encode_pgm, pixel_sum, synthesize_bitmaps
 
     base = os.path.basename(os.path.normpath(sf_dir))
     out_dir = os.path.join("/tmp/dataselector_roundtrip", base, "pgm_files")
@@ -251,7 +190,7 @@ def b16_binary_ingest(spark, sf_dir):
     pgm = encode_pgm(synthesize_bitmaps(d))
 
     def write_files(rows):
-        # executor-side blob export — self-contained closure (no module refs)
+        # executor-side blob export
         for r in rows:
             with open(os.path.join(out_dir, f"doc_{r['doc_id']}.pgm"), "wb") as f:
                 f.write(bytes(r["payload"]))
@@ -275,34 +214,7 @@ def b16_binary_ingest(spark, sf_dir):
             F.col("length").alias("n_bytes"),
         ).alias("meta"),
     )
-    decoded = decode_pgm(media)
-
-    def checksum(it):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [m["width"] for m in pdf["meta"]],
-                    "height": [m["height"] for m in pdf["meta"]],
-                    "pixel_sum": [
-                        int(np.frombuffer(p, dtype="uint8").astype("int64").sum())
-                        for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("width", T.IntegerType()),
-            T.StructField("height", T.IntegerType()),
-            T.StructField("pixel_sum", T.LongType()),
-        ]
-    )
-    return decoded.mapInPandas(checksum, schema)
+    return pixel_sum(decode_pgm(media))
 
 
 @query(
@@ -366,8 +278,6 @@ def b16_wav_roundtrip(spark, sf_dir):
                 rows["zero_crossings"].append(int((s[:-1] * s[1:] < 0).sum()))
             yield pd.DataFrame(rows)
             rows = {k: [] for k in rows}
-
-    from pyspark.sql import types as T
 
     schema = T.StructType(
         [
@@ -450,8 +360,6 @@ def b16_y4m_roundtrip(spark, sf_dir):
                 rows["pixel_sum"].append(int(arr.sum()))
                 rows["last_frame_sum"].append(int(arr[-w * h :].sum()))
             yield pd.DataFrame(rows)
-
-    from pyspark.sql import types as T
 
     schema = T.StructType(
         [

@@ -509,6 +509,7 @@ def b14_ivfpq_topk(spark, sf_dir):
     from ..operators.similarity import (
         _pseudo_centroids,
         ivf_assignments,
+        ivf_probe,
         pq_codes,
     )
 
@@ -518,14 +519,7 @@ def b14_ivfpq_topk(spark, sf_dir):
         for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]
     ]
     centroids = _pseudo_centroids(64, 16, seed=7)
-
-    def _cos(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot / (na * nb) if na and nb else 0.0
-
-    probe = sorted(range(16), key=lambda i: -_cos(qv, centroids[i]))[:4]
+    probe = ivf_probe(qv, centroids, 4)
     cand = (
         ivf_assignments(emb, centroids)
         .filter(F.col("cell").isin(probe) & (F.col("vec_id") != 0))

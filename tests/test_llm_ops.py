@@ -1165,6 +1165,83 @@ def test_wav_y4m_codec_property_roundtrip(spark):
         assert got[i]["meta"]["n_frames"] == nf
 
 
+def test_resize_bitmap_nn_bad_payload_names_doc_id(spark):
+    """A raster whose payload length disagrees with its meta must fail
+    naming its doc_id, as ahash64/phash256/scene cuts/silence runs do, not
+    with numpy's bare reshape error."""
+    import pandas as pd
+
+    from dataselector_spark.multimodal import resize_bitmap_nn
+
+    meta = {"media_type": "image/raw8", "width": 4, "height": 3, "n_bytes": 12}
+    df = spark.createDataFrame(
+        pd.DataFrame(
+            {"doc_id": [41, 42], "payload": [bytes(12), bytes(11)], "meta": [meta] * 2}
+        ),
+        schema="doc_id long, payload binary, "
+        "meta struct<media_type:string,width:int,height:int,n_bytes:bigint>",
+    )
+    assert len(resize_bitmap_nn(df.filter("doc_id = 41"), 2, 2).collect()) == 1
+    with pytest.raises(Exception, match=r"doc_id=42\b"):
+        resize_bitmap_nn(df, 2, 2).collect()
+
+
+def test_codec_entries_run_where_workers_cannot_import_the_package(tmp_path, sf_dir):
+    """Sandboxed executors cannot import this package. A child Python runs
+    the codec entries on local[2] from an empty directory with the repo
+    out of PYTHONPATH: only the driver puts the repo on sys.path, so a
+    batch closure that calls a package-level function by reference fails
+    its tasks with ModuleNotFoundError. (Running from the repo root, as
+    pytest does, hides that failure.)"""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    entries = [
+        "b16_ppm_roundtrip",
+        "b16_wav_roundtrip",
+        "b16_y4m_roundtrip",
+        "b16_scene_cuts",
+        "b16_ahash_neardup",
+        "b21_map_in_arrow",
+    ]
+    script = f"""
+import json, sys
+sys.path.insert(0, {repo!r})
+from dataselector_spark.session import get_spark
+from dataselector_spark.suite import QUERIES
+from tests.oracle_harness import compare
+spark = get_spark("worker-imports", cpus=2, shuffle_partitions=2)
+out = {{}}
+for name in {entries!r}:
+    q = QUERIES[name]
+    try:
+        out[name] = compare(spark, {sf_dir!r}, q.fn, q.oracle)
+    except Exception as ex:
+        out[name] = (False, str(ex)[-600:])
+print("RESULT " + json.dumps(out))
+"""
+    path = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
+    path = [p for p in path if os.path.abspath(p) != repo]
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(path))
+    env["SPARK_GRAFT_DRIVER_MEM"] = "2g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert proc.returncode == 0 and lines, proc.stderr[-3000:]
+    results = json.loads(lines[-1][len("RESULT "):])
+    failed = {name: detail for name, (ok, detail) in results.items() if not ok}
+    assert sorted(results) == sorted(entries) and not failed, failed
+
+
 def test_compact_small_files_collapses_and_orders(spark, tmp_path):
     """compact_small_files must (1) actually collapse the file count to
     ceil(bytes/target), (2) preserve content exactly, and (3) with
